@@ -108,7 +108,8 @@ def histogram(
     """Fixed-width histogram (perplexity/score distributions for the
     filter-metrics tables).  width_bucket semantics: values < lo → bucket 0,
     ≥ hi → n_buckets+1.  ``group_cols`` prepends grouping keys (e.g. the
-    sink's commit bucket) for per-partition metrics tables."""
+    sink's commit bucket) for per-partition metrics tables.  Rows come in
+    no particular order."""
     width = (hi - lo) / n_buckets
     b = (
         F.when(F.col(col) < lo, 0)
@@ -120,7 +121,6 @@ def histogram(
         .groupBy(*group_cols, b.cast("int").alias(bucket_col))
         .agg(F.count("*").alias("n"))
         .withColumn("lo", F.round(F.lit(lo) + (F.col(bucket_col) - 1) * width, 6))
-        .orderBy(bucket_col)
     )
 
 

@@ -12,7 +12,10 @@ on plain parquet behind one interface (SURVEY.md §7.3):
 * each chunk of buckets is written with **dynamic partition overwrite** so a
   crashed, partially-written chunk is safely rewritten on resume
   (idempotent replay — the manifest is only advanced after a successful
-  write),
+  write); the chunk is first rebalanced on ``bucket`` so each bucket is
+  written by one task (one file per bucket per chunk, AQE splits a skewed
+  one) instead of one file per (input task, bucket) — the price is one
+  shuffle of about the chunk's output bytes,
 * ``_manifest/snapshot-K.json`` records committed buckets; a snapshot file
   is born complete via atomic exclusive create (``os.link`` of a
   fully-written temp), so its existence IS the commit; ``_manifest/
@@ -24,7 +27,10 @@ on plain parquet behind one interface (SURVEY.md §7.3):
   (the Iceberg protocol shape; tests/test_manifest_concurrency.py),
 * ``_lineage/`` holds one row per committed bucket: counts, kept, and an
   order-independent content checksum (``bit_xor(xxhash64(url))``) — the
-  audit trail that proves a resumed run produced exactly the same table.
+  audit trail that proves a resumed run produced exactly the same table;
+  it and the ``_metrics/`` tables are appended concurrently (one thread
+  per table, all in the caller's job group) from one cached re-read of the
+  chunk, and only then is the chunk committed.
 
 At 100 TB the same structure holds: n_buckets scales to ~10⁵, a chunk is
 one scheduling wave, and the manifest lives in the catalog instead of JSON
@@ -37,9 +43,11 @@ import json
 import os
 import time
 from collections.abc import Callable
+from concurrent.futures import ThreadPoolExecutor
 from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark import inheritable_thread_target
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 LINEAGE_SCHEMA = (
@@ -221,14 +229,23 @@ class PartitionedSink:
         and a boolean ``keep``).  ``fail_after_chunks`` injects a crash for
         the resume test.  Returns a small run summary.
 
+        Each chunk is ``transform``-ed, rebalanced on ``bucket`` (one shuffle
+        of about the chunk's output bytes) and written with dynamic
+        partition overwrite: one parquet file per bucket per chunk, more
+        only where AQE splits a skewed bucket.
+
         ``metrics_fn`` maps the chunk's *written* slice (re-read from the
         data dir, so it costs one pruned scan, not a pipeline re-run) to
         named filter-metrics tables; each MUST carry the ``bucket`` column
-        (use ``plans.pipeline.filter_metrics(df, group_cols=("bucket",))``).
-        They are appended under ``_metrics/<name>/`` stamped with the
-        snapshot id before the commit — exactly the lineage protocol, so a
-        crashed chunk's orphan metrics rows are superseded on resume and
-        :meth:`metrics` reads each bucket's latest rows only.
+        (use ``plans.pipeline.filter_metrics(df, group_cols=("bucket",))``),
+        checked for every table before anything is appended.  They are
+        appended under ``_metrics/<name>/`` stamped with the snapshot id
+        before the commit — exactly the lineage protocol, so a crashed
+        chunk's orphan metrics rows are superseded on resume and
+        :meth:`metrics` reads each bucket's latest rows only.  The lineage
+        and metrics appends run concurrently over the cached slice, each in
+        the caller's job group and tags; the chunk commits only after all
+        of them succeed.
         """
         self._acquire_lock()
         try:
@@ -256,19 +273,21 @@ class PartitionedSink:
         n_chunks_done = 0
         for chunk in chunks:
             slice_df = bucketed.filter(F.col("bucket").isin(chunk))
-            result = transform(slice_df)
-            # idempotent write: dynamic overwrite touches only this chunk's
-            # buckets — set per-write, NOT session-wide, so unrelated
+            # one write task per bucket (AQE splits a skewed one): one file
+            # per bucket, not one per (input task, bucket).  Idempotent
+            # write: dynamic overwrite touches only this chunk's buckets —
+            # set per-write, NOT session-wide, so unrelated
             # overwrite+partitionBy writes elsewhere keep static semantics
             (
-                result.write.mode("overwrite")
+                transform(slice_df).hint("rebalance", "bucket")
+                .write.mode("overwrite")
                 .option("partitionOverwriteMode", "dynamic")
                 .partitionBy("bucket")
                 .parquet(str(self.data_dir))
             )
             # ONE scan of the chunk's written buckets feeds lineage and
-            # every metrics table (persist → N tiny aggregation jobs over
-            # the cached slice, not N+1 rescans per chunk)
+            # every metrics table (persist → N tiny aggregation jobs, run side
+            # by side over the cached slice, not N+1 rescans per chunk)
             written = (
                 spark.read.parquet(str(self.data_dir))
                 .filter(F.col("bucket").isin(chunk))
@@ -284,18 +303,22 @@ class PartitionedSink:
                 )
                 .withColumn("snapshot", snap_col)
             )
-            lineage.write.mode("append").parquet(str(self.lineage_dir))
-            if metrics_fn is not None:
-                for name, mdf in metrics_fn(written).items():
+            try:
+                tables = metrics_fn(written) if metrics_fn is not None else {}
+                # every table is checked before the first append: a bad one
+                # must not leave orphan rows behind
+                for name, mdf in tables.items():
                     if "bucket" not in mdf.columns:
                         raise ValueError(
                             f"metrics table {name!r} must be keyed by 'bucket' "
                             "(pass group_cols=('bucket',) to filter_metrics)"
                         )
-                    mdf.withColumn("snapshot", snap_col).write.mode("append").parquet(
-                        str(self.metrics_dir / name)
-                    )
-            written.unpersist()
+                self._append_all(spark, [(lineage, self.lineage_dir)] + [
+                    (mdf.withColumn("snapshot", snap_col), self.metrics_dir / name)
+                    for name, mdf in tables.items()
+                ])
+            finally:
+                written.unpersist()
             self._commit(chunk)
             n_chunks_done += 1
             if fail_after_chunks is not None and n_chunks_done >= fail_after_chunks:
@@ -307,6 +330,24 @@ class PartitionedSink:
             "wall_sec": round(time.time() - t0, 3),
         }
 
+    @staticmethod
+    def _append_all(spark: SparkSession, appends: list[tuple[DataFrame, Path]]) -> None:
+        """Append each frame to its path, all at once: the jobs are small
+        aggregates, so running them side by side fills the cores one alone
+        leaves idle.  Each target is wrapped separately so its thread gets
+        its own copy of the caller's job group, description and tags."""
+
+        def append(df: DataFrame, path: Path) -> None:
+            df.write.mode("append").parquet(str(path))
+
+        with ThreadPoolExecutor(max_workers=len(appends)) as pool:
+            futures = [
+                pool.submit(inheritable_thread_target(spark)(append), df, path)
+                for df, path in appends
+            ]
+            for f in futures:
+                f.result()
+
     # ---------------- readers
 
     def result(self, spark: SparkSession) -> DataFrame:
@@ -316,35 +357,28 @@ class PartitionedSink:
     def metrics(self, spark: SparkSession, name: str) -> DataFrame:
         """A committed filter-metrics table: per bucket, only the rows from
         that bucket's LATEST snapshot (orphans from a crashed chunk are
-        superseded, mirroring :meth:`lineage`), restricted to committed
-        buckets.  Run-level totals are a trivial re-aggregation on top.
+        superseded), restricted to committed buckets.  Run-level totals are
+        a trivial re-aggregation on top."""
+        return self._latest_committed(spark, self.metrics_dir / name)
 
-        A crash in the window between the metrics append and the manifest
-        commit leaves orphan rows carrying the SAME snapshot id the resumed
-        chunk re-writes; they are byte-identical to the legitimate rows
-        (everything is deterministic and each table's key is unique within
-        a snapshot), so an exact-duplicate drop restores exactly-once."""
-        from pyspark.sql import Window
+    def lineage(self, spark: SparkSession) -> DataFrame:
+        """One lineage row per committed bucket, from its latest snapshot."""
+        return self._latest_committed(spark, self.lineage_dir)
 
+    def _latest_committed(self, spark: SparkSession, path: Path) -> DataFrame:
+        """Rows of a snapshot-stamped side table for committed buckets, each
+        bucket's latest snapshot only.  A crash between the append and the
+        manifest commit leaves orphan rows: for an uncommitted bucket they
+        are filtered out here; a resumed chunk re-writes them at the SAME
+        snapshot id, byte-identical (everything is deterministic and each
+        table's key is unique within a snapshot), so an exact-duplicate
+        drop restores exactly-once."""
         committed = sorted(self.committed_buckets())
-        df = spark.read.parquet(str(self.metrics_dir / name)).filter(
-            F.col("bucket").isin(committed)
-        )
+        df = spark.read.parquet(str(path)).filter(F.col("bucket").isin(committed))
         w = Window.partitionBy("bucket")
         return (
             df.withColumn("_mx", F.max("snapshot").over(w))
             .filter(F.col("snapshot") == F.col("_mx"))
             .drop("_mx")
             .dropDuplicates()
-        )
-
-    def lineage(self, spark: SparkSession) -> DataFrame:
-        """Latest lineage row per bucket (a resumed run may append a bucket
-        only once — but keep the dedup for safety)."""
-        from pyspark.sql import Window
-
-        df = spark.read.parquet(str(self.lineage_dir))
-        w = Window.partitionBy("bucket").orderBy(F.desc("snapshot"))
-        return (
-            df.withColumn("_rn", F.row_number().over(w)).filter("_rn = 1").drop("_rn")
         )
