@@ -2082,14 +2082,7 @@ def q_host_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     e1 = d.select((did % 53).alias("src"), ((did * 2 + 1) % 53).alias("dst"))
     e2 = d.select((did % 53).alias("src"), ((did * 5 + 3) % 53).alias("dst"))
     edges = e1.unionAll(e2).distinct().filter(F.col("src") % 11 != 0)
-    # checkpoint_interval=1 (round-6 re-measurement): since the r5
-    # dangling-mass rework each iteration embeds a broadcast subplan, so
-    # at interval=5 the ONE unrolled lazy plan nests five of them, each
-    # carrying the whole iteration prefix — AQE planning over that tree
-    # dominated the wall (25-32 s at sf1.0).  Materializing every step
-    # keeps each iteration's plan shallow: 2.8 s at sf1.0 (guide §3.3 —
-    # "planning time itself can become the bottleneck"; identical math).
-    pr = pagerank(edges, n_iter=5, checkpoint_interval=1)
+    pr = pagerank(edges, n_iter=5)
     return pr.select(F.col("node").alias("host_id"), F.round("rank", 6).alias("rank"))
 
 

@@ -40,7 +40,6 @@ def pagerank(
     n_iter: int = 5,
     damping: float = 0.85,
     tol: float | None = None,
-    checkpoint_interval: int = 1,
     stats: dict | None = None,
 ) -> DataFrame:
     """(node, rank) after ``n_iter`` synchronous PageRank steps over the
@@ -56,15 +55,12 @@ def pagerank(
     stop rule changes, so the contract oracle's unrolled-SQL replay stays
     valid for ``tol=None``.
 
-    ``checkpoint_interval``: materialize (``localCheckpoint``) every k-th
-    iteration instead of every one.  Intermediate rounds stay lazy lineage,
-    so one Spark job computes k PageRank steps — fewer job-scheduling
-    round-trips on small graphs where per-job overhead dominates (the 53-host
-    sf0.1 fixture spends ~85% of its wall on scheduling, not data).  With
-    ``tol`` set, convergence is checked only at materialization points.
+    Every iteration is materialized (``localCheckpoint``): each one embeds
+    a broadcast subplan, so leaving rounds lazy nests every prefix inside
+    the next plan and planning time dominates.
 
     ``stats``: optional dict, filled with ``iterations`` and ``l1_deltas``
-    (one entry per materialized check when ``tol`` is set) for bench/audit.
+    (one entry per iteration when ``tol`` is set) for bench/audit.
     """
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).distinct()
     nodes = (
@@ -95,11 +91,10 @@ def pagerank(
     )
     ranks = nodes.withColumn("rank", F.lit(1.0 / n)).localCheckpoint(eager=True)
     base = (1.0 - damping) / n
-    k = max(1, int(checkpoint_interval))
     l1_deltas: list[float] = []
     done = 0
     try:
-        prev_ckpt = ranks  # last MATERIALIZED state, for the L1 check
+        prev = ranks  # previous state, for the L1 check
         for it in range(n_iter):
             summed = e_aug.join(
                 ranks.withColumnRenamed("node", "src"), "src"
@@ -123,23 +118,19 @@ def pagerank(
                         )
                     ).alias("rank"),
                 )
-            )
+            ).localCheckpoint(eager=True)
             done = it + 1
-            if done % k == 0 or done == n_iter:
-                ranks = ranks.localCheckpoint(eager=True)
-                if tol is not None:
-                    delta = (
-                        ranks.join(
-                            prev_ckpt.withColumnRenamed("rank", "prev_rank"), "node"
-                        )
-                        .agg(F.sum(F.abs(F.col("rank") - F.col("prev_rank"))))
-                        .first()[0]
-                        or 0.0
-                    )
-                    l1_deltas.append(float(delta))
-                    if delta <= tol:
-                        break
-                prev_ckpt = ranks
+            if tol is not None:
+                delta = (
+                    ranks.join(prev.withColumnRenamed("rank", "prev_rank"), "node")
+                    .agg(F.sum(F.abs(F.col("rank") - F.col("prev_rank"))))
+                    .first()[0]
+                    or 0.0
+                )
+                l1_deltas.append(float(delta))
+                if delta <= tol:
+                    break
+            prev = ranks
         if stats is not None:
             stats["iterations"] = done
             stats["l1_deltas"] = l1_deltas

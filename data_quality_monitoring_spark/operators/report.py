@@ -66,8 +66,3 @@ def findings_long(result: DataFrame, messages: dict[str, str] | None = None) -> 
     if messages:
         out = out.withColumn("message", message_column(F.col("code"), messages))
     return out
-
-
-def write_json_report(findings: DataFrame, path: str) -> None:
-    """JSON findings sink (reference json_reporter file output)."""
-    findings.write.mode("overwrite").json(path)

@@ -13,10 +13,10 @@ entirely inside whole-stage codegen.  Two semantics carried over exactly:
 
 Regex parity: the reference uses Python ``re`` (``json_validator.py:130``);
 Spark ``rlike`` is Java regex and differs on unicode classes and inline
-flags.  With ``regex_engine="python"`` all regex-family rules for a column
-are evaluated in **one** Arrow-batched pandas UDF that returns a bitmask
-(one bit per regex rule); the CASE chain then tests bits — a single Python
-hop per column, everything else stays JVM-side.  With
+flags.  With ``regex_engine="auto"`` (the default) all regex-family rules
+for a column are evaluated in **one** Arrow-batched pandas UDF that returns
+a bitmask (one bit per regex rule); the CASE chain then tests bits — a
+single Python hop per column, everything else stays JVM-side.  With
 ``regex_engine="native"`` (the 100-TB fast path) they compile to ``rlike``.
 
 Beyond the reference's 14 types, this adds the web-text quality rules the
@@ -31,9 +31,7 @@ max_ellipsis_line_ratio, min_alpha_word_ratio``.
 
 from __future__ import annotations
 
-import json
 import re
-from pathlib import Path
 
 import pandas as pd
 from pyspark.sql import Column
@@ -113,11 +111,6 @@ def register_predicate(name: str):
     return deco
 
 
-def load_ruleset(path: str | Path) -> list[dict]:
-    spec = json.loads(Path(path).read_text())
-    return spec["rules"] if isinstance(spec, dict) else spec
-
-
 def _words(col: Column) -> Column:
     stripped = F.regexp_replace(col, rf"^{_WS}+|{_WS}+$", "")
     return F.when(stripped == "", F.array().cast("array<string>")).otherwise(
@@ -142,8 +135,8 @@ def _native_predicate(col: Column, rule: dict) -> Column:
     rt = rule["type"]
     if rt == "custom":
         raise ValueError(
-            "custom rules need the batched engine (regex_engine='auto' or "
-            "'python'); they are Python predicates and have no native form"
+            "custom rules need the batched engine (regex_engine='auto'); "
+            "they are Python predicates and have no native form"
         )
     if rt == "missing":
         return col.isNull()
@@ -451,9 +444,10 @@ def compile_predicates(
     """Compile a ruleset to ordered (rule, fires?) pairs with null-skip guards.
 
     regex_engine: "auto" (default — regex + word-stat rules batched into one
-    Arrow UDF, everything else native), "python" (same batching; name kept
-    for the parity tests), or "native" (pure Column expressions, Java regex
-    — the SQL-oracle-parity path)."""
+    Arrow UDF, everything else native) or "native" (pure Column
+    expressions, Java regex — the SQL-oracle-parity path)."""
+    if regex_engine not in ("auto", "native"):
+        raise ValueError(f"regex_engine must be 'auto' or 'native', got {regex_engine!r}")
     if regex_engine == "native":
         batched: set[str] = set()
     else:

@@ -24,7 +24,7 @@ from ..artifacts import get_bigram_models, get_langid_model
 from ..operators import langid as L
 from ..operators import perplexity as P
 from ..operators.patterns import pattern_finding
-from ..operators.rules import all_findings, first_hit
+from ..operators.rules import first_hit
 from ..operators.scrub import scrub_column
 from ..operators.verdict import priority_verdict, weighted_verdict
 
@@ -52,7 +52,6 @@ def quality_filter(
     mlq_threshold: float = 0.5,
     thresholds: dict[str, float] | None = None,
     regex_engine: str = "auto",
-    with_all_findings: bool = False,
     methods: list[str] | None = None,
     langid_model=None,
     bigram_models=None,
@@ -199,14 +198,65 @@ def quality_filter(
             "text_scrubbed": scrub_column(text),
         }
     )
-    if with_all_findings:
-        df = df.withColumn("findings_all", all_findings(text, rules, regex_engine))
     return df
 
 
-def filtered_output(result: DataFrame) -> DataFrame:
-    """The kept slice a downstream trainer would read."""
-    return result.filter(F.col("keep")).select("url", "warc_ts", "lang", "text_scrubbed")
+def filter_stage(
+    spark: SparkSession,
+    pages: DataFrame,
+    extract_html: bool = False,
+    c4_clean: bool = False,
+    rep_gate: bool = False,
+    gopher_gate: bool = False,
+    **filter_kwargs,
+) -> DataFrame:
+    """The filter job's keep decision, shared by the CLI's filter and
+    incremental modes and by the streaming filter.
+
+    Optional HTML extraction, then ``quality_filter`` (``filter_kwargs``
+    pass through), then the job's output columns (those of url, warc_ts,
+    lang, keep, verdict, ppl_score, mlq_score, text_scrubbed and bucket
+    that exist), then the document gates in a fixed order, each ANDed
+    into ``keep`` and all reading the shipped (post-scrub) text:
+    ``c4_clean`` (C4 line filter; also replaces ``text_scrubbed`` with the
+    cleaned text), ``rep_gate`` (Gopher repetition family),
+    ``gopher_gate`` (Gopher hard rules).  Every gate is a scan-local
+    projection: no extra shuffle."""
+    if extract_html:
+        from ..operators.extract import extract_pages
+
+        pages = extract_pages(pages)
+    res = quality_filter(spark, pages, **filter_kwargs)
+    res = res.select(*[
+        c for c in ("url", "warc_ts", "lang", "keep", "verdict",
+                    "ppl_score", "mlq_score", "text_scrubbed", "bucket")
+        if c in res.columns
+    ])
+    if c4_clean:
+        from ..operators.normalize import c4_clean_df
+
+        res = (
+            c4_clean_df(res, "text_scrubbed")
+            .withColumn("keep", F.col("keep") & F.col("keep_c4"))
+            .withColumn("text_scrubbed", F.col("text_c4"))
+            .drop("keep_c4", "text_c4")
+        )
+    if rep_gate:
+        from ..operators.textstats import gopher_repetition_col
+
+        res = res.withColumn(
+            "keep",
+            F.col("keep") & gopher_repetition_col(F.col("text_scrubbed"))["rep_keep"],
+        )
+    if gopher_gate:
+        from ..operators.textstats import gopher_gate_df
+
+        res = (
+            gopher_gate_df(res, "text_scrubbed", out_col="_gopher_ok")
+            .withColumn("keep", F.col("keep") & F.col("_gopher_ok"))
+            .drop("_gopher_ok")
+        )
+    return res
 
 
 def salted_group_count(df: DataFrame, key: Column, n_salt: int = 16) -> DataFrame:
@@ -220,40 +270,33 @@ def salted_group_count(df: DataFrame, key: Column, n_salt: int = 16) -> DataFram
     return salted.groupBy("k").agg(F.sum("count").alias("n")).withColumnRenamed("k", "key")
 
 
-def filter_metrics(
-    result: DataFrame, group_cols: tuple[str, ...] = ()
-) -> dict[str, DataFrame]:
-    """The north star's filter-metrics tables from one pipeline result:
-    per-rule fire counts, langid distribution, perplexity histogram.
+def filter_metrics(written: DataFrame) -> dict[str, DataFrame]:
+    """The filter job's ``_metrics`` tables, from the sink's written slice
+    (``PartitionedSink.run(..., metrics_fn=filter_metrics)``): per-rule
+    fire counts, the distribution of ``lang`` with kept counts, and a
+    0-15 perplexity histogram in 30 bins (skipped when ``methods`` prunes
+    the llm family).
 
-    Each is a small aggregate over the already-computed result columns —
-    at 100 TB they are map-side-combined groupBys whose outputs are a few
-    hundred rows.  With ``group_cols=("bucket",)`` the tables are keyed by
-    the resumable sink's commit bucket, so ``PartitionedSink.run(...,
-    metrics_fn=...)`` checkpoints them per partition alongside lineage and
-    a resumed run appends exactly the missing buckets' rows."""
+    Every table is keyed by the sink's commit ``bucket``, so each chunk's
+    rows commit with its snapshot and a resumed run appends exactly the
+    missing buckets' rows.  Each is a small map-side-combined aggregate
+    over columns the filter already computed."""
     from ..operators.metrics import histogram, rule_fire_counts
 
-    out: dict[str, DataFrame] = {
-        "rule_fires": rule_fire_counts(result, group_cols=group_cols)
+    tables = {
+        "rule_fire_counts": rule_fire_counts(written, group_cols=("bucket",)),
+        "lang_distribution": written.groupBy("bucket", "lang").agg(
+            F.count("*").alias("n"),
+            F.sum(F.col("keep").cast("long")).alias("n_kept"),
+        ),
     }
-    cols = set(result.columns)
-    if "langid" in cols:
-        out["lang_dist"] = (
-            result.groupBy(
-                *group_cols,
-                F.coalesce(F.col("langid")["pred_lang"], F.lit("unknown")).alias("lang"),
-            ).agg(F.count("*").alias("n"))
+    if "ppl_score" in written.columns:
+        tables["ppl_histogram"] = histogram(
+            written, "ppl_score", 0.0, 15.0, 30,
+            # "bin", so it cannot shadow the commit bucket
+            group_cols=("bucket",), bucket_col="bin",
         )
-    if "ppl_score" in cols:
-        out["ppl_hist"] = histogram(
-            result, "ppl_score", 0.0, 10.0, n_buckets=20, group_cols=group_cols,
-            # always "bin": a mode-dependent name (it must not shadow the
-            # sink's commit bucket in grouped mode) would let a consumer
-            # silently aggregate over the wrong dimension
-            bucket_col="bin",
-        )
-    return out
+    return tables
 
 
 def run_manifest(result: DataFrame) -> dict:

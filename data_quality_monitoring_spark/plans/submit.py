@@ -25,9 +25,30 @@ import json
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.metrics import histogram, rule_fire_counts
 from ..sources.manifest import PartitionedSink
-from .pipeline import quality_filter
+from .pipeline import filter_metrics, filter_stage, quality_filter
+
+_KNOWN_METHODS = ("validation", "pattern", "ml", "llm", "quality_model")
+
+# flags that shape the filter's keep decision: corpus mode runs
+# build_corpus's fixed default filter, so it rejects them
+_FILTER_FLAGS = ("methods", "combine", "regex_engine", "cascade", "llm_order",
+                 "c4_clean", "rep_gate", "gopher_gate")
+
+
+def _parse_methods(raw: str) -> list[str] | None:
+    """Strict parse: a typo must fail the job, not silently disable a
+    detector family and ship an unfiltered corpus."""
+    if not raw:
+        return None
+    methods = [m.strip() for m in raw.split(",") if m.strip()]
+    unknown = [m for m in methods if m not in _KNOWN_METHODS]
+    if unknown or not methods:
+        raise argparse.ArgumentTypeError(
+            f"unknown detector families {unknown} "
+            f"(choose from {', '.join(_KNOWN_METHODS)})"
+        )
+    return methods
 
 
 def build_args(argv: list[str] | None = None) -> argparse.Namespace:
@@ -69,12 +90,13 @@ def build_args(argv: list[str] | None = None) -> argparse.Namespace:
     )
     p.add_argument(
         "--methods",
+        type=_parse_methods,
         default=None,
         help="comma-separated detector families (validation,pattern,ml,llm,"
         "quality_model); default = the reference's four — quality_model is "
         "the opt-in learned tier",
     )
-    p.add_argument("--regex-engine", choices=["auto", "native", "python"], default="auto")
+    p.add_argument("--regex-engine", choices=["auto", "native"], default="auto")
     p.add_argument("--n-samples", type=int, default=8, help="multi-eval replicas")
     p.add_argument("--intensity", type=float, default=0.3, help="injection intensity")
     p.add_argument("--max-issues-per-row", type=int, default=2, help="single-demo cap")
@@ -107,9 +129,9 @@ def build_args(argv: list[str] | None = None) -> argparse.Namespace:
     p.add_argument(
         "--canonicalize-urls",
         action="store_true",
-        help="filter/corpus modes: canonicalize urls (operators/urls.py) "
-        "and keep one fetch per canonical url (earliest warc_ts) before "
-        "any text-level work",
+        help="filter/corpus/incremental modes: canonicalize urls "
+        "(operators/urls.py) and keep one fetch per canonical url (earliest "
+        "warc_ts) before any text-level work",
     )
     p.add_argument(
         "--cascade",
@@ -122,10 +144,10 @@ def build_args(argv: list[str] | None = None) -> argparse.Namespace:
     p.add_argument(
         "--gopher-gate",
         action="store_true",
-        help="filter mode: AND the Gopher hard-rule document gate (Rae et "
-        "al. 2021 Appendix A — word count, mean word length, symbol ratio, "
-        "bullet/ellipsis/duplicate line fractions, alpha-word fraction, "
-        "stop-word hits; operators/textstats.gopher_signals) into keep; "
+        help="filter/incremental modes: AND the Gopher hard-rule document "
+        "gate (Rae et al. 2021 Appendix A — word count, mean word length, "
+        "symbol ratio, bullet/ellipsis/duplicate line fractions, alpha-word "
+        "fraction, stop-word hits; operators/textstats.gopher_signals) into keep; "
         "scan-local Column expressions, zero extra shuffles",
     )
     p.add_argument(
@@ -138,8 +160,8 @@ def build_args(argv: list[str] | None = None) -> argparse.Namespace:
     p.add_argument(
         "--rep-gate",
         action="store_true",
-        help="filter mode: AND the full Gopher repetition-family verdict "
-        "(dup line/para fractions + char fractions, top-n-gram and "
+        help="filter/incremental modes: AND the full Gopher repetition-family "
+        "verdict (dup line/para fractions + char fractions, top-n-gram and "
         "dup-n-gram char fractions at the Table-A1 thresholds; "
         "operators/textstats.gopher_repetition) into keep — one Arrow "
         "pass, zero extra shuffles",
@@ -147,9 +169,9 @@ def build_args(argv: list[str] | None = None) -> argparse.Namespace:
     p.add_argument(
         "--c4-clean",
         action="store_true",
-        help="filter mode: apply the C4 line filter (Raffel et al. 2020 "
-        "§2.2 — drop short / unterminated / javascript lines, rebuild the "
-        "text, condemn brace/lorem-ipsum/dirty-word pages; "
+        help="filter/incremental modes: apply the C4 line filter (Raffel et "
+        "al. 2020 §2.2 — drop short / unterminated / javascript lines, "
+        "rebuild the text, condemn brace/lorem-ipsum/dirty-word pages; "
         "operators/normalize.c4_line_signals) to the shipped text and AND "
         "the verdict into keep; scan-local, zero extra shuffles",
     )
@@ -343,89 +365,79 @@ def build_args(argv: list[str] | None = None) -> argparse.Namespace:
         "gram store at <sig-store>_grams",
     )
     args = p.parse_args(argv)
-    if getattr(args, "dsir_top", None) and not getattr(args, "dsir_target", None):
+    if args.dsir_top and not args.dsir_target:
         p.error("--dsir-top requires --dsir-target (parquet of target-distribution docs)")
+    if args.mode == "corpus":
+        for dest in _FILTER_FLAGS:
+            if getattr(args, dest) != p.get_default(dest):
+                p.error(
+                    f"--{dest.replace('_', '-')} is not supported in corpus mode "
+                    "(its filter runs with the default detectors and no gates)"
+                )
     return args
-
-
-_KNOWN_METHODS = ("validation", "pattern", "ml", "llm", "quality_model")
-
-
-def _parse_methods(raw: str | None) -> list[str] | None:
-    """Strict parse: a typo must fail the job, not silently disable a
-    detector family and ship an unfiltered corpus."""
-    if not raw:
-        return None
-    methods = [m.strip() for m in raw.split(",") if m.strip()]
-    unknown = [m for m in methods if m not in _KNOWN_METHODS]
-    if unknown or not methods:
-        raise SystemExit(
-            f"--methods: unknown detector families {unknown} "
-            f"(choose from {', '.join(_KNOWN_METHODS)})"
-        )
-    return methods
 
 
 def _llm_models(args):
     """--llm-order 3 swaps the frozen trigram artifacts into the LLM slot
     (duck-typed scoring contract); None keeps the default bigram tier."""
-    if getattr(args, "llm_order", 2) == 3:
+    if args.llm_order == 3:
         from ..artifacts import get_trigram_models
 
         return get_trigram_models()
     return None
 
 
-def _apply_noindex(pages, args):
-    """Drop robots-noindex opt-outs at ingest (operators/extract.py).
-    Codegen rlike on the raw html — runs before extraction so opted-out
-    pages never cost a downstream cycle."""
-    if not getattr(args, "honor_noindex", False) or "html" not in pages.columns:
-        return pages
-    from ..operators.extract import robots_noindex
+def _drop_pages(spark: SparkSession, pages, args):
+    """Page-level drops ahead of any text-level work, in this order:
+    ``--canonicalize-urls`` (one fetch per canonical url, earliest
+    warc_ts), ``--honor-noindex`` (robots-noindex opt-outs, a codegen
+    rlike on the raw html; no-op without an html column) and
+    ``--host-blocklist`` (the small ``blocked`` projection of a host-stats
+    table, broadcast, so the pages side stays a narrow scan).  None of
+    them reads text, so extraction can follow them."""
+    if args.canonicalize_urls:
+        from ..operators.urls import canonical_dedup
 
-    return pages.filter(~robots_noindex(F.col("html")))
+        pages = canonical_dedup(pages)
+    if args.honor_noindex and "html" in pages.columns:
+        from ..operators.extract import robots_noindex
+
+        pages = pages.filter(~robots_noindex(F.col("html")))
+    if args.host_blocklist:
+        from ..operators.hostquality import apply_host_blocklist
+        from ..operators.urls import url_host
+
+        stats = spark.read.parquet(args.host_blocklist)
+        pages = (
+            apply_host_blocklist(pages, stats, host=url_host(F.col("url")))
+            .filter(~F.col("host_blocked"))
+            .drop("host_blocked")
+        )
+    return pages
 
 
-def _apply_host_blocklist(spark: SparkSession, pages, args):
-    """Drop pages on blocked hosts before any text-level work.
-
-    The blocklist is the small ``blocked`` projection of a host-stats
-    table (run_host_stats over a previously-filtered dump), broadcast —
-    the pages side stays a narrow scan (operators/hostquality.py)."""
-    path = getattr(args, "host_blocklist", None)
-    if not path:
-        return pages
-    from ..operators.hostquality import apply_host_blocklist
-    from ..operators.urls import url_host
-
-    stats = spark.read.parquet(path)
-    return (
-        apply_host_blocklist(pages, stats, host=url_host(F.col("url")))
-        .filter(~F.col("host_blocked"))
-        .drop("host_blocked")
+def _filter_stage(spark: SparkSession, pages, args):
+    """``pipeline.filter_stage`` with the CLI's filter-shaping flags."""
+    return filter_stage(
+        spark, pages, extract_html=args.extract_html,
+        c4_clean=args.c4_clean, rep_gate=args.rep_gate, gopher_gate=args.gopher_gate,
+        combine=args.combine, regex_engine=args.regex_engine, methods=args.methods,
+        cascade=args.cascade, bigram_models=_llm_models(args),
     )
 
 
 def run(spark: SparkSession, args: argparse.Namespace) -> dict:
-    if getattr(args, "input_format", "parquet") == "warc":
+    if args.input_format == "warc":
         from ..sources.warc import read_warc, warc_to_pages
 
         pages = warc_to_pages(read_warc(spark, args.input))
     else:
         pages = spark.read.parquet(args.input)
-    if getattr(args, "canonicalize_urls", False):
-        from ..operators.urls import canonical_dedup
-
-        pages = canonical_dedup(pages)
-    pages = _apply_noindex(pages, args)
-    pages = _apply_host_blocklist(spark, pages, args)
+    pages = _drop_pages(spark, pages, args)
     sink = PartitionedSink(args.output, args.n_buckets, args.chunk_buckets)
 
-    methods = _parse_methods(getattr(args, "methods", None))
-
     tier_cuts = None
-    if getattr(args, "ppl_tiers", False):
+    if args.ppl_tiers:
         # CCNet head/middle/tail cuts, estimated ONCE from a deterministic
         # 10% md5-bucket sample (the scale path of
         # operators/perplexity.perplexity_buckets — no global sort, and the
@@ -433,7 +445,7 @@ def run(spark: SparkSession, args: argparse.Namespace) -> dict:
         from ..operators.sampling import sample_bucket
 
         sample = pages.filter(sample_bucket(F.col("url")) < 100)
-        if getattr(args, "extract_html", False):
+        if args.extract_html:
             from ..operators.extract import extract_pages
 
             sample = extract_pages(sample)
@@ -451,58 +463,7 @@ def run(spark: SparkSession, args: argparse.Namespace) -> dict:
         )
 
     def transform(slice_df):
-        if getattr(args, "extract_html", False):
-            from ..operators.extract import extract_pages
-
-            slice_df = extract_pages(slice_df)
-        res = quality_filter(
-            spark, slice_df, combine=args.combine, regex_engine=args.regex_engine,
-            methods=methods, cascade=getattr(args, "cascade", False),
-            bigram_models=_llm_models(args),
-        )
-        keep_cols = [
-            c for c in ("url", "warc_ts", "lang", "keep", "verdict",
-                        "ppl_score", "mlq_score", "text_scrubbed", "bucket")
-            if c in res.columns
-        ]
-        res = res.select(*keep_cols)
-        _gates = [g for g in ("c4_clean", "rep_gate", "gopher_gate")
-                  if getattr(args, g, False)]
-        if _gates and "text_scrubbed" not in res.columns:
-            # an explicitly requested gate must never silently no-op
-            raise SystemExit(
-                f"--{_gates[0].replace('_', '-')} requires the scrubbed text "
-                "column, but 'text_scrubbed' is not in the projected output "
-                f"(columns: {res.columns}); enable the scrub stage or drop "
-                "the gate flag"
-            )
-        if getattr(args, "c4_clean", False) and "text_scrubbed" in res.columns:
-            from ..operators.normalize import c4_clean_df
-
-            res = (
-                c4_clean_df(res, "text_scrubbed")
-                .withColumn("keep", F.col("keep") & F.col("keep_c4"))
-                .withColumn("text_scrubbed", F.col("text_c4"))
-                .drop("keep_c4", "text_c4")
-            )
-        if getattr(args, "rep_gate", False) and "text_scrubbed" in res.columns:
-            from ..operators.textstats import gopher_repetition_col
-
-            res = res.withColumn(
-                "keep",
-                F.col("keep")
-                & gopher_repetition_col(F.col("text_scrubbed"))["rep_keep"],
-            )
-        if getattr(args, "gopher_gate", False) and "text_scrubbed" in res.columns:
-            from ..operators.textstats import gopher_gate_df
-
-            # post-scrub text: PII masks perturb the word stats marginally
-            # but the gate sees exactly what ships to the corpus
-            res = (
-                gopher_gate_df(res, "text_scrubbed", out_col="_gopher_ok")
-                .withColumn("keep", F.col("keep") & F.col("_gopher_ok"))
-                .drop("_gopher_ok")
-            )
+        res = _filter_stage(spark, slice_df, args)
         if tier_cuts is not None:
             cuts_df = spark.createDataFrame(
                 [(r["_bl"], float(r["_c1"]), float(r["_c2"])) for r in tier_cuts],
@@ -522,38 +483,14 @@ def run(spark: SparkSession, args: argparse.Namespace) -> dict:
             )
         return res
 
-    def metrics_fn(written):
-        # bucket-keyed so each chunk's metrics commit with its snapshot —
-        # a resumed run appends exactly the missing buckets' rows and a
-        # crashed chunk's orphans are superseded (sink.metrics reader).
-        # Deliberately NOT plans.pipeline.filter_metrics: the ship job's
-        # table names and histogram range (0-15/30 bins) are its output
-        # contract; the library function serves in-session analysis with
-        # its own defaults.  Keep semantics changes (PASS rows, bin math)
-        # in sync with metrics.rule_fire_counts/histogram — both paths
-        # call those operators, so the shared math lives there.
-        tables = {
-            "rule_fire_counts": rule_fire_counts(written, group_cols=("bucket",)),
-            "lang_distribution": written.groupBy("bucket", "lang").agg(
-                F.count("*").alias("n"),
-                F.sum(F.col("keep").cast("long")).alias("n_kept"),
-            ),
-        }
-        if "ppl_score" in written.columns:  # absent when --methods prunes llm
-            tables["ppl_histogram"] = histogram(
-                written, "ppl_score", 0.0, 15.0, 30,
-                group_cols=("bucket",), bucket_col="bin",
-            )
-        return tables
-
-    return sink.run(pages, transform, metrics_fn=metrics_fn)
+    return sink.run(pages, transform, metrics_fn=filter_metrics)
 
 
 def _apply_decontaminate(spark: SparkSession, docs, args, stats: dict):
     """--decontaminate: drop docs overlapping the eval-set parquet (exact
     8-gram shingles, or MinHash+Jaccard with --decontaminate-mode fuzzy).
     Shared by corpus and incremental modes; records the drop count."""
-    decon = getattr(args, "decontaminate", None)
+    decon = args.decontaminate
     if not decon:
         return docs
     # deterministic bench id: fuzzy decontamination evaluates this frame
@@ -567,7 +504,7 @@ def _apply_decontaminate(spark: SparkSession, docs, args, stats: dict):
         .select(F.md5(F.col("text")).alias("_bid"), F.col("text"))
         .dropDuplicates(["_bid"])
     )
-    mode = getattr(args, "decontaminate_mode", "exact")
+    mode = args.decontaminate_mode
     if mode == "audit":
         # report, don't drop: per-doc overlap fraction + dirty verdict to
         # <output>/contamination_report; the corpus ships unchanged
@@ -577,7 +514,7 @@ def _apply_decontaminate(spark: SparkSession, docs, args, stats: dict):
 
         rep = contamination_stats(
             docs, bench, "url", text_col="text_scrubbed",
-            frac_threshold=getattr(args, "decontaminate_threshold", 0.5),
+            frac_threshold=args.decontaminate_threshold,
         )
         rep.write.mode("overwrite").parquet(
             str(Path(args.output) / "contamination_report")
@@ -591,7 +528,7 @@ def _apply_decontaminate(spark: SparkSession, docs, args, stats: dict):
 
         flagged = fuzzy_decontaminate(
             docs, bench, "url", "_bid", text_col="text_scrubbed",
-            threshold=getattr(args, "decontaminate_threshold", 0.5),
+            threshold=args.decontaminate_threshold,
         ).select("url").distinct()
     elif mode == "bloom":
         from ..operators.dedup import decontaminate_bloom
@@ -623,25 +560,19 @@ def run_corpus(spark: SparkSession, args: argparse.Namespace) -> dict:
 
     from .corpus import build_corpus
 
-    pages = spark.read.parquet(args.input)
-    if getattr(args, "extract_html", False):  # raw-WARC ingestion
+    pages = _drop_pages(spark, spark.read.parquet(args.input), args)
+    if args.extract_html:  # raw-WARC ingestion
         from ..operators.extract import extract_pages
 
         pages = extract_pages(pages)
-    if getattr(args, "canonicalize_urls", False):
-        from ..operators.urls import canonical_dedup
-
-        pages = canonical_dedup(pages)
-    pages = _apply_noindex(pages, args)
-    pages = _apply_host_blocklist(spark, pages, args)
     rates = json.loads(args.sample_rates) if args.sample_rates else None
     corpus, stats = build_corpus(
         spark, pages, jaccard_threshold=args.jaccard_threshold,
         sample_rates=rates, default_rate=args.default_rate,
-        min_est_jaccard=getattr(args, "min_est_jaccard", None),
-        keep_best=getattr(args, "keep_best", False),
+        min_est_jaccard=args.min_est_jaccard,
+        keep_best=args.keep_best,
     )
-    k = getattr(args, "substring_k", None)
+    k = args.substring_k
     if k:  # ExactSubstr pass over the final corpus text
         from ..operators.dedup import substring_dedup
 
@@ -653,7 +584,7 @@ def run_corpus(spark: SparkSession, args: argparse.Namespace) -> dict:
             sd.select("url", F.col("text_dedup").alias("text_scrubbed")), "url"
         )
     corpus = _apply_decontaminate(spark, corpus, args, stats)
-    dsir_top = getattr(args, "dsir_top", None)
+    dsir_top = args.dsir_top
     if dsir_top:  # DSIR importance resample toward a target distribution
         from ..operators.sampling import dsir_sample
 
@@ -664,16 +595,12 @@ def run_corpus(spark: SparkSession, args: argparse.Namespace) -> dict:
         ).select("url")
         corpus = corpus.join(picked, "url", "left_semi")
         stats["dsir_docs_selected"] = corpus.count()
-    budget = getattr(args, "mixture_budget", None)
+    budget = args.mixture_budget
     if budget:  # lang-weighted token-budget mixing over the final corpus
         from ..operators.sampling import mixture_sample
         from ..operators.textstats import token_count
 
-        wmap = (
-            json.loads(args.mixture_weights)
-            if getattr(args, "mixture_weights", None)
-            else {}
-        )
+        wmap = json.loads(args.mixture_weights) if args.mixture_weights else {}
         # raw-crawl batches may carry lang=NULL → mix them as the 'und'
         # stratum rather than silently dropping them
         lang_key = F.coalesce(F.col("lang"), F.lit("und"))
@@ -699,7 +626,7 @@ def run_corpus(spark: SparkSession, args: argparse.Namespace) -> dict:
             mixed.agg(F.sum("n_tokens")).first()[0] or 0
         )
     corpus.write.mode("overwrite").parquet(f"{args.output}/corpus")
-    pack_budget = getattr(args, "pack_budget", None)
+    pack_budget = args.pack_budget
     if pack_budget:  # training-shard layout: (shard, pack_id) per doc
         from ..operators.packing import pack_documents
 
@@ -709,30 +636,30 @@ def run_corpus(spark: SparkSession, args: argparse.Namespace) -> dict:
         )
         packed.write.mode("overwrite").parquet(f"{args.output}/corpus_packed")
         stats["packs"] = packed.select("lang", "shard", "pack_id").distinct().count()
-        if getattr(args, "pack_texts", False):  # loader-ready concatenation
+        if args.pack_texts:  # loader-ready concatenation
             from ..operators.packing import materialize_packs
 
             materialize_packs(
                 packed, "url", text_col="text_scrubbed",
                 group_cols=("lang",), sep="\x1e",
             ).write.mode("overwrite").parquet(f"{args.output}/corpus_packs")
-    chunk_w = getattr(args, "chunk_words", None)
+    chunk_w = args.chunk_words
     if chunk_w:  # context-window chunks for long-document training/indexing
         from ..operators.packing import chunk_documents
 
         chunk_documents(
             corpus, "url", chunk_words=chunk_w,
-            overlap=getattr(args, "chunk_overlap", 32),
+            overlap=args.chunk_overlap,
             text_col="text_scrubbed",
         ).write.mode("overwrite").parquet(f"{args.output}/corpus_chunks")
         stats["chunks"] = spark.read.parquet(f"{args.output}/corpus_chunks").count()
-    n_shuf = getattr(args, "shuffle_shards", None)
+    n_shuf = args.shuffle_shards
     if n_shuf:  # global pseudo-random order for the training loader
         from ..operators.packing import shuffle_shards
 
         shuf = shuffle_shards(
             corpus, key="url", n_shards=n_shuf,
-            seed=getattr(args, "shuffle_seed", 0),
+            seed=args.shuffle_seed,
         )
         (
             shuf.repartition(n_shuf, "shard")
@@ -762,7 +689,7 @@ def run_ml_train(spark: SparkSession, args: argparse.Namespace) -> dict:
     summary = {
         "langs": model.langs, "buckets": int(model.log_probs.shape[1]), "path": out,
     }
-    probe_n = getattr(args, "probe_n", 200)
+    probe_n = args.probe_n
     if probe_n:
         # probe the artifact AS WRITTEN (npz round-trip), not the in-memory
         # weights — the reference runs its held-out test right after
@@ -786,8 +713,8 @@ def run_llm_train(spark: SparkSession, args: argparse.Namespace) -> dict:
     docs = spark.read.parquet(args.input)
     models = train_bigram_distributed(
         docs,
-        min_word_count=getattr(args, "min_word_count", None),
-        ngram_min_count=getattr(args, "ngram_min_count", None),
+        min_word_count=args.min_word_count,
+        ngram_min_count=args.ngram_min_count,
     )
     Path(args.output).mkdir(parents=True, exist_ok=True)
     summary = {}
@@ -795,7 +722,7 @@ def run_llm_train(spark: SparkSession, args: argparse.Namespace) -> dict:
         out = str(Path(args.output) / f"bigram_{lang}.npz")
         save_bigram_npz(lm, out)
         summary[lang] = {"vocab": len(lm.vocab), "n_tokens": lm.n_tokens, "path": out}
-    probe_n = getattr(args, "probe_n", 200)
+    probe_n = args.probe_n
     if probe_n and summary:
         # probe the artifacts AS WRITTEN (reference
         # llm_model_training.py:366-429: normal slice vs obvious anomalies)
@@ -835,7 +762,7 @@ def run_hp_search(spark: SparkSession, args: argparse.Namespace) -> dict:
         .withColumn("text", F.coalesce(F.col("_inj.corrupted"), F.col("text")))
         .drop("_inj")
     )
-    if getattr(args, "hp_target", "llm") == "ml":
+    if args.hp_target == "ml":
         # NB quality model trains ON the injection labels (good/bad classes)
         report = hp_search_ml(
             spark, docs, n_trials=args.hp_trials, seed=args.hp_seed
@@ -892,7 +819,7 @@ def run_single_demo(spark: SparkSession, args: argparse.Namespace) -> dict:
     return single_sample_demo(
         spark, pages, args.output, max_issues_per_row=args.max_issues_per_row,
         issue_probability=args.intensity,
-        probe_dirs=getattr(args, "probe_dirs", None) or (),
+        probe_dirs=args.probe_dirs or (),
     )
 
 
@@ -913,7 +840,7 @@ def run_multi_eval(spark: SparkSession, args: argparse.Namespace) -> dict:
 
     from .probe import load_probe_reports
 
-    probes = load_probe_reports(getattr(args, "probe_dirs", None) or ())
+    probes = load_probe_reports(args.probe_dirs or ())
     if probes:
         summary["model_probes"] = probes
     Path(args.output, "evaluation_summary.json").write_text(json.dumps(summary, indent=1))
@@ -949,28 +876,14 @@ def run_incremental(spark: SparkSession, args: argparse.Namespace) -> dict:
     O(batch), not O(corpus)."""
     from pathlib import Path
 
-    from ..operators.extract import extract_pages
     from .corpus import incremental_dedup
 
     import zlib
 
     if not args.sig_store:
         raise SystemExit("--mode incremental requires --sig-store")
-    pages = spark.read.parquet(args.input)
-    if getattr(args, "extract_html", False):
-        pages = extract_pages(pages)
-    if getattr(args, "canonicalize_urls", False):
-        from ..operators.urls import canonical_dedup
-
-        pages = canonical_dedup(pages)
-    pages = _apply_noindex(pages, args)
-    pages = _apply_host_blocklist(spark, pages, args)
-    filtered = quality_filter(
-        spark, pages, combine=args.combine, regex_engine=args.regex_engine,
-        methods=_parse_methods(getattr(args, "methods", None)),
-        cascade=getattr(args, "cascade", False),
-        bigram_models=_llm_models(args),
-    )
+    pages = _drop_pages(spark, spark.read.parquet(args.input), args)
+    filtered = _filter_stage(spark, pages, args)
     # persist: the dedup plan consumes this three times (feature pass,
     # batch count, final accepted write) — without the cache each pass
     # re-runs the full model-scoring filter
@@ -983,14 +896,14 @@ def run_incremental(spark: SparkSession, args: argparse.Namespace) -> dict:
     def write_corpus(accepted):
         accepted.write.mode("overwrite").parquet(f"{args.output}/corpus/batch={batch_id}")
 
-    if getattr(args, "store_layout", "parquet") == "bucketed":
+    if args.store_layout == "bucketed":
         from ..sources.sigstore import BucketedSigStore
 
         store = BucketedSigStore(args.sig_store)
     else:
         store = args.sig_store
 
-    k = getattr(args, "substring_k", None)
+    k = args.substring_k
     if k:
         # cross-batch ExactSubstr BEFORE doc-level dedup: spans already
         # shipped in earlier batches are stripped first (keep-first), so a
@@ -1046,7 +959,7 @@ def run_host_stats(spark: SparkSession, args: argparse.Namespace) -> dict:
         min_support=args.host_min_support,
         min_keep_rate=args.host_min_keep_rate,
     )
-    prev = getattr(args, "host_stats_merge", None)
+    prev = args.host_stats_merge
     if prev:  # accumulate this dump onto the running cross-dump stats
         from ..operators.hostquality import merge_host_stats
 
@@ -1099,7 +1012,7 @@ def run_link_graph(spark: SparkSession, args: argparse.Namespace) -> dict:
         "top_host": top["node"] if top else None,
         "top_rank": float(top["rank"]) if top else None,
     }
-    if getattr(args, "anchor_terms", False):
+    if args.anchor_terms:
         from ..operators.linkgraph import anchor_term_stats
 
         anchor_term_stats(pages).write.mode("overwrite").parquet(

@@ -236,9 +236,9 @@ class PartitionedSink:
 
         ``metrics_fn`` maps the chunk's *written* slice (re-read from the
         data dir, so it costs one pruned scan, not a pipeline re-run) to
-        named filter-metrics tables; each MUST carry the ``bucket`` column
-        (use ``plans.pipeline.filter_metrics(df, group_cols=("bucket",))``),
-        checked for every table before anything is appended.  They are
+        named filter-metrics tables (the filter job passes
+        ``plans.pipeline.filter_metrics``); each MUST carry the ``bucket``
+        column, checked for every table before anything is appended.  They are
         appended under ``_metrics/<name>/`` stamped with the snapshot id
         before the commit — exactly the lineage protocol, so a crashed
         chunk's orphan metrics rows are superseded on resume and
@@ -310,8 +310,7 @@ class PartitionedSink:
                 for name, mdf in tables.items():
                     if "bucket" not in mdf.columns:
                         raise ValueError(
-                            f"metrics table {name!r} must be keyed by 'bucket' "
-                            "(pass group_cols=('bucket',) to filter_metrics)"
+                            f"metrics table {name!r} must be keyed by 'bucket'"
                         )
                 self._append_all(spark, [(lineage, self.lineage_dir)] + [
                     (mdf.withColumn("snapshot", snap_col), self.metrics_dir / name)

@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..datagen import PAGES_SCHEMA
-from ..plans.pipeline import quality_filter
+from ..plans.pipeline import filter_stage, quality_filter
 
 
 def read_page_stream(spark: SparkSession, input_dir: str, max_files: int = 16) -> DataFrame:
@@ -39,30 +39,12 @@ def filtered_stream(
     gopher_gate: bool = False,
     c4_clean: bool = False,
 ) -> DataFrame:
-    """The batch filter expression tree over a stream; ``gopher_gate`` /
-    ``c4_clean`` AND the same scan-local document gates the batch CLI
-    flags apply (stateless Column expressions, so they are
-    streaming-safe by construction)."""
-    res = quality_filter(spark, pages_stream)
-    out = res.select("url", "warc_ts", "lang", "keep", "verdict", "text_scrubbed")
-    if c4_clean:
-        from ..operators.normalize import c4_clean_df
-
-        out = (
-            c4_clean_df(out, "text_scrubbed")
-            .withColumn("keep", F.col("keep") & F.col("keep_c4"))
-            .withColumn("text_scrubbed", F.col("text_c4"))
-            .drop("keep_c4", "text_c4")
-        )
-    if gopher_gate:
-        from ..operators.textstats import gopher_gate_df
-
-        out = (
-            gopher_gate_df(out, "text_scrubbed", out_col="_gopher_ok")
-            .withColumn("keep", F.col("keep") & F.col("_gopher_ok"))
-            .drop("_gopher_ok")
-        )
-    return out
+    """The batch filter stage (``plans.pipeline.filter_stage``) over a
+    stream; ``gopher_gate`` / ``c4_clean`` are the batch CLI's gates
+    (stateless Column expressions, so streaming-safe by construction)."""
+    return filter_stage(
+        spark, pages_stream, c4_clean=c4_clean, gopher_gate=gopher_gate
+    ).select("url", "warc_ts", "lang", "keep", "verdict", "text_scrubbed")
 
 
 def start_filter(

@@ -77,24 +77,48 @@ def test_threshold_sweep_excludes_null_scores(spark):
 
 
 def test_filter_metrics_tables(spark):
-    """North-star filter-metrics tables: per-rule fire counts, langid
-    distribution, perplexity histogram — all from one pipeline result."""
+    """The filter job's shipped ``_metrics`` tables: names, keys, the
+    ``lang`` distribution with kept counts and the 0-15 / 30-bin
+    perplexity histogram, each equal to a pandas recount of the result."""
+    import numpy as np
     from pyspark.sql import functions as F
 
     from data_quality_monitoring_spark.datagen import generate_pages
-    from data_quality_monitoring_spark.plans.pipeline import filter_metrics, quality_filter
+    from data_quality_monitoring_spark.plans.pipeline import filter_metrics, filter_stage
 
-    res = quality_filter(spark, generate_pages(spark, 200, partitions=4)).persist()
+    pages = generate_pages(spark, 200, partitions=4).withColumn(
+        "bucket", F.pmod(F.xxhash64("url"), F.lit(4)).cast("int")
+    )
+    res = filter_stage(spark, pages).persist()
     m = filter_metrics(res)
-    assert set(m) == {"rule_fires", "lang_dist", "ppl_hist"}
-    n = res.count()
-    fires = m["rule_fires"].toPandas()
+    assert set(m) == {"rule_fire_counts", "lang_distribution", "ppl_histogram"}
+    pdf = res.select("bucket", "lang", "keep", "ppl_score").toPandas()
+    n = len(pdf)
+    fires = m["rule_fire_counts"].toPandas()
+    assert list(fires.columns) == ["bucket", "method", "code", "n"]
     assert fires.n.sum() == n  # every doc lands in exactly one (method, code)
     assert "pass" in set(fires.method)  # kept docs appear as the PASS row
-    langs = m["lang_dist"].toPandas()
-    assert langs.n.sum() == n
-    scored = res.filter(F.col("ppl_score").isNotNull()).count()
-    hist = m["ppl_hist"].toPandas()
-    assert hist.n.sum() == scored
-    assert (hist.bin.between(0, 21)).all()  # bin column name is mode-invariant
+
+    langs = m["lang_distribution"].toPandas()
+    assert list(langs.columns) == ["bucket", "lang", "n", "n_kept"]
+    want = (
+        pdf.groupby(["bucket", "lang"], dropna=False)
+        .agg(n=("keep", "size"), n_kept=("keep", "sum"))
+        .reset_index()
+    )
+    got = langs.sort_values(["bucket", "lang"]).reset_index(drop=True)
+    want = want.sort_values(["bucket", "lang"]).reset_index(drop=True)
+    assert got[["n", "n_kept"]].astype("int64").equals(want[["n", "n_kept"]].astype("int64"))
+
+    hist = m["ppl_histogram"].toPandas()
+    assert list(hist.columns) == ["bucket", "bin", "n", "lo"]
+    scored = pdf[pdf.ppl_score.notna()]
+    assert len(scored) > 0 and hist.n.sum() == len(scored)
+    bins = np.clip(np.floor(scored.ppl_score / 0.5).astype(int) + 1, 0, 31)
+    assert (scored.ppl_score < 15.0).any()  # in-range scores exercise the bins
+    want = scored.assign(bin=bins).groupby(["bucket", "bin"]).size()
+    got = hist.set_index(["bucket", "bin"]).n.sort_index()
+    assert got.to_dict() == want.sort_index().to_dict()
+    inner = hist[hist.bin.between(1, 30)]
+    assert ((inner.bin - 1) * 0.5 == inner.lo).all()  # 30 bins of width 0.5
     res.unpersist()

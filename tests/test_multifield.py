@@ -135,7 +135,7 @@ def test_url_quality_ruleset(spark):
         ("https://example.com/0123456789012345678901", "DIGIT_URL"),
         ("https://example.com/article/clean-title", None),
     ]
-    for engine in ("native", "python"):
+    for engine in ("native", "auto"):
         df = spark.createDataFrame(
             pd.DataFrame({"url": pd.Series([c for c, _ in cases], dtype="object")})
         )

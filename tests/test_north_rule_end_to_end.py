@@ -14,13 +14,13 @@ import pytest
 from pyspark.sql import functions as F
 
 from data_quality_monitoring_spark.datagen import generate_pages, generate_pages_pandas
-from data_quality_monitoring_spark.operators.extract import extract_pages, html_to_text_py
+from data_quality_monitoring_spark.operators.extract import html_to_text_py
 from data_quality_monitoring_spark.oracle import label_pages
 from data_quality_monitoring_spark.plans.pipeline import (
     default_pattern_cfg,
     default_rules,
     filter_metrics,
-    quality_filter,
+    filter_stage,
 )
 from data_quality_monitoring_spark.sources.manifest import PartitionedSink
 
@@ -33,21 +33,17 @@ def test_north_rule_end_to_end(spark, tmp_path):
         "text", F.lit(None).cast("string")
     )
 
-    # 2-3. extract → filter inside the resumable transform
+    # 2-3. extract → filter inside the resumable transform: the filter
+    # job's own stage and metrics tables
     def transform(slice_df):
-        res = quality_filter(spark, extract_pages(slice_df))
-        return res.select(
-            "url", "keep", "verdict", "langid", "ppl_score", "text_scrubbed", "bucket"
-        )
-
-    mfn = lambda w: filter_metrics(w, group_cols=("bucket",))
+        return filter_stage(spark, slice_df, extract_html=True)
 
     # 4. crash mid-run, then resume from the last committed snapshot
     sink = PartitionedSink(str(tmp_path / "out"), n_buckets=8, chunk_buckets=2)
     with pytest.raises(RuntimeError, match="injected failure"):
-        sink.run(raw, transform, fail_after_chunks=2, metrics_fn=mfn)
+        sink.run(raw, transform, fail_after_chunks=2, metrics_fn=filter_metrics)
     assert len(sink.committed_buckets()) == 4
-    sink.run(raw, transform, metrics_fn=mfn)  # resume completes the rest
+    sink.run(raw, transform, metrics_fn=filter_metrics)  # resume completes the rest
 
     result = sink.result(spark).toPandas().sort_values("url").reset_index(drop=True)
     assert len(result) == N_DOCS
@@ -66,8 +62,10 @@ def test_north_rule_end_to_end(spark, tmp_path):
     # 6. lineage covers every bucket once; metrics tables survived the crash
     lin = sink.lineage(spark).toPandas()
     assert sorted(lin.bucket) == list(range(8)) and lin.n_docs.sum() == N_DOCS
-    fires = sink.metrics(spark, "rule_fires").toPandas()
+    fires = sink.metrics(spark, "rule_fire_counts").toPandas()
     assert fires.n.sum() == N_DOCS  # exactly-once
     assert {"pass"} < set(fires.method)  # kept docs + at least one detector
-    ppl = sink.metrics(spark, "ppl_hist").toPandas()
+    langs = sink.metrics(spark, "lang_distribution").toPandas()
+    assert langs.n.sum() == N_DOCS and langs.n_kept.sum() == result.keep.sum()
+    ppl = sink.metrics(spark, "ppl_histogram").toPandas()
     assert ppl.n.sum() == result.ppl_score.notna().sum()

@@ -6,26 +6,15 @@ import pytest
 from pyspark.sql import functions as F
 
 from data_quality_monitoring_spark.datagen import generate_pages
-from data_quality_monitoring_spark.plans.pipeline import quality_filter
+from data_quality_monitoring_spark.plans.pipeline import filter_metrics, filter_stage
 from data_quality_monitoring_spark.sources.manifest import PartitionedSink
 
 N_DOCS = 640
 
 
 def _transform(spark):
-    def t(slice_df):
-        res = quality_filter(spark, slice_df)
-        return res.select("url", "keep", "text_scrubbed", "bucket")
-
-    return t
-
-
-def _metrics_transform(spark):
-    def t(slice_df):
-        res = quality_filter(spark, slice_df)
-        return res.select("url", "keep", "verdict", "langid", "ppl_score", "bucket")
-
-    return t
+    """The filter job's transform: the shipped filter stage."""
+    return lambda slice_df: filter_stage(spark, slice_df)
 
 
 @pytest.fixture()
@@ -82,35 +71,26 @@ def test_metrics_checkpoint_and_resume(spark, pages, tmp_path):
     """Filter-metrics tables are committed per chunk alongside lineage and
     survive a crash+resume bit-identical to a clean run (north rule:
     resumable checkpoints WITH metrics tables)."""
-    from data_quality_monitoring_spark.plans.pipeline import filter_metrics
-
-    t = _metrics_transform(spark)
-    mfn = lambda written: filter_metrics(written, group_cols=("bucket",))
+    t = _transform(spark)
 
     clean = PartitionedSink(str(tmp_path / "clean"), n_buckets=8, chunk_buckets=2)
-    clean.run(pages, t, metrics_fn=mfn)
+    clean.run(pages, t, metrics_fn=filter_metrics)
 
     crashy = PartitionedSink(str(tmp_path / "crashy"), n_buckets=8, chunk_buckets=2)
     with pytest.raises(RuntimeError, match="injected failure"):
-        crashy.run(pages, t, fail_after_chunks=2, metrics_fn=mfn)
-    crashy.run(pages, t, metrics_fn=mfn)  # resume
+        crashy.run(pages, t, fail_after_chunks=2, metrics_fn=filter_metrics)
+    crashy.run(pages, t, metrics_fn=filter_metrics)  # resume
 
     for name, keys in [
-        ("rule_fires", ["bucket", "method", "code"]),
-        ("lang_dist", ["bucket", "lang"]),
-        ("ppl_hist", ["bucket", "bin"]),
+        ("rule_fire_counts", ["bucket", "method", "code"]),
+        ("lang_distribution", ["bucket", "lang"]),
+        ("ppl_histogram", ["bucket", "bin"]),
     ]:
-        a = (
-            clean.metrics(spark, name).toPandas()
-            .sort_values(keys).reset_index(drop=True)
-        )
-        b = (
-            crashy.metrics(spark, name).toPandas()
-            .sort_values(keys).reset_index(drop=True)
-        )
-        assert a[keys + ["n"]].equals(b[keys + ["n"]]), name
+        a = _sorted(clean.metrics(spark, name).drop("snapshot"), keys)
+        b = _sorted(crashy.metrics(spark, name).drop("snapshot"), keys)
+        assert a.equals(b), name
     # run-level rollup covers every doc exactly once
-    total = clean.metrics(spark, "rule_fires").groupBy().sum("n").collect()[0][0]
+    total = clean.metrics(spark, "rule_fire_counts").groupBy().sum("n").collect()[0][0]
     assert total == N_DOCS
 
 
@@ -118,29 +98,19 @@ def test_metrics_orphans_from_precommit_crash_do_not_double_count(spark, pages, 
     """A crash BETWEEN the metrics append and the manifest commit leaves
     orphan rows at the snapshot id the resumed chunk re-writes; metrics()
     must still be exactly-once."""
-    import shutil
-
-    from pyspark.sql import functions as F
-
-    from data_quality_monitoring_spark.plans.pipeline import filter_metrics
-
-    def t(slice_df):
-        res = quality_filter(spark, slice_df)
-        return res.select("url", "keep", "verdict", "bucket")
-
-    mfn = lambda written: {"rule_fires": filter_metrics(written, group_cols=("bucket",))["rule_fires"]}
+    mfn = lambda written: {"rule_fire_counts": filter_metrics(written)["rule_fire_counts"]}
 
     sink = PartitionedSink(str(tmp_path / "s"), n_buckets=8, chunk_buckets=4)
-    sink.run(pages, t, metrics_fn=mfn)
-    table = sink.metrics(spark, "rule_fires").toPandas()
+    sink.run(pages, _transform(spark), metrics_fn=mfn)
+    table = sink.metrics(spark, "rule_fire_counts").toPandas()
 
     # simulate the pre-commit orphan: duplicate the whole metrics dir
     # content (same snapshot ids, same rows) as a second append
-    src = sink.metrics_dir / "rule_fires"
+    src = sink.metrics_dir / "rule_fire_counts"
     dup = spark.read.parquet(str(src))
     dup.write.mode("append").parquet(str(src))
 
-    again = sink.metrics(spark, "rule_fires").toPandas()
+    again = sink.metrics(spark, "rule_fire_counts").toPandas()
     keys = ["bucket", "method", "code"]
     assert (
         again.sort_values(keys).reset_index(drop=True)[keys + ["n"]]
@@ -159,8 +129,6 @@ def grouped_run(spark, tmp_path_factory):
     """One sink run with metrics under its own job group, bracketed by a
     marker job before and after, so the run's job ids are exactly the ids
     between the two markers."""
-    from data_quality_monitoring_spark.plans.pipeline import filter_metrics
-
     sc = spark.sparkContext
     pages = generate_pages(spark, N_DOCS, partitions=8)
     sink = PartitionedSink(str(tmp_path_factory.mktemp("grouped")), n_buckets=16, chunk_buckets=4)
@@ -169,10 +137,7 @@ def grouped_run(spark, tmp_path_factory):
         for group in ("before", "sink", "after"):
             sc.setJobGroup(f"test_resume.{group}", group)
             if group == "sink":
-                sink.run(
-                    pages, _metrics_transform(spark),
-                    metrics_fn=lambda w: filter_metrics(w, group_cols=("bucket",)),
-                )
+                sink.run(pages, _transform(spark), metrics_fn=filter_metrics)
             else:
                 spark.range(1).count()
             groups[group] = set(sc.statusTracker().getJobIdsForGroup(f"test_resume.{group}"))
@@ -192,10 +157,8 @@ def test_sink_writes_one_file_per_bucket(grouped_run):
 def test_sink_side_tables_equal_direct_aggregates(spark, grouped_run):
     """``_lineage`` and every ``_metrics`` table equal the same aggregates
     computed in one pass over ``transform(pages)``."""
-    from data_quality_monitoring_spark.plans.pipeline import filter_metrics
-
     pages, sink, _ = grouped_run
-    direct = _metrics_transform(spark)(
+    direct = _transform(spark)(
         pages.withColumn("bucket", F.pmod(F.xxhash64("url"), F.lit(16)).cast("int"))
     ).persist()
     lineage = direct.groupBy("bucket").agg(
@@ -206,7 +169,7 @@ def test_sink_side_tables_equal_direct_aggregates(spark, grouped_run):
     assert _sorted(sink.lineage(spark).drop("snapshot"), ["bucket"]).equals(
         _sorted(lineage, ["bucket"])
     )
-    for name, mdf in filter_metrics(direct, group_cols=("bucket",)).items():
+    for name, mdf in filter_metrics(direct).items():
         keys = [c for c in mdf.columns if c != "n"]
         got = _sorted(sink.metrics(spark, name).drop("snapshot"), keys)
         assert got.equals(_sorted(mdf, keys)), name

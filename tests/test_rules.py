@@ -173,7 +173,7 @@ def _spark_codes(spark, values, rules, engine):
     return [None if f is None else f["code"] for f in out["f"]]
 
 
-@pytest.mark.parametrize("engine", ["native", "python", "auto"])
+@pytest.mark.parametrize("engine", ["native", "auto"])
 def test_rule_types_match_oracle(spark, engine):
     for rules, cases in CASES:
         values = [v for v, _ in cases]
@@ -190,14 +190,19 @@ def test_first_hit_order_is_semantics(spark):
         {"type": "regex", "pattern": "x", "error_code": "B", "probability": 0.6},
     ]
     # "x" fails both → first (A) must win, in both engines and the oracle
-    for engine in ("native", "python"):
+    for engine in ("native", "auto"):
         assert _spark_codes(spark, ["x"], rules, engine) == ["A"]
     assert rule_first_hit("x", rules)["code"] == "A"
     # reversed order → B wins
     rev = list(reversed(rules))
-    for engine in ("native", "python"):
+    for engine in ("native", "auto"):
         assert _spark_codes(spark, ["x"], rev, engine) == ["B"]
     assert rule_first_hit("x", rev)["code"] == "B"
+
+
+def test_unknown_regex_engine_raises(spark):
+    with pytest.raises(ValueError, match="regex_engine must be 'auto' or 'native'"):
+        first_hit(F.col("v"), [{"type": "regex", "pattern": "x"}], "python")
 
 
 def test_all_findings_collects_every_hit(spark):

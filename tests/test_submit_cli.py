@@ -1,7 +1,9 @@
 """The spark-submit entrypoint end-to-end: run, resume no-op, metrics tables."""
 
+import pytest
+
 from data_quality_monitoring_spark.datagen import generate_pages
-from data_quality_monitoring_spark.plans.submit import build_args, run
+from data_quality_monitoring_spark.plans.submit import build_args, run, run_incremental
 
 
 def test_submit_run_and_resume(spark, tmp_path):
@@ -127,6 +129,20 @@ def test_corpus_mode(spark, tmp_path):
     assert on_disk == stats
 
 
+@pytest.mark.parametrize(
+    "flag",
+    [["--methods", "validation"], ["--combine", "weighted"], ["--regex-engine", "native"],
+     ["--cascade"], ["--llm-order", "3"], ["--c4-clean"], ["--rep-gate"], ["--gopher-gate"]],
+)
+def test_corpus_mode_rejects_filter_flags(flag, capsys):
+    """Corpus mode runs build_corpus's default filter, so a flag that would
+    change the keep decision must fail the job, naming the flag."""
+    with pytest.raises(SystemExit):
+        build_args(["--mode", "corpus", "--input", "i", "--output", "o", *flag])
+    assert f"{flag[0]} is not supported in corpus mode" in capsys.readouterr().err
+    build_args(["--mode", "filter", "--input", "i", "--output", "o", *flag])
+
+
 def test_analyze_column_mode(spark, tmp_path):
     import json
 
@@ -225,6 +241,25 @@ def test_cli_incremental_mode(spark, tmp_path):
     assert s2["accepted"] == 0 and s2["dropped"] == s1["accepted"]
     corpus = spark.read.parquet(f"{out}/corpus")
     assert corpus.count() == s1["accepted"]  # batch 2 added nothing
+
+
+def test_incremental_gopher_gate_matches_filter_mode(spark, tmp_path):
+    """Incremental mode runs the filter job's stage: with --gopher-gate it
+    accepts exactly the docs filter mode keeps with --gopher-gate."""
+    in_dir = str(tmp_path / "in")
+    generate_pages(spark, 160, partitions=4).write.parquet(in_dir)
+    gate = ["--input", in_dir, "--gopher-gate"]
+    run(spark, build_args([*gate, "--output", str(tmp_path / "f"),
+                           "--n-buckets", "4", "--chunk-buckets", "4"]))
+    stats = run_incremental(spark, build_args(
+        ["--mode", "incremental", *gate, "--output", str(tmp_path / "i"),
+         "--sig-store", str(tmp_path / "sigs")]
+    ))
+    kept = {r.url for r in spark.read.parquet(str(tmp_path / "f" / "data"))
+            .filter("keep").select("url").collect()}
+    accepted = {r.url for r in spark.read.parquet(str(tmp_path / "i" / "corpus"))
+                .select("url").collect()}
+    assert stats["dropped"] == 0 and accepted == kept
 
 
 def test_corpus_mode_substring_and_prefilter(spark, tmp_path):

@@ -7,8 +7,6 @@ data), which says nothing about the operator at crawl scale.  This bench
 answers the real questions:
 
 * per-iteration wall on a graph big enough that data dominates scheduling,
-* the effect of ``checkpoint_interval`` (k iterations per materialized
-  job) on total wall,
 * convergence behavior of the ``tol`` stop (iterations x L1 delta).
 
 Usage: python tools/pagerank_bench.py [n_hosts] [cores] → one JSON line,
@@ -73,17 +71,11 @@ def main() -> None:
     n_edges = edges.count()
 
     results = {}
-    # fixed 10 rounds, materialize every round (the contract-query shape)
-    w1, _, top1 = timed_pagerank(edges, n_iter=10, checkpoint_interval=1)
-    results["fixed10_ckpt1"] = {"wall_s": round(w1, 2), "per_iter_s": round(w1 / 10, 2)}
-    # same 10 rounds, 2 per materialized job
-    w2, _, top2 = timed_pagerank(edges, n_iter=10, checkpoint_interval=2)
-    results["fixed10_ckpt2"] = {"wall_s": round(w2, 2), "per_iter_s": round(w2 / 10, 2)}
-    assert top1 == top2, (top1, top2)  # same math, fewer jobs
-    # tolerance stop: iterate until L1 <= 1e-4 (checked every 2 rounds)
-    w3, stats3, top3 = timed_pagerank(
-        edges, n_iter=60, tol=1e-4, checkpoint_interval=2
-    )
+    # fixed 10 rounds (the contract-query shape)
+    w1, _, _ = timed_pagerank(edges, n_iter=10)
+    results["fixed10"] = {"wall_s": round(w1, 2), "per_iter_s": round(w1 / 10, 2)}
+    # tolerance stop: iterate until L1 <= 1e-4
+    w3, stats3, top3 = timed_pagerank(edges, n_iter=60, tol=1e-4)
     results["tol_1e-4"] = {
         "wall_s": round(w3, 2),
         "iterations": stats3["iterations"],
@@ -103,10 +95,8 @@ def main() -> None:
     print(json.dumps(out))
 
     rows = [
-        ("fixed 10 iter, ckpt every round", results["fixed10_ckpt1"]["wall_s"],
-         results["fixed10_ckpt1"]["per_iter_s"], "—"),
-        ("fixed 10 iter, ckpt every 2", results["fixed10_ckpt2"]["wall_s"],
-         results["fixed10_ckpt2"]["per_iter_s"], "—"),
+        ("fixed 10 iter", results["fixed10"]["wall_s"],
+         results["fixed10"]["per_iter_s"], "—"),
         (f"tol=1e-4 stop ({results['tol_1e-4']['iterations']} iters)",
          results["tol_1e-4"]["wall_s"],
          round(results["tol_1e-4"]["wall_s"] / results["tol_1e-4"]["iterations"], 2),
