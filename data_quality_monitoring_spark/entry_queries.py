@@ -336,31 +336,6 @@ FROM documents
 """
 
 
-def _shingles(col: Column) -> Column:
-    """Distinct 3-word shingles via an Arrow-batched pandas UDF.
-
-    Measured at sf0.1 (5000 docs → 260k shingles, local[32]): native
-    ``transform(sequence, i -> concat_ws(element_at...))`` takes 11.3 s (the
-    higher-order-function lambda path is interpreted, not codegen'd), a
-    posexplode+window-lead rewrite 3.9 s (pays a word-level shuffle), the
-    pandas UDF 0.7 s.  This is the documented exception to "stay native":
-    string kernels with per-row loops beat interpreted HOFs by >10×."""
-
-    @F.pandas_udf(T.ArrayType(T.StringType()))
-    def _sh(texts: pd.Series) -> pd.Series:
-        def sh(t):
-            if t is None:
-                return []
-            w = t.split()
-            if len(w) < 3:
-                return []
-            return list({" ".join(w[i : i + 3]) for i in range(len(w) - 2)})
-
-        return texts.map(sh)
-
-    return _sh(col)
-
-
 _SHINGLES_SQL = """
 list_distinct(
   CASE WHEN len(words) >= 3
@@ -375,11 +350,10 @@ def q_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     shingles; per band, candidate pairs are counted from band-bucket sizes
     (n·(n−1)/2) — NO pairwise self-join, so the plan is groupBy-only and
     survives arbitrary scale.  md5(seed‖shingle) is the portable hash."""
+    from .operators.dedup import minhash_signatures
+
     d = _read(spark, sf_dir, "documents")
-    sh = d.select("doc_id", F.explode(_shingles(F.col("text"))).alias("shingle"))
-    sig = sh.groupBy("doc_id").agg(
-        *[F.min(F.md5(F.concat(F.lit(str(b)), F.col("shingle")))).alias(f"h{b}") for b in range(4)]
-    )
+    sig = minhash_signatures(d, "doc_id", n_hashes=4, hash_fn="md5")
     # unpivot the 4 band signatures so ONE pass computes all band buckets —
     # the naive per-band loop would rescan + re-aggregate the shingles 4×
     unpivoted = sig.select(
@@ -442,7 +416,7 @@ def q_dedup_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _jaccard_pairs(d: DataFrame) -> DataFrame:
     """≥0.5-Jaccard near-dup pairs (da < db) over df-capped 3-word shingles
     — the shared front half of q_dedup_jaccard and q_dedup_clusters."""
-    from .operators.dedup import cap_shingle_df
+    from .operators.dedup import cap_shingle_df, shingle_column
 
     # persist the exploded shingles: df-filter, sizes and the self-join all
     # consume it, and recomputing the explode dominates this query's cost.
@@ -451,7 +425,7 @@ def _jaccard_pairs(d: DataFrame) -> DataFrame:
     # identical (2⁻⁶⁴ per pair) so the DuckDB oracle, which joins on the
     # string, computes the same answer.
     raw = (
-        d.select("doc_id", F.explode(_shingles(F.col("text"))).alias("_s"))
+        d.select("doc_id", F.explode(shingle_column(F.col("text"))).alias("_s"))
         .select("doc_id", F.xxhash64("_s").alias("shingle"))
         .persist()
     )
@@ -909,28 +883,21 @@ SQL_DEDUP_SUBSTRING = _dedup_substring_sql()
 
 # ---------------------------------------------------------------- similarity search
 
-def _dot(a: Column, b: Column) -> Column:
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-
-
 def q_similarity_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force cosine top-k ANN baseline: 10 query vectors × corpus via a
     broadcast nested-loop join (query side is tiny and explicitly
     broadcast); exact ranking with a window."""
     from pyspark.sql import Window
 
+    from .operators.similarity import _dot, _norm
+
     e = _read(spark, sf_dir, "embeddings")
     q = e.filter(F.col("vec_id") < 10).select(
         F.col("vec_id").alias("qid"), F.col("embedding").alias("qv")
     )
     joined = e.crossJoin(F.broadcast(q)).filter(F.col("vec_id") != F.col("qid"))
-    cos = _dot(F.col("qv"), F.col("embedding")) / (
-        F.sqrt(_dot(F.col("qv"), F.col("qv"))) * F.sqrt(_dot(F.col("embedding"), F.col("embedding")))
-    )
+    qv, ev = F.col("qv"), F.col("embedding")
+    cos = _dot(qv, ev) / (_norm(qv) * _norm(ev))
     w = Window.partitionBy("qid").orderBy(F.desc("cos"), F.asc("vec_id"))
     return (
         joined.withColumn("cos", cos)
@@ -962,6 +929,8 @@ def q_centroid_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-centroid scorer (reference check_anomalies.py:98-151 rebuilt
     relationally): per-label centroid via posexplode + positional avg, then
     mean member-to-centroid cosine per label."""
+    from .operators.similarity import _dot, _norm
+
     e = _read(spark, sf_dir, "embeddings")
     exploded = e.select("vec_id", "label", F.posexplode("embedding").alias("pos", "v"))
     cent = (
@@ -975,10 +944,8 @@ def q_centroid_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     j = e.join(F.broadcast(cent), "label")
-    cos = _dot(F.col("embedding"), F.col("centroid")) / (
-        F.sqrt(_dot(F.col("embedding"), F.col("embedding")))
-        * F.sqrt(_dot(F.col("centroid"), F.col("centroid")))
-    )
+    ev, cv = F.col("embedding"), F.col("centroid")
+    cos = _dot(ev, cv) / (_norm(ev) * _norm(cv))
     return (
         j.withColumn("cos", cos)
         .groupBy("label")

@@ -21,8 +21,14 @@ from pyspark.sql import types as T
 
 
 def shingle_column(text: Column, k: int = 3) -> Column:
-    """Distinct k-word shingles (Arrow UDF — measured >10× faster than the
-    interpreted higher-order-function path, see entry_queries._shingles)."""
+    """Distinct k-word shingles via an Arrow-batched pandas UDF.
+
+    Measured at sf0.1 (5000 docs → 260k shingles, local[32]): native
+    ``transform(sequence, i -> concat_ws(element_at...))`` takes 11.3 s (the
+    higher-order-function lambda path is interpreted, not codegen'd), a
+    posexplode+window-lead rewrite 3.9 s (pays a word-level shuffle), the
+    pandas UDF 0.7 s.  This is the documented exception to "stay native":
+    string kernels with per-row loops beat interpreted HOFs by >10×."""
 
     @F.pandas_udf(T.ArrayType(T.StringType()))
     def _sh(texts: pd.Series) -> pd.Series:
@@ -59,8 +65,8 @@ def minhash_signatures(
     at 4.3× the md5 chain's speed (33.9 s → 7.9 s over the 550k-doc kept
     slice of the 1M corpus) — this stage dominated the corpus build under
     md5.  ``"md5"`` remains for the portable form the oracled contract
-    query uses (DuckDB has md5, not xxhash64); minhash quality is
-    hash-agnostic, only collision structure matters."""
+    query ``dedup_minhash`` uses (DuckDB has md5, not xxhash64); minhash
+    quality is hash-agnostic, only collision structure matters."""
     sh = df.select(key, F.explode(shingle_column(F.col(text_col))).alias("shingle"))
     if hash_fn == "xxhash64":
         hashes = [
@@ -285,21 +291,14 @@ def simhash_column(text: Column) -> Column:
 
 def simhash_near_dup_pairs(
     df: DataFrame, key: str, text_col: str = "text", max_hamming: int = 3, n_blocks: int = 4,
-    max_bucket: int | None = None,
 ) -> DataFrame:
     """SimHash near-dup via block permutation: split the 64-bit hash into
     ``n_blocks`` 16-bit blocks; two docs within ``max_hamming`` (< n_blocks)
     must share at least one exact block (pigeonhole), so candidates come
     from equi-joins on (block_id, block_value); Hamming distance verifies.
-
-    ``max_bucket`` is the same hot-bucket guard as lsh_candidate_pairs —
-    a boilerplate family shares simhash blocks wholesale and turns one
-    (block, value) group quadratic.  It defaults OFF here because capping
-    trades pair-exactness for throughput: on the near-dup-dense contract
-    corpus a 500-cap drops 38% of qualifying pairs (they only co-bucket
-    through hot blocks), and this operator's contract is pair-exact
-    (brute-force oracle).  Set it for web-scale corpora where exact dedup
-    upstream has already collapsed the wholesale-identical families."""
+    Pair-exact (brute-force oracle): no hot-bucket cap, since on the
+    near-dup-dense contract corpus a 500-cap dropped 38% of qualifying
+    pairs (they only co-bucket through hot blocks)."""
     if max_hamming >= n_blocks:
         raise ValueError(
             f"pigeonhole requires max_hamming < n_blocks "
@@ -335,25 +334,11 @@ def simhash_near_dup_pairs(
     buckets = blocked.select(
         "sh", "n", F.expr(f"stack({n_blocks}, {stack_expr}) as (block, val)")
     )
-    intra_src = fams
-    if max_bucket is not None:
-        # the cap counts DOCS per (block, val) bucket — identical semantics
-        # to the old doc-level guard: a fingerprint family drops out of a
-        # hot bucket wholesale, and same-fingerprint pairs survive only if
-        # the family still shares at least one non-hot bucket
-        hot = (
-            buckets.groupBy("block", "val")
-            .agg(F.sum("n").alias("_n"))
-            .filter(F.col("_n") > max_bucket)
-            .select("block", "val")
-        )
-        buckets = buckets.join(hot, ["block", "val"], "left_anti")
-        intra_src = fams.join(buckets.select("sh").distinct(), "sh", "left_semi")
     # hamming-0 pairs: all (a < b) combinations within each fingerprint
     # family — two explodes with a fan-out exchange between them so one
     # huge family cannot pin the expansion to a single task
     exp1 = (
-        intra_src.filter(F.col("n") > 1)
+        fams.filter(F.col("n") > 1)
         .select("ks", F.posexplode("ks").alias("_i", "a"))
         .repartition(F.col("a"))
     )
@@ -508,24 +493,15 @@ def embedding_near_dup_pairs(
     # from the RAW frame, not with_b — the verify sides need no buckets,
     # and deriving them from with_b would drag the Arrow UDF back into
     # both join lineages.
+    from .similarity import _dot, _norm
+
     va = df.select(F.col(key).alias("ka"), F.col(vec_col).alias("va"))
     vb = df.select(F.col(key).alias("kb"), F.col(vec_col).alias("vb"))
-    dot = F.aggregate(
-        F.zip_with(F.col("va"), F.col("vb"), lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    norm = lambda c: F.sqrt(  # noqa: E731
-        F.aggregate(
-            F.transform(F.col(c), lambda x: x.cast("double") * x.cast("double")),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-    )
+    va_, vb_ = F.col("va"), F.col("vb")
     return (
         cand.join(va, "ka")
         .join(vb, "kb")
-        .withColumn("cos", dot / (norm("va") * norm("vb")))
+        .withColumn("cos", _dot(va_, vb_) / (_norm(va_) * _norm(vb_)))
         .filter(F.col("cos") >= threshold)
         .select(
             F.col("ka").alias("a"), F.col("kb").alias("b"), F.round("cos", round_to).alias("cos")

@@ -27,14 +27,13 @@ def detect_fields(
     df: DataFrame,
     rules_by_field: dict[str, list[dict]],
     pattern_by_field: dict[str, dict] | None = None,
-    regex_engine: str = "auto",
 ) -> DataFrame:
     """Attach one validation (and optional pattern) finding column per field
     — all fields in ONE pass."""
     pattern_by_field = pattern_by_field or {}
     cols = {}
     for field, rules in rules_by_field.items():
-        cols[f"f_{field}"] = first_hit(F.col(field), rules, regex_engine)
+        cols[f"f_{field}"] = first_hit(F.col(field), rules)
     for field, cfg in pattern_by_field.items():
         cols[f"p_{field}"] = pattern_finding(F.col(field), cfg)
     return df.withColumns(cols)

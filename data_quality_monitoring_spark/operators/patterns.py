@@ -40,7 +40,7 @@ def pattern_finding(col: Column, cfg: dict) -> Column:
     # reference :218 value_str = str(value).strip() — strip the full ASCII
     # whitespace class, not just spaces (F.trim only removes ' ').  \x0B is
     # spelled explicitly: Java's \v is the vertical-whitespace CLASS, not the
-    # single char Python means (see rules._words / oracle.pattern_detect).
+    # single char Python means (see rules._WS / oracle.pattern_detect).
     value_str = F.regexp_replace(col, r"^[ \t\n\r\f\x0B]+|[ \t\n\r\f\x0B]+$", "")
     norm = F.lower(value_str)
     skip = col.isNull() | (value_str == "")  # reference :215-216

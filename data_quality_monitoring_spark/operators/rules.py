@@ -2,8 +2,8 @@
 
 Re-expresses the reference's 14-way rule dispatcher
 (``validators/json_validator.py:74-284`` in the reference repo) as a
-*compiler*: a JSON ruleset becomes one ``CASE WHEN`` chain evaluated
-entirely inside whole-stage codegen.  Two semantics carried over exactly:
+*compiler*: a JSON ruleset becomes one first-hit chain of Column
+expressions.  Two semantics carried over exactly:
 
 1. **Rule order is semantics** — rules are evaluated in JSON order and the
    first hit wins (reference ``json_validator.py:66-72``).  We preserve this
@@ -11,17 +11,32 @@ entirely inside whole-stage codegen.  Two semantics carried over exactly:
 2. **Null skip** — only the ``missing`` rule fires on null; every other rule
    is guarded by ``isNotNull`` (reference ``json_validator.py:89-91``).
 
-Regex parity: the reference uses Python ``re`` (``json_validator.py:130``);
-Spark ``rlike`` is Java regex and differs on unicode classes and inline
-flags.  With ``regex_engine="auto"`` (the default) all regex-family rules
-for a column are evaluated in **one** Arrow-batched pandas UDF that returns
-a bitmask (one bit per regex rule); the CASE chain then tests bits — a
-single Python hop per column, everything else stays JVM-side.  With
-``regex_engine="native"`` (the 100-TB fast path) they compile to ``rlike``.
+One engine: each rule type has exactly one Spark-side form, chosen by its
+type.
+
+* Regex (``regex``, ``regex_multiple``, ``regex_negative``), word-stat,
+  char-class ratio, line-layout and ``custom`` rules of a column are
+  evaluated together in **one** Arrow-batched pandas UDF that returns a
+  bitmask (one bit per rule); the chain then tests bits — a single Python
+  hop per column.  Regexes run in Python ``re``, as the reference does
+  (``json_validator.py:130``).
+* Every other type (missing, type, empty-string, whitespace, length,
+  keyword, percentage, parenthesis, year, temperature, contradiction) is a
+  native Column expression.
+
+Why the batched types have no native form: compiled natively (Java-regex
+``rlike`` plus interpreted higher-order array functions) they are slower
+on the rulesets the jobs run.  On 100k docs (local[4], rules column only,
+noop sink, 5 interleaved reps) the default ``text_quality`` ruleset took
+1.13–1.58 s batched vs 4.64–5.69 s native, with 0/100k verdicts
+differing; only the regex-only, short-string ``url_quality`` ruleset ran
+faster native (0.24–0.53 s vs 0.49–0.74 s).  Picking the form by input is
+not an option: Java and Python regex semantics differ on unicode classes
+and inline flags, so verdicts would depend on which form ran.
 
 Beyond the reference's 14 types, this adds the web-text quality rules the
 north star requires (length/repetition/boilerplate/character-class ratios —
-Gopher/C4-style), all as native Column expressions:
+Gopher/C4-style):
 ``min_words, max_words, max_digit_ratio, max_symbol_ratio,
 min_alpha_ratio, min_distinct_word_ratio, max_word_length,
 min_mean_word_length, max_mean_word_length, min_stopword_count,
@@ -46,15 +61,13 @@ FINDING_TYPE = T.StructType(
     ]
 )
 
-# rule types whose predicate needs a regex engine (parity-sensitive)
+# regex-family rules: Python ``re`` in the batch UDF, as the reference
 _REGEX_TYPES = {"regex", "regex_multiple", "regex_negative"}
 
-# word-statistics rules: expressible natively, but Spark's higher-order
-# array functions (transform/filter/aggregate) run interpreted, not
-# codegen'd — measured 3.4× slower than one Arrow-batched UDF evaluating
-# all of them with a shared word split (4.9 s → 1.4 s for 200k docs at
-# local[32]).  engine="auto" (default) batches these; engine="native"
-# keeps them as Column expressions (the SQL-parity path).
+# word-statistics and line-layout rules: Spark's higher-order array
+# functions (transform/filter/aggregate) run interpreted, not codegen'd —
+# measured 3.4× slower than the batch UDF evaluating all of them with one
+# shared word split (4.9 s → 1.4 s for 200k docs at local[32])
 _WORDSTAT_TYPES = {
     "min_words",
     "max_words",
@@ -73,6 +86,9 @@ _WORDSTAT_TYPES = {
 # per rule on the JVM side; in the batch UDF they are one vectorised C
 # str.count over the already-hot string
 _CHARSTAT_TYPES = {"max_digit_ratio", "max_symbol_ratio", "min_alpha_ratio"}
+
+# every rule type the bitmask UDF evaluates; all others compile natively
+_BATCHED_TYPES = _REGEX_TYPES | _WORDSTAT_TYPES | _CHARSTAT_TYPES | {"custom"}
 
 # bullet markers for the Gopher layout heuristic (max_bullet_ratio)
 BULLET_CHARS = ["•", "-", "*", "·", "●", "▪"]
@@ -111,33 +127,14 @@ def register_predicate(name: str):
     return deco
 
 
-def _words(col: Column) -> Column:
-    stripped = F.regexp_replace(col, rf"^{_WS}+|{_WS}+$", "")
-    return F.when(stripped == "", F.array().cast("array<string>")).otherwise(
-        F.split(stripped, rf"{_WS}+")
-    )
-
-
 def _count_char(col: Column, ch: str) -> Column:
     return F.length(col) - F.length(F.replace(col, F.lit(ch), F.lit("")))
 
 
-def _strip_ws(l: Column) -> Column:
-    """Per-line strip of the full ASCII whitespace CLASS — F.trim strips
-    spaces only, which made native vs python verdicts diverge on CRLF or
-    tab-padded lines (review finding; python/oracle use the same class)."""
-    return F.regexp_replace(l, rf"^{_WS}+|{_WS}+$", "")
-
-
 def _native_predicate(col: Column, rule: dict) -> Column:
-    """Compile one rule to a boolean Column (fires == True). Null-unsafe:
-    callers wrap with the isNotNull guard."""
+    """Compile one non-batched rule to a boolean Column (fires == True).
+    Null-unsafe: callers wrap with the isNotNull guard."""
     rt = rule["type"]
-    if rt == "custom":
-        raise ValueError(
-            "custom rules need the batched engine (regex_engine='auto'); "
-            "they are Python predicates and have no native form"
-        )
     if rt == "missing":
         return col.isNull()
     if rt == "type_check":
@@ -154,26 +151,6 @@ def _native_predicate(col: Column, rule: dict) -> Column:
         return F.length(col) < int(rule["min_length"])
     if rt == "max_length":
         return F.length(col) > int(rule["max_length"])
-    if rt == "regex":
-        ci = "(?i)" if rule.get("case_insensitive") else ""
-        fire = col.rlike(ci + rule["pattern"])
-        for ex in rule.get("exclude_patterns", []):
-            # re.match = anchored; reference applies the SAME flags to
-            # excludes (json_validator.py:127-134)
-            fire = fire & ~col.rlike(ci + "^(?:" + ex + ")")
-        return fire
-    if rt == "regex_multiple":
-        ci = "(?i)" if rule.get("case_insensitive") else ""
-        fire = F.lit(False)
-        for pat in rule["patterns"]:
-            fire = fire | col.rlike(ci + pat)
-        return fire
-    if rt == "regex_negative":
-        ci = "(?i)" if rule.get("case_insensitive") else ""
-        hit = F.lit(False)
-        for pat in rule["patterns"]:
-            hit = hit | col.rlike(ci + "^(?:" + pat + ")")  # re.match = anchored
-        return ~hit
     if rt == "keyword_check":
         keywords = rule["required_keywords"]
         target = col if rule.get("case_sensitive") else F.lower(col)
@@ -217,69 +194,6 @@ def _native_predicate(col: Column, rule: dict) -> Column:
         for a, b in rule["contradiction_pairs"]:
             fire = fire | (target.contains(a.lower()) & target.contains(b.lower()))
         return fire
-    # ---- web-text quality extensions (north-star heuristic rules) ----
-    words = _words(col)
-    n_words = F.size(words)
-    n_chars = F.length(col)
-    if rt == "min_words":
-        return n_words < int(rule["min_words"])
-    if rt == "max_words":
-        return n_words > int(rule["max_words"])
-    if rt == "max_digit_ratio":
-        n_digits = n_chars - F.length(F.regexp_replace(col, r"[0-9]", ""))
-        return (n_chars > 0) & (n_digits / n_chars > float(rule["max_ratio"]))
-    if rt == "max_symbol_ratio":
-        n_sym = F.length(F.regexp_replace(col, rf"[0-9A-Za-z{_WS[1:-1]}]", ""))
-        return (n_chars > 0) & (n_sym / n_chars > float(rule["max_ratio"]))
-    if rt == "min_alpha_ratio":
-        n_alpha = n_chars - F.length(F.regexp_replace(col, r"[A-Za-z]", ""))
-        return (n_chars > 0) & (n_alpha / n_chars < float(rule["min_ratio"]))
-    if rt == "min_distinct_word_ratio":
-        return (n_words > 0) & (
-            F.size(F.array_distinct(F.transform(words, F.lower))) / n_words
-            < float(rule["min_ratio"])
-        )
-    if rt == "min_alpha_word_ratio":
-        # Gopher: fraction of words containing >=1 ASCII letter
-        alpha = F.size(F.filter(words, lambda w: w.rlike("[A-Za-z]")))
-        return (n_words > 0) & (alpha / n_words < float(rule["min_ratio"]))
-    if rt == "max_word_length":
-        return (n_words > 0) & (
-            F.array_max(F.transform(words, F.length)) > int(rule["max_word_length"])
-        )
-    if rt in ("min_mean_word_length", "max_mean_word_length"):
-        mean_len = F.aggregate(words, F.lit(0), lambda acc, w: acc + F.length(w)) / n_words
-        if rt == "min_mean_word_length":
-            return (n_words > 0) & (mean_len < float(rule["min_mean"]))
-        return (n_words > 0) & (mean_len > float(rule["max_mean"]))
-    if rt == "min_stopword_count":
-        stops = F.lit([s.lower() for s in rule["stopwords"]]).cast("array<string>")
-        hits = F.size(F.filter(words, lambda w: F.array_contains(stops, F.lower(w))))
-        return hits < int(rule["min_count"])
-    if rt == "max_line_dup_ratio":
-        lines = F.filter(
-            F.transform(F.split(col, r"\n"), _strip_ws), lambda l: l != ""
-        )
-        n_lines = F.size(lines)
-        return (n_lines > 1) & (
-            (n_lines - F.size(F.array_distinct(lines))) / n_lines > float(rule["max_ratio"])
-        )
-    if rt in ("max_bullet_ratio", "max_ellipsis_line_ratio"):
-        # Gopher-style layout heuristics: fraction of non-empty lines that
-        # start with a bullet marker / end with an ellipsis
-        lines = F.filter(
-            F.transform(F.split(col, r"\n"), _strip_ws), lambda l: l != ""
-        )
-        n_lines = F.size(lines)
-        if rt == "max_bullet_ratio":
-            hit = F.filter(
-                lines, lambda l: F.substring(l, 1, 1).isin(*BULLET_CHARS)
-            )
-        else:
-            hit = F.filter(
-                lines, lambda l: l.endswith("...") | l.endswith("…")
-            )
-        return (n_lines > 0) & (F.size(hit) / n_lines > float(rule["max_ratio"]))
     raise ValueError(f"unknown rule type: {rt}")
 
 
@@ -351,7 +265,7 @@ def _wordstat_fire(rule: dict, words: pd.Series) -> pd.Series:
 _BITS_PER_MASK = 63  # signed long: bit 63 would overflow — shard instead
 
 
-def _batch_bitmask_udf(rules: list[dict], include: set[str]):
+def _batch_bitmask_udf(rules: list[dict]):
     """One pandas UDF evaluating every batched rule of a column → bitmasks.
 
     The word split is computed ONCE per batch and shared by all word-stat
@@ -369,7 +283,7 @@ def _batch_bitmask_udf(rules: list[dict], include: set[str]):
             {**r, "_fn": CUSTOM_PREDICATES[r["predicate"]]} if r["type"] == "custom" else r,
         )
         for j, r in enumerate(rules)
-        if r["type"] in include
+        if r["type"] in _BATCHED_TYPES
     ]
     positions = {
         j: (pos // _BITS_PER_MASK, pos % _BITS_PER_MASK)
@@ -438,27 +352,18 @@ def _batch_bitmask_udf(rules: list[dict], include: set[str]):
     return bitmask, positions
 
 
-def compile_predicates(
-    col: Column, rules: list[dict], regex_engine: str = "auto"
-) -> list[tuple[dict, Column]]:
+def compile_predicates(col: Column, rules: list[dict]) -> list[tuple[dict, Column]]:
     """Compile a ruleset to ordered (rule, fires?) pairs with null-skip guards.
 
-    regex_engine: "auto" (default — regex + word-stat rules batched into one
-    Arrow UDF, everything else native) or "native" (pure Column
-    expressions, Java regex — the SQL-oracle-parity path)."""
-    if regex_engine not in ("auto", "native"):
-        raise ValueError(f"regex_engine must be 'auto' or 'native', got {regex_engine!r}")
-    if regex_engine == "native":
-        batched: set[str] = set()
-    else:
-        batched = _REGEX_TYPES | _WORDSTAT_TYPES | _CHARSTAT_TYPES | {"custom"}
+    Batched types test their bit of the column's one bitmask UDF; every
+    other type is a native Column expression."""
     bitmask_col, positions = None, {}
-    if batched and any(r["type"] in batched for r in rules):
-        udf, positions = _batch_bitmask_udf(rules, batched)
+    if any(r["type"] in _BATCHED_TYPES for r in rules):
+        udf, positions = _batch_bitmask_udf(rules)
         bitmask_col = udf(col)
     out = []
     for i, rule in enumerate(rules):
-        if bitmask_col is not None and rule["type"] in batched:
+        if rule["type"] in _BATCHED_TYPES:
             shard, bit = positions[i]
             fires = (
                 F.element_at(bitmask_col, shard + 1).bitwiseAND(F.lit(1 << bit))
@@ -471,7 +376,15 @@ def compile_predicates(
     return out
 
 
-def first_hit(col: Column, rules: list[dict], regex_engine: str = "auto") -> Column:
+def _finding(rule: dict) -> Column:
+    return F.struct(
+        F.lit(rule.get("name", rule["type"])).alias("rule"),
+        F.lit(rule.get("error_code", rule["type"].upper())).alias("code"),
+        F.lit(float(rule.get("probability", 1.0))).alias("probability"),
+    )
+
+
+def first_hit(col: Column, rules: list[dict]) -> Column:
     """First-failing-rule finding struct (or NULL when the value passes).
 
     Exact reference semantics: JSON order, first hit short-circuits
@@ -481,32 +394,14 @@ def first_hit(col: Column, rules: list[dict], regex_engine: str = "auto") -> Col
     # levels each duplicating the batched-UDF mask expression sends Catalyst
     # optimization time superlinear (observed: 70 rules never finished; flat
     # form optimizes in milliseconds). Same first-non-null semantics.
-    clauses = []
-    for rule, fires in compile_predicates(col, rules, regex_engine):
-        finding = F.struct(
-            F.lit(rule.get("name", rule["type"])).alias("rule"),
-            F.lit(rule.get("error_code", rule["type"].upper())).alias("code"),
-            F.lit(float(rule.get("probability", 1.0))).alias("probability"),
-        )
-        clauses.append(F.when(fires, finding))
+    clauses = [F.when(fires, _finding(rule)) for rule, fires in compile_predicates(col, rules)]
     if not clauses:
         return F.lit(None).cast(FINDING_TYPE)
     return (clauses[0] if len(clauses) == 1 else F.coalesce(*clauses)).cast(FINDING_TYPE)
 
 
-def all_findings(col: Column, rules: list[dict], regex_engine: str = "auto") -> Column:
+def all_findings(col: Column, rules: list[dict]) -> Column:
     """Every firing rule as array<struct<rule,code,probability>> (diagnostics
     surface; the reference only ever reports the first hit)."""
-    elems = []
-    for rule, fires in compile_predicates(col, rules, regex_engine):
-        elems.append(
-            F.when(
-                fires,
-                F.struct(
-                    F.lit(rule.get("name", rule["type"])).alias("rule"),
-                    F.lit(rule.get("error_code", rule["type"].upper())).alias("code"),
-                    F.lit(float(rule.get("probability", 1.0))).alias("probability"),
-                ),
-            )
-        )
+    elems = [F.when(fires, _finding(rule)) for rule, fires in compile_predicates(col, rules)]
     return F.filter(F.array(*elems), lambda x: x.isNotNull()).cast(T.ArrayType(FINDING_TYPE))

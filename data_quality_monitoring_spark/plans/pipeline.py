@@ -51,7 +51,6 @@ def quality_filter(
     llm_threshold: float = 6.0,
     mlq_threshold: float = 0.5,
     thresholds: dict[str, float] | None = None,
-    regex_engine: str = "auto",
     methods: list[str] | None = None,
     langid_model=None,
     bigram_models=None,
@@ -106,12 +105,10 @@ def quality_filter(
     if "validation" in methods:
         if cascade:
             # stage 0: rules first, so the scorer mask can reference them
-            base = pages.withColumn(
-                "f_validation", first_hit(text, rules, regex_engine)
-            )
+            base = pages.withColumn("f_validation", first_hit(text, rules))
             model_text = F.when(F.col("f_validation").isNull(), text)
         else:
-            cols["f_validation"] = first_hit(text, rules, regex_engine)
+            cols["f_validation"] = first_hit(text, rules)
     if "pattern" in methods:
         cols["f_pattern"] = pattern_finding(lang, pattern_cfg)
     if "ml" in methods:

@@ -32,8 +32,8 @@ _KNOWN_METHODS = ("validation", "pattern", "ml", "llm", "quality_model")
 
 # flags that shape the filter's keep decision: corpus mode runs
 # build_corpus's fixed default filter, so it rejects them
-_FILTER_FLAGS = ("methods", "combine", "regex_engine", "cascade", "llm_order",
-                 "c4_clean", "rep_gate", "gopher_gate")
+_FILTER_FLAGS = ("methods", "combine", "cascade", "llm_order", "c4_clean",
+                 "rep_gate", "gopher_gate")
 
 
 def _parse_methods(raw: str) -> list[str] | None:
@@ -96,7 +96,6 @@ def build_args(argv: list[str] | None = None) -> argparse.Namespace:
         "quality_model); default = the reference's four — quality_model is "
         "the opt-in learned tier",
     )
-    p.add_argument("--regex-engine", choices=["auto", "native"], default="auto")
     p.add_argument("--n-samples", type=int, default=8, help="multi-eval replicas")
     p.add_argument("--intensity", type=float, default=0.3, help="injection intensity")
     p.add_argument("--max-issues-per-row", type=int, default=2, help="single-demo cap")
@@ -421,7 +420,7 @@ def _filter_stage(spark: SparkSession, pages, args):
     return filter_stage(
         spark, pages, extract_html=args.extract_html,
         c4_clean=args.c4_clean, rep_gate=args.rep_gate, gopher_gate=args.gopher_gate,
-        combine=args.combine, regex_engine=args.regex_engine, methods=args.methods,
+        combine=args.combine, methods=args.methods,
         cascade=args.cascade, bigram_models=_llm_models(args),
     )
 
@@ -832,7 +831,6 @@ def run_multi_eval(spark: SparkSession, args: argparse.Namespace) -> dict:
     per_sample = multi_sample_evaluation(
         spark, pages, _text_injection_rules(), n_samples=args.n_samples,
         intensity=args.intensity, combine=args.combine,
-        regex_engine=args.regex_engine,
     )
     per_sample.write.mode("overwrite").parquet(f"{args.output}/per_sample_metrics")
     summary = evaluation_summary(spark.read.parquet(f"{args.output}/per_sample_metrics"))

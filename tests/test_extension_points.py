@@ -26,7 +26,7 @@ def test_custom_rule_both_paths(spark):
     df = spark.createDataFrame(pd.DataFrame({"v": pd.Series(values, dtype="object")}))
     got = [
         None if f is None else f["code"]
-        for f in df.select(first_hit(F.col("v"), rules, "auto").alias("f")).toPandas()["f"]
+        for f in df.select(first_hit(F.col("v"), rules).alias("f")).toPandas()["f"]
     ]
     assert got == expected
     assert [

@@ -58,7 +58,7 @@ def test_rule_engine_matches_oracle_fuzz(spark, values):
     df = spark.createDataFrame(pd.DataFrame({"v": pd.Series(values, dtype="object")}))
     got = [
         None if f is None else f["code"]
-        for f in df.select(first_hit(F.col("v"), FUZZ_RULES, "auto").alias("f")).toPandas()["f"]
+        for f in df.select(first_hit(F.col("v"), FUZZ_RULES).alias("f")).toPandas()["f"]
     ]
     want = [
         None if (f := rule_first_hit(v, FUZZ_RULES)) is None else f["code"] for v in values
@@ -149,7 +149,7 @@ def test_rule_compiler_triple_parity_fuzz(spark, values):
     df = spark.createDataFrame(pd.DataFrame({"v": pd.Series(values, dtype="object")}))
     got_spark = [
         None if f is None else f["code"]
-        for f in df.select(first_hit(F.col("v"), rules, "auto").alias("f")).toPandas()["f"]
+        for f in df.select(first_hit(F.col("v"), rules).alias("f")).toPandas()["f"]
     ]
     got_python = [
         None if (f := rule_first_hit(v, rules)) is None else f["code"] for v in values
@@ -402,6 +402,7 @@ def test_wav_codec_roundtrip_fuzz(samples, sr, ch):
     computation over the original samples (local-only — the distributed
     path is the same function via mapInPandas, covered elsewhere)."""
     import io
+    import math
     import wave
 
     import numpy as np
@@ -424,5 +425,8 @@ def test_wav_codec_roundtrip_fuzz(samples, sr, ch):
     assert meta["sum_sq"] == int((a * a).sum())
     assert meta["peak"] == (int(np.abs(a).max()) if len(a) else 0)
     assert meta["zero_crossings"] == (int(((a[:-1] * a[1:]) < 0).sum()) if len(a) > 1 else 0)
-    want_rms = (meta["sum_sq"] / len(a)) ** 0.5 if len(a) else 0.0
+    # one correctly rounded sqrt, as documented; x ** 0.5 (C pow) can be
+    # 1 ulp off it, e.g. on [12730, 21751, 21751, 24199, 24199, 26293,
+    # 26453, 28039]
+    want_rms = math.sqrt(meta["sum_sq"] / len(a)) if len(a) else 0.0
     assert meta["rms"] == want_rms

@@ -135,16 +135,12 @@ def test_url_quality_ruleset(spark):
         ("https://example.com/0123456789012345678901", "DIGIT_URL"),
         ("https://example.com/article/clean-title", None),
     ]
-    for engine in ("native", "auto"):
-        df = spark.createDataFrame(
-            pd.DataFrame({"url": pd.Series([c for c, _ in cases], dtype="object")})
-        )
-        out = detect_fields(df, {"url": rules}, regex_engine=engine)
-        got = [
-            None if f is None else f["code"]
-            for f in out.select("f_url").toPandas()["f_url"]
-        ]
-        assert got == [e for _, e in cases], engine
+    df = spark.createDataFrame(
+        pd.DataFrame({"url": pd.Series([c for c, _ in cases], dtype="object")})
+    )
+    out = detect_fields(df, {"url": rules})
+    got = [None if f is None else f["code"] for f in out.select("f_url").toPandas()["f_url"]]
+    assert got == [e for _, e in cases]
     oracle = [
         None if (f := rule_first_hit(u, rules)) is None else f["code"] for u, _ in cases
     ]

@@ -2,12 +2,12 @@
 
 Table-driven over all reference rule types (SURVEY.md §2.2, reference
 ``validators/json_validator.py:74-284``) plus the web-text extensions, on
-crafted values, asserting identical first-hit codes — through both regex
-engines.
+crafted values, asserting identical first-hit codes — through the one rule
+engine (batched bitmask UDF for regex/word/char/line rules, native Columns
+for the rest).
 """
 
 import pandas as pd
-import pytest
 from pyspark.sql import functions as F
 
 from data_quality_monitoring_spark.operators.rules import all_findings, first_hit
@@ -167,21 +167,20 @@ CASES: list[tuple[list[dict], list[tuple[str | None, str | None]]]] = [
 ]
 
 
-def _spark_codes(spark, values, rules, engine):
+def _spark_codes(spark, values, rules):
     df = spark.createDataFrame(pd.DataFrame({"v": pd.Series(values, dtype="object")}))
-    out = df.select(first_hit(F.col("v"), rules, engine).alias("f")).toPandas()
+    out = df.select(first_hit(F.col("v"), rules).alias("f")).toPandas()
     return [None if f is None else f["code"] for f in out["f"]]
 
 
-@pytest.mark.parametrize("engine", ["native", "auto"])
-def test_rule_types_match_oracle(spark, engine):
+def test_rule_types_match_oracle(spark):
     for rules, cases in CASES:
         values = [v for v, _ in cases]
         expected = [e for _, e in cases]
         oracle = [None if (f := rule_first_hit(v, rules)) is None else f["code"] for v in values]
         assert oracle == expected, f"oracle disagrees with table for {rules}"
-        got = _spark_codes(spark, values, rules, engine)
-        assert got == expected, f"spark[{engine}] disagrees for {rules}: {got}"
+        got = _spark_codes(spark, values, rules)
+        assert got == expected, f"spark disagrees for {rules}: {got}"
 
 
 def test_first_hit_order_is_semantics(spark):
@@ -189,20 +188,13 @@ def test_first_hit_order_is_semantics(spark):
         {"type": "min_length", "min_length": 5, "error_code": "A", "probability": 0.5},
         {"type": "regex", "pattern": "x", "error_code": "B", "probability": 0.6},
     ]
-    # "x" fails both → first (A) must win, in both engines and the oracle
-    for engine in ("native", "auto"):
-        assert _spark_codes(spark, ["x"], rules, engine) == ["A"]
+    # "x" fails both → first (A) must win, in Spark and the oracle
+    assert _spark_codes(spark, ["x"], rules) == ["A"]
     assert rule_first_hit("x", rules)["code"] == "A"
     # reversed order → B wins
     rev = list(reversed(rules))
-    for engine in ("native", "auto"):
-        assert _spark_codes(spark, ["x"], rev, engine) == ["B"]
+    assert _spark_codes(spark, ["x"], rev) == ["B"]
     assert rule_first_hit("x", rev)["code"] == "B"
-
-
-def test_unknown_regex_engine_raises(spark):
-    with pytest.raises(ValueError, match="regex_engine must be 'auto' or 'native'"):
-        first_hit(F.col("v"), [{"type": "regex", "pattern": "x"}], "python")
 
 
 def test_all_findings_collects_every_hit(spark):
@@ -223,6 +215,6 @@ def test_bitmask_shards_beyond_63_rules(spark):
         for i in range(70)
     ]
     values = ["tok00 here", "has tok69 late", "clean text", None]
-    got = _spark_codes(spark, values, rules, "auto")
+    got = _spark_codes(spark, values, rules)
     oracle = [None if (f := rule_first_hit(v, rules)) is None else f["code"] for v in values]
     assert got == oracle == ["R00", "R69", None, None]

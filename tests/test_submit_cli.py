@@ -131,8 +131,8 @@ def test_corpus_mode(spark, tmp_path):
 
 @pytest.mark.parametrize(
     "flag",
-    [["--methods", "validation"], ["--combine", "weighted"], ["--regex-engine", "native"],
-     ["--cascade"], ["--llm-order", "3"], ["--c4-clean"], ["--rep-gate"], ["--gopher-gate"]],
+    [["--methods", "validation"], ["--combine", "weighted"], ["--cascade"],
+     ["--llm-order", "3"], ["--c4-clean"], ["--rep-gate"], ["--gopher-gate"]],
 )
 def test_corpus_mode_rejects_filter_flags(flag, capsys):
     """Corpus mode runs build_corpus's default filter, so a flag that would
