@@ -18,7 +18,7 @@ import numpy as np
 
 from .datagen import LANGS, _clean_text
 from .operators.langid import LangIdModel, train_langid
-from .operators.perplexity import BigramLM, train_bigram
+from .operators.perplexity import NgramLM, train_ngram
 
 N_TRAIN_DOCS = 300
 
@@ -41,8 +41,8 @@ def get_langid_model() -> LangIdModel:
 
 
 @lru_cache(maxsize=1)
-def get_bigram_models() -> dict[str, BigramLM]:
-    return {lang: train_bigram(training_texts(lang)) for lang in LANGS}
+def get_bigram_models() -> dict[str, NgramLM]:
+    return {lang: train_ngram(training_texts(lang), 2) for lang in LANGS}
 
 
 def junk_texts(n: int = N_TRAIN_DOCS) -> list[str]:
@@ -100,10 +100,8 @@ def get_quality_model():
 
 
 @lru_cache(maxsize=1)
-def get_trigram_models() -> dict:
+def get_trigram_models() -> dict[str, NgramLM]:
     """Per-language trigram LMs from the same frozen seeded corpus — the
-    opt-in higher-order LLM tier (`--llm-order 3`); duck-types BigramLM's
-    scoring contract so quality_filter takes it via ``bigram_models=``."""
-    from .operators.perplexity import train_trigram
-
-    return {lang: train_trigram(training_texts(lang)) for lang in LANGS}
+    opt-in higher-order LLM tier (`--llm-order 3`), passed to
+    quality_filter as ``lm_models=``."""
+    return {lang: train_ngram(training_texts(lang), 3) for lang in LANGS}

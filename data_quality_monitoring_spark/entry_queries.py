@@ -2764,11 +2764,11 @@ def q_perplexity_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     rational arithmetic over counts, so DuckDB recomputes the identical
     mean NLL (the vocab cap is set far above the corpus vocabulary, so the
     UNK id never aliases and string keys match the engine's int keys)."""
-    from .operators.perplexity import perplexity_column, train_bigram_distributed
+    from .operators.perplexity import perplexity_column, train_ngram_distributed
 
     d = _read(spark, sf_dir, "documents")
-    models = train_bigram_distributed(
-        d.filter(F.col("n_chars") >= 300), max_vocab=1_000_000
+    models = train_ngram_distributed(
+        d.filter(F.col("n_chars") >= 300), order=2, max_vocab=1_000_000
     )
     score = perplexity_column(spark, models, F.col("text"), F.col("lang"))
     return d.select("doc_id", F.round(score, 6).alias("ppl"))
@@ -2851,12 +2851,12 @@ def q_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.perplexity import (
         perplexity_buckets,
         perplexity_column,
-        train_bigram_distributed,
+        train_ngram_distributed,
     )
 
     d = _read(spark, sf_dir, "documents")
-    models = train_bigram_distributed(
-        d.filter(F.col("n_chars") >= 300), max_vocab=1_000_000
+    models = train_ngram_distributed(
+        d.filter(F.col("n_chars") >= 300), order=2, max_vocab=1_000_000
     )
     score = perplexity_column(spark, models, F.col("text"), F.col("lang"))
     scored = d.select("doc_id", "lang", F.round(score, 6).alias("ppl"))
@@ -2897,7 +2897,7 @@ def q_hp_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     collapse to all-negative.  The LM trains ONCE on the clean long slice;
     all 6 (lam, k) scoring
     variants are computed in a single Arrow pass sharing one tokenization
-    (BigramLM.nll_variants), crossed with 3 thresholds relationally, and
+    (NgramLM.nll_variants), crossed with 3 thresholds relationally, and
     all 18 configs are evaluated in one map-side-combined aggregation —
     precision/recall/F1 per config, the reference's precision ≥ 0.3
     validity constraint, and best-by-recall with earliest-config
@@ -3248,7 +3248,7 @@ def q_pipeline_verdict_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     priority combiner and the keep bit — through the REAL quality_filter
     plan (one select, two Arrow hops, zero shuffles), with the
     SQL-reproducible in-query-trained models injected via
-    quality_filter(langid_model=..., bigram_models=...).  DuckDB
+    quality_filter(langid_model=..., lm_models=...).  DuckDB
     recomputes everything: rule chain, pattern detector, NB posteriors,
     bigram NLLs, threshold gates and the coalesce.  (`pipeline_verdict`
     stays as the artifact-backed production form, rows-only.)  Verdict
@@ -3257,7 +3257,7 @@ def q_pipeline_verdict_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
 
     from .operators.langid import train_langid_distributed
-    from .operators.perplexity import train_bigram_distributed
+    from .operators.perplexity import train_ngram_distributed
     from .plans.pipeline import quality_filter
 
     d = _read(spark, sf_dir, "documents")
@@ -3272,7 +3272,7 @@ def q_pipeline_verdict_full(spark: SparkSession, sf_dir: str) -> DataFrame:
         lm_f = pool.submit(
             train_langid_distributed, train, feat="word_md5", dtype=np.float64
         )
-        bm_f = pool.submit(train_bigram_distributed, train, max_vocab=1_000_000)
+        bm_f = pool.submit(train_ngram_distributed, train, order=2, max_vocab=1_000_000)
         lm, bm = lm_f.result(), bm_f.result()
     pages = d.select(
         F.concat(F.lit("doc://"), F.col("doc_id").cast("string")).alias("url"),
@@ -3281,7 +3281,7 @@ def q_pipeline_verdict_full(spark: SparkSession, sf_dir: str) -> DataFrame:
         "text",
         "lang",
     )
-    res = quality_filter(spark, pages, langid_model=lm, bigram_models=bm)
+    res = quality_filter(spark, pages, langid_model=lm, lm_models=bm)
     return res.select(
         "url",
         "keep",
@@ -3893,11 +3893,11 @@ def q_perplexity_trigram(spark: SparkSession, sf_dir: str) -> DataFrame:
     out of the trigram table); scoring replays
     ``0.5·c(uvw)/c(uv) + 0.3·c(vw)/c(v) + 0.2·(c(w)+0.5)/(N+0.5·10000)``
     per token — rational count arithmetic DuckDB reproduces exactly."""
-    from .operators.perplexity import perplexity_column, train_trigram_distributed
+    from .operators.perplexity import perplexity_column, train_ngram_distributed
 
     d = _read(spark, sf_dir, "documents")
-    models = train_trigram_distributed(
-        d.filter(F.col("n_chars") >= 300), max_vocab=1_000_000
+    models = train_ngram_distributed(
+        d.filter(F.col("n_chars") >= 300), order=3, max_vocab=1_000_000
     )
     score = perplexity_column(spark, models, F.col("text"), F.col("lang"))
     return d.select("doc_id", F.round(score, 6).alias("ppl3"))
@@ -3987,11 +3987,11 @@ def q_llm_tier_verdict(spark: SparkSession, sf_dir: str) -> DataFrame:
         fewshot_max_cosine,
         llm_tier_finding,
     )
-    from .operators.perplexity import perplexity_column, train_bigram_distributed
+    from .operators.perplexity import perplexity_column, train_ngram_distributed
 
     d = _read(spark, sf_dir, "documents")
-    models = train_bigram_distributed(
-        d.filter(F.col("n_chars") >= 300), max_vocab=1_000_000
+    models = train_ngram_distributed(
+        d.filter(F.col("n_chars") >= 300), order=2, max_vocab=1_000_000
     )
     base = F.round(
         perplexity_column(spark, models, F.col("text"), F.col("lang")), 6

@@ -105,7 +105,7 @@ def train_bpe_distributed(
     as the LM trainers; a crawl's distinct-word table is 10⁸+ rows, the
     merge loop needs only the frequent head — rare tails can't win a merge
     anyway).  ``min_count`` floors the count before the cut, the same
-    hygiene knob as ``train_bigram_distributed``.  Word extraction runs
+    hygiene knob as ``train_ngram_distributed``.  Word extraction runs
     through the SAME ``_words`` kernel as the local trainer (one Arrow
     pass), so when ``max_words`` covers the corpus vocabulary the two
     trainers are bit-identical (tested).

@@ -22,8 +22,8 @@ trainings.  Our LLM-slot detector is a count-based n-gram LM whose
 sufficient statistics are **hyperparameter-free**: ``lam``/``k`` only
 reshape the closed-form arithmetic over the count tables and
 ``threshold`` only cuts the score.  So the sweep trains ONCE
-(``train_bigram_distributed``), scores every (lam, k) variant in a single
-Arrow pass (``BigramLM.nll_variants`` — a (K, T) numpy broadcast per
+(``train_ngram_distributed``), scores every (lam, k) variant in a single
+Arrow pass (``NgramLM.nll_variants`` — a (K, T) numpy broadcast per
 document), and evaluates every config with one map-side-combined
 aggregation.  K configs ≈ 1× corpus passes instead of K trainings — the
 difference between a feasible and an infeasible search at 100 TB.
@@ -44,7 +44,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .perplexity import ERROR_SCORE, train_bigram_distributed
+from .perplexity import ERROR_SCORE, train_ngram_distributed
 
 __all__ = [
     "DEFAULT_SPACE",
@@ -94,7 +94,7 @@ def bigram_variant_scores(
     generalization of ``perplexity.perplexity_column`` with ONE
     tokenization per document."""
     bc = spark.sparkContext.broadcast(models)
-    lams = np.array([v[0] for v in variants], dtype=np.float64)
+    lams = np.array([v[0] for v in variants], dtype=np.float64)[:, None]  # (K, 1)
     ks = np.array([v[1] for v in variants], dtype=np.float64)
     n_var = len(variants)
 
@@ -162,8 +162,8 @@ def evaluate_bigram_configs(
     )
 
     train_df = docs.filter(train_filter) if train_filter is not None else docs
-    models = train_bigram_distributed(
-        train_df, text_col=text_col, lang_col=lang_col, max_vocab=max_vocab
+    models = train_ngram_distributed(
+        train_df, order=2, text_col=text_col, lang_col=lang_col, max_vocab=max_vocab
     )
 
     arr = bigram_variant_scores(

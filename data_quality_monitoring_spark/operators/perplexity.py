@@ -2,9 +2,9 @@
 
 Fills the reference's LLM-detector slot (masked-LM mean negative log
 probability per token, ``anomaly_detectors/llm_based/llm_anomaly_detector.py
-:208-248``) with a word-bigram language model trained by counting a clean
-corpus — the north star's "KenLM-style n-gram perplexity scoring".  Contract
-preserved exactly:
+:208-248``) with a word n-gram language model (order 2, or 3 for the
+higher-order tier) trained by counting a clean corpus — the north star's
+"KenLM-style n-gram perplexity scoring".  Contract preserved exactly:
 
 * per-document score = mean NLL per token (higher = more anomalous),
 * scoring failure → sentinel score 10.0 (reference ``:208-248``),
@@ -20,6 +20,7 @@ binary memory-mapped per executor — same contract, same plan shape).
 
 from __future__ import annotations
 
+from collections import Counter, defaultdict
 from dataclasses import dataclass
 
 import numpy as np
@@ -32,133 +33,191 @@ from pyspark.sql.window import Window
 ERROR_SCORE = 10.0
 BOS = "<s>"
 UNK_ID = 0  # vocab id 0 reserved for unknown tokens
+DEFAULT_LAMS = {2: (0.7,), 3: (0.5, 0.3)}
+"""Interpolation weights per order, highest order first; the unigram gets
+``1.0`` minus each of them in turn."""
 
 
 def _tokens(text: str) -> list[str]:
     return text.lower().split()
 
 
+def _flat(digits: np.ndarray, v: int) -> np.ndarray:
+    """Flat int64 keys of (n, j) id rows: base-``v`` digits, oldest id most
+    significant (``(u·v + w)`` for a bigram, ``(u·v + w)·v + x`` for a
+    trigram)."""
+    keys = digits[:, 0]
+    for col in digits.T[1:]:
+        keys = keys * v + col
+    return keys
+
+
+def _unflat(key: int, v: int, order: int) -> tuple[int, ...]:
+    """Inverse of :func:`_flat` for one key."""
+    ids = []
+    for _ in range(order):
+        key, d = divmod(key, v)
+        ids.append(d)
+    return tuple(reversed(ids))
+
+
+def _sum_by(keys: np.ndarray, vals: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Sorted distinct keys and the summed counts of each."""
+    uniq, inv = np.unique(keys, return_inverse=True)
+    return uniq, np.bincount(inv, weights=vals, minlength=len(uniq))
+
+
+def _probe(table: tuple[np.ndarray, np.ndarray], keys: np.ndarray) -> np.ndarray:
+    """Counts of ``keys`` in a sorted (keys, counts) table, 0 where absent."""
+    keys_sorted, vals = table
+    if not len(keys_sorted):
+        return np.zeros(len(keys), dtype=np.float64)
+    pos = np.minimum(np.searchsorted(keys_sorted, keys), len(keys_sorted) - 1)
+    return np.where(keys_sorted[pos] == keys, vals[pos], 0.0)
+
+
+def _ratio(num: np.ndarray, den: np.ndarray) -> np.ndarray:
+    return np.divide(num, den, out=np.zeros_like(num), where=den > 0)
+
+
+def _shift(ids: np.ndarray, bos: int) -> np.ndarray:
+    """The token before each position, BOS before the first."""
+    prev = np.empty_like(ids)
+    prev[0] = bos
+    prev[1:] = ids[:-1]
+    return prev
+
+
+def _interpolate(lams, probs, p_uni):
+    """Per-token NLL of ``Σ lams[j]·probs[j] + (1 − Σ lams)·p_uni``, summed
+    left to right, highest order first."""
+    mix = lams[0] * probs[0]
+    lam_uni = 1.0 - lams[0]
+    for lam, p in zip(lams[1:], probs[1:]):
+        mix = mix + lam * p
+        lam_uni = lam_uni - lam
+    return -np.log(mix + lam_uni * p_uni)
+
+
 @dataclass
-class BigramLM:
-    """Interpolated bigram/unigram LM with a large smoothing vocabulary.
+class NgramLM:
+    """Interpolated n-gram LM (order 2 or 3) with a large smoothing
+    vocabulary.  Order 2:
 
-    ``P(cur|prev) = lam * c(prev,cur)/c(prev)  +  (1-lam) * (c(cur)+k)/(N+k*V_smooth)``
+    ``P(w|v) = λ2·c(vw)/c(v) + (1−λ2)·(c(w)+k)/(N+k·V_smooth)``
 
-    ``V_smooth`` is fixed (not the observed vocab size) so out-of-vocabulary
-    tokens are *genuinely* improbable — the property that makes gibberish
-    score far above clean text even when the clean corpus is small.
-    """
+    order 3 adds the trigram term on top:
+
+    ``P(w|u,v) = λ3·c(uvw)/c(uv) + λ2·c(vw)/c(v)
+                 + (1−λ3−λ2)·(c(w)+k)/(N+k·V_smooth)``
+
+    with ``lams = (λ3, λ2)`` highest order first (defaults
+    :data:`DEFAULT_LAMS`).  ``V_smooth`` is fixed (not the observed vocab
+    size) so out-of-vocabulary tokens are *genuinely* improbable — the
+    property that makes gibberish score far above clean text even when the
+    clean corpus is small.
+
+    Only the top-order count table is stored; every lower-order statistic
+    folds out of it (c(vw)=Σ_u c(uvw), c(uv)=Σ_w, c(v)=Σ_{u,w}, N=Σ), so
+    training is ONE distributed aggregation and the npz holds one table.
+    Lookups are sorted flat-key arrays probed with searchsorted — per-token
+    numpy instead of a Python dict hit per n-gram (the hot path of the
+    UDF)."""
 
     vocab: dict[str, int]  # word -> id (>=1); 0 = UNK
-    ctx: np.ndarray  # (V+1,) bigram-context counts c(prev ·)
-    word: np.ndarray  # (V+1,) token occurrence counts c(cur)
-    bi: dict[tuple[int, int], float]  # (prev, cur) -> count
-    n_tokens: float
+    counts: dict[tuple[int, ...], float]  # top-order n-gram ids -> count
+    order: int
     k: float = 0.5
-    lam: float = 0.7
+    lams: tuple[float, ...] | None = None
     v_smooth: float = 10_000.0
 
     def __post_init__(self) -> None:
-        # vectorised lookup structures: bigram counts as a SORTED flat-key
-        # array probed with searchsorted — per-token numpy instead of a
-        # Python dict hit per bigram (the hot path of the UDF)
-        v = len(self.ctx)
-        keys = np.fromiter(
-            (p * v + c for p, c in self.bi), dtype=np.int64, count=len(self.bi)
-        )
-        vals = np.fromiter(self.bi.values(), dtype=np.float64, count=len(self.bi))
-        order = np.argsort(keys)
-        self._bi_keys = keys[order]
-        self._bi_vals = vals[order]
-        self._v = v
+        if self.order not in DEFAULT_LAMS:
+            raise ValueError(f"n-gram order must be 2 or 3, got {self.order!r}")
+        if self.lams is None:
+            self.lams = DEFAULT_LAMS[self.order]
+        if len(self.lams) != self.order - 1:
+            raise ValueError(f"order {self.order} takes {self.order - 1} lams, got {self.lams!r}")
+        v = self._v = len(self.vocab) + 1  # + UNK slot
+        n = len(self.counts)
+        digits = np.array(list(self.counts), dtype=np.int64).reshape(n, self.order)
+        vals = np.fromiter(self.counts.values(), dtype=np.float64, count=n)
+        # integer-valued doubles: every fold below is an exact sum
+        self.word = np.bincount(digits[:, -1], weights=vals, minlength=v)  # c(w)
+        self.ctx = np.bincount(digits[:, -2], weights=vals, minlength=v)  # c(v ·)
+        self.n_tokens = float(vals.sum())
+        # n-gram tables highest order first, then the order-3 context c(uv ·)
+        self._grams = [_sum_by(_flat(digits[:, j:], v), vals) for j in range(self.order - 1)]
+        self._hists = [_sum_by(_flat(digits[:, j:-1], v), vals) for j in range(self.order - 2)]
 
-    def nll(self, text: str) -> float:
+    def _cond_probs(self, text: str):
+        """Token ids and the per-order conditional probabilities
+        (highest order first), or None for a text without tokens."""
         toks = _tokens(text)
         if not toks:
-            return ERROR_SCORE
+            return None
+        v = self._v
         ids = np.fromiter(
             (self.vocab.get(t, UNK_ID) for t in toks), dtype=np.int64, count=len(toks)
         )
-        prev = np.empty_like(ids)
-        prev[0] = self.vocab.get(BOS, UNK_ID)
-        prev[1:] = ids[:-1]
-        keys = prev * self._v + ids
-        if len(self._bi_keys):
-            pos = np.minimum(
-                np.searchsorted(self._bi_keys, keys), len(self._bi_keys) - 1
-            )
-            c_bi = np.where(self._bi_keys[pos] == keys, self._bi_vals[pos], 0.0)
-        else:
-            c_bi = np.zeros(len(ids), dtype=np.float64)
-        c_prev = self.ctx[prev]
-        p_bi = np.divide(c_bi, c_prev, out=np.zeros_like(c_bi), where=c_prev > 0)
+        bos = self.vocab.get(BOS, UNK_ID)
+        prev = _shift(ids, bos)
+        p_bi = _ratio(_probe(self._grams[-1], prev * v + ids), self.ctx[prev])
+        if self.order == 2:
+            return ids, (p_bi,)
+        hist = _shift(prev, bos) * v + prev
+        p_tri = _ratio(_probe(self._grams[0], hist * v + ids), _probe(self._hists[0], hist))
+        return ids, (p_tri, p_bi)
+
+    def nll(self, text: str) -> float:
+        got = self._cond_probs(text)
+        if got is None:
+            return ERROR_SCORE
+        ids, probs = got
         p_uni = (self.word[ids] + self.k) / (self.n_tokens + self.k * self.v_smooth)
-        nlls = -np.log(self.lam * p_bi + (1.0 - self.lam) * p_uni)
+        nlls = _interpolate(self.lams, probs, p_uni)
         return float(nlls.sum() / len(ids))
 
     def nll_variants(self, text: str, lams: np.ndarray, ks: np.ndarray) -> np.ndarray:
-        """Mean NLL under K (lam, k) hyperparameter variants SHARING one
-        tokenization and one count lookup — the hyperparameter-sweep hot
-        path (operators/hpo.py).  The count statistics are hyperparameter-
-        free; lam/k only reshape the closed-form arithmetic over them, so K
-        configs cost ~1× the work of one (a (K, T) numpy broadcast instead
-        of K sequential retrains, which is what the reference does:
+        """Mean NLL under K hyperparameter variants — ``lams`` (K, order−1),
+        ``ks`` (K,) — SHARING one tokenization and one count lookup: the
+        hyperparameter-sweep hot path (operators/hpo.py).  The count
+        statistics are hyperparameter-free; lams/k only reshape the
+        closed-form arithmetic over them, so K configs cost ~1× the work of
+        one (a (K, T) numpy broadcast instead of K sequential retrains,
+        which is what the reference does:
         ml_based/hyperparameter_search.py:249-264)."""
-        toks = _tokens(text)
-        if not toks:
+        got = self._cond_probs(text)
+        if got is None:
             return np.full(len(lams), ERROR_SCORE)
-        ids = np.fromiter(
-            (self.vocab.get(t, UNK_ID) for t in toks), dtype=np.int64, count=len(toks)
-        )
-        prev = np.empty_like(ids)
-        prev[0] = self.vocab.get(BOS, UNK_ID)
-        prev[1:] = ids[:-1]
-        keys = prev * self._v + ids
-        if len(self._bi_keys):
-            pos = np.minimum(
-                np.searchsorted(self._bi_keys, keys), len(self._bi_keys) - 1
-            )
-            c_bi = np.where(self._bi_keys[pos] == keys, self._bi_vals[pos], 0.0)
-        else:
-            c_bi = np.zeros(len(ids), dtype=np.float64)
-        c_prev = self.ctx[prev]
-        p_bi = np.divide(c_bi, c_prev, out=np.zeros_like(c_bi), where=c_prev > 0)
-        c_w = self.word[ids]
-        lam_c = lams[:, None]
+        ids, probs = got
         k_c = ks[:, None]
-        p_uni = (c_w[None, :] + k_c) / (self.n_tokens + k_c * self.v_smooth)
-        nlls = -np.log(lam_c * p_bi[None, :] + (1.0 - lam_c) * p_uni)
+        p_uni = (self.word[ids][None, :] + k_c) / (self.n_tokens + k_c * self.v_smooth)
+        lam_cols = [lams[:, j, None] for j in range(lams.shape[1])]
+        nlls = _interpolate(lam_cols, probs, p_uni)
         return nlls.sum(axis=1) / len(ids)
 
 
-def train_bigram(texts: list[str], max_vocab: int = 50_000, k: float = 0.5) -> BigramLM:
+def train_ngram(
+    texts: list[str], order: int, max_vocab: int = 50_000, k: float = 0.5
+) -> NgramLM:
     """Count-based training (deterministic, closed form)."""
-    from collections import Counter
-
-    uni_counter: Counter = Counter()
+    uni: Counter = Counter()
     for t in texts:
-        uni_counter.update(_tokens(t))
-    vocab_words = [w for w, _ in sorted(uni_counter.items(), key=lambda x: (-x[1], x[0]))][
-        : max_vocab - 2
-    ]
+        uni.update(_tokens(t))
+    top = [w for w, _ in sorted(uni.items(), key=lambda x: (-x[1], x[0]))][: max_vocab - 2]
     vocab = {BOS: 1}
-    for w in vocab_words:
+    for w in top:
         vocab[w] = len(vocab) + 1
-    v = len(vocab) + 1  # + UNK slot
-    ctx = np.zeros(v, dtype=np.float64)
-    word = np.zeros(v, dtype=np.float64)
-    bi: dict[tuple[int, int], float] = {}
-    n_tokens = 0.0
+    counts: dict[tuple[int, ...], float] = {}
+    start = (vocab[BOS],) * (order - 1)
     for t in texts:
-        ids = [vocab.get(w, UNK_ID) for w in _tokens(t)]
-        prev = vocab[BOS]
-        for cur in ids:
-            ctx[prev] += 1
-            word[cur] += 1
-            n_tokens += 1
-            bi[(prev, cur)] = bi.get((prev, cur), 0.0) + 1
-            prev = cur
-    return BigramLM(vocab, ctx, word, bi, n_tokens, k)
+        hist = start
+        for w in _tokens(t):
+            g = hist + (vocab.get(w, UNK_ID),)
+            counts[g] = counts.get(g, 0.0) + 1
+            hist = g[1:]
+    return NgramLM(vocab, counts, order, k)
 
 
 AUTO_FLOOR_CUTOFF = 5_000_000
@@ -218,7 +277,6 @@ def _vocab_rows(
     task stays small too (at web scale use ≥2; default 1 preserves
     bit-identity with the local trainers).  Returns rows of
     ``(lang, w, r)`` where r is the 1-based vocab rank."""
-    from pyspark.sql.window import Window as _W
 
     @F.pandas_udf(T.ArrayType(T.StringType()))
     def toks(texts: pd.Series) -> pd.Series:
@@ -231,7 +289,7 @@ def _vocab_rows(
     )
     if min_word_count > 1:
         counts = counts.filter(F.col("n") >= F.lit(min_word_count))
-    rank_w = _W.partitionBy("lang").orderBy(F.desc("n"), F.asc("w"))
+    rank_w = Window.partitionBy("lang").orderBy(F.desc("n"), F.asc("w"))
     return (
         counts.withColumn("r", F.row_number().over(rank_w))
         .filter(F.col("r") <= F.lit(max_vocab - 2))
@@ -249,8 +307,9 @@ def _build_vocabs(rows) -> dict[str, dict[str, int]]:
     return vocabs
 
 
-def train_bigram_distributed(
+def train_ngram_distributed(
     docs,
+    order: int,
     text_col: str = "text",
     lang_col: str = "lang",
     max_vocab: int = 50_000,
@@ -258,7 +317,7 @@ def train_bigram_distributed(
     min_word_count: int | None = None,
     ngram_min_count: int | None = None,
     auto_floor_cutoff: int = AUTO_FLOOR_CUTOFF,
-) -> dict[str, BigramLM]:
+) -> dict[str, NgramLM]:
     """Distributed count-based LM training — the reference's ``llm-train``
     entry point (llm_based/llm_model_training.py:163-314) as two Spark
     aggregations instead of an MLM fine-tune loop.
@@ -266,25 +325,26 @@ def train_bigram_distributed(
     Pass 1: per-(lang, word) counts → per-language vocab, cut to the top
     ``max_vocab`` by (-count, word) *distributedly* (window rank inside
     :func:`_vocab_rows`) so the driver never sees more than
-    ``langs × max_vocab`` rows.  Pass 2: each doc emits its bigram ids
-    (vocab broadcast; key = prev·V + cur) → per-(lang, key) counts; ctx /
-    word / n_tokens fold out of the same counts, so the result is
-    bit-identical to the local trainer on the same corpus (asserted in
-    tests/test_models.py).  Both shuffles carry map-side-combined count
-    partials bounded by vocab/bigram-type counts, not corpus size.
+    ``langs × max_vocab`` rows.  Pass 2: each doc emits the flat keys of
+    its ``order``-grams (vocab broadcast; see :func:`_flat`) → per-(lang,
+    key) counts; every lower-order count folds out of them in
+    :class:`NgramLM`, so the result is bit-identical to the local trainer
+    on the same corpus (asserted in tests/test_models.py).  Both shuffles
+    carry map-side-combined count partials bounded by vocab/n-gram-type
+    counts, not corpus size.
 
     Scale levers (both default to AUTO via :func:`_resolve_floors`:
     floor 1 = exact/bit-identical up to ``auto_floor_cutoff`` docs, floor 2
     above it so the pass-2 collect is bounded by default, not only when the
-    operator reads this docstring):
+    operator reads this docstring — the n-gram type space is ``V^order``):
 
     * ``min_word_count`` — floor on word counts before the vocab window,
       pruning the hapax tail off the per-language sort task.
-    * ``ngram_min_count`` — floor on bigram-type counts before the driver
+    * ``ngram_min_count`` — floor on n-gram-type counts before the driver
       collect in pass 2, bounding the collected model to frequent types
-      (KenLM's ``--prune``); ctx/word/n_tokens then fold from the kept
+      (KenLM's ``--prune``); the lower orders then fold from the kept
       types only, i.e. the standard count-pruned LM.  With floor ``c`` the
-      collect is ≤ total bigram occurrences / c rows (and ≤ V² always)."""
+      collect is ≤ total n-gram occurrences / c rows."""
     spark = docs.sparkSession
     # untagged rows can't train a per-lang LM (and a None key would break
     # the per-lang vocab sort downstream)
@@ -298,7 +358,7 @@ def train_bigram_distributed(
     bc = spark.sparkContext.broadcast(vocabs)
 
     @F.pandas_udf(T.ArrayType(T.LongType()))
-    def bigram_keys(texts: pd.Series, langs_s: pd.Series) -> pd.Series:
+    def ngram_keys(texts: pd.Series, langs_s: pd.Series) -> pd.Series:
         vs = bc.value
         out = []
         for t, lg in zip(texts, langs_s):
@@ -307,106 +367,74 @@ def train_bigram_distributed(
                 out.append([])
                 continue
             v = len(vocab) + 1
-            ids = [vocab.get(w, UNK_ID) for w in _tokens(t)]
-            prev = vocab[BOS]
+            span = v ** (order - 1)  # key range of an (order-1)-token history
+            hist = 0
+            for _ in range(order - 1):
+                hist = hist * v + vocab[BOS]
             keys = []
-            for cur in ids:
-                keys.append(prev * v + cur)
-                prev = cur
+            for w in _tokens(t):
+                key = hist * v + vocab.get(w, UNK_ID)
+                keys.append(key)
+                hist = key % span
             out.append(keys)
         return pd.Series(out)
 
-    pair_counts = (
+    gram_counts = (
         docs.select(
             F.col(lang_col).alias("lang"),
-            F.explode(bigram_keys(F.col(text_col), F.col(lang_col))).alias("key"),
+            F.explode(ngram_keys(F.col(text_col), F.col(lang_col))).alias("key"),
         )
         .groupBy("lang", "key")
         .agg(F.count("*").alias("n"))
     )
     if ngram_min_count > 1:
-        pair_counts = pair_counts.filter(F.col("n") >= F.lit(ngram_min_count))
-    counts = pair_counts.collect()
-    from collections import defaultdict
-
-    bis: dict[str, dict[tuple[int, int], float]] = defaultdict(dict)
-    for r in counts:
+        gram_counts = gram_counts.filter(F.col("n") >= F.lit(ngram_min_count))
+    counts: dict[str, dict[tuple[int, ...], float]] = defaultdict(dict)
+    for r in gram_counts.collect():
         v = len(vocabs[r["lang"]]) + 1
-        bis[r["lang"]][(r["key"] // v, r["key"] % v)] = float(r["n"])
-    models: dict[str, BigramLM] = {}
-    for lang, vocab in vocabs.items():
-        v = len(vocab) + 1
-        ctx = np.zeros(v, dtype=np.float64)
-        word = np.zeros(v, dtype=np.float64)
-        n_tokens = 0.0
-        bi = bis.get(lang, {})
-        for (p, c), n in bi.items():
-            ctx[p] += n
-            word[c] += n
-            n_tokens += n
-        models[lang] = BigramLM(vocab, ctx, word, bi, n_tokens, k)
-    return models
-
-
-def save_bigram_npz(lm: BigramLM, path: str) -> None:
-    """Persist one LM as a compressed npz (vocab as parallel arrays)."""
-    words = sorted(lm.vocab, key=lm.vocab.get)
-    ids = np.array([lm.vocab[w] for w in words], dtype=np.int64)
-    keys = np.fromiter((p * len(lm.ctx) + c for p, c in lm.bi), dtype=np.int64, count=len(lm.bi))
-    vals = np.fromiter(lm.bi.values(), dtype=np.float64, count=len(lm.bi))
-    np.savez_compressed(
-        path, words=np.array(words), ids=ids, ctx=lm.ctx, word=lm.word,
-        bi_keys=keys, bi_vals=vals, n_tokens=np.array([lm.n_tokens]),
-        k=np.array([lm.k]),
-    )
-
-
-def load_bigram_npz(path: str) -> BigramLM:
-    z = np.load(path, allow_pickle=False)
-    vocab = {str(w): int(i) for w, i in zip(z["words"], z["ids"])}
-    v = len(z["ctx"])
-    bi = {
-        (int(key) // v, int(key) % v): float(val)
-        for key, val in zip(z["bi_keys"], z["bi_vals"])
+        counts[r["lang"]][_unflat(r["key"], v, order)] = float(r["n"])
+    return {
+        lang: NgramLM(vocab, counts.get(lang, {}), order, k)
+        for lang, vocab in vocabs.items()
     }
-    return BigramLM(vocab, z["ctx"], z["word"], bi, float(z["n_tokens"][0]), float(z["k"][0]))
 
 
-def save_trigram_npz(lm: "TrigramLM", path: str) -> None:
-    """Persist one trigram LM as compressed npz — with :func:`load_trigram_npz`
-    this is the broadcast-from-storage path: at web scale the trainers write
+def save_ngram_npz(lm: NgramLM, path: str) -> None:
+    """Persist one LM as a compressed npz: vocab as parallel arrays, the
+    top-order count table as flat keys, plus the order and smoothing
+    hyperparameters.  With :func:`load_ngram_npz` this is the
+    broadcast-from-storage path: at web scale the trainers write
     per-language npz to shared storage and scorers broadcast the *loaded
     arrays*, so no multi-GB Python dict ever lives on the driver between
     jobs (VERDICT r3 task 1)."""
     words = sorted(lm.vocab, key=lm.vocab.get)
-    ids = np.array([lm.vocab[w] for w in words], dtype=np.int64)
-    v = len(lm.vocab) + 1
-    keys = np.fromiter(
-        ((u * v + pv) * v + w for u, pv, w in lm.tri), dtype=np.int64, count=len(lm.tri)
-    )
-    vals = np.fromiter(lm.tri.values(), dtype=np.float64, count=len(lm.tri))
+    keys, vals = lm._grams[0]
     np.savez_compressed(
-        path, words=np.array(words), ids=ids, tri_keys=keys, tri_vals=vals,
-        k=np.array([lm.k]), lam3=np.array([lm.lam3]), lam2=np.array([lm.lam2]),
+        path, words=np.array(words),
+        ids=np.array([lm.vocab[w] for w in words], dtype=np.int64),
+        order=np.array([lm.order]), gram_keys=keys, gram_counts=vals,
+        k=np.array([lm.k]), lams=np.array(lm.lams), v_smooth=np.array([lm.v_smooth]),
     )
 
 
-def load_trigram_npz(path: str) -> "TrigramLM":
+def load_ngram_npz(path: str) -> NgramLM:
     z = np.load(path, allow_pickle=False)
     vocab = {str(w): int(i) for w, i in zip(z["words"], z["ids"])}
+    order = int(z["order"][0])
     v = len(vocab) + 1
-    tri = {
-        (int(key) // (v * v), (int(key) // v) % v, int(key) % v): float(val)
-        for key, val in zip(z["tri_keys"], z["tri_vals"])
+    counts = {
+        _unflat(key, v, order): val
+        for key, val in zip(z["gram_keys"].tolist(), z["gram_counts"].tolist())
     }
-    return TrigramLM(
-        vocab, tri, float(z["k"][0]), float(z["lam3"][0]), float(z["lam2"][0])
+    return NgramLM(
+        vocab, counts, order, float(z["k"][0]),
+        tuple(z["lams"].tolist()), float(z["v_smooth"][0]),
     )
 
 
 def perplexity_column(
     spark: SparkSession,
-    models: dict[str, BigramLM],
+    models: dict[str, NgramLM],
     text: Column,
     claimed: Column,
     default_lang: str = "en",
@@ -562,192 +590,3 @@ def perplexity_buckets(
         )
     else:
         raise ValueError(f"unknown mode {mode!r}: use 'auto', 'rank' or 'threshold'")
-
-
-BOS2 = "<s>"  # both backoff positions share the single BOS symbol
-
-
-@dataclass
-class TrigramLM:
-    """Interpolated trigram LM — the higher-order "KenLM-style" tier.
-
-    ``P(w|u,v) = λ3·c(uvw)/c(uv) + λ2·c(vw)/c(v)
-                 + (1−λ3−λ2)·(c(w)+k)/(N+k·V_smooth)``
-
-    Every lower-order statistic folds out of the single trigram count
-    table (c(vw)=Σ_u c(uvw), c(uv)=Σ_w, c(v)=Σ_{u,w}, N=Σ), so training
-    is ONE distributed aggregation; scoring keeps BigramLM's vectorised
-    sorted-flat-key searchsorted probes (three of them).  Same scoring
-    contract as BigramLM (mean NLL, ERROR_SCORE, duck-typed ``nll``) —
-    drop-in for perplexity_column / perplexity_finding / the CCNet
-    buckets."""
-
-    vocab: dict[str, int]
-    tri: dict[tuple[int, int, int], float]  # (u, v, w) -> count
-    k: float = 0.5
-    lam3: float = 0.5
-    lam2: float = 0.3
-    v_smooth: float = 10_000.0
-
-    def __post_init__(self) -> None:
-        from collections import Counter
-
-        v = len(self.vocab) + 1  # + UNK slot
-        self._v = v
-        bi: Counter = Counter()
-        ctx2: Counter = Counter()
-        ctx1 = np.zeros(v, dtype=np.float64)
-        word = np.zeros(v, dtype=np.float64)
-        n = 0.0
-        for (a, b, c), cnt in self.tri.items():
-            bi[(b, c)] += cnt
-            ctx2[(a, b)] += cnt
-            ctx1[b] += cnt
-            word[c] += cnt
-            n += cnt
-        self._ctx1, self._word, self._n = ctx1, word, n
-
-        def flat(d, rank):
-            keys = np.fromiter(
-                (
-                    sum(part * v ** (rank - 1 - i) for i, part in enumerate(kk))
-                    for kk in d
-                ),
-                dtype=np.int64,
-                count=len(d),
-            )
-            vals = np.fromiter(d.values(), dtype=np.float64, count=len(d))
-            order = np.argsort(keys)
-            return keys[order], vals[order]
-
-        self._tri_k, self._tri_v = flat(self.tri, 3)
-        self._bi_k, self._bi_v = flat(bi, 2)
-        self._c2_k, self._c2_v = flat(ctx2, 2)
-
-    @staticmethod
-    def _probe(keys_sorted, vals, keys):
-        if not len(keys_sorted):
-            return np.zeros(len(keys), dtype=np.float64)
-        pos = np.minimum(np.searchsorted(keys_sorted, keys), len(keys_sorted) - 1)
-        return np.where(keys_sorted[pos] == keys, vals[pos], 0.0)
-
-    def nll(self, text: str) -> float:
-        toks = _tokens(text)
-        if not toks:
-            return ERROR_SCORE
-        v = self._v
-        ids = np.fromiter(
-            (self.vocab.get(t, UNK_ID) for t in toks), dtype=np.int64, count=len(toks)
-        )
-        bos = self.vocab.get(BOS, UNK_ID)
-        p1 = np.empty_like(ids)  # v = previous token
-        p1[0] = bos
-        p1[1:] = ids[:-1]
-        p2 = np.empty_like(ids)  # u = token before that
-        p2[0] = bos
-        p2[1:] = p1[:-1]
-        c_tri = self._probe(self._tri_k, self._tri_v, (p2 * v + p1) * v + ids)
-        c_ctx2 = self._probe(self._c2_k, self._c2_v, p2 * v + p1)
-        c_bi = self._probe(self._bi_k, self._bi_v, p1 * v + ids)
-        c_ctx1 = self._ctx1[p1]
-        p3 = np.divide(c_tri, c_ctx2, out=np.zeros_like(c_tri), where=c_ctx2 > 0)
-        pb = np.divide(c_bi, c_ctx1, out=np.zeros_like(c_bi), where=c_ctx1 > 0)
-        pu = (self._word[ids] + self.k) / (self._n + self.k * self.v_smooth)
-        lam1 = 1.0 - self.lam3 - self.lam2
-        nlls = -np.log(self.lam3 * p3 + self.lam2 * pb + lam1 * pu)
-        return float(nlls.sum() / len(ids))
-
-
-def train_trigram(texts: list[str], max_vocab: int = 50_000, k: float = 0.5) -> TrigramLM:
-    """Local closed-form trigram training (same vocab rule as train_bigram)."""
-    from collections import Counter
-
-    uni: Counter = Counter()
-    for t in texts:
-        uni.update(_tokens(t))
-    top = [w for w, _ in sorted(uni.items(), key=lambda x: (-x[1], x[0]))][: max_vocab - 2]
-    vocab = {BOS: 1}
-    for w in top:
-        vocab[w] = len(vocab) + 1
-    tri: dict[tuple[int, int, int], float] = {}
-    bos = vocab[BOS]
-    for t in texts:
-        ids = [vocab.get(w, UNK_ID) for w in _tokens(t)]
-        u, v_ = bos, bos
-        for cur in ids:
-            key = (u, v_, cur)
-            tri[key] = tri.get(key, 0.0) + 1
-            u, v_ = v_, cur
-    return TrigramLM(vocab, tri, k)
-
-
-def train_trigram_distributed(
-    docs,
-    text_col: str = "text",
-    lang_col: str = "lang",
-    max_vocab: int = 50_000,
-    k: float = 0.5,
-    min_word_count: int | None = None,
-    ngram_min_count: int | None = None,
-    auto_floor_cutoff: int = AUTO_FLOOR_CUTOFF,
-) -> dict[str, TrigramLM]:
-    """Distributed trigram training: the distributed top-k vocab pass of
-    :func:`train_bigram_distributed` (driver collect bounded at
-    ``langs × max_vocab`` rows) plus ONE (lang, trigram-key) count
-    aggregation — every lower-order count folds out of it in TrigramLM,
-    so the shuffle payload is bounded by trigram-type counts (map-side
-    combined), never corpus size.  ``min_word_count`` /
-    ``ngram_min_count`` are the same scale levers as the bigram trainer
-    (floor the vocab window input / the collected trigram types), with the
-    same :func:`_resolve_floors` auto default: exact (1) up to
-    ``auto_floor_cutoff`` docs, count-pruned (2) above — the trigram type
-    space is cubic in V, so an unbounded default collect here is even less
-    survivable than the bigram one."""
-    from collections import defaultdict
-
-    spark = docs.sparkSession
-    docs = docs.filter(F.col(lang_col).isNotNull())
-    min_word_count, ngram_min_count = _resolve_floors(
-        docs, min_word_count, ngram_min_count, auto_floor_cutoff
-    )
-    vocabs = _build_vocabs(
-        _vocab_rows(docs, text_col, lang_col, max_vocab, min_word_count)
-    )
-    bc = spark.sparkContext.broadcast(vocabs)
-
-    @F.pandas_udf(T.ArrayType(T.LongType()))
-    def tri_keys(texts: pd.Series, langs_s: pd.Series) -> pd.Series:
-        vs = bc.value
-        out = []
-        for t, lg in zip(texts, langs_s):
-            vocab = vs.get(lg)
-            if t is None or vocab is None:
-                out.append([])
-                continue
-            v = len(vocab) + 1
-            ids = [vocab.get(w, UNK_ID) for w in _tokens(t)]
-            u, pv = vocab[BOS], vocab[BOS]
-            keys = []
-            for cur in ids:
-                keys.append((u * v + pv) * v + cur)
-                u, pv = pv, cur
-            out.append(keys)
-        return pd.Series(out)
-
-    tri_counts = (
-        docs.select(
-            F.col(lang_col).alias("lang"),
-            F.explode(tri_keys(F.col(text_col), F.col(lang_col))).alias("key"),
-        )
-        .groupBy("lang", "key")
-        .agg(F.count("*").alias("n"))
-    )
-    if ngram_min_count > 1:
-        tri_counts = tri_counts.filter(F.col("n") >= F.lit(ngram_min_count))
-    counts = tri_counts.collect()
-    tris: dict[str, dict[tuple[int, int, int], float]] = defaultdict(dict)
-    for r in counts:
-        v = len(vocabs[r["lang"]]) + 1
-        key = r["key"]
-        tris[r["lang"]][(key // (v * v), (key // v) % v, key % v)] = float(r["n"])
-    return {lang: TrigramLM(vocab, tris.get(lang, {}), k) for lang, vocab in vocabs.items()}

@@ -53,7 +53,7 @@ def quality_filter(
     thresholds: dict[str, float] | None = None,
     methods: list[str] | None = None,
     langid_model=None,
-    bigram_models=None,
+    lm_models=None,
     cascade: bool = False,
     llm_tiers: dict | None = None,
 ) -> DataFrame:
@@ -67,7 +67,7 @@ def quality_filter(
     as plan pruning: a disabled model scorer never even adds its pandas-UDF
     stage.
 
-    ``langid_model`` / ``bigram_models`` override the frozen artifacts —
+    ``langid_model`` / ``lm_models`` override the frozen artifacts —
     used by the fully-oracled flagship contract query, which injects
     SQL-reproducible in-query-trained models through the SAME plan.
 
@@ -121,7 +121,7 @@ def quality_filter(
     if "llm" in methods:
         cols["ppl_score"] = P.perplexity_column(
             spark,
-            bigram_models if bigram_models is not None else get_bigram_models(),
+            lm_models if lm_models is not None else get_bigram_models(),
             model_text,
             lang,
         )

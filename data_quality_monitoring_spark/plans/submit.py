@@ -342,7 +342,8 @@ def build_args(argv: list[str] | None = None) -> argparse.Namespace:
         help="filter/incremental modes: n-gram order of the LLM-slot "
         "perplexity model — 2 = frozen bigram artifacts (the reference "
         "contract, default), 3 = frozen trigram artifacts "
-        "(operators/perplexity.TrigramLM)",
+        "(operators/perplexity.NgramLM); llm-train: order of the trained "
+        "LMs (bigram_<lang>.npz or trigram_<lang>.npz)",
     )
     p.add_argument(
         "--chunk-words", type=int, default=None,
@@ -377,8 +378,8 @@ def build_args(argv: list[str] | None = None) -> argparse.Namespace:
 
 
 def _llm_models(args):
-    """--llm-order 3 swaps the frozen trigram artifacts into the LLM slot
-    (duck-typed scoring contract); None keeps the default bigram tier."""
+    """--llm-order 3 swaps the frozen trigram artifacts into the LLM slot;
+    None keeps the default bigram tier."""
     if args.llm_order == 3:
         from ..artifacts import get_trigram_models
 
@@ -421,7 +422,7 @@ def _filter_stage(spark: SparkSession, pages, args):
         spark, pages, extract_html=args.extract_html,
         c4_clean=args.c4_clean, rep_gate=args.rep_gate, gopher_gate=args.gopher_gate,
         combine=args.combine, methods=args.methods,
-        cascade=args.cascade, bigram_models=_llm_models(args),
+        cascade=args.cascade, lm_models=_llm_models(args),
     )
 
 
@@ -704,32 +705,38 @@ def run_ml_train(spark: SparkSession, args: argparse.Namespace) -> dict:
 
 def run_llm_train(spark: SparkSession, args: argparse.Namespace) -> dict:
     """llm-train (reference main.py → llm_based/llm_model_training.py):
-    train per-language bigram LMs distributed and persist one npz each."""
+    train per-language n-gram LMs of order ``--llm-order`` distributed and
+    persist one npz each."""
     from pathlib import Path
 
-    from ..operators.perplexity import save_bigram_npz, train_bigram_distributed
+    from ..operators.perplexity import save_ngram_npz, train_ngram_distributed
 
     docs = spark.read.parquet(args.input)
-    models = train_bigram_distributed(
+    models = train_ngram_distributed(
         docs,
+        order=args.llm_order,
         min_word_count=args.min_word_count,
         ngram_min_count=args.ngram_min_count,
     )
     Path(args.output).mkdir(parents=True, exist_ok=True)
+    prefix = {2: "bigram", 3: "trigram"}[args.llm_order]
     summary = {}
     for lang, lm in sorted(models.items()):
-        out = str(Path(args.output) / f"bigram_{lang}.npz")
-        save_bigram_npz(lm, out)
-        summary[lang] = {"vocab": len(lm.vocab), "n_tokens": lm.n_tokens, "path": out}
+        out = str(Path(args.output) / f"{prefix}_{lang}.npz")
+        save_ngram_npz(lm, out)
+        summary[lang] = {
+            "order": lm.order, "vocab": len(lm.vocab), "n_tokens": lm.n_tokens,
+            "path": out,
+        }
     probe_n = args.probe_n
     if probe_n and summary:
         # probe the artifacts AS WRITTEN (reference
         # llm_model_training.py:366-429: normal slice vs obvious anomalies)
-        from ..operators.perplexity import load_bigram_npz
+        from ..operators.perplexity import load_ngram_npz
         from .probe import probe_bigram
 
         reloaded = {
-            lang: load_bigram_npz(info["path"]) for lang, info in summary.items()
+            lang: load_ngram_npz(info["path"]) for lang, info in summary.items()
         }
         report = probe_bigram(spark, reloaded, docs, n=probe_n)
         Path(args.output, "train_probe.json").write_text(json.dumps(report, indent=1))

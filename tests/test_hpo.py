@@ -7,7 +7,6 @@ pass, counts verified against the local closed-form model."""
 from __future__ import annotations
 
 import numpy as np
-import pytest
 from pyspark.sql import functions as F
 
 from data_quality_monitoring_spark.operators.hpo import (
@@ -17,7 +16,7 @@ from data_quality_monitoring_spark.operators.hpo import (
     hp_search,
     sample_configs,
 )
-from data_quality_monitoring_spark.operators.perplexity import train_bigram
+from data_quality_monitoring_spark.operators.perplexity import train_ngram
 
 
 def test_sample_configs_deterministic_and_in_space():
@@ -32,15 +31,21 @@ def test_sample_configs_deterministic_and_in_space():
 
 
 def test_nll_variants_matches_single_nll():
-    """K-variant broadcast arithmetic == the single-model closed form."""
-    lm = train_bigram(["aa bb cc aa bb", "aa cc bb aa"], max_vocab=1000)
-    for lam, k in [(0.5, 0.1), (0.7, 0.5), (0.9, 1.0)]:
-        lm.lam, lm.k = lam, k
-        single = lm.nll("aa bb zz")
-        multi = lm.nll_variants(
-            "aa bb zz", np.array([lam]), np.array([k])
-        )[0]
-        assert single == pytest.approx(multi, abs=1e-12)
+    """K-variant broadcast arithmetic == the single-model closed form,
+    bit for bit, at both orders."""
+    grid = {
+        2: [((0.5,), 0.1), ((0.7,), 0.5), ((0.9,), 1.0)],
+        3: [((0.5, 0.3), 0.1), ((0.6, 0.2), 0.5), ((0.2, 0.7), 1.0)],
+    }
+    for order, variants in grid.items():
+        lm = train_ngram(["aa bb cc aa bb", "aa cc bb aa"], order, max_vocab=1000)
+        for lams, k in variants:
+            lm.lams, lm.k = lams, k
+            single = lm.nll("aa bb zz")
+            multi = lm.nll_variants(
+                "aa bb zz", np.array([lams]), np.array([k])
+            )[0]
+            assert single == multi
 
 
 CLEAN = ["aa bb cc dd ee ff gg hh", "aa bb cc dd ee ff hh gg",
@@ -61,8 +66,8 @@ def _cluster_thresholds():
     """Thresholds straddling the clean/OOV ppl clusters, from the LOCAL
     closed-form model (distributed trainer is pinned bit-identical to it
     elsewhere)."""
-    lm = train_bigram(CLEAN, max_vocab=1_000_000)
-    lams, ks = np.array([0.7]), np.array([0.5])
+    lm = train_ngram(CLEAN, 2, max_vocab=1_000_000)
+    lams, ks = np.array([[0.7]]), np.array([0.5])
     all_ppl = [lm.nll_variants(t, lams, ks)[0] for t in CLEAN + [b for b in BAD if b]]
     clean_ppl = max(lm.nll_variants(t, lams, ks)[0] for t in CLEAN)
     bad_ppl = min(lm.nll_variants(t, lams, ks)[0] for t in BAD if t)
@@ -105,7 +110,7 @@ def test_evaluate_configs_constraint_tiebreak_and_counts(spark):
 def test_evaluate_configs_counts_match_local_model(spark):
     """Distributed confusion counts == brute-force counts from the local
     closed-form model at several (lam, k, threshold) points."""
-    lm = train_bigram(CLEAN, max_vocab=1_000_000)
+    lm = train_ngram(CLEAN, 2, max_vocab=1_000_000)
     configs = [(0.5, 0.1, 3.0), (0.9, 1.0, 3.5), (0.7, 0.5, 99.0)]
     res = {
         r["config_id"]: r.asDict()
@@ -121,7 +126,7 @@ def test_evaluate_configs_counts_match_local_model(spark):
                 pred = False  # unscorable → never positive
             else:
                 ppl = round(
-                    float(lm.nll_variants(t, np.array([lam]), np.array([k]))[0]), 6
+                    float(lm.nll_variants(t, np.array([[lam]]), np.array([k]))[0]), 6
                 )
                 pred = ppl > thr
             tp += pred and bad

@@ -2,7 +2,12 @@
 
 import pandas as pd
 
-from data_quality_monitoring_spark.artifacts import get_bigram_models, get_langid_model, training_texts
+from data_quality_monitoring_spark.artifacts import (
+    get_bigram_models,
+    get_langid_model,
+    get_trigram_models,
+    training_texts,
+)
 from data_quality_monitoring_spark.datagen import LANGS
 
 
@@ -78,6 +83,9 @@ def test_golden_scores_pinned():
     assert round(lms["en"].nll(GOLDEN_TEXT), 6) == 10.763418
     assert round(lms["en"].nll(GOLDEN_GIBBERISH), 6) == 12.754618
     assert round(lms["de"].nll("the table holds a query"), 6) == 12.743229
+    tri = get_trigram_models()["en"]
+    assert round(tri.nll(GOLDEN_TEXT), 6) == 11.120626
+    assert round(tri.nll(GOLDEN_GIBBERISH), 6) == 13.160083
 
 
 def test_golden_scores_through_spark_udfs(spark):
@@ -101,9 +109,10 @@ def test_golden_scores_through_spark_udfs(spark):
 
 
 def test_distributed_training_matches_local(spark):
-    """train_langid_distributed / train_bigram_distributed are bit-identical
-    to the local closed-form trainers on the same corpus — the property
-    that lets ml-train/llm-train scale without train/serve skew."""
+    """train_langid_distributed / train_ngram_distributed (both orders) are
+    bit-identical to the local closed-form trainers on the same corpus —
+    the property that lets ml-train/llm-train scale without train/serve
+    skew."""
     import numpy as np
     import pandas as pd
 
@@ -113,8 +122,8 @@ def test_distributed_training_matches_local(spark):
         train_langid_distributed,
     )
     from data_quality_monitoring_spark.operators.perplexity import (
-        train_bigram,
-        train_bigram_distributed,
+        train_ngram,
+        train_ngram_distributed,
     )
 
     tbl = {lang: training_texts(lang, 25) for lang in ("en", "de")}
@@ -127,26 +136,32 @@ def test_distributed_training_matches_local(spark):
     assert np.array_equal(dist.log_probs, local.log_probs)
     assert np.array_equal(dist.log_priors, local.log_priors)
 
-    lms = train_bigram_distributed(docs)
-    for lang in tbl:
-        loc = train_bigram(tbl[lang])
-        got = lms[lang]
-        assert got.vocab == loc.vocab
-        assert got.n_tokens == loc.n_tokens
-        assert np.array_equal(got.ctx, loc.ctx)
-        assert np.array_equal(got.word, loc.word)
-        assert got.bi == loc.bi
-        probe = tbl[lang][0] + " zzz-unseen-token"
-        assert got.nll(probe) == loc.nll(probe)
+    for order in (2, 3):
+        lms = train_ngram_distributed(docs, order)
+        for lang in tbl:
+            loc = train_ngram(tbl[lang], order)
+            got = lms[lang]
+            assert got.vocab == loc.vocab
+            assert got.n_tokens == loc.n_tokens
+            assert np.array_equal(got.ctx, loc.ctx)
+            assert np.array_equal(got.word, loc.word)
+            assert got.counts == loc.counts
+            probe = tbl[lang][0] + " zzz-unseen-token"
+            assert got.nll(probe) == loc.nll(probe)
 
 
 def test_train_cli_modes(spark, tmp_path):
-    """ml-train / llm-train CLI: artifacts persist, reload, and score."""
+    """ml-train / llm-train CLI: artifacts persist, reload, and score;
+    ``--llm-order 3`` trains, names and reloads order-3 LMs that score
+    exactly like the distributed trainer's own on the same input."""
     import pandas as pd
 
     from data_quality_monitoring_spark.artifacts import training_texts
     from data_quality_monitoring_spark.operators.langid import LangIdModel
-    from data_quality_monitoring_spark.operators.perplexity import load_bigram_npz
+    from data_quality_monitoring_spark.operators.perplexity import (
+        load_ngram_npz,
+        train_ngram_distributed,
+    )
     from data_quality_monitoring_spark.plans.submit import (
         build_args,
         run_llm_train,
@@ -166,8 +181,22 @@ def test_train_cli_modes(spark, tmp_path):
 
     out_llm = str(tmp_path / "llm_out")
     s2 = run_llm_train(spark, build_args(["--mode", "llm-train", "--input", in_dir, "--output", out_llm]))
-    lm = load_bigram_npz(s2["en"]["path"])
+    lm = load_ngram_npz(s2["en"]["path"])
     assert lm.nll(rows[0][0]) < lm.nll("zx qv jk wp zx qv jk wp")
+
+    out_tri = tmp_path / "llm3_out"
+    s3 = run_llm_train(spark, build_args(
+        ["--mode", "llm-train", "--input", in_dir, "--output", str(out_tri),
+         "--llm-order", "3"]
+    ))
+    assert sorted(p.name for p in out_tri.glob("*.npz")) == ["trigram_de.npz", "trigram_en.npz"]
+    expect = train_ngram_distributed(spark.read.parquet(in_dir), order=3)
+    for lang in ("en", "de"):
+        assert s3[lang]["order"] == 3
+        lm = load_ngram_npz(s3[lang]["path"])
+        assert lm.order == 3 and lm.counts == expect[lang].counts
+        for probe in (rows[0][0], rows[-1][0], "zx qv jk wp zx qv jk wp"):
+            assert lm.nll(probe) == expect[lang].nll(probe)
 
 
 def test_quality_classifier_separates_and_pins(spark):
@@ -339,35 +368,35 @@ def test_langid_null_claim_skips_mismatch():
     assert s["pred_lang"].iloc[0] == "en"  # prediction still emitted
 
 
-def test_trigram_distributed_matches_local_and_separates(spark):
-    """train_trigram_distributed is bit-identical to the local trainer; the
-    trigram tier scores in-domain continuations below the bigram tier and
-    junk far above clean — the property that makes the higher-order
-    "KenLM-style" model worth its extra counts."""
+def test_ngram_distributed_matches_local_and_separates(spark):
+    """train_ngram_distributed is bit-identical to the local trainer at
+    both orders; each order scores junk far above clean, and the trigram
+    tier scores in-domain continuations below the bigram tier — the
+    property that makes the higher-order "KenLM-style" model worth its
+    extra counts."""
     import pandas as pd
 
     from data_quality_monitoring_spark.artifacts import training_texts
     from data_quality_monitoring_spark.operators.perplexity import (
-        train_bigram,
-        train_trigram,
-        train_trigram_distributed,
+        train_ngram,
+        train_ngram_distributed,
     )
 
     texts = training_texts("en", 30)
     docs = spark.createDataFrame(
         pd.DataFrame([(t, "en") for t in texts], columns=["text", "lang"])
     )
-    local = train_trigram(texts)
-    dist = train_trigram_distributed(docs)["en"]
-    assert dist.vocab == local.vocab
-    assert dist.tri == local.tri
-
     clean = texts[0]
     junk = "zq wv xx jkl pq mn vv kq " * 6
-    assert local.nll(junk) > local.nll(clean) + 2.0
-    bigram = train_bigram(texts)
+    local = {}
+    for order in (2, 3):
+        local[order] = train_ngram(texts, order)
+        dist = train_ngram_distributed(docs, order)["en"]
+        assert dist.vocab == local[order].vocab
+        assert dist.counts == local[order].counts
+        assert local[order].nll(junk) > local[order].nll(clean) + 2.0
     # higher order helps on in-domain text (strictly lower mean NLL)
-    assert local.nll(clean) < bigram.nll(clean)
+    assert local[3].nll(clean) < local[2].nll(clean)
 
 
 def test_lm_trainer_driver_collect_is_bounded(spark):
@@ -380,9 +409,8 @@ def test_lm_trainer_driver_collect_is_bounded(spark):
     from data_quality_monitoring_spark.operators.perplexity import (
         _build_vocabs,
         _vocab_rows,
-        train_bigram,
-        train_bigram_distributed,
-        train_trigram_distributed,
+        train_ngram,
+        train_ngram_distributed,
     )
 
     # heavy-tail: 2 langs × 1200 hapax words each + a few frequent ones
@@ -404,18 +432,19 @@ def test_lm_trainer_driver_collect_is_bounded(spark):
 
     # selection identical to the local trainer's (-count, word) cut
     en_texts = [t for t, lang in rows if lang == "en"]
-    assert _build_vocabs(vrows)["en"] == train_bigram(en_texts, max_vocab=max_vocab).vocab
+    assert _build_vocabs(vrows)["en"] == train_ngram(en_texts, 2, max_vocab=max_vocab).vocab
 
     # min_word_count floors the window input: only the 3 frequent words stay
     floored = _vocab_rows(docs, "text", "lang", max_vocab, min_word_count=2)
     assert {r["w"] for r in floored} == {"the", "of", "and"}
 
     # ngram_min_count floors the collected n-gram types
-    lm = train_bigram_distributed(docs, max_vocab=max_vocab, ngram_min_count=2)["en"]
-    assert lm.bi and all(v >= 2 for v in lm.bi.values())
-    assert lm.n_tokens == sum(lm.bi.values())  # lower orders fold from kept types
-    tl = train_trigram_distributed(docs, max_vocab=max_vocab, ngram_min_count=2)["en"]
-    assert tl.tri and all(v >= 2 for v in tl.tri.values())
+    for order in (2, 3):
+        lm = train_ngram_distributed(
+            docs, order, max_vocab=max_vocab, ngram_min_count=2
+        )["en"]
+        assert lm.counts and all(v >= 2 for v in lm.counts.values())
+        assert lm.n_tokens == sum(lm.counts.values())  # lower orders fold from kept types
 
 
 def test_lm_trainer_auto_floors(spark):
@@ -427,9 +456,8 @@ def test_lm_trainer_auto_floors(spark):
     import pandas as pd
 
     from data_quality_monitoring_spark.operators.perplexity import (
-        train_bigram,
-        train_bigram_distributed,
-        train_trigram_distributed,
+        train_ngram,
+        train_ngram_distributed,
     )
 
     # heavy-tail: every doc contributes hapax words/bigrams plus a shared
@@ -440,52 +468,54 @@ def test_lm_trainer_auto_floors(spark):
         rows.append((f"the of and {' '.join(toks)}", "en"))
     docs = spark.createDataFrame(pd.DataFrame(rows, columns=["text", "lang"]))
 
-    # below the cutoff: auto == exact == local (no flags anywhere)
-    auto_lm = train_bigram_distributed(docs, max_vocab=5000)["en"]
-    local_lm = train_bigram([t for t, _ in rows], max_vocab=5000)
-    assert auto_lm.vocab == local_lm.vocab and auto_lm.bi == local_lm.bi
+    for order in (2, 3):
+        # below the cutoff: auto == exact == local (no flags anywhere)
+        auto_lm = train_ngram_distributed(docs, order, max_vocab=5000)["en"]
+        local_lm = train_ngram([t for t, _ in rows], order, max_vocab=5000)
+        assert auto_lm.vocab == local_lm.vocab and auto_lm.counts == local_lm.counts
 
-    # above the cutoff (forced low): floors resolve to 2 with NO flags set —
-    # the collect holds only types seen ≥2 times and is strictly smaller
-    exact_types = len(auto_lm.bi)
-    pruned = train_bigram_distributed(
-        docs, max_vocab=5000, auto_floor_cutoff=10
-    )["en"]
-    assert pruned.bi and all(v >= 2 for v in pruned.bi.values())
-    assert len(pruned.bi) < exact_types
-    assert len(pruned.bi) <= sum(pruned.bi.values()) / 2  # the documented bound
-    # the vocab window input was floored too: hapax words never reach it
-    assert all(w in ("the", "of", "and", "<s>") for w in pruned.vocab)
+        # above the cutoff (forced low): floors resolve to 2 with NO flags
+        # set — the collect holds only types seen ≥2 times and is strictly
+        # smaller
+        exact_types = len(auto_lm.counts)
+        pruned = train_ngram_distributed(
+            docs, order, max_vocab=5000, auto_floor_cutoff=10
+        )["en"]
+        assert pruned.counts and all(v >= 2 for v in pruned.counts.values())
+        assert len(pruned.counts) < exact_types
+        # the documented bound
+        assert len(pruned.counts) <= sum(pruned.counts.values()) / 2
+        # the vocab window input was floored too: hapax words never reach it
+        assert all(w in ("the", "of", "and", "<s>") for w in pruned.vocab)
 
-    # an explicit floor always wins over auto, in both directions
-    explicit = train_bigram_distributed(
-        docs, max_vocab=5000, auto_floor_cutoff=10,
-        min_word_count=1, ngram_min_count=1,
-    )["en"]
-    assert explicit.bi == local_lm.bi
-
-    tri = train_trigram_distributed(docs, max_vocab=5000, auto_floor_cutoff=10)["en"]
-    assert tri.tri and all(v >= 2 for v in tri.tri.values())
+        # an explicit floor always wins over auto, in both directions
+        explicit = train_ngram_distributed(
+            docs, order, max_vocab=5000, auto_floor_cutoff=10,
+            min_word_count=1, ngram_min_count=1,
+        )["en"]
+        assert explicit.counts == local_lm.counts
 
 
-def test_trigram_npz_roundtrip(tmp_path):
-    """save_trigram_npz / load_trigram_npz: the broadcast-from-storage path
-    reproduces scores exactly."""
+def test_ngram_npz_roundtrip(tmp_path):
+    """save_ngram_npz / load_ngram_npz: the broadcast-from-storage path
+    reproduces the model and its scores exactly, at both orders."""
     from data_quality_monitoring_spark.artifacts import training_texts
     from data_quality_monitoring_spark.operators.perplexity import (
-        load_trigram_npz,
-        save_trigram_npz,
-        train_trigram,
+        load_ngram_npz,
+        save_ngram_npz,
+        train_ngram,
     )
 
     texts = training_texts("en", 20)
-    lm = train_trigram(texts)
-    p = str(tmp_path / "tri_en.npz")
-    save_trigram_npz(lm, p)
-    back = load_trigram_npz(p)
-    assert back.vocab == lm.vocab and back.tri == lm.tri
-    for probe in (texts[0], "zq wv xx unseen " * 4):
-        assert back.nll(probe) == lm.nll(probe)
+    for order in (2, 3):
+        lm = train_ngram(texts, order)
+        p = str(tmp_path / f"lm{order}_en.npz")
+        save_ngram_npz(lm, p)
+        back = load_ngram_npz(p)
+        assert back.vocab == lm.vocab and back.counts == lm.counts
+        assert (back.order, back.k, back.lams) == (lm.order, lm.k, lm.lams)
+        for probe in (texts[0], "zq wv xx unseen " * 4):
+            assert back.nll(probe) == lm.nll(probe)
 
 
 def test_resolve_floors_probe_flips_at_cutoff(spark):

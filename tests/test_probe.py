@@ -69,18 +69,18 @@ def test_probe_bigram_passes_healthy_fails_backwards(spark):
     """Healthy LMs separate gibberish from clean text; an LM trained ON the
     gibberish scores it as normal — separation collapses, probe fails."""
     from data_quality_monitoring_spark.operators.perplexity import (
-        train_bigram,
-        train_bigram_distributed,
+        train_ngram,
+        train_ngram_distributed,
     )
 
     docs = generate_pages(spark, 600, partitions=4)
-    models = train_bigram_distributed(docs)
+    models = train_ngram_distributed(docs, order=2)
     good = probe_bigram(spark, models, docs, n=80)
     assert good["ok"], good
     assert good["score_separation"] > 0
     assert good["detection_rate"] >= 0.8
 
-    backwards = {"en": train_bigram(OBVIOUS_ANOMALIES * 10)}
+    backwards = {"en": train_ngram(OBVIOUS_ANOMALIES * 10, 2)}
     bad = probe_bigram(spark, backwards, docs, n=80)
     assert not bad["ok"], bad
 
