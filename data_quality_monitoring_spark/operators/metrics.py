@@ -96,6 +96,22 @@ def threshold_sweep(
     )
 
 
+def histogram_bin(col: Column, lo: float, hi: float, n_buckets: int) -> Column:
+    """A value's fixed-width bin, width_bucket semantics: values < lo → 0,
+    ≥ hi → n_buckets+1, NULL → NULL."""
+    width = (hi - lo) / n_buckets
+    return (
+        F.when(col < lo, 0)
+        .when(col >= hi, n_buckets + 1)
+        .otherwise(F.floor((col - lo) / width) + 1)
+    ).cast("int")
+
+
+def histogram_lo(bin_col: Column, lo: float, hi: float, n_buckets: int) -> Column:
+    """The lower edge of a :func:`histogram_bin` bin."""
+    return F.round(F.lit(lo) + (bin_col - 1) * ((hi - lo) / n_buckets), 6)
+
+
 def histogram(
     df: DataFrame,
     col: str,
@@ -106,22 +122,25 @@ def histogram(
     bucket_col: str = "bucket",
 ) -> DataFrame:
     """Fixed-width histogram (perplexity/score distributions for the
-    filter-metrics tables).  width_bucket semantics: values < lo → bucket 0,
-    ≥ hi → n_buckets+1.  ``group_cols`` prepends grouping keys (e.g. the
-    sink's commit bucket) for per-partition metrics tables.  Rows come in
-    no particular order."""
-    width = (hi - lo) / n_buckets
-    b = (
-        F.when(F.col(col) < lo, 0)
-        .when(F.col(col) >= hi, n_buckets + 1)
-        .otherwise(F.floor((F.col(col) - lo) / width) + 1)
-    )
+    filter-metrics tables), binned by :func:`histogram_bin`.  ``group_cols``
+    prepends grouping keys (e.g. the sink's commit bucket) for
+    per-partition metrics tables.  Rows come in no particular order."""
     return (
         df.filter(F.col(col).isNotNull())
-        .groupBy(*group_cols, b.cast("int").alias(bucket_col))
+        .groupBy(*group_cols, histogram_bin(F.col(col), lo, hi, n_buckets).alias(bucket_col))
         .agg(F.count("*").alias("n"))
-        .withColumn("lo", F.round(F.lit(lo) + (F.col(bucket_col) - 1) * width, 6))
+        .withColumn("lo", histogram_lo(F.col(bucket_col), lo, hi, n_buckets))
     )
+
+
+def rule_keys(verdict_col: str = "verdict") -> dict[str, Column]:
+    """The (method, code) a verdict is counted under; a kept doc counts as
+    ``pass``/``PASS``."""
+    v = F.col(verdict_col)
+    return {
+        "method": F.coalesce(v["method"], F.lit("pass")),
+        "code": F.coalesce(v["code"], F.lit("PASS")),
+    }
 
 
 def rule_fire_counts(
@@ -132,15 +151,8 @@ def rule_fire_counts(
     """Per-rule fire counts from a pipeline result (filter-metrics table).
     ``group_cols`` prepends keys (e.g. the sink's commit bucket) for
     per-partition metrics."""
-    v = F.col(verdict_col)
-    return (
-        result.groupBy(
-            *group_cols,
-            F.coalesce(v["method"], F.lit("pass")).alias("method"),
-            F.coalesce(v["code"], F.lit("PASS")).alias("code"),
-        )
-        .agg(F.count("*").alias("n"))
-    )
+    keys = [c.alias(name) for name, c in rule_keys(verdict_col).items()]
+    return result.groupBy(*group_cols, *keys).agg(F.count("*").alias("n"))
 
 
 def weights_from_performance(per_method_f1: dict[str, float], baseline: float = 0.1) -> dict[str, float]:

@@ -27,6 +27,8 @@ from ..operators.patterns import pattern_finding
 from ..operators.rules import first_hit
 from ..operators.scrub import scrub_column
 from ..operators.verdict import priority_verdict, weighted_verdict
+from ..sources.manifest import SideTable
+
 
 def default_rules() -> list[dict]:
     # zip-safe: the package may live inside a --py-files zip (resources.py)
@@ -267,31 +269,30 @@ def salted_group_count(df: DataFrame, key: Column, n_salt: int = 16) -> DataFram
     return salted.groupBy("k").agg(F.sum("count").alias("n")).withColumnRenamed("k", "key")
 
 
-def filter_metrics(written: DataFrame) -> dict[str, DataFrame]:
-    """The filter job's ``_metrics`` tables, from the sink's written slice
-    (``PartitionedSink.run(..., metrics_fn=filter_metrics)``): per-rule
-    fire counts, the distribution of ``lang`` with kept counts, and a
-    0-15 perplexity histogram in 30 bins (skipped when ``methods`` prunes
-    the llm family).
+def filter_metrics(written: DataFrame) -> dict[str, SideTable]:
+    """The filter job's ``_metrics`` tables, declared as grouping sets of
+    the sink's chunk aggregate (``PartitionedSink.run(...,
+    metrics_fn=filter_metrics)``): per-rule fire counts, the distribution
+    of ``lang`` with kept counts, and a 0-15 perplexity histogram in 30
+    bins over the scored docs (skipped when ``methods`` prunes the llm
+    family).
 
     Every table is keyed by the sink's commit ``bucket``, so each chunk's
-    rows commit with its snapshot and a resumed run appends exactly the
-    missing buckets' rows.  Each is a small map-side-combined aggregate
-    over columns the filter already computed."""
-    from ..operators.metrics import histogram, rule_fire_counts
+    rows commit with its snapshot and a resumed run writes exactly the
+    missing buckets' rows."""
+    from ..operators.metrics import histogram_bin, histogram_lo, rule_keys
 
+    bucket = {"bucket": F.col("bucket")}
     tables = {
-        "rule_fire_counts": rule_fire_counts(written, group_cols=("bucket",)),
-        "lang_distribution": written.groupBy("bucket", "lang").agg(
-            F.count("*").alias("n"),
-            F.sum(F.col("keep").cast("long")).alias("n_kept"),
-        ),
+        "rule_fire_counts": SideTable({**bucket, **rule_keys()}),
+        "lang_distribution": SideTable({**bucket, "lang": F.col("lang")}, ("n", "n_kept")),
     }
     if "ppl_score" in written.columns:
-        tables["ppl_histogram"] = histogram(
-            written, "ppl_score", 0.0, 15.0, 30,
+        tables["ppl_histogram"] = SideTable(
             # "bin", so it cannot shadow the commit bucket
-            group_cols=("bucket",), bucket_col="bin",
+            {**bucket, "bin": histogram_bin(F.col("ppl_score"), 0.0, 15.0, 30)},
+            derived={"lo": histogram_lo(F.col("bin"), 0.0, 15.0, 30)},
+            skip_null="bin",
         )
     return tables
 

@@ -27,10 +27,16 @@ on plain parquet behind one interface (SURVEY.md §7.3):
   (the Iceberg protocol shape; tests/test_manifest_concurrency.py),
 * ``_lineage/`` holds one row per committed bucket: counts, kept, and an
   order-independent content checksum (``bit_xor(xxhash64(url))``) — the
-  audit trail that proves a resumed run produced exactly the same table;
-  it and the ``_metrics/`` tables are appended concurrently (one thread
-  per table, all in the caller's job group) from one cached re-read of the
-  chunk, and only then is the chunk committed.
+  audit trail that proves a resumed run produced exactly the same table,
+* ``_lineage/`` and every ``_metrics/`` table come from ONE grouping-sets
+  aggregate over a column-pruned re-read of the chunk's buckets (lineage
+  is its ``(bucket)`` set, each metrics table one more set, declared as a
+  :class:`SideTable`); the result is bounded by buckets × (keys + bins),
+  not by docs, so it is collected once and each table is written from the
+  driver as one parquet file (hidden temp name, then ``os.replace``), and
+  only then is the chunk committed,
+* ``_runs/<snapshot>.json`` is the run's summary (docs, kept and wall per
+  chunk), built from the collected lineage rows: no extra Spark job.
 
 At 100 TB the same structure holds: n_buckets scales to ~10⁵, a chunk is
 one scheduling wave, and the manifest lives in the catalog instead of JSON
@@ -42,17 +48,52 @@ from __future__ import annotations
 import json
 import os
 import time
+import uuid
 from collections.abc import Callable
-from concurrent.futures import ThreadPoolExecutor
+from functools import reduce
+from dataclasses import dataclass, field
 from pathlib import Path
 
-from pyspark import inheritable_thread_target
-from pyspark.sql import DataFrame, SparkSession, Window
+import pyarrow as pa
+import pyarrow.parquet as pq
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_type
+from pyspark.sql.types import StructType
 
 LINEAGE_SCHEMA = (
     "bucket int, n_docs long, n_kept long, checksum long, snapshot int"
 )
+
+
+@dataclass(frozen=True)
+class SideTable:
+    """One per-bucket side table: one grouping set of the sink's chunk
+    aggregate.
+
+    ``keys`` are the grouping columns in output order, each an expression
+    over the written slice; one of them must be ``bucket`` (the commit
+    unit), and a key name means the same expression in every table.
+    ``values`` name the measures that follow the keys: ``n`` (or
+    ``n_docs``) = rows, ``n_kept`` = ``sum(keep)``, ``checksum`` =
+    ``bit_xor(xxhash64(url))``.  ``derived`` columns are computed from the
+    keys after the aggregate and come last; ``skip_null`` names a key whose
+    NULL group is not a row (a histogram counts scored docs only)."""
+
+    keys: dict[str, Column]
+    values: tuple[str, ...] = ("n",)
+    derived: dict[str, Column] = field(default_factory=dict)
+    skip_null: str | None = None
+
+
+def _measures() -> dict[str, Column]:
+    n = F.count("*")
+    return {
+        "n": n,
+        "n_docs": n,
+        "n_kept": F.sum(F.col("keep").cast("long")),
+        "checksum": F.expr("bit_xor(xxhash64(url))"),
+    }
 
 
 class ConcurrentWriteError(RuntimeError):
@@ -71,6 +112,10 @@ class CommitConflictError(RuntimeError):
 
 class PartitionedSink:
     def __init__(self, root: str, n_buckets: int = 32, chunk_buckets: int = 8):
+        if n_buckets < 1 or chunk_buckets < 1:
+            raise ValueError(
+                f"n_buckets ({n_buckets}) and chunk_buckets ({chunk_buckets}) must be >= 1"
+            )
         self.root = Path(root)
         self.n_buckets = n_buckets
         self.chunk_buckets = chunk_buckets
@@ -78,6 +123,7 @@ class PartitionedSink:
         self.manifest_dir = self.root / "_manifest"
         self.lineage_dir = self.root / "_lineage"
         self.metrics_dir = self.root / "_metrics"
+        self.runs_dir = self.root / "_runs"
         for d in (self.data_dir, self.manifest_dir, self.lineage_dir):
             d.mkdir(parents=True, exist_ok=True)
 
@@ -95,12 +141,25 @@ class PartitionedSink:
         ]
         return max(snaps, default=-1)
 
-    def committed_buckets(self) -> set[int]:
-        snap = self._current_snapshot()
+    def _manifest(self, snap: int) -> dict:
+        """Snapshot ``snap``'s content ({} before the first commit)."""
         if snap < 0:
-            return set()
-        manifest = json.loads((self.manifest_dir / f"snapshot-{snap}.json").read_text())
-        return set(manifest["buckets"])
+            return {}
+        return json.loads((self.manifest_dir / f"snapshot-{snap}.json").read_text())
+
+    def committed_buckets(self) -> set[int]:
+        return set(self._manifest(self._current_snapshot()).get("buckets", []))
+
+    def _check_bucketing(self, manifest: dict) -> None:
+        """A table's bucketing is fixed by its first commit: resuming it with
+        another ``n_buckets`` would commit a mix of two bucketings.
+        Snapshots written before ``n_buckets`` was recorded are accepted."""
+        recorded = manifest.get("n_buckets", self.n_buckets)
+        if recorded != self.n_buckets:
+            raise ValueError(
+                f"{self.root} is bucketed with n_buckets={recorded}; "
+                f"this sink has n_buckets={self.n_buckets}"
+            )
 
     def _commit(self, new_buckets: list[int], max_retries: int = 5) -> int:
         """Optimistic-concurrency commit (the Iceberg protocol shape):
@@ -114,7 +173,9 @@ class PartitionedSink:
         may be superseded and only a resume may re-commit them."""
         for _ in range(max_retries):
             snap = self._current_snapshot()
-            base = self.committed_buckets()
+            manifest = self._manifest(snap)
+            self._check_bucketing(manifest)
+            base = set(manifest.get("buckets", []))
             clash = base & set(new_buckets)
             if clash:
                 raise CommitConflictError(
@@ -126,6 +187,7 @@ class PartitionedSink:
             tmp.write_text(
                 json.dumps({
                     "snapshot": nxt,
+                    "n_buckets": self.n_buckets,
                     "buckets": sorted(base | set(new_buckets)),
                     "committed_at_chunk": new_buckets,
                 })
@@ -221,13 +283,14 @@ class PartitionedSink:
         pages: DataFrame,
         transform: Callable[[DataFrame], DataFrame],
         fail_after_chunks: int | None = None,
-        metrics_fn: Callable[[DataFrame], dict[str, DataFrame]] | None = None,
+        metrics_fn: Callable[[DataFrame], dict[str, SideTable]] | None = None,
     ) -> dict:
         """Process all uncommitted buckets, chunk_buckets at a time.
 
         ``transform`` maps a pages slice → result slice (must keep ``url``
         and a boolean ``keep``).  ``fail_after_chunks`` injects a crash for
-        the resume test.  Returns a small run summary.
+        the resume test.  A table committed with another ``n_buckets``
+        raises ``ValueError`` before anything is written.
 
         Each chunk is ``transform``-ed, rebalanced on ``bucket`` (one shuffle
         of about the chunk's output bytes) and written with dynamic
@@ -235,17 +298,23 @@ class PartitionedSink:
         only where AQE splits a skewed bucket.
 
         ``metrics_fn`` maps the chunk's *written* slice (re-read from the
-        data dir, so it costs one pruned scan, not a pipeline re-run) to
-        named filter-metrics tables (the filter job passes
-        ``plans.pipeline.filter_metrics``); each MUST carry the ``bucket``
-        column, checked for every table before anything is appended.  They are
-        appended under ``_metrics/<name>/`` stamped with the snapshot id
-        before the commit — exactly the lineage protocol, so a crashed
-        chunk's orphan metrics rows are superseded on resume and
-        :meth:`metrics` reads each bucket's latest rows only.  The lineage
-        and metrics appends run concurrently over the cached slice, each in
-        the caller's job group and tags; the chunk commits only after all
-        of them succeed.
+        data dir) to named :class:`SideTable` declarations (the filter job
+        passes ``plans.pipeline.filter_metrics``); each MUST be keyed by
+        ``bucket``, checked for every table before any side table is
+        computed.  Lineage and every metrics table are grouping sets of one
+        aggregate over a column-pruned scan of the written buckets, collected
+        once and written from the driver under ``_lineage/`` and
+        ``_metrics/<name>/``, stamped with the snapshot id, before the
+        commit — exactly the lineage protocol, so a crashed chunk's orphan
+        rows are superseded on resume and :meth:`metrics` reads each
+        bucket's latest rows only.  A chunk's jobs carry the job tag
+        ``dqm-sink-snap<K>-chunk<k>`` (snapshot K, the run's k-th chunk)
+        besides the caller's job group, description and tags.
+
+        Returns the run summary: ``docs``, ``kept`` and, per chunk,
+        ``{buckets, docs, kept, wall_sec}``, all from the lineage rows.  A
+        run that commits a chunk also writes it to ``_runs/<snapshot>.json``
+        (``<snapshot>`` = the last committed one), also when it fails later.
         """
         self._acquire_lock()
         try:
@@ -258,9 +327,11 @@ class PartitionedSink:
         pages: DataFrame,
         transform: Callable[[DataFrame], DataFrame],
         fail_after_chunks: int | None = None,
-        metrics_fn: Callable[[DataFrame], dict[str, DataFrame]] | None = None,
+        metrics_fn: Callable[[DataFrame], dict[str, SideTable]] | None = None,
     ) -> dict:
         spark = pages.sparkSession
+        sc = spark.sparkContext
+        self._check_bucketing(self._manifest(self._current_snapshot()))
         bucketed = pages.withColumn(
             "bucket", F.pmod(F.xxhash64("url"), F.lit(self.n_buckets)).cast("int")
         )
@@ -270,82 +341,97 @@ class PartitionedSink:
             todo[i : i + self.chunk_buckets] for i in range(0, len(todo), self.chunk_buckets)
         ]
         t0 = time.time()
-        n_chunks_done = 0
-        for chunk in chunks:
-            slice_df = bucketed.filter(F.col("bucket").isin(chunk))
-            # one write task per bucket (AQE splits a skewed one): one file
-            # per bucket, not one per (input task, bucket).  Idempotent
-            # write: dynamic overwrite touches only this chunk's buckets —
-            # set per-write, NOT session-wide, so unrelated
-            # overwrite+partitionBy writes elsewhere keep static semantics
-            (
-                transform(slice_df).hint("rebalance", "bucket")
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("bucket")
-                .parquet(str(self.data_dir))
-            )
-            # ONE scan of the chunk's written buckets feeds lineage and
-            # every metrics table (persist → N tiny aggregation jobs, run side
-            # by side over the cached slice, not N+1 rescans per chunk)
-            written = (
-                spark.read.parquet(str(self.data_dir))
-                .filter(F.col("bucket").isin(chunk))
-                .persist()
-            )
-            snap_col = F.lit(self._current_snapshot() + 1)
-            lineage = (
-                written.groupBy("bucket")
-                .agg(
-                    F.count("*").alias("n_docs"),
-                    F.sum(F.col("keep").cast("long")).alias("n_kept"),
-                    F.expr("bit_xor(xxhash64(url))").alias("checksum"),
-                )
-                .withColumn("snapshot", snap_col)
-            )
-            try:
-                tables = metrics_fn(written) if metrics_fn is not None else {}
-                # every table is checked before the first append: a bad one
-                # must not leave orphan rows behind
-                for name, mdf in tables.items():
-                    if "bucket" not in mdf.columns:
-                        raise ValueError(
-                            f"metrics table {name!r} must be keyed by 'bucket'"
-                        )
-                self._append_all(spark, [(lineage, self.lineage_dir)] + [
-                    (mdf.withColumn("snapshot", snap_col), self.metrics_dir / name)
-                    for name, mdf in tables.items()
-                ])
-            finally:
-                written.unpersist()
-            self._commit(chunk)
-            n_chunks_done += 1
-            if fail_after_chunks is not None and n_chunks_done >= fail_after_chunks:
-                raise RuntimeError(f"injected failure after {n_chunks_done} chunks")
-        return {
-            "snapshot": self._current_snapshot(),
-            "chunks_run": n_chunks_done,
-            "chunks_skipped_committed": (self.n_buckets - len(todo)) // self.chunk_buckets,
-            "wall_sec": round(time.time() - t0, 3),
-        }
+        report = []
+        try:
+            for k, chunk in enumerate(chunks):
+                t_chunk = time.time()
+                snap = self._current_snapshot() + 1
+                tag = f"dqm-sink-snap{snap}-chunk{k}"
+                sc.addJobTag(tag)
+                try:
+                    lineage = self._write_chunk(
+                        bucketed.filter(F.col("bucket").isin(chunk)), chunk, snap,
+                        transform, metrics_fn,
+                    )
+                finally:
+                    sc.removeJobTag(tag)
+                self._commit(chunk)
+                report.append({
+                    "buckets": chunk,
+                    "docs": sum(lineage["n_docs"].to_pylist()),
+                    "kept": sum(n or 0 for n in lineage["n_kept"].to_pylist()),
+                    "wall_sec": round(time.time() - t_chunk, 3),
+                })
+                if fail_after_chunks is not None and len(report) >= fail_after_chunks:
+                    raise RuntimeError(f"injected failure after {len(report)} chunks")
+        finally:
+            summary = {
+                "snapshot": self._current_snapshot(),
+                "chunks_run": len(report),
+                "buckets_skipped_committed": self.n_buckets - len(todo),
+                "docs": sum(c["docs"] for c in report),
+                "kept": sum(c["kept"] for c in report),
+                "chunks": report,
+                "wall_sec": round(time.time() - t0, 3),
+            }
+            # also after a failed chunk; a run that committed nothing must
+            # not replace the report of the run that made its snapshot
+            if report:
+                self.runs_dir.mkdir(exist_ok=True)
+                tmp = self.runs_dir / f".{summary['snapshot']}.json.tmp"
+                tmp.write_text(json.dumps(summary))
+                os.replace(tmp, self.runs_dir / f"{summary['snapshot']}.json")
+        return summary
 
-    @staticmethod
-    def _append_all(spark: SparkSession, appends: list[tuple[DataFrame, Path]]) -> None:
-        """Append each frame to its path, all at once: the jobs are small
-        aggregates, so running them side by side fills the cores one alone
-        leaves idle.  Each target is wrapped separately so its thread gets
-        its own copy of the caller's job group, description and tags."""
+    def _write_chunk(
+        self,
+        slice_df: DataFrame,
+        chunk: list[int],
+        snap: int,
+        transform: Callable[[DataFrame], DataFrame],
+        metrics_fn: Callable[[DataFrame], dict[str, SideTable]] | None,
+    ) -> pa.Table:
+        """Write one chunk's data and side tables (not yet committed);
+        returns its lineage rows."""
+        # one write task per bucket (AQE splits a skewed one): one file per
+        # bucket, not one per (input task, bucket).  Idempotent write:
+        # dynamic overwrite touches only this chunk's buckets — set
+        # per-write, NOT session-wide, so unrelated overwrite+partitionBy
+        # writes elsewhere keep static semantics
+        out = transform(slice_df)
+        (
+            out.hint("rebalance", "bucket")
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("bucket")
+            .parquet(str(self.data_dir))
+        )
+        written = self._read_buckets(slice_df.sparkSession, chunk, out.schema)
+        metrics = metrics_fn(written) if metrics_fn is not None else {}
+        tables = _aggregate(written, snap, {
+            self.lineage_dir: SideTable(
+                {"bucket": F.col("bucket")}, ("n_docs", "n_kept", "checksum")
+            ),
+            **{self.metrics_dir / name: t for name, t in metrics.items()},
+        })
+        for path, table in tables.items():
+            _write_side_table(table, path, snap)
+        return tables[self.lineage_dir]
 
-        def append(df: DataFrame, path: Path) -> None:
-            df.write.mode("append").parquet(str(path))
-
-        with ThreadPoolExecutor(max_workers=len(appends)) as pool:
-            futures = [
-                pool.submit(inheritable_thread_target(spark)(append), df, path)
-                for df, path in appends
-            ]
-            for f in futures:
-                f.result()
+    def _read_buckets(
+        self, spark: SparkSession, buckets: list[int], schema: StructType
+    ) -> DataFrame:
+        """The data table's rows in ``buckets``, read from their own
+        directories with the schema they were written with: no listing of
+        the table's other directories and no footer-reading job.  Spark
+        lists more than ``parallelPartitionDiscovery.threshold`` paths with
+        a Spark job, so the directories are read in groups of at most that
+        many."""
+        step = int(spark.conf.get("spark.sql.sources.parallelPartitionDiscovery.threshold"))
+        dirs = [str(d) for b in buckets if (d := self.data_dir / f"bucket={b}").exists()]
+        reader = spark.read.schema(schema).option("basePath", str(self.data_dir))
+        parts = [reader.parquet(*dirs[i : i + step]) for i in range(0, len(dirs), step)]
+        return reduce(DataFrame.unionByName, parts) if parts else spark.createDataFrame([], schema)
 
     # ---------------- readers
 
@@ -381,3 +467,64 @@ class PartitionedSink:
             .drop("_mx")
             .dropDuplicates()
         )
+
+
+def _aggregate(
+    written: DataFrame, snapshot: int, tables: dict[Path, SideTable]
+) -> dict[Path, pa.Table]:
+    """Every side table of one chunk from ONE grouping-sets aggregate: one
+    scan of the key and measure columns (no text column), one shuffle and
+    one collect, whose size is bounded by buckets × (1 + the keys' distinct
+    values), not by docs.  The driver splits the result by
+    ``grouping_id()`` into one arrow table per path, with the column order
+    and Spark types of the table's declaration plus ``snapshot``."""
+    cols: dict[str, Column] = {}
+    for path, t in tables.items():
+        if "bucket" not in t.keys:
+            raise ValueError(f"metrics table {path.name!r} must be keyed by 'bucket'")
+        for name, c in t.keys.items():
+            if str(cols.setdefault(name, c)) != str(c):
+                raise ValueError(f"key {name!r} is declared with two expressions")
+    names = list(cols)
+    # grouping_id(): bit i (from the left) set when names[i] is not grouped
+    gid = {
+        path: sum(1 << (len(names) - 1 - i) for i, n in enumerate(names) if n not in t.keys)
+        for path, t in tables.items()
+    }
+    sets = {frozenset(t.keys): list(t.keys) for t in tables.values()}
+    measures = _measures()
+    values = list(dict.fromkeys(v for t in tables.values() for v in t.values))
+    derived = {(path, n): c for path, t in tables.items() for n, c in t.derived.items()}
+    alias = {key: f"_d{i}" for i, key in enumerate(derived)}
+    agg = (
+        written.select(*[c.alias(n) for n, c in cols.items()], "url", "keep")
+        .groupingSets(list(sets.values()), *names)
+        .agg(F.grouping_id().alias("_gid"), *[measures[v].alias(v) for v in values])
+    )
+    agg = agg.select("*", *[c.alias(alias[key]) for key, c in derived.items()])
+    types = {f.name: to_arrow_type(f.dataType) for f in agg.schema}
+    rows = [r.asDict() for r in agg.collect()]
+    out = {}
+    for path, t in tables.items():
+        mine = [
+            r for r in rows
+            if r["_gid"] == gid[path] and (t.skip_null is None or r[t.skip_null] is not None)
+        ]
+        src = [*t.keys, *t.values, *(alias[(path, n)] for n in t.derived)]
+        arrays = [pa.array([r[c] for r in mine], types[c]) for c in src]
+        arrays.append(pa.array([snapshot] * len(mine), pa.int32()))
+        out[path] = pa.Table.from_arrays(
+            arrays, names=[*t.keys, *t.values, *t.derived, "snapshot"]
+        )
+    return out
+
+
+def _write_side_table(table: pa.Table, path: Path, snapshot: int) -> None:
+    """One parquet file per table per chunk, born complete: written under a
+    hidden temp name (Spark lists no ``.`` or ``_`` file) and renamed into
+    place."""
+    path.mkdir(parents=True, exist_ok=True)
+    name = f"part-{snapshot:05d}-{uuid.uuid4().hex}.parquet"
+    tmp = path / f".{name}.tmp"
+    pq.write_table(table, tmp)
+    os.replace(tmp, path / name)

@@ -76,22 +76,29 @@ def test_threshold_sweep_excludes_null_scores(spark):
     assert out["tp"] == 1 and out["tn"] == 1
 
 
-def test_filter_metrics_tables(spark):
-    """The filter job's shipped ``_metrics`` tables: names, keys, the
-    ``lang`` distribution with kept counts and the 0-15 / 30-bin
-    perplexity histogram, each equal to a pandas recount of the result."""
+def test_filter_metrics_tables(spark, tmp_path):
+    """The filter job's shipped ``_metrics`` tables, as the sink writes
+    them: names, keys, the ``lang`` distribution with kept counts and the
+    0-15 / 30-bin perplexity histogram, each equal to a pandas recount of
+    the committed result."""
     import numpy as np
-    from pyspark.sql import functions as F
 
     from data_quality_monitoring_spark.datagen import generate_pages
     from data_quality_monitoring_spark.plans.pipeline import filter_metrics, filter_stage
+    from data_quality_monitoring_spark.sources.manifest import PartitionedSink
 
-    pages = generate_pages(spark, 200, partitions=4).withColumn(
-        "bucket", F.pmod(F.xxhash64("url"), F.lit(4)).cast("int")
+    sink = PartitionedSink(str(tmp_path / "s"), n_buckets=4, chunk_buckets=4)
+    sink.run(
+        generate_pages(spark, 200, partitions=4),
+        lambda slice_df: filter_stage(spark, slice_df),
+        metrics_fn=filter_metrics,
     )
-    res = filter_stage(spark, pages).persist()
-    m = filter_metrics(res)
-    assert set(m) == {"rule_fire_counts", "lang_distribution", "ppl_histogram"}
+    res = sink.result(spark)
+    assert set(filter_metrics(res)) == {"rule_fire_counts", "lang_distribution", "ppl_histogram"}
+    m = {
+        name: sink.metrics(spark, name).drop("snapshot")
+        for name in ("rule_fire_counts", "lang_distribution", "ppl_histogram")
+    }
     pdf = res.select("bucket", "lang", "keep", "ppl_score").toPandas()
     n = len(pdf)
     fires = m["rule_fire_counts"].toPandas()
@@ -121,4 +128,3 @@ def test_filter_metrics_tables(spark):
     assert got.to_dict() == want.sort_index().to_dict()
     inner = hist[hist.bin.between(1, 30)]
     assert ((inner.bin - 1) * 0.5 == inner.lo).all()  # 30 bins of width 0.5
-    res.unpersist()

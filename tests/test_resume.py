@@ -2,12 +2,14 @@
 snapshot and converge to the exact table a clean run produces, with one
 lineage row per bucket and no double counting (north-rule requirement)."""
 
+import json
+
 import pytest
 from pyspark.sql import functions as F
 
 from data_quality_monitoring_spark.datagen import generate_pages
 from data_quality_monitoring_spark.plans.pipeline import filter_metrics, filter_stage
-from data_quality_monitoring_spark.sources.manifest import PartitionedSink
+from data_quality_monitoring_spark.sources.manifest import PartitionedSink, SideTable
 
 N_DOCS = 640
 
@@ -44,6 +46,10 @@ def test_kill_and_resume_identical(spark, pages, tmp_path):
 
     summary = crashy.run(pages, _transform(spark))  # resume
     assert summary["chunks_run"] == 2  # only the remaining half
+    assert summary["buckets_skipped_committed"] == 8
+    assert [c["buckets"] for c in summary["chunks"]] == [[8, 9, 10, 11], [12, 13, 14, 15]]
+    run_file = crashy.runs_dir / f"{summary['snapshot']}.json"
+    assert json.loads(run_file.read_text()) == summary
 
     a, b = _table(clean, spark), _table(crashy, spark)
     assert a.equals(b)
@@ -56,6 +62,8 @@ def test_kill_and_resume_identical(spark, pages, tmp_path):
     c = lin_clean.sort_values("bucket").reset_index(drop=True)
     assert (m["checksum"].values == c["checksum"].values).all()
     assert (m["n_kept"].values == c["n_kept"].values).all()
+    resumed = m[m.bucket >= 8]
+    assert summary["docs"] == resumed.n_docs.sum() and summary["kept"] == resumed.n_kept.sum()
 
 
 def test_rerun_is_noop(spark, pages, tmp_path):
@@ -124,31 +132,50 @@ def _sorted(df, keys):
     return pdf[sorted(pdf.columns)].sort_values(keys).reset_index(drop=True)
 
 
+# each side table's schema as Spark reads it back, as written by the sink
+# before it wrote the side tables from the driver
+SIDE_TABLE_SCHEMAS = {
+    "_lineage": "struct<bucket:int,n_docs:bigint,n_kept:bigint,checksum:bigint,snapshot:int>",
+    "_metrics/lang_distribution":
+        "struct<bucket:int,lang:string,n:bigint,n_kept:bigint,snapshot:int>",
+    "_metrics/ppl_histogram": "struct<bucket:int,bin:int,n:bigint,lo:double,snapshot:int>",
+    "_metrics/rule_fire_counts":
+        "struct<bucket:int,method:string,code:string,n:bigint,snapshot:int>",
+}
+
+
 @pytest.fixture(scope="module")
 def grouped_run(spark, tmp_path_factory):
     """One sink run with metrics under its own job group, bracketed by a
     marker job before and after, so the run's job ids are exactly the ids
-    between the two markers."""
+    between the two markers.  The transform records the job tags set while
+    each chunk runs."""
     sc = spark.sparkContext
     pages = generate_pages(spark, N_DOCS, partitions=8)
     sink = PartitionedSink(str(tmp_path_factory.mktemp("grouped")), n_buckets=16, chunk_buckets=4)
-    groups = {}
+    groups, tags = {}, []
+
+    def transform(slice_df):
+        tags.append(set(sc.getJobTags()))
+        return _transform(spark)(slice_df)
+
     try:
         for group in ("before", "sink", "after"):
             sc.setJobGroup(f"test_resume.{group}", group)
             if group == "sink":
-                sink.run(pages, _transform(spark), metrics_fn=filter_metrics)
+                sink.run(pages, transform, metrics_fn=filter_metrics)
+                tags.append(set(sc.getJobTags()))
             else:
                 spark.range(1).count()
             groups[group] = set(sc.statusTracker().getJobIdsForGroup(f"test_resume.{group}"))
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
-    return pages, sink, groups
+    return pages, sink, groups, tags
 
 
 def test_sink_writes_one_file_per_bucket(grouped_run):
-    _, sink, _ = grouped_run
+    _, sink, _, _ = grouped_run
     for b in range(16):
         files = list((sink.data_dir / f"bucket={b}").glob("*.parquet"))
         assert len(files) == 1, (b, files)
@@ -156,8 +183,10 @@ def test_sink_writes_one_file_per_bucket(grouped_run):
 
 def test_sink_side_tables_equal_direct_aggregates(spark, grouped_run):
     """``_lineage`` and every ``_metrics`` table equal the same aggregates
-    computed in one pass over ``transform(pages)``."""
-    pages, sink, _ = grouped_run
+    computed in one pass over ``transform(pages)`` with plain ``groupBy``s."""
+    from data_quality_monitoring_spark.operators.metrics import histogram, rule_fire_counts
+
+    pages, sink, _, _ = grouped_run
     direct = _transform(spark)(
         pages.withColumn("bucket", F.pmod(F.xxhash64("url"), F.lit(16)).cast("int"))
     ).persist()
@@ -169,19 +198,51 @@ def test_sink_side_tables_equal_direct_aggregates(spark, grouped_run):
     assert _sorted(sink.lineage(spark).drop("snapshot"), ["bucket"]).equals(
         _sorted(lineage, ["bucket"])
     )
-    for name, mdf in filter_metrics(direct).items():
+    tables = {
+        "rule_fire_counts": rule_fire_counts(direct, group_cols=("bucket",)),
+        "lang_distribution": direct.groupBy("bucket", "lang").agg(
+            F.count("*").alias("n"),
+            F.sum(F.col("keep").cast("long")).alias("n_kept"),
+        ),
+        "ppl_histogram": histogram(
+            direct, "ppl_score", 0.0, 15.0, 30, group_cols=("bucket",), bucket_col="bin"
+        ),
+    }
+    assert set(filter_metrics(direct)) == set(tables)
+    for name, mdf in tables.items():
         keys = [c for c in mdf.columns if c != "n"]
-        got = _sorted(sink.metrics(spark, name).drop("snapshot"), keys)
-        assert got.equals(_sorted(mdf, keys)), name
+        got = sink.metrics(spark, name).drop("snapshot")
+        assert got.columns == mdf.columns, name
+        assert _sorted(got, keys).equals(_sorted(mdf, keys)), name
     direct.unpersist()
 
 
+def test_side_table_schemas_pinned(spark, grouped_run):
+    """The driver-written side tables read back with the exact schema the
+    Spark-written ones had."""
+    _, sink, _, _ = grouped_run
+    for rel, schema in SIDE_TABLE_SCHEMAS.items():
+        assert spark.read.parquet(str(sink.root / rel)).schema.simpleString() == schema, rel
+
+
 def test_sink_jobs_stay_in_callers_job_group(grouped_run):
-    """The concurrent lineage/metrics appends run on pool threads; every
-    job of the run must still carry the caller's job group."""
-    _, _, groups = grouped_run
+    """Every job of the run carries the caller's job group."""
+    _, _, groups, _ = grouped_run
     lo, hi = max(groups["before"]), min(groups["after"])
     assert groups["sink"] and groups["sink"] == set(range(lo + 1, hi))
+
+
+def test_sink_jobs_per_chunk(grouped_run):
+    """Write, then one aggregate for every side table: at most 8 jobs per
+    chunk (a re-read plus one append job per side table took 15)."""
+    _, _, groups, _ = grouped_run
+    assert len(groups["sink"]) <= 8 * 4
+
+
+def test_sink_tags_each_chunks_jobs(grouped_run):
+    """Each chunk runs under its own job tag, removed after the chunk."""
+    _, _, _, tags = grouped_run
+    assert tags == [{f"dqm-sink-snap{k}-chunk{k}"} for k in range(4)] + [set()]
 
 
 def _plain_transform(slice_df):
@@ -206,14 +267,114 @@ def test_lineage_ignores_orphan_rows_of_uncommitted_buckets(spark, pages, tmp_pa
 
 def test_bad_metrics_table_raises_before_any_append(pages, tmp_path):
     """A metrics table without ``bucket`` fails the chunk before lineage or
-    any other metrics table is appended: no orphan rows, nothing committed."""
+    any other metrics table is written: no orphan rows, nothing committed."""
     sink = PartitionedSink(str(tmp_path / "s"), n_buckets=8, chunk_buckets=4)
     mfn = lambda w: {  # noqa: E731
-        "good": w.groupBy("bucket").count(),
-        "bad": w.groupBy("keep").count(),
+        "good": SideTable({"bucket": F.col("bucket")}),
+        "bad": SideTable({"keep": F.col("keep")}),
     }
     with pytest.raises(ValueError, match="'bad' must be keyed by 'bucket'"):
         sink.run(pages, _plain_transform, metrics_fn=mfn)
     assert sink.committed_buckets() == set()
     assert not list(sink.lineage_dir.rglob("*.parquet"))
     assert not list(sink.metrics_dir.rglob("*.parquet"))
+
+
+def test_resume_over_spark_written_side_tables(spark, pages, tmp_path):
+    """Side-table files written by Spark appends (the sink's format before
+    it wrote them from the driver) and driver-written files read back
+    together: a run crashed with Spark-written rows present, both committed
+    and orphaned, resumes to the side tables of a clean run."""
+    t = _transform(spark)
+    clean = PartitionedSink(str(tmp_path / "clean"), n_buckets=8, chunk_buckets=2)
+    clean.run(pages, t, metrics_fn=filter_metrics)
+
+    crashy = PartitionedSink(str(tmp_path / "crashy"), n_buckets=8, chunk_buckets=2)
+    with pytest.raises(RuntimeError, match="injected failure"):
+        crashy.run(pages, t, fail_after_chunks=2, metrics_fn=filter_metrics)
+    for rel in SIDE_TABLE_SCHEMAS:
+        path = crashy.root / rel
+        aside = path.with_name(path.name + ".aside")
+        path.rename(aside)
+        spark.read.parquet(str(aside)).write.parquet(str(path))  # committed rows
+        # the orphans of a crash between the third chunk's appends and its
+        # commit: that chunk's rows at the snapshot id it commits as
+        spark.read.parquet(str(clean.root / rel)).filter("snapshot = 2").write.mode(
+            "append"
+        ).parquet(str(path))
+    crashy.run(pages, t, metrics_fn=filter_metrics)  # resume
+
+    for rel in SIDE_TABLE_SCHEMAS:
+        names = [f.name for f in (crashy.root / rel).glob("*.parquet")]
+        assert any(".snappy." in n for n in names) and any(".snappy." not in n for n in names)
+    assert _sorted(crashy.lineage(spark), ["bucket"]).equals(
+        _sorted(clean.lineage(spark), ["bucket"])
+    )
+    for name, keys in [
+        ("rule_fire_counts", ["bucket", "method", "code"]),
+        ("lang_distribution", ["bucket", "lang"]),
+        ("ppl_histogram", ["bucket", "bin"]),
+    ]:
+        assert _sorted(crashy.metrics(spark, name), keys).equals(
+            _sorted(clean.metrics(spark, name), keys)
+        ), name
+
+
+def test_resume_with_other_n_buckets_raises_before_any_write(pages, tmp_path):
+    """A table's bucketing is fixed by its first commit: resuming it with
+    another ``n_buckets`` fails before writing anything.  Snapshots that do
+    not record ``n_buckets`` are accepted."""
+    sink = PartitionedSink(str(tmp_path / "s"), n_buckets=8, chunk_buckets=4)
+    with pytest.raises(RuntimeError, match="injected failure"):
+        sink.run(pages, _plain_transform, fail_after_chunks=1)
+
+    def files():
+        return sorted((p, p.stat().st_size) for p in sink.root.rglob("*") if p.is_file())
+
+    before = files()
+    other = PartitionedSink(str(sink.root), n_buckets=16, chunk_buckets=4)
+    with pytest.raises(ValueError, match="n_buckets=8"):
+        other.run(pages, _plain_transform)
+    assert files() == before
+
+    for snap in sink.manifest_dir.glob("snapshot-*.json"):
+        manifest = json.loads(snap.read_text())
+        del manifest["n_buckets"]
+        snap.write_text(json.dumps(manifest))
+    assert sink.run(pages, _plain_transform)["chunks_run"] == 1
+    assert sink.committed_buckets() == set(range(8))
+
+
+@pytest.mark.parametrize("bucketing", [{"n_buckets": 0}, {"chunk_buckets": 0}])
+def test_sink_rejects_empty_bucketing(tmp_path, bucketing):
+    with pytest.raises(ValueError, match="must be >= 1"):
+        PartitionedSink(str(tmp_path / "s"), **bucketing)
+    assert not (tmp_path / "s").exists()
+
+
+def test_run_summary_counts_committed_buckets(spark, pages, tmp_path):
+    """The summary counts the buckets an earlier run committed, also when
+    they do not align with this run's chunking, and each run's docs come
+    from its own chunks' lineage rows."""
+    first = PartitionedSink(str(tmp_path / "s"), n_buckets=8, chunk_buckets=4)
+    with pytest.raises(RuntimeError, match="injected failure"):
+        first.run(pages, _plain_transform, fail_after_chunks=1)
+    assert json.loads((first.runs_dir / "0.json").read_text())["chunks_run"] == 1
+
+    summary = PartitionedSink(str(first.root), n_buckets=8, chunk_buckets=3).run(
+        pages, _plain_transform
+    )
+    assert summary["buckets_skipped_committed"] == 4
+    assert [c["buckets"] for c in summary["chunks"]] == [[4, 5, 6], [7]]
+    lin = first.lineage(spark).toPandas()
+    assert summary["docs"] == summary["kept"] == lin[lin.bucket >= 4].n_docs.sum()
+
+
+def test_chunks_without_rows_commit(spark, pages, tmp_path):
+    """A chunk whose buckets received no rows writes no data directory; it
+    still commits, with no lineage rows."""
+    sink = PartitionedSink(str(tmp_path / "s"), n_buckets=8, chunk_buckets=1)
+    summary = sink.run(pages.orderBy("url").limit(2), _plain_transform)
+    assert sink.committed_buckets() == set(range(8))
+    assert summary["docs"] == 2 and sum(c["docs"] == 0 for c in summary["chunks"]) >= 6
+    assert sink.lineage(spark).count() == len(list(sink.data_dir.glob("bucket=*")))
