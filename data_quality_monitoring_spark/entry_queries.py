@@ -690,15 +690,16 @@ FROM lined l LEFT JOIN rebuilt r ON l.doc_id = r.doc_id
 def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup pairs → duplicate CLUSTERS: the keep-one-per-group step every
     dedup family needs before a corpus is scrubbed.  Connected components
-    over the ≥0.5-Jaccard pair graph via iterative min-label propagation
-    (operators/dedup.connected_components — O(diameter) small joins on the
-    pair list, which is orders of magnitude smaller than the corpus).
+    over the ≥0.5-Jaccard pair graph (operators/dedup.connected_components:
+    the pair list, orders of magnitude smaller than the corpus, is
+    collected once and solved on the driver by union-find; only a graph
+    above the module's edge bound runs iterative min-label propagation).
     Output: one row per clustered doc with its cluster id (= min doc_id in
     the component), cluster size, and the keep/drop canonical flag."""
     from .operators.dedup import connected_components
 
-    # fan_out=False: iterative pointer-jump joins on the (small) pair graph
-    # dominate; see q_dedup_jaccard (A/B at sf1.0: 8.5 s -> 2.6 s)
+    # fan_out=False: small self-join and pair-graph work; see q_dedup_jaccard
+    # (A/B at sf1.0, iterative components: 8.5 s -> 2.6 s)
     pairs = _jaccard_pairs(_read(spark, sf_dir, "documents", fan_out=False))
     comp = connected_components(pairs, "da", "db")
     cs = comp.groupBy("component").agg(F.count("*").alias("cluster_size"))
@@ -768,8 +769,8 @@ def q_dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     only (operators/dedup.component_keep_best)."""
     from .operators.dedup import component_keep_best, connected_components
 
-    # fan_out=False: same iterative small-graph profile as q_dedup_clusters
-    # (A/B at sf1.0: 8.2 s with fan-out, 3.5 s without)
+    # fan_out=False: same small-graph profile as q_dedup_clusters (A/B at
+    # sf1.0, iterative components: 8.2 s with fan-out, 3.5 s without)
     d = _read(spark, sf_dir, "documents", fan_out=False)
     pairs = _jaccard_pairs(d)
     comp = connected_components(pairs, "da", "db")

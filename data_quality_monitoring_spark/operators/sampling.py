@@ -21,6 +21,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..session import local_table
+
 BUCKETS = 1000
 
 
@@ -273,11 +275,11 @@ def dsir_sample(
         r["_pid"]: r["_n"]
         for r in parted.groupBy("_pid").agg(F.count("*").alias("_n")).collect()
     }  # ≤ nparts rows on the driver
-    offs, acc = [], 0
-    for pid in sorted(sizes):  # range partition ids follow the sort order
-        offs.append((pid, acc))
-        acc += sizes[pid]
-    off_df = spark.createDataFrame(offs or [(0, 0)], "_pid int, _off long")
+    pids, offs, acc = sorted(sizes) or [0], [], 0
+    for pid in pids:  # range partition ids follow the sort order
+        offs.append(acc)
+        acc += sizes.get(pid, 0)
+    off_df = local_table(spark, {"_pid": pids, "_off": offs}, "_pid int, _off long")
     w = Window.partitionBy("_pid").orderBy(F.desc("score"), F.asc(key))
     return (
         parted.join(F.broadcast(off_df), "_pid")

@@ -47,7 +47,12 @@ def build_corpus(
     """Returns (corpus_df[url, lang, text_scrubbed], stage-counts dict).
 
     Stage counts come from the cached intermediates the next stage consumes
-    (docs_in is a parquet metadata count — no data scan).
+    (docs_in is a parquet metadata count — no data scan).  Without
+    ``sample_rates``, ``final`` is ``after_exact_dedup`` minus the count of
+    near-dup losers: the url is the doc key and each loser is one
+    ``deduped`` row, so this equals the corpus row count without running
+    the anti-join that the caller's write runs anyway.  With
+    ``sample_rates`` it is the sampled corpus's count.
 
     ``min_est_jaccard`` (opt-in) inserts the minhash-agreement prefilter
     between banding and exact verify — the guard for low-entropy corpora
@@ -103,7 +108,10 @@ def build_corpus(
         corpus = uniq
     # deduped stays cached: the returned plan reads it (caller unpersists
     # via corpus.sparkSession.catalog.clearCache() or after the final write)
-    n_final = corpus.count()
+    if sample_rates is None:  # losers ⊆ deduped, one row per node
+        n_final = n_exact - losers.count()
+    else:
+        n_final = corpus.count()
     return corpus, {
         "docs_in": pages.count(),
         "kept": n_kept,

@@ -25,6 +25,7 @@ import json
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
+from ..session import local_table
 from ..sources.manifest import PartitionedSink
 from .pipeline import filter_metrics, filter_stage, quality_filter
 
@@ -436,7 +437,7 @@ def run(spark: SparkSession, args: argparse.Namespace) -> dict:
     pages = _drop_pages(spark, pages, args)
     sink = PartitionedSink(args.output, args.n_buckets, args.chunk_buckets)
 
-    tier_cuts = None
+    cuts_df = None
     if args.ppl_tiers:
         # CCNet head/middle/tail cuts, estimated ONCE from a deterministic
         # 10% md5-bucket sample (the scale path of
@@ -461,14 +462,15 @@ def run(spark: SparkSession, args: argparse.Namespace) -> dict:
             )
             .collect()
         )
+        cuts_df = local_table(
+            spark,
+            {c: [r[c] for r in tier_cuts] for c in ("_bl", "_c1", "_c2")},
+            "_bl string, _c1 double, _c2 double",
+        )
 
     def transform(slice_df):
         res = _filter_stage(spark, slice_df, args)
-        if tier_cuts is not None:
-            cuts_df = spark.createDataFrame(
-                [(r["_bl"], float(r["_c1"]), float(r["_c2"])) for r in tier_cuts],
-                "_bl string, _c1 double, _c2 double",
-            )
+        if cuts_df is not None:
             res = (
                 res.withColumn("_bl", F.coalesce(F.col("lang"), F.lit("und")))
                 .join(F.broadcast(cuts_df), "_bl", "left")

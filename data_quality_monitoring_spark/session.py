@@ -12,7 +12,9 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
 
@@ -64,3 +66,14 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def local_table(spark: SparkSession, columns: dict, schema: str | StructType) -> DataFrame:
+    """A small table built on the driver (rank offsets, tier cuts, duplicate
+    clusters) as a DataFrame over an Arrow table, which Spark reads as a
+    ``LocalRelation`` on the JVM side.  ``createDataFrame(list)`` would
+    pickle the rows into a ``PythonRDD`` instead, and every action that
+    reads the table would start Python workers to unpickle them again.
+    ``columns`` maps each field of ``schema``, in order, to its values (a
+    list or an Arrow array)."""
+    return spark.createDataFrame(pa.table(columns), schema)

@@ -8,7 +8,7 @@ from data_quality_monitoring_spark.plans.corpus import build_corpus
 from data_quality_monitoring_spark.plans.pipeline import quality_filter
 
 
-def test_build_corpus_dedups_and_counts(spark):
+def test_build_corpus_dedups_and_counts(spark, tmp_path):
     base_pdf = generate_pages_pandas(300)
     base = generate_pages(spark, 300)
     kept_urls = {
@@ -48,6 +48,8 @@ def test_build_corpus_dedups_and_counts(spark):
     assert stats["final"] <= stats["after_exact_dedup"] <= stats["kept"]
     assert stats["after_exact_dedup"] == stats["kept"] - 1  # one exact dup planted
     assert stats["final"] == stats["after_exact_dedup"] - 1  # one near dup planted
+    corpus.write.parquet(str(tmp_path / "corpus"))
+    assert stats["final"] == spark.read.parquet(str(tmp_path / "corpus")).count()
 
 
 def test_build_corpus_sampling_gate(spark):

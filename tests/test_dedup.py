@@ -20,6 +20,44 @@ def docs(spark):
     return spark.createDataFrame(DOCS, ["doc_id", "text"])
 
 
+@pytest.fixture(params=["driver", "iterative"])
+def cc_path(request, monkeypatch):
+    """``connected_components`` on the driver path, or on the iterative Spark
+    path forced by an edge bound of 0."""
+    if request.param == "iterative":
+        monkeypatch.setattr(D, "LOCAL_MAX_EDGES", 0)
+    return request.param
+
+
+def _on_path(comp, path):
+    """``comp`` after asserting which path built it: the driver path returns
+    an Arrow-backed local relation, the iterative one a checkpointed RDD."""
+    local = comp._jdf.queryExecution().analyzed().collectLeaves().apply(0).getClass()
+    assert (local.getSimpleName() == "LocalRelation") == (path == "driver")
+    return comp
+
+
+def _components(df, bound=D.LOCAL_MAX_EDGES):
+    """Sorted (node, component) rows and the schema at an edge bound of
+    ``bound``."""
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(D, "LOCAL_MAX_EDGES", bound)
+        comp = D.connected_components(df)
+        return sorted(map(tuple, comp.collect())), comp.schema
+
+
+def _python_rdd_in_lineage(df) -> bool:
+    """Whether any RDD the physical plan reads, broadcast sides included,
+    descends from a ``PythonRDD`` (rows pickled on the driver)."""
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+        plan = plan.initialPlan()
+    leaves = plan.collectLeaves()
+    return any(
+        "PythonRDD" in leaves.apply(i).execute().toDebugString() for i in range(leaves.size())
+    )
+
+
 def test_exact_dedup(spark, docs):
     kept = sorted(r["doc_id"] for r in D.exact_dedup(docs, "doc_id").collect())
     assert kept == [1, 3, 4, 5]  # 2 deduped into 1 (min key wins)
@@ -88,12 +126,15 @@ def test_simhash_pigeonhole_invariant():
         simhash_near_dup_pairs(None, "k", max_hamming=4, n_blocks=4)
 
 
-def test_connected_components(spark):
+def test_connected_components(spark, cc_path):
     """Chain 10-11-12-13-14 (diameter 4 → several propagation rounds),
     a separate pair, and a star; labels converge to min-id components."""
     pairs = [(11, 10), (11, 12), (12, 13), (13, 14), (20, 21), (30, 31), (30, 32), (30, 33)]
     df = spark.createDataFrame(pairs, ["a", "b"])
-    comp = {r["node"]: r["component"] for r in D.connected_components(df).collect()}
+    comp = {
+        r["node"]: r["component"]
+        for r in _on_path(D.connected_components(df), cc_path).collect()
+    }
     assert {n: comp[n] for n in (10, 11, 12, 13, 14)} == dict.fromkeys(range(10, 15), 10)
     assert comp[20] == comp[21] == 20
     assert {comp[n] for n in (30, 31, 32, 33)} == {30}
@@ -217,15 +258,70 @@ def test_lsh_bucket_cap_bounds_family(spark):
     assert uncapped.count() == 600 * 599 // 2 + 1
 
 
-def test_connected_components_log_convergence(spark):
+def test_connected_components_log_convergence(spark, cc_path):
     """300-node path graph (diameter 299): pointer jumping must converge in
     O(log d) rounds — max_iter=12 >= log2(299)+slack, where plain
     propagation would need 299 rounds."""
     pairs = [(i, i + 1) for i in range(299)]
     df = spark.createDataFrame(pairs, ["a", "b"])
-    comp = D.connected_components(df, max_iter=12)
+    comp = _on_path(D.connected_components(df, max_iter=12), cc_path)
     assert comp.filter(F.col("component") != 0).count() == 0
     assert comp.count() == 300
+
+
+def test_connected_components_drops_null_endpoints(spark):
+    """A pair with a NULL endpoint is dropped on both paths: NULL is not a
+    node and does not bridge b to c.  Self-loops give (v, v); duplicate and
+    reversed edges change nothing."""
+    df = spark.createDataFrame(
+        [("a", "b"), ("b", None), (None, "c"), ("c", "c"), ("b", "a"), ("a", "b"),
+         ("e", "d"), ("f", "f"), (None, None)],
+        "a string, b string",
+    )
+    want = [("a", "a"), ("b", "a"), ("c", "c"), ("d", "d"), ("e", "d"), ("f", "f")]
+    assert _components(df) == _components(df, bound=0)
+    assert _components(df)[0] == want
+
+
+def test_connected_components_long_chain_on_driver(spark):
+    """Two interleaved 50k-node chains in shuffled id order (100k nodes):
+    the driver path labels every node with its chain's min id."""
+    import numpy as np
+
+    rng = np.random.default_rng(0)
+    chains = [rng.permutation(np.arange(start, 100_000, 2)) for start in (0, 1)]
+    edges = pd.DataFrame(
+        {"a": np.concatenate([c[:-1] for c in chains]),
+         "b": np.concatenate([c[1:] for c in chains])}
+    )
+    comp = _on_path(D.connected_components(spark.createDataFrame(edges)), "driver")
+    got = comp.groupBy("component").agg(F.count("*").alias("n"), F.min("node").alias("lo"))
+    assert sorted(map(tuple, got.collect())) == [(0, 50_000, 0), (1, 50_000, 1)]
+
+
+def test_connected_components_non_ascii_keys(spark):
+    """Component ids are min keys in Spark's string order (UTF-8 bytes) on
+    both paths, with keys outside ASCII."""
+    df = spark.createDataFrame(
+        [("é", "z"), ("z", "Ä"), ("日本", "😀"), ("ß", "日本"), ("e\u0301", "é"), ("a", "Ω"),
+         ("🙂", "ｱ")],
+        "a string, b string",
+    )
+    driver = _components(df)
+    assert driver == _components(df, bound=0)
+    comp = dict(driver[0])
+    # bytes: 'e' 0x65 < 'z' 0x7a < 'Ä' 0xc3 0x84 < 'é' 0xc3 0xa9; 'ß' 0xc3 0x9f < 日 0xe6
+    assert {comp[k] for k in ("é", "z", "Ä", "e\u0301")} == {"e\u0301"}
+    assert comp["😀"] == comp["日本"] == "ß" and comp["Ω"] == "a"
+    assert comp["🙂"] == "ｱ"  # U+FF71 < U+1F642 in UTF-8 (not in UTF-16)
+
+
+def test_connected_components_empty(spark, cc_path):
+    """No pairs → no rows, with the key's type."""
+    for ddl, key_type in (("a string, b string", "string"), ("a int, b int", "int")):
+        comp = D.connected_components(spark.createDataFrame([], ddl))
+        assert comp.count() == 0
+        assert [f.dataType.simpleString() for f in comp.schema.fields] == [key_type] * 2
 
 
 def test_jaccard_df_cap_bounds_skew(spark):
@@ -603,12 +699,51 @@ def test_anchor_term_stats(spark):
     assert not any(d == "" for d, _ in got)
 
 
-def test_component_keep_best(spark):
+def test_driver_built_tables_start_no_python_workers(spark, tmp_path, monkeypatch):
+    """The three tables built on the driver on job paths (duplicate
+    clusters, ``dsir_sample``'s rank offsets, the filter CLI's
+    ``--ppl-tiers`` cuts) are Arrow-backed: no ``PythonRDD`` anywhere in
+    their plans' RDD lineage, broadcast sides included."""
+    from data_quality_monitoring_spark.datagen import generate_pages
+    from data_quality_monitoring_spark.operators.sampling import dsir_sample
+    from data_quality_monitoring_spark.plans import submit
+
+    # the check sees a pickled driver table behind a broadcast
+    pickled = spark.createDataFrame([(0, 1)], "id long, x long")
+    assert _python_rdd_in_lineage(spark.range(5).join(F.broadcast(pickled), "id"))
+
+    pairs = spark.range(50).select(F.col("id").alias("a"), (F.col("id") % 7).alias("b"))
+    assert not _python_rdd_in_lineage(D.connected_components(pairs))
+
+    docs = spark.range(200).select(
+        F.col("id").alias("doc_id"),
+        F.when(F.col("id") % 2 == 0, "science method result analysis experiment data " * 4)
+        .otherwise("zzz qqq xxx buy now click here spam offer " * 4)
+        .alias("text"),
+    )
+    top = dsir_sample(docs, docs.filter(F.col("doc_id") % 2 == 0), "doc_id", n=20)
+    assert not _python_rdd_in_lineage(top)
+
+    in_dir = str(tmp_path / "in")
+    generate_pages(spark, 80, partitions=2).write.parquet(in_dir)
+    chunks = []
+    monkeypatch.setattr(
+        submit.PartitionedSink, "run",
+        lambda self, pages, transform, metrics_fn=None: chunks.append(transform(pages)) or {},
+    )
+    submit.run(spark, submit.build_args(
+        ["--input", in_dir, "--output", str(tmp_path / "out"), "--ppl-tiers"]
+    ))
+    assert "ppl_bucket" in chunks[0].columns
+    assert not _python_rdd_in_lineage(chunks[0])
+
+
+def test_component_keep_best(spark, cc_path):
     """Quality-priority retention: the highest-score member wins its
     cluster (ties → min key), exactly one winner per cluster, and the
     default min-key canonical would have picked differently."""
     pairs = spark.createDataFrame([(1, 2), (2, 3), (7, 8)], "a long, b long")
-    comp = D.connected_components(pairs, "a", "b")
+    comp = _on_path(D.connected_components(pairs, "a", "b"), cc_path)
     docs = spark.createDataFrame(
         [(1, 0.2), (2, 0.9), (3, 0.5), (7, 0.4), (8, 0.4)], "id long, q double"
     )
@@ -623,7 +758,7 @@ def test_component_keep_best(spark):
     assert all(v == 1 for v in per_cluster.values())
 
 
-def test_build_corpus_keep_best_retains_high_quality(spark):
+def test_build_corpus_keep_best_retains_high_quality(spark, tmp_path):
     """build_corpus(keep_best=True): in a planted near-dup cluster the
     higher-quality-score member survives even when its url sorts AFTER the
     other (the default keep-min-key would drop it)."""
@@ -655,8 +790,10 @@ def test_build_corpus_keep_best_retains_high_quality(spark):
         spark.createDataFrame(pd.DataFrame([richer])[base.columns])
     )
 
-    corpus, _ = build_corpus(spark, pages, jaccard_threshold=0.7, keep_best=True)
+    corpus, stats = build_corpus(spark, pages, jaccard_threshold=0.7, keep_best=True)
     urls = {r["url"] for r in corpus.select("url").collect()}
+    corpus.write.parquet(str(tmp_path / "corpus"))
+    assert stats["final"] == spark.read.parquet(str(tmp_path / "corpus")).count()
     # sanity: the planted doc really scores higher post-scrub
     both = quality_filter(spark, pages).filter(
         F.col("url").isin([donor.url, richer["url"]])
