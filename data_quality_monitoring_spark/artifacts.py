@@ -23,16 +23,18 @@ from .operators.perplexity import NgramLM, train_ngram
 N_TRAIN_DOCS = 300
 
 
-def training_texts(lang: str, n: int = N_TRAIN_DOCS) -> list[str]:
+@lru_cache(maxsize=None)
+def training_texts(lang: str, n: int = N_TRAIN_DOCS) -> tuple[str, ...]:
     """Seeded clean training corpus per language (disjoint seed space from
-    datagen's per-doc_id seeds)."""
+    datagen's per-doc_id seeds).  Cached: the langid model and the LMs train
+    on the same texts, and generating them is most of their load time."""
     import zlib
 
     base = zlib.crc32(f"train:{lang}".encode())
-    return [
+    return tuple(
         _clean_text(np.random.default_rng((base * 100_003 + i) % (2**63)), lang)
         for i in range(n)
-    ]
+    )
 
 
 @lru_cache(maxsize=1)
