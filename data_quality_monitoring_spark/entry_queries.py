@@ -256,13 +256,10 @@ SQL_SCRUB_PII = (
 def q_profile_value_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """analyze_column value_counts top-20 (reference analyze_column.py:59-64)
     with a deterministic tiebreak."""
+    from .operators.profile import value_counts
+
     d = _read(spark, sf_dir, "documents")
-    return (
-        d.groupBy("source")
-        .agg(F.count("*").alias("n"))
-        .orderBy(F.desc("n"), F.asc("source"))
-        .limit(20)
-    )
+    return value_counts(d, "source", 20).withColumnRenamed("value", "source")
 
 
 SQL_PROFILE_VALUE_COUNTS = (
@@ -888,24 +885,11 @@ def q_similarity_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force cosine top-k ANN baseline: 10 query vectors × corpus via a
     broadcast nested-loop join (query side is tiny and explicitly
     broadcast); exact ranking with a window."""
-    from pyspark.sql import Window
-
-    from .operators.similarity import _dot, _norm
+    from .operators.similarity import brute_force_topk
 
     e = _read(spark, sf_dir, "embeddings")
-    q = e.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("qid"), F.col("embedding").alias("qv")
-    )
-    joined = e.crossJoin(F.broadcast(q)).filter(F.col("vec_id") != F.col("qid"))
-    qv, ev = F.col("qv"), F.col("embedding")
-    cos = _dot(qv, ev) / (_norm(qv) * _norm(ev))
-    w = Window.partitionBy("qid").orderBy(F.desc("cos"), F.asc("vec_id"))
-    return (
-        joined.withColumn("cos", cos)
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 5)
-        .select("qid", F.col("vec_id").alias("neighbor"), F.round("cos", 5).alias("cos_sim"), "rank")
-    )
+    top = brute_force_topk(e, e.filter(F.col("vec_id") < 10), "vec_id", "embedding", k=5)
+    return top.select("qid", "neighbor", F.round("cos", 5).alias("cos_sim"), "rank")
 
 
 SQL_SIMILARITY_TOPK = """

@@ -87,6 +87,27 @@ def minhash_signatures(
     return sh.groupBy(key).agg(*hashes)
 
 
+def lsh_bands(
+    sig: DataFrame, key: str, n_hashes: int = 8, band_size: int = 2
+) -> DataFrame:
+    """(key, band, bucket) rows, ``n_hashes // band_size`` per doc: band i's
+    bucket is ``xxhash64(i, h{i·r}, …, h{i·r+r−1})`` over its ``band_size``
+    minhashes (xxhash64 is type-agnostic: long or string signatures).  The
+    band definition of ``lsh_candidate_pairs`` and
+    ``plans.corpus.incremental_dedup``, whose stored signatures it buckets."""
+    n_bands = n_hashes // band_size
+    bands = [
+        F.xxhash64(
+            F.lit(i), *[F.col(f"h{j}") for j in range(i * band_size, (i + 1) * band_size)]
+        ).alias(f"b{i}")
+        for i in range(n_bands)
+    ]
+    stack_expr = ", ".join(f"{i}, b{i}" for i in range(n_bands))
+    return sig.select(key, *bands).select(
+        key, F.expr(f"stack({n_bands}, {stack_expr}) as (band, bucket)")
+    )
+
+
 def lsh_candidate_pairs(
     sig: DataFrame, key: str, n_hashes: int = 8, band_size: int = 2,
     max_bucket: int | None = 500,
@@ -106,23 +127,12 @@ def lsh_candidate_pairs(
     with 10% planted dups and NO upstream quality filter: 298 s uncapped →
     bounded with the cap (see BENCH.md); same verified pairs on the
     contract corpus (max bucket there ≪ cap)."""
-    n_bands = n_hashes // band_size
-    bands = []
-    for i in range(n_bands):
-        cols = [F.col(f"h{j}") for j in range(i * band_size, (i + 1) * band_size)]
-        # xxhash64 over the band's minhashes: type-agnostic (long or string
-        # signatures) and far cheaper than the md5(concat) it replaces
-        bands.append(F.xxhash64(F.lit(i), *cols).alias(f"b{i}"))
-    banded = sig.select(key, *bands)
-    stack_expr = ", ".join(f"{i}, b{i}" for i in range(n_bands))
     # materialize the (key, band, bucket) rows ONCE: the hot-bucket
     # aggregate and the self-join otherwise each re-run the full signature
     # lineage (shingle explode + n_hashes min-aggregations) — 2 full sig
     # computations on a 1M-doc corpus build.  Same narrow-row argument as
     # the simhash bucket table below: 3 small columns × n_bands rows/doc.
-    buckets = banded.select(
-        key, F.expr(f"stack({n_bands}, {stack_expr}) as (band, bucket)")
-    ).localCheckpoint(eager=True)
+    buckets = lsh_bands(sig, key, n_hashes, band_size).localCheckpoint(eager=True)
     if max_bucket is not None:
         hot = (
             buckets.groupBy("band", "bucket")
@@ -1112,9 +1122,7 @@ def incremental_substring_dedup(
     ``gram_store`` is a parquet dir of DISTINCT gram hashes (8 bytes each)
     of every batch's ORIGINAL text — stored pre-removal, so a span that
     survived batch N still kills its re-crawl in batch N+1.  Per batch the
-    store-side work is one presence semi-join on the hash (at catalog
-    scale, bucket the store on the hash exactly like
-    sources/sigstore.BucketedSigStore's bands table); batch-internal
+    store-side work is one presence semi-join on the hash; batch-internal
     repeats use the same window count as the batch operator.  The result
     is eagerly materialized BEFORE the store append (the lazy-plan-reads-
     mutated-input hazard, see incremental_dedup).

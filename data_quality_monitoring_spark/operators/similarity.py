@@ -46,7 +46,7 @@ def brute_force_topk(
         joined.withColumn("cos", cos)
         .withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
-        .select("qid", "neighbor", F.round("cos", 6).alias("cos"), "rank")
+        .select("qid", "neighbor", "cos", "rank")
     )
 
 

@@ -170,17 +170,11 @@ def incremental_dedup(
     key and join text on demand — the candidate-generation shape is the
     same in all three configurations.
 
-    ``sig_store`` is either a parquet dir path (``ParquetSigStore``) or any
-    store object from ``sources.sigstore`` — ``BucketedSigStore`` keeps each
-    join's store side bucketed on its join key so per-batch shuffle volume
-    stops growing with the store (see that module's docstring).
-
     Returns (accepted_new_docs, stats).
     """
     from pathlib import Path
 
-    from ..operators.dedup import shingle_column
-    from ..sources.sigstore import ParquetSigStore, banded_from_sig
+    from ..operators.dedup import lsh_bands, shingle_column
 
     n_in = new_docs.count()
     new_docs = exact_dedup(new_docs, key, text_col)  # within-batch keep-one
@@ -204,38 +198,28 @@ def incremental_dedup(
         {f"h{b}": F.array_min(F.transform(F.col("shingles"), _seeded(b))) for b in range(8)}
     )
 
-    store = (
-        ParquetSigStore(str(sig_store))
-        if isinstance(sig_store, (str, Path))
-        else sig_store
-    )
-    if store.exists(spark):
-        old = store.sig(spark)
-        new_sig = new_sig.join(store.hashes(spark), "content_hash", "left_anti")
-        old_b = store.bands(spark, key).withColumn("is_new", F.lit(False))
-        census = store.census(spark)
+    sig_store = str(sig_store)
+    if Path(sig_store).exists():
+        old = spark.read.parquet(sig_store)
+        new_sig = new_sig.join(old.select("content_hash"), "content_hash", "left_anti")
     else:
         old = spark.createDataFrame([], new_sig.schema)
-        old_b = banded_from_sig(old, key).withColumn("is_new", F.lit(False))
-        census = None
 
-    new_b = banded_from_sig(new_sig, key).withColumn("is_new", F.lit(True))
-    all_b = old_b.unionByName(new_b)
-    # hot-bucket cap (same guard + rationale as lsh_candidate_pairs); with a
-    # census-keeping store the count comes from the incremental partials
-    # plus this batch instead of re-counting the store's band stream
-    if census is None:
-        totals = all_b.groupBy("band", "bucket").agg(F.count("*").alias("_n"))
-    else:
-        totals = (
-            census.select("band", "bucket", F.col("n").alias("_n"))
-            .unionByName(
-                new_b.groupBy("band", "bucket").agg(F.count("*").alias("_n"))
-            )
-            .groupBy("band", "bucket")
-            .agg(F.sum("_n").alias("_n"))
+    def banded(sig: DataFrame, is_new: bool) -> DataFrame:
+        return lsh_bands(sig.filter(F.size("shingles") > 0), key).withColumn(
+            "is_new", F.lit(is_new)
         )
-    hot = totals.filter(F.col("_n") > max_bucket).select("band", "bucket")
+
+    new_b = banded(new_sig, True)
+    all_b = banded(old, False).unionByName(new_b)
+    # hot-bucket cap (same guard + rationale as lsh_candidate_pairs), counted
+    # over the live band stream of store + batch
+    hot = (
+        all_b.groupBy("band", "bucket")
+        .agg(F.count("*").alias("_n"))
+        .filter(F.col("_n") > max_bucket)
+        .select("band", "bucket")
+    )
     new_b = new_b.join(hot, ["band", "bucket"], "left_anti")
     all_b = all_b.join(hot, ["band", "bucket"], "left_anti")
 
@@ -290,5 +274,7 @@ def incremental_dedup(
     accepted = new_docs.join(accepted_sig.select(key), key, "left_semi")
     if accepted_writer is not None:  # corpus lands before the store moves
         accepted_writer(accepted)
-    store.append(spark, accepted_sig, key)
+    accepted_sig.select(key, *sig_cols, "content_hash", "shingles").write.mode(
+        "append"
+    ).parquet(sig_store)
     return accepted, {"batch_in": n_in, "accepted": n_accepted, "dropped": n_in - n_accepted}

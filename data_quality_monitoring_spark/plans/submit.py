@@ -114,13 +114,6 @@ def build_args(argv: list[str] | None = None) -> argparse.Namespace:
         "minhash signatures (created on first batch, appended per batch)",
     )
     p.add_argument(
-        "--store-layout", choices=["parquet", "bucketed"], default="parquet",
-        help="incremental mode: signature-store layout; 'bucketed' keeps "
-        "every store-side join pre-partitioned on its key "
-        "(sources/sigstore.BucketedSigStore — --sig-store is then the "
-        "catalog table prefix)",
-    )
-    p.add_argument(
         "--min-est-jaccard", type=float, default=None,
         help="corpus mode: opt-in minhash-agreement prefilter between LSH "
         "banding and exact verify (operators/dedup.signature_prefilter) — "
@@ -903,13 +896,6 @@ def run_incremental(spark: SparkSession, args: argparse.Namespace) -> dict:
     def write_corpus(accepted):
         accepted.write.mode("overwrite").parquet(f"{args.output}/corpus/batch={batch_id}")
 
-    if args.store_layout == "bucketed":
-        from ..sources.sigstore import BucketedSigStore
-
-        store = BucketedSigStore(args.sig_store)
-    else:
-        store = args.sig_store
-
     k = args.substring_k
     if k:
         # cross-batch ExactSubstr BEFORE doc-level dedup: spans already
@@ -940,7 +926,7 @@ def run_incremental(spark: SparkSession, args: argparse.Namespace) -> dict:
         kept = deconned
 
     accepted, stats = incremental_dedup(
-        spark, kept, store, accepted_writer=write_corpus
+        spark, kept, args.sig_store, accepted_writer=write_corpus
     )
     stats.update(pre_stats)
     kept.unpersist()

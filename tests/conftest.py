@@ -11,3 +11,12 @@ def spark():
         extra_conf={"spark.ui.showConsoleProgress": "false"},
     )
     yield s
+    # a catalog table outlives the run under ./spark-warehouse; every test
+    # that makes one must drop it
+    left = [
+        f"{db.name}.{t.name}"
+        for db in s.catalog.listDatabases()
+        for t in s.catalog.listTables(db.name)
+        if not t.isTemporary
+    ]
+    assert not left, f"tests left catalog tables behind: {left}"

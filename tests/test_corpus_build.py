@@ -179,72 +179,35 @@ def _sig_batch(spark, i):
         )
     # identical text in every batch: exact-dup against the store
     rows.append((f"dup{i}", "same same " + " ".join(f"x{t}" for t in range(30))))
+    # a family of 5 near-dups (Jaccard 0.95) per batch, also near-dups of
+    # every other batch's family: the only rows a hot-bucket cap can change
+    body = " ".join(f"f{t}" for t in range(40))
+    for m in range(5):
+        rows.append((f"fam{i}_{m}", f"{body} e{i}x{m}"))
     return spark.createDataFrame(rows, "url string, text_scrubbed string")
 
 
-def test_bucketed_sigstore_matches_parquet(spark, tmp_path):
-    """BucketedSigStore is a pure layout change: batch-by-batch results are
-    identical to the parquet store, including after census compaction."""
-    import uuid
-
+def test_incremental_dedup_hot_bucket_cap(spark, tmp_path):
+    """At max_bucket=3 every family bucket (5+ members) is hot, so the
+    near-dups never pair and each batch keeps its whole family; uncapped,
+    batch 0 already keeps only one family member.  Per-batch results are
+    pinned."""
     from data_quality_monitoring_spark.plans.corpus import incremental_dedup
-    from data_quality_monitoring_spark.sources.sigstore import BucketedSigStore
 
-    b_store = BucketedSigStore("sigb_" + uuid.uuid4().hex[:8])
-    p_path = str(tmp_path / "sig")
-    for i in range(3):
-        ap, sp = incremental_dedup(spark, _sig_batch(spark, i), p_path)
-        ab, sb = incremental_dedup(spark, _sig_batch(spark, i), b_store)
-        assert sp == sb
-        assert sorted(r.url for r in ap.collect()) == sorted(r.url for r in ab.collect())
-    b_store.compact_census(spark)
-    ap, sp = incremental_dedup(spark, _sig_batch(spark, 3), p_path)
-    ab, sb = incremental_dedup(spark, _sig_batch(spark, 3), b_store)
-    assert sp == sb
-    assert sorted(r.url for r in ap.collect()) == sorted(r.url for r in ab.collect())
+    def batch(i, store, max_bucket):
+        acc, st = incremental_dedup(spark, _sig_batch(spark, i), store, max_bucket=max_bucket)
+        return st, sorted(r.url for r in acc.select("url").collect())
 
+    def urls(i, extra):
+        return sorted([f"u{i}_{j}" for j in range(40)] + extra)
 
-def test_bucketed_sigstore_store_side_no_exchange(spark):
-    """The layout's point: the store side of each join arrives pre-
-    partitioned, so joining a batch against it adds no store-side shuffle."""
-    import uuid
-
-    from pyspark.sql import functions as F
-
-    from data_quality_monitoring_spark.plans.corpus import incremental_dedup
-    from data_quality_monitoring_spark.sources.bucketed import count_exchanges
-    from data_quality_monitoring_spark.sources.sigstore import BucketedSigStore
-
-    store = BucketedSigStore("sigx_" + uuid.uuid4().hex[:8])
-    incremental_dedup(spark, _sig_batch(spark, 0), store)
-    batch_hashes = spark.range(5).select(F.md5(F.col("id").cast("string")).alias("content_hash"))
-    # disable broadcast so the shuffle structure (not BHJ) is under test
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        joined = store.hashes(spark).join(batch_hashes, "content_hash")
-        n_bucketed = count_exchanges(joined)
-        assert "Bucketed: true" in joined._jdf.queryExecution().executedPlan().toString()
-        unbucketed = store.hashes(spark).localCheckpoint(eager=True)
-        n_plain = count_exchanges(unbucketed.join(batch_hashes, "content_hash"))
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-    assert (n_bucketed, n_plain) == (1, 2)  # the store-side Exchange is gone
-
-
-def test_bucketed_sigstore_census_cap_matches_live_count(spark, tmp_path):
-    """With a cap small enough to actually fire, the census-driven hot set
-    (bucketed layout) must drop exactly what the live band count (parquet
-    layout) drops — batch results stay identical."""
-    import uuid
-
-    from data_quality_monitoring_spark.plans.corpus import incremental_dedup
-    from data_quality_monitoring_spark.sources.sigstore import BucketedSigStore
-
-    b_store = BucketedSigStore("sigc_" + uuid.uuid4().hex[:8])
-    p_path = str(tmp_path / "sigcap")
-    for i in range(3):
-        ap, sp = incremental_dedup(spark, _sig_batch(spark, i), p_path, max_bucket=3)
-        ab, sb = incremental_dedup(spark, _sig_batch(spark, i), b_store, max_bucket=3)
-        assert sp == sb
-        assert sorted(r.url for r in ap.collect()) == sorted(r.url for r in ab.collect())
+    fam = [[f"fam{i}_{m}" for m in range(5)] for i in range(3)]
+    store = str(tmp_path / "sig3")
+    assert [batch(i, store, 3) for i in range(3)] == [
+        ({"batch_in": 46, "accepted": 46, "dropped": 0}, urls(0, ["dup0", *fam[0]])),
+        ({"batch_in": 46, "accepted": 45, "dropped": 1}, urls(1, fam[1])),
+        ({"batch_in": 46, "accepted": 45, "dropped": 1}, urls(2, fam[2])),
+    ]
+    assert batch(0, str(tmp_path / "sig500"), 500) == (
+        {"batch_in": 46, "accepted": 42, "dropped": 4}, urls(0, ["dup0", "fam0_0"])
+    )

@@ -291,27 +291,6 @@ def test_corpus_mode_substring_and_prefilter(spark, tmp_path):
     assert corpus.count() == stats["final"]
 
 
-def test_cli_incremental_bucketed_layout(spark, tmp_path):
-    import uuid
-
-    from data_quality_monitoring_spark.plans.submit import run_incremental
-
-    prefix = "clisig_" + uuid.uuid4().hex[:8]
-    out_dir = str(tmp_path / "inc_out")
-    for i, n in enumerate((120, 120)):
-        in_dir = str(tmp_path / f"in_b{i}")
-        generate_pages(spark, n, partitions=4).write.parquet(in_dir)
-        args = build_args(
-            ["--mode", "incremental", "--input", in_dir, "--output", out_dir,
-             "--sig-store", prefix, "--store-layout", "bucketed"]
-        )
-        stats = run_incremental(spark, args)
-        assert stats["accepted"] <= stats["batch_in"]
-    # second identical batch is a full duplicate of the first: all dropped
-    assert stats["accepted"] == 0
-    assert spark.catalog.tableExists(f"{prefix}_sig")
-
-
 def test_cli_incremental_substring(spark, tmp_path):
     """--substring-k in incremental mode: boilerplate repeated within the
     first batch AND re-crawled in the second is stripped everywhere —
