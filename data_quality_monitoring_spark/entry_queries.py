@@ -347,17 +347,17 @@ def q_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     shingles; per band, candidate pairs are counted from band-bucket sizes
     (n·(n−1)/2) — NO pairwise self-join, so the plan is groupBy-only and
     survives arbitrary scale.  md5(seed‖shingle) is the portable hash."""
-    from .operators.dedup import minhash_signatures
+    from .operators.dedup import lsh_bands, minhash_signatures
 
     d = _read(spark, sf_dir, "documents")
     sig = minhash_signatures(d, "doc_id", n_hashes=4, hash_fn="md5")
-    # unpivot the 4 band signatures so ONE pass computes all band buckets —
-    # the naive per-band loop would rescan + re-aggregate the shingles 4×
-    unpivoted = sig.select(
-        F.expr("stack(4, 0, h0, 1, h1, 2, h2, 3, h3) as (band, bucket)")
-    )
+    # one-hash bands, unpivoted so ONE pass computes all band buckets — the
+    # naive per-band loop would rescan + re-aggregate the shingles 4×.  A
+    # bucket is xxhash64(band, h_band): the same groups as the md5 values
+    # the oracle groups by, up to 2⁻⁶⁴-probability collisions
     return (
-        unpivoted.groupBy("band", "bucket")
+        lsh_bands(sig, "doc_id", n_hashes=4, band_size=1)
+        .groupBy("band", "bucket")
         .agg(F.count("*").alias("sz"))
         .groupBy("band")
         .agg(
@@ -413,7 +413,7 @@ def q_dedup_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _jaccard_pairs(d: DataFrame) -> DataFrame:
     """≥0.5-Jaccard near-dup pairs (da < db) over df-capped 3-word shingles
     — the shared front half of q_dedup_jaccard and q_dedup_clusters."""
-    from .operators.dedup import cap_shingle_df, shingle_column
+    from .operators.dedup import drop_hot_keys, shingle_column
 
     # persist the exploded shingles: df-filter, sizes and the self-join all
     # consume it, and recomputing the explode dominates this query's cost.
@@ -426,7 +426,7 @@ def _jaccard_pairs(d: DataFrame) -> DataFrame:
         .select("doc_id", F.xxhash64("_s").alias("shingle"))
         .persist()
     )
-    sh = cap_shingle_df(raw, JACCARD_DF_CAP)
+    sh = drop_hot_keys(raw, ["shingle"], JACCARD_DF_CAP)
     sizes = sh.groupBy("doc_id").agg(F.count("*").alias("sz"))
     a, b = sh.alias("a"), sh.alias("b")
     inter = (
@@ -4186,9 +4186,7 @@ def q_fuzzy_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     bench = d.filter(F.col("doc_id") < 10).select(
         F.col("doc_id").alias("bid"), "text"
     )
-    return fuzzy_decontaminate(
-        d, bench, "doc_id", "bid", k=3, n_bands=4, threshold=0.5
-    )
+    return fuzzy_decontaminate(d, bench, "doc_id", "bid", n_bands=4, threshold=0.5)
 
 
 SQL_FUZZY_DECONTAMINATION = f"""

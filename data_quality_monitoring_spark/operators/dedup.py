@@ -8,7 +8,10 @@ web-text pipeline runs between filtering and training.  Design rules:
   buckets / prefix families reduce to equi-joins on high-cardinality keys,
 * everything is deterministic (md5 / polynomial hashes, no salted
   ``hash()``),
-* verification (exact Jaccard / Hamming / cosine) runs only on candidates.
+* verification (exact Jaccard / Hamming / cosine) runs only on candidates,
+* one hot-key cap, :func:`drop_hot_keys`, bounds every capped bucket
+  self-join (minhash-LSH bands, embedding tables, fuzzy decontamination
+  bands, incremental dedup, shingle document frequency).
 """
 
 from __future__ import annotations
@@ -21,7 +24,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..session import local_table
+from ..session import local_table, path_exists
 
 
 def shingle_column(text: Column, k: int = 3) -> Column:
@@ -93,8 +96,9 @@ def lsh_bands(
     """(key, band, bucket) rows, ``n_hashes // band_size`` per doc: band i's
     bucket is ``xxhash64(i, h{i·r}, …, h{i·r+r−1})`` over its ``band_size``
     minhashes (xxhash64 is type-agnostic: long or string signatures).  The
-    band definition of ``lsh_candidate_pairs`` and
-    ``plans.corpus.incremental_dedup``, whose stored signatures it buckets."""
+    band definition of ``lsh_candidate_pairs``, ``fuzzy_decontaminate``
+    (one-hash bands) and ``plans.corpus.incremental_dedup``, whose stored
+    signatures it buckets."""
     n_bands = n_hashes // band_size
     bands = [
         F.xxhash64(
@@ -108,6 +112,27 @@ def lsh_bands(
     )
 
 
+def drop_hot_keys(df: DataFrame, keys: list[str], cap: int) -> DataFrame:
+    """Drop every row whose ``keys`` group has more than ``cap`` rows — the
+    hot-bucket guard in front of a bucket self-join.  Pairs inside one
+    bucket are quadratic in its size, so one boilerplate family (thousands
+    of near-identical pages sharing their minhashes, a navbar shingle in
+    10⁵ docs) makes one bucket hold most of the pairs; the cap bounds every
+    bucket at cap·(cap−1)/2 pairs whatever the corpus size.
+
+    One aggregate over ``keys`` plus a left-anti join against the HOT set,
+    not a semi-join against the cold set: the hot side is tiny by
+    construction (at most rows/cap groups), so AQE broadcasts it and ``df``
+    is shuffled once, for the count."""
+    hot = (
+        df.groupBy(*keys)
+        .agg(F.count("*").alias("_n"))
+        .filter(F.col("_n") > cap)
+        .select(*keys)
+    )
+    return df.join(hot, keys, "left_anti")
+
+
 def lsh_candidate_pairs(
     sig: DataFrame, key: str, n_hashes: int = 8, band_size: int = 2,
     max_bucket: int | None = 500,
@@ -116,17 +141,14 @@ def lsh_candidate_pairs(
 
     Bands are concatenations of ``band_size`` minhashes; docs are grouped by
     (band_id, band_value) and pairs enumerated within buckets via self-join
-    on the bucket key.  Typical buckets are small (that is the point of
-    banding), BUT a boilerplate family — thousands of near-identical junk
-    pages sharing their minhashes — makes one bucket quadratic:
-    ``max_bucket`` drops (band, bucket) groups larger than the cap before
-    the self-join, bounding every bucket at cap·(cap−1)/2 pairs.  Members
-    of an oversized bucket still pair through their OTHER bands unless
-    they are wholesale near-identical — exactly the family whose canonical
-    representative survives exact dedup upstream.  Measured on 220k docs
-    with 10% planted dups and NO upstream quality filter: 298 s uncapped →
-    bounded with the cap (see BENCH.md); same verified pairs on the
-    contract corpus (max bucket there ≪ cap)."""
+    on the bucket key.  ``max_bucket`` caps the (band, bucket) groups with
+    :func:`drop_hot_keys` before the self-join.  Members of an oversized
+    bucket still pair through their OTHER bands unless they are wholesale
+    near-identical — exactly the family whose canonical representative
+    survives exact dedup upstream.  Measured on 220k docs with 10% planted
+    dups and NO upstream quality filter: 298 s uncapped → bounded with the
+    cap (see BENCH.md); same verified pairs on the contract corpus (max
+    bucket there ≪ cap)."""
     # materialize the (key, band, bucket) rows ONCE: the hot-bucket
     # aggregate and the self-join otherwise each re-run the full signature
     # lineage (shingle explode + n_hashes min-aggregations) — 2 full sig
@@ -134,13 +156,7 @@ def lsh_candidate_pairs(
     # the simhash bucket table below: 3 small columns × n_bands rows/doc.
     buckets = lsh_bands(sig, key, n_hashes, band_size).localCheckpoint(eager=True)
     if max_bucket is not None:
-        hot = (
-            buckets.groupBy("band", "bucket")
-            .agg(F.count("*").alias("_n"))
-            .filter(F.col("_n") > max_bucket)
-            .select("band", "bucket")
-        )
-        buckets = buckets.join(hot, ["band", "bucket"], "left_anti")
+        buckets = drop_hot_keys(buckets, ["band", "bucket"], max_bucket)
     a = buckets.alias("a")
     b = buckets.alias("b")
     return (
@@ -199,20 +215,10 @@ def signature_prefilter(
     )
 
 
-def cap_shingle_df(sh: DataFrame, cap: int, shingle_col: str = "shingle") -> DataFrame:
-    """Drop shingles with document frequency > cap from an exploded
-    (doc, shingle) table — the standard boilerplate guard before any
-    shingle self-join: pair count inside one bucket is quadratic in df, so
-    a navbar shingle shared by 10⁵ docs makes a 10¹⁰-pair bucket.  The cap
-    bounds every bucket at cap·(cap−1)/2 pairs regardless of corpus size.
-
-    Joined as an ANTI-join against the HOT set (df > cap), not a semi-join
-    against the rare set: the hot side is tiny by construction (boilerplate
-    only — at most distinct_shingles/cap entries), so AQE turns this into a
-    broadcast anti-join and the exploded table is shuffled once (the df
-    aggregate) instead of twice."""
-    hot = sh.groupBy(shingle_col).agg(F.count("*").alias("_df")).filter(F.col("_df") > cap)
-    return sh.join(hot.select(shingle_col), shingle_col, "left_anti")
+def shingle_hashes(text: Column) -> Column:
+    """xxhash64 of each distinct 3-word shingle of ``text``: the set form
+    ``jaccard_verify`` compares and the incremental signature store keeps."""
+    return F.transform(shingle_column(text), lambda x: F.xxhash64(x))
 
 
 def jaccard_verify(
@@ -225,20 +231,26 @@ def jaccard_verify(
     array_intersect compares longs — measured 21.3 s → 11.1 s over 524k
     candidate pairs on the 1M-doc corpus.  Jaccard over hashed shingle
     sets equals the string-set value up to 2⁻⁶⁴-probability collisions."""
-    sh = df.select(
-        F.col(key).alias("_k"),
-        F.transform(shingle_column(F.col(text_col)), lambda x: F.xxhash64(x)).alias("_s"),
+    sets = df.select(F.col(key).alias("_k"), shingle_hashes(F.col(text_col)).alias("_s"))
+    return verify_shingle_sets(candidates, sets, threshold).select(
+        "a", "b", F.round("jaccard", 6).alias("jaccard")
     )
+
+
+def verify_shingle_sets(candidates: DataFrame, sets: DataFrame, threshold: float) -> DataFrame:
+    """The candidate rows (a, b, …) whose shingle-hash sets have Jaccard ≥
+    ``threshold``, with an unrounded ``jaccard`` column.  ``sets`` is
+    (_k, _s): a key and its ``shingle_hashes`` array, joined to both ends."""
     j = (
-        candidates.join(sh.withColumnRenamed("_k", "a").withColumnRenamed("_s", "_sa"), "a")
-        .join(sh.withColumnRenamed("_k", "b").withColumnRenamed("_s", "_sb"), "b")
+        candidates.join(sets.withColumnRenamed("_k", "a").withColumnRenamed("_s", "_sa"), "a")
+        .join(sets.withColumnRenamed("_k", "b").withColumnRenamed("_s", "_sb"), "b")
         .withColumn("_inter", F.size(F.array_intersect("_sa", "_sb")))
         .withColumn(
             "jaccard",
             F.col("_inter") / (F.size("_sa") + F.size("_sb") - F.col("_inter")),
         )
     )
-    return j.filter(F.col("jaccard") >= threshold).select("a", "b", F.round("jaccard", 6).alias("jaccard"))
+    return j.filter(F.col("jaccard") >= threshold)
 
 
 SIMHASH_BITS = 64
@@ -448,12 +460,11 @@ def embedding_near_dup_pairs(
     ``max_bucket`` guards the one remaining skew hazard: a mass-duplicated
     embedding family (SEO template pages, empty-page vectors) lands every
     copy in the SAME bucket of EVERY table, turning the self-join quadratic
-    in the family size × n_tables.  When set, (table, bucket) groups larger
-    than the cap are anti-joined out before the self-join (the hot set is
-    tiny, AQE broadcasts it), exactly like the minhash-LSH cap.  Identical-
-    vector families should be collapsed by exact dedup upstream — the cap
-    bounds the damage when they are not.  Default None keeps the contract
-    query exact.
+    in the family size × n_tables.  When set, :func:`drop_hot_keys` caps
+    the (table, bucket) groups before the self-join.  Identical-vector
+    families should be collapsed by exact dedup upstream — the cap bounds
+    the damage when they are not.  Default None keeps the contract query
+    exact.
     """
     first = df.select(F.size(vec_col).alias("d")).first()
     dim = int(first["d"])
@@ -484,13 +495,7 @@ def embedding_near_dup_pairs(
         eager=True
     )
     if max_bucket is not None:
-        hot = (
-            tabled.groupBy("tbl", "bkt")
-            .agg(F.count("*").alias("_n"))
-            .filter(F.col("_n") > max_bucket)
-            .select("tbl", "bkt")
-        )
-        tabled = tabled.join(F.broadcast(hot), ["tbl", "bkt"], "left_anti")
+        tabled = drop_hot_keys(tabled, ["tbl", "bkt"], max_bucket)
     a, b = tabled.alias("a"), tabled.alias("b")
     cand = (
         a.join(
@@ -537,7 +542,7 @@ def drop_duplicate_lines(
 
     Plan: posexplode lines → document frequency per line (two-phase count
     distinct) → anti-join the hot-line set (tiny by the same argument as
-    ``cap_shingle_df``; AQE broadcasts it) → rebuild each doc with
+    :func:`drop_hot_keys`; AQE broadcasts it) → rebuild each doc with
     collect_list(struct(pos, line)) + array_sort (sorts on the leading pos
     field) + concat_ws.  One wide shuffle on the line hash, one on the doc
     key — both with map-side partial aggregation.
@@ -586,28 +591,15 @@ def decontaminate(
     """Benchmark decontamination: count, per document, how many distinct
     ``k``-word shingles it shares with an evaluation set — the standard
     pre-training step that keeps eval data out of the corpus (docs with
-    ``n_contaminated > 0`` are dropped or audited).
+    ``n_contaminated > 0`` are dropped or audited).  Long shingles (k=8
+    words ≈ 13-gram token windows in the literature) keep false positives
+    near zero.
 
-    The benchmark side is tiny relative to the corpus (eval sets are
-    thousands of docs, the corpus is billions), so its DISTINCT shingle set
-    broadcasts and the corpus-side explode joins against it map-side — no
-    wide shuffle of corpus shingles.  Long shingles (k=8 words ≈ 13-gram
-    token windows in the literature) keep false positives near zero."""
-    bench = (
-        benchmark.select(F.explode(shingle_column(F.col(bench_text_col), k)).alias("shingle"))
-        .distinct()
-    )
-    d = docs.select(F.col(key), F.explode(shingle_column(F.col(text_col), k)).alias("shingle"))
-    hits = (
-        d.join(F.broadcast(bench), "shingle")
-        .groupBy(key)
-        .agg(F.count("*").alias("n_contaminated"))
-    )
-    return (
-        docs.select(key)
-        .join(hits, key, "left")
-        .withColumn("n_contaminated", F.coalesce("n_contaminated", F.lit(0)))
-    )
+    Returns (key, n_contaminated): the overlap count of
+    :func:`contamination_stats`, one row per distinct key."""
+    return contamination_stats(
+        docs, benchmark, key, text_col, bench_text_col, k
+    ).select(key, "n_contaminated")
 
 
 def contamination_stats(
@@ -619,16 +611,18 @@ def contamination_stats(
     k: int = 8,
     frac_threshold: float = 0.7,
 ) -> DataFrame:
-    """Per-document contamination AUDIT — the reporting complement of
-    :func:`decontaminate`: instead of only counting shared shingles, report
-    what FRACTION of each document's distinct ``k``-word shingles appears
-    in the eval set, plus a ``dirty`` verdict at ``frac_threshold`` (the
+    """Per-document contamination AUDIT: besides the count of distinct
+    ``k``-word shingles each document shares with the eval set (the
+    :func:`decontaminate` column), report what FRACTION of its distinct
+    shingles that is, plus a ``dirty`` verdict at ``frac_threshold`` (the
     PaLM/GPT-3-style "doc is contaminated when ≥X% of its n-grams overlap"
     criterion, applied over distinct shingles).
 
-    One corpus pass: explode distinct shingles once, LEFT-join the
-    broadcast eval shingle set with a hit marker, and fold totals and hits
-    in a single map-side-combined groupBy — the corpus side never
+    The benchmark side is tiny relative to the corpus (eval sets are
+    thousands of docs, the corpus is billions), so its DISTINCT shingle set
+    broadcasts.  One corpus pass: explode distinct shingles once, LEFT-join
+    the broadcast eval shingle set with a hit marker, and fold totals and
+    hits in a single map-side-combined groupBy — the corpus side never
     shuffles on shingles, only on ``key`` with one row per (task, doc)
     partial.  Shingle-less docs (< k words) report (0, 0, 0.0, false).
 
@@ -752,7 +746,6 @@ def fuzzy_decontaminate(
     bench_key: str,
     text_col: str = "text",
     bench_text_col: str = "text",
-    k: int = 3,
     n_bands: int = 4,
     threshold: float = 0.5,
     max_band_bucket: int = 5000,
@@ -764,19 +757,19 @@ def fuzzy_decontaminate(
     style fuzzy decontamination pass).
 
     Returns ``(key, bench_id, jaccard)`` for every corpus doc whose
-    k-word-shingle Jaccard with some benchmark doc clears ``threshold``
-    AND that LSH surfaced as a candidate (``n_bands`` seeded min-hash
-    bands, band match ⇒ candidate; recall 1−(1−j)^bands per pair —
-    deterministic, so an oracle replays it exactly).
+    3-word-shingle Jaccard with some benchmark doc clears ``threshold``
+    AND that LSH surfaced as a candidate (``n_bands`` md5
+    :func:`minhash_signatures` hashes, one per :func:`lsh_bands` band, band
+    match ⇒ candidate; recall 1−(1−j)^bands per pair — deterministic, so
+    an oracle replays it exactly).
 
-    Scale shape: the corpus side is ONE shingle pass reused for both the
-    band signatures (map-side min-agg) and the verification counts; the
-    eval set is thousands of docs vs a corpus of billions, so its band
-    table and its shingle set both broadcast — the corpus never self-joins
-    and its shingles only shuffle once (the per-doc signature agg).
+    Scale shape: the eval set is thousands of docs vs a corpus of
+    billions, so its band table and its shingle set both broadcast — the
+    corpus never self-joins, its shingles shuffle once (the signature agg)
+    and only candidate docs are shingled again, for verification.
 
-    ``max_band_bucket`` is the hot-bucket guard every candidate generator
-    in this repo carries: a band value shared by more corpus docs than the
+    ``max_band_bucket`` caps the corpus (band, bucket) groups with
+    :func:`drop_hot_keys`: a band value shared by more corpus docs than the
     cap is boilerplate minhash, and joining it would make the candidate
     list O(corpus) (measured: an uncapped run on a 1M-doc corpus whose
     templates overlap the eval set produced a >1 GiB candidate relation
@@ -784,50 +777,23 @@ def fuzzy_decontaminate(
     their other ``n_bands − 1`` chances, the same recall argument as
     ``lsh_candidate_pairs``'s max_bucket."""
 
-    def _sh(df: DataFrame, kcol: str, tcol: str) -> DataFrame:
-        return df.select(
-            F.col(kcol).alias("_k"),
-            F.explode(shingle_column(F.col(tcol), k)).alias("_s"),
-        )
+    def _bands(df: DataFrame, k: str) -> DataFrame:
+        sig = minhash_signatures(df, k, "_t", n_hashes=n_bands, hash_fn="md5")
+        # materialized: the candidate relation below is read
+        # twice, and each read would otherwise re-run the shingle explode +
+        # min-agg (the expensive stage; guide §1.2)
+        return lsh_bands(sig, k, n_hashes=n_bands, band_size=1).localCheckpoint(eager=True)
 
-    def _sig(sh: DataFrame) -> DataFrame:
-        # ONE pass computes the band mins AND the shingle-set size — the
-        # shingle UDF is the expensive stage, don't rescan it for sizes
-        return sh.groupBy("_k").agg(
-            *[
-                F.min(F.md5(F.concat(F.lit(str(b)), F.col("_s")))).alias(f"h{b}")
-                for b in range(n_bands)
-            ],
-            F.count("*").alias("_n"),
-        )
+    def _shingled(df: DataFrame, k: str, n: str) -> DataFrame:
+        # (key, set size, shingle) rows: sizes come from the same arrays
+        arr = df.select(k, shingle_column(F.col("_t")).alias("_a"))
+        return arr.select(k, F.size("_a").alias(n), F.explode("_a").alias("_s"))
 
-    def _bands(sig: DataFrame) -> DataFrame:
-        stack = "stack({n}, {parts}) as (band, sig)".format(
-            n=n_bands, parts=", ".join(f"{b}, h{b}" for b in range(n_bands))
-        )
-        return sig.select("_k", F.expr(stack))
-
-    csh, bsh = _sh(docs, key, text_col), _sh(benchmark, bench_key, bench_text_col)
-    # materialize the corpus signature table (round 6): it feeds the hot-
-    # bucket aggregate, the candidate join AND the set-size join — without
-    # materialization each consumer re-ran the corpus shingle explode +
-    # min-agg (the expensive stage; guide §1.2).  One row per corpus doc:
-    # n_bands md5 strings + a count.
-    csig, bsig = (
-        _sig(csh).localCheckpoint(eager=True),
-        _sig(bsh).localCheckpoint(eager=True),
-    )
-    bb = _bands(bsig).withColumnRenamed("_k", "_bk")
-    cb = _bands(csig)
-    hot = (
-        cb.groupBy("band", "sig")
-        .agg(F.count("*").alias("_bsz"))
-        .filter(F.col("_bsz") > max_band_bucket)
-        .select("band", "sig")
-    )
+    corpus = docs.select(F.col(key).alias("_k"), F.col(text_col).alias("_t"))
+    bench = benchmark.select(F.col(bench_key).alias("_bk"), F.col(bench_text_col).alias("_t"))
     cands = (
-        cb.join(F.broadcast(hot), ["band", "sig"], "left_anti")
-        .join(F.broadcast(bb), ["band", "sig"])
+        drop_hot_keys(_bands(corpus, "_k"), ["band", "bucket"], max_band_bucket)
+        .join(F.broadcast(_bands(bench, "_bk")), ["band", "bucket"])
         .select("_k", "_bk")
         .distinct()
     )
@@ -835,30 +801,19 @@ def fuzzy_decontaminate(
     # re-runs over the candidate SUBSET only (semi-join the corpus down
     # first), not the whole corpus: candidates are bounded by eval-family
     # size × bands, orders of magnitude below the corpus.  |∩| via the
-    # broadcast eval shingle set keyed (bench doc, shingle); sizes ride
-    # along the sig aggs.  The candidate list is the one derived relation
-    # whose size the planner cannot bound (boilerplate-heavy corpora
-    # inflate it) — pin its join to shuffle-hash so a misestimate can
-    # never become a driver-killing broadcast (observed: AQE broadcasting
-    # a multi-million-pair list on a template-saturated 50k corpus)
-    cand_docs = docs.select(F.col(key).alias("_k"), F.col(text_col).alias("_t")).join(
-        cands.select("_k").distinct(), "_k", "left_semi"
-    )
-    cand_sh = cand_docs.select(
-        "_k", F.explode(shingle_column(F.col("_t"), k)).alias("_s")
-    ).join(cands.hint("shuffle_hash"), "_k")
-    inter = (
-        cand_sh.join(
-            F.broadcast(bsh.withColumnRenamed("_k", "_bk")), ["_bk", "_s"]
-        )
-        .groupBy("_k", "_bk")
-        .agg(F.count("*").alias("_i"))
-    )
-    nc = csig.select("_k", F.col("_n").alias("_nc"))
-    nb = bsig.select(F.col("_k").alias("_bk"), F.col("_n").alias("_nb"))
+    # broadcast eval shingle set keyed (bench doc, shingle).  The candidate
+    # list is the one derived relation whose size the planner cannot bound
+    # (boilerplate-heavy corpora inflate it) — pin its join to shuffle-hash
+    # so a misestimate can never become a driver-killing broadcast
+    # (observed: AQE broadcasting a multi-million-pair list on a
+    # template-saturated 50k corpus)
+    cand_docs = corpus.join(cands.select("_k").distinct(), "_k", "left_semi")
+    cand_sh = _shingled(cand_docs, "_k", "_nc").join(cands.hint("shuffle_hash"), "_k")
+    bsh = _shingled(bench, "_bk", "_nb")
     return (
-        inter.join(nc, "_k")
-        .join(F.broadcast(nb), "_bk")
+        cand_sh.join(F.broadcast(bsh), ["_bk", "_s"])
+        .groupBy("_k", "_bk", "_nc", "_nb")
+        .agg(F.count("*").alias("_i"))
         .withColumn("jaccard", F.col("_i") / (F.col("_nc") + F.col("_nb") - F.col("_i")))
         .filter(F.col("jaccard") >= threshold)
         .select(
@@ -1127,8 +1082,6 @@ def incremental_substring_dedup(
     is eagerly materialized BEFORE the store append (the lazy-plan-reads-
     mutated-input hazard, see incremental_dedup).
     """
-    from pathlib import Path
-
     from pyspark.sql import Window
 
     base, occ = _substr_base_occ(docs, text_col, id_col, k)
@@ -1136,7 +1089,7 @@ def incremental_substring_dedup(
         "_c", F.count("*").over(Window.partitionBy("_h"))
     ).filter(F.col("_c") >= 2).select("_id", "_s")
     new_grams = occ.select(F.col("_h").alias("h")).distinct()
-    if Path(gram_store).exists():
+    if path_exists(spark, gram_store):
         seen = spark.read.parquet(gram_store)
         store_hit = occ.join(seen, occ["_h"] == seen["h"], "left_semi").select("_id", "_s")
         dup = batch_dup.unionByName(store_hit).distinct()

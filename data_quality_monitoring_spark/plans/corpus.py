@@ -26,12 +26,17 @@ from pyspark.sql import functions as F
 
 from ..operators.dedup import (
     connected_components,
+    drop_hot_keys,
     exact_dedup,
     jaccard_verify,
+    lsh_bands,
     lsh_candidate_pairs,
     minhash_signatures,
+    shingle_hashes,
+    verify_shingle_sets,
 )
 from ..operators.sampling import stratified_sample
+from ..session import path_exists
 from .pipeline import quality_filter
 
 
@@ -144,10 +149,11 @@ def incremental_dedup(
     1. drop new docs whose exact content hash exists in the store,
     2. LSH band candidates with the NEW side only on the left of the
        join — old×old pairs never enumerate, so batch cost is
-       O(batch × bucket occupancy), not O(corpus); oversized buckets are
-       capped exactly like ``lsh_candidate_pairs``'s max_bucket guard,
+       O(batch × bucket occupancy), not O(corpus); ``max_bucket`` caps
+       the band buckets of store + batch with ``dedup.drop_hot_keys``,
     3. distinct candidate pairs verify by exact Jaccard over the stored
-       shingle-hash sets (8-byte hashes, never old text),
+       shingle-hash sets (8-byte hashes, never old text) through
+       ``dedup.verify_shingle_sets``, the verifier of ``jaccard_verify``,
     4. keep-one matches ``build_corpus``: a new doc with ANY old verified
        partner loses; new×new pairs go through connected components and
        each component keeps its min key,
@@ -172,10 +178,6 @@ def incremental_dedup(
 
     Returns (accepted_new_docs, stats).
     """
-    from pathlib import Path
-
-    from ..operators.dedup import lsh_bands, shingle_column
-
     n_in = new_docs.count()
     new_docs = exact_dedup(new_docs, key, text_col)  # within-batch keep-one
 
@@ -183,9 +185,7 @@ def incremental_dedup(
     feat = new_docs.select(
         key,
         F.md5(F.col(text_col)).alias("content_hash"),
-        F.transform(shingle_column(F.col(text_col)), lambda x: F.xxhash64(x)).alias(
-            "shingles"
-        ),
+        shingle_hashes(F.col(text_col)).alias("shingles"),
     )
     def _seeded(b: int):
         # MUST be a one-parameter lambda: pyspark treats a two-parameter
@@ -199,7 +199,7 @@ def incremental_dedup(
     )
 
     sig_store = str(sig_store)
-    if Path(sig_store).exists():
+    if path_exists(spark, sig_store):
         old = spark.read.parquet(sig_store)
         new_sig = new_sig.join(old.select("content_hash"), "content_hash", "left_anti")
     else:
@@ -210,20 +210,11 @@ def incremental_dedup(
             "is_new", F.lit(is_new)
         )
 
-    new_b = banded(new_sig, True)
-    all_b = banded(old, False).unionByName(new_b)
-    # hot-bucket cap (same guard + rationale as lsh_candidate_pairs), counted
-    # over the live band stream of store + batch
-    hot = (
-        all_b.groupBy("band", "bucket")
-        .agg(F.count("*").alias("_n"))
-        .filter(F.col("_n") > max_bucket)
-        .select("band", "bucket")
+    # the cap counts the live band stream of store + batch
+    all_b = drop_hot_keys(
+        banded(old, False).unionByName(banded(new_sig, True)), ["band", "bucket"], max_bucket
     )
-    new_b = new_b.join(hot, ["band", "bucket"], "left_anti")
-    all_b = all_b.join(hot, ["band", "bucket"], "left_anti")
-
-    a, b = new_b.alias("a"), all_b.alias("b")
+    a, b = all_b.filter("is_new").alias("a"), all_b.alias("b")
     pairs = (
         a.join(
             b,
@@ -234,27 +225,18 @@ def incremental_dedup(
             & (F.col(f"a.{key}") != F.col(f"b.{key}")),
         )
         .select(
-            F.col(f"a.{key}").alias("na"), F.col(f"b.{key}").alias("nb"),
+            F.col(f"a.{key}").alias("a"), F.col(f"b.{key}").alias("b"),
             F.col("b.is_new").alias("partner_is_new"),
         )
         .distinct()  # multi-band collisions verify once
     )
-    sh = old.select(key, "shingles").unionByName(new_sig.select(key, "shingles"))
-    verified = (
-        pairs.join(sh.withColumnRenamed(key, "na").withColumnRenamed("shingles", "_sa"), "na")
-        .join(sh.withColumnRenamed(key, "nb").withColumnRenamed("shingles", "_sb"), "nb")
-        .withColumn("_inter", F.size(F.array_intersect("_sa", "_sb")))
-        .withColumn(
-            "jaccard",
-            F.col("_inter") / (F.size("_sa") + F.size("_sb") - F.col("_inter")),
-        )
-        .filter(F.col("jaccard") >= jaccard_threshold)
-        .select("na", "nb", "partner_is_new")
-    )
+    sets = old.select(key, "shingles").unionByName(new_sig.select(key, "shingles"))
+    verified = verify_shingle_sets(
+        pairs, sets.toDF("_k", "_s"), jaccard_threshold
+    ).select("a", "b", "partner_is_new")
     # keep-one, build_corpus semantics
-    old_losers = verified.filter(~F.col("partner_is_new")).select(F.col("na").alias(key))
-    nn = verified.filter(F.col("partner_is_new"))
-    comp = connected_components(nn.select(F.col("na").alias("a"), F.col("nb").alias("b")), "a", "b")
+    old_losers = verified.filter(~F.col("partner_is_new")).select(F.col("a").alias(key))
+    comp = connected_components(verified.filter(F.col("partner_is_new")), "a", "b")
     cc_losers = comp.filter(F.col("node") != F.col("component")).select(
         F.col("node").alias(key)
     )

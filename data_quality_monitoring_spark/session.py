@@ -288,3 +288,12 @@ def local_table(spark: SparkSession, columns: dict, schema: str | StructType) ->
     ``columns`` maps each field of ``schema``, in order, to its values (a
     list or an Arrow array)."""
     return spark.createDataFrame(pa.table(columns), schema)
+
+
+def path_exists(spark: SparkSession, path: str) -> bool:
+    """Whether ``path`` exists, asked of the Hadoop ``FileSystem`` its
+    scheme names — the filesystem ``spark.read`` and ``write`` use — so a
+    ``file://``, ``hdfs://`` or ``s3a://`` URI is found where a local
+    ``pathlib`` check would see nothing."""
+    p = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return p.getFileSystem(spark._jsc.hadoopConfiguration()).exists(p)

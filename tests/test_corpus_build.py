@@ -211,3 +211,24 @@ def test_incremental_dedup_hot_bucket_cap(spark, tmp_path):
     assert batch(0, str(tmp_path / "sig500"), 500) == (
         {"batch_in": 46, "accepted": 42, "dropped": 4}, urls(0, ["dup0", "fam0_0"])
     )
+
+
+def test_incremental_stores_read_uri_paths(spark, tmp_path):
+    """Stores named by a file:// URI are read back: the same batch fed twice
+    is dropped whole the second time, and its repeated spans are stripped."""
+    from data_quality_monitoring_spark.operators.dedup import incremental_substring_dedup
+    from data_quality_monitoring_spark.plans.corpus import incremental_dedup
+
+    batch = _sig_batch(spark, 0)
+    sig_store = (tmp_path / "sigs").as_uri()
+    _, first = incremental_dedup(spark, batch, sig_store)
+    _, again = incremental_dedup(spark, batch, sig_store)
+    assert first["accepted"] == 42
+    assert again == {"batch_in": 46, "accepted": 0, "dropped": 46}
+
+    gram_store = (tmp_path / "grams").as_uri()
+    docs = spark.createDataFrame([(1, " ".join(f"w{i}" for i in range(30)))], "doc_id long, text string")
+    first = incremental_substring_dedup(spark, docs, gram_store).first()
+    again = incremental_substring_dedup(spark, docs, gram_store).first()
+    assert first["n_removed"] == 0
+    assert again["n_removed"] == 30 and again["text_dedup"] == ""

@@ -329,7 +329,7 @@ def test_jaccard_df_cap_bounds_skew(spark):
     drop it so no join bucket exceeds the cap."""
     import pandas as pd
     from pyspark.sql import functions as F
-    from data_quality_monitoring_spark.operators.dedup import cap_shingle_df, shingle_column
+    from data_quality_monitoring_spark.operators.dedup import drop_hot_keys, shingle_column
 
     boiler = "all rights reserved"
     rows = []
@@ -338,7 +338,7 @@ def test_jaccard_df_cap_bounds_skew(spark):
         rows.append((i, f"{boiler} {body}" if i % 2 == 0 else body))
     df = spark.createDataFrame(pd.DataFrame(rows, columns=["doc_id", "text"]))
     sh = df.select("doc_id", F.explode(shingle_column(F.col("text"))).alias("shingle"))
-    capped = cap_shingle_df(sh, cap=10)
+    capped = drop_hot_keys(sh, ["shingle"], cap=10)
     max_df = capped.groupBy("shingle").count().agg(F.max("count")).collect()[0][0]
     assert max_df <= 10
     # the boilerplate shingle itself (df=100) is gone
@@ -652,15 +652,40 @@ def test_fuzzy_decontaminate_catches_edited_eval_leak(spark):
         "doc_id long, text string",
     )
     bench = spark.createDataFrame([(100, eval_text)], "bid long, text string")
-    out = fuzzy_decontaminate(docs, bench, "doc_id", "bid", k=3, threshold=0.3).toPandas()
+    out = fuzzy_decontaminate(docs, bench, "doc_id", "bid", threshold=0.3).toPandas()
     assert set(out["doc_id"]) == {0}
     assert out["jaccard"].iloc[0] >= 0.3
     # determinism under repartition
     out2 = fuzzy_decontaminate(
-        docs.repartition(7), bench, "doc_id", "bid", k=3, threshold=0.3
+        docs.repartition(7), bench, "doc_id", "bid", threshold=0.3
     ).toPandas()
     assert out.sort_values(["doc_id", "bench_id"]).values.tolist() == \
         out2.sort_values(["doc_id", "bench_id"]).values.tolist()
+
+
+def test_fuzzy_decontaminate_band_bucket_cap(spark):
+    """A copied-eval family of 8 docs fills each of its 4 band buckets past
+    a cap of 5, so at that cap the family is never a candidate, while a
+    separately edited leak of another eval doc (one doc per bucket) is
+    still flagged.  At the default cap both are flagged."""
+    from data_quality_monitoring_spark.operators.dedup import fuzzy_decontaminate
+
+    copied = " ".join(f"copied eval item{i} reply{i}" for i in range(30))
+    leaked = " ".join(f"eval question token{i} answer{i}" for i in range(30))
+    edited = " ".join(w if i % 7 else w + "x" for i, w in enumerate(leaked.split()))
+    docs = spark.createDataFrame(
+        [(i, copied) for i in range(8)]
+        + [(100, edited), (101, "completely unrelated prose about weather patterns " * 10)],
+        "doc_id long, text string",
+    )
+    bench = spark.createDataFrame([(1, copied), (2, leaked)], "bid long, text string")
+
+    def flagged(**kw):
+        out = fuzzy_decontaminate(docs, bench, "doc_id", "bid", threshold=0.3, **kw)
+        return {(r["doc_id"], r["bench_id"]) for r in out.collect()}
+
+    assert flagged() == {(i, 1) for i in range(8)} | {(100, 2)}
+    assert flagged(max_band_bucket=5) == {(100, 2)}
 
 
 def test_fuzzy_decontaminate_self_match_is_one(spark):

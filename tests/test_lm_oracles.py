@@ -23,8 +23,9 @@ import __spark_entry__ as entry  # noqa: E402
 from check_contract import TABLES, norm_hash  # noqa: E402
 
 
-@pytest.mark.parametrize("name", ["perplexity_scores", "perplexity_trigram", "hp_sweep"])
-def test_lm_query_matches_oracle(spark, name):
+def assert_matches_oracle(spark, name: str) -> None:
+    """Contract query ``name`` on sf0.001 equals its DuckDB oracle: row
+    count, column names and the order-insensitive value hash."""
     got = entry.queries()[name](spark, SF).toPandas()
     con = duckdb.connect()
     for t in TABLES:
@@ -33,3 +34,8 @@ def test_lm_query_matches_oracle(spark, name):
     assert len(got) == len(want)
     assert sorted(got.columns) == sorted(want.columns)
     assert norm_hash(got) == norm_hash(want)
+
+
+@pytest.mark.parametrize("name", ["perplexity_scores", "perplexity_trigram", "hp_sweep"])
+def test_lm_query_matches_oracle(spark, name):
+    assert_matches_oracle(spark, name)
