@@ -352,7 +352,7 @@ def q_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _read(spark, sf_dir, "documents")
     sig = minhash_signatures(d, "doc_id", n_hashes=4, hash_fn="md5")
     # one-hash bands, unpivoted so ONE pass computes all band buckets — the
-    # naive per-band loop would rescan + re-aggregate the shingles 4×.  A
+    # naive per-band loop would rescan + re-shingle the documents 4×.  A
     # bucket is xxhash64(band, h_band): the same groups as the md5 values
     # the oracle groups by, up to 2⁻⁶⁴-probability collisions
     return (

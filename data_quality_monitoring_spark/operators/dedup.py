@@ -11,7 +11,8 @@ web-text pipeline runs between filtering and training.  Design rules:
 * verification (exact Jaccard / Hamming / cosine) runs only on candidates,
 * one hot-key cap, :func:`drop_hot_keys`, bounds every capped bucket
   self-join (minhash-LSH bands, embedding tables, fuzzy decontamination
-  bands, incremental dedup, shingle document frequency).
+  bands, incremental dedup, shingle document frequency),
+* one MinHash, :func:`minhash_signatures`: per row, one shingle-UDF call.
 """
 
 from __future__ import annotations
@@ -66,28 +67,37 @@ def minhash_signatures(
     df: DataFrame, key: str, text_col: str = "text", n_hashes: int = 8,
     hash_fn: str = "xxhash64",
 ) -> DataFrame:
-    """(key, h0..h{n-1}) MinHash signature per doc over 3-word shingles.
+    """``df`` with ``text_col`` replaced by (shingles, h0..h{n-1}): the doc's
+    distinct 3-word shingles and their MinHash, one shingle-UDF call per row
+    (no shuffle).  A doc under 3 words has NULL hashes.
 
-    ``hash_fn="xxhash64"`` (default) computes the n seeded hashes JVM-side
-    at 4.3× the md5 chain's speed (33.9 s → 7.9 s over the 550k-doc kept
-    slice of the 1M corpus) — this stage dominated the corpus build under
-    md5.  ``"md5"`` remains for the portable form the oracled contract
-    query ``dedup_minhash`` uses (DuckDB has md5, not xxhash64); minhash
-    quality is hash-agnostic, only collision structure matters."""
-    sh = df.select(key, F.explode(shingle_column(F.col(text_col))).alias("shingle"))
+    ``hash_fn="xxhash64"`` (default) signs :func:`shingle_hashes` JVM-side:
+    the signature store's values, 4.3× the md5 chain's speed (33.9 s →
+    7.9 s over the 550k-doc kept slice of the 1M corpus).  ``"md5"`` signs
+    the shingle strings, the portable form the oracled contract query
+    ``dedup_minhash`` uses (DuckDB has md5, not xxhash64); minhash quality
+    is hash-agnostic, only collision structure matters."""
     if hash_fn == "xxhash64":
-        hashes = [
-            F.min(F.xxhash64(F.lit(b), F.col("shingle"))).alias(f"h{b}")
-            for b in range(n_hashes)
-        ]
+        shingles = shingle_hashes(F.col(text_col))
+        seeded = lambda b, s: F.xxhash64(F.lit(b), s)  # noqa: E731
     elif hash_fn == "md5":
-        hashes = [
-            F.min(F.md5(F.concat(F.lit(str(b)), F.col("shingle")))).alias(f"h{b}")
-            for b in range(n_hashes)
-        ]
+        shingles = shingle_column(F.col(text_col))
+        seeded = lambda b, s: F.md5(F.concat(F.lit(str(b)), s))  # noqa: E731
     else:  # a typo must not silently pick the 4.3×-slower chain
         raise ValueError(f"hash_fn must be 'xxhash64' or 'md5', got {hash_fn!r}")
-    return sh.groupBy(key).agg(*hashes)
+
+    def minhash(b: int) -> Column:
+        # MUST be a one-parameter lambda: pyspark treats a two-parameter
+        # transform lambda as (element, index) — a `lambda s, b=b:` default
+        # captured the index column as the seed and made the minhash
+        # order-dependent (0/8 shared hashes on an 0.87-Jaccard pair)
+        return F.array_min(F.transform("shingles", lambda s: seeded(b, s)))
+
+    return (
+        df.withColumn("shingles", shingles)
+        .withColumns({f"h{b}": minhash(b) for b in range(n_hashes)})
+        .drop(text_col)
+    )
 
 
 def lsh_bands(
@@ -98,17 +108,20 @@ def lsh_bands(
     minhashes (xxhash64 is type-agnostic: long or string signatures).  The
     band definition of ``lsh_candidate_pairs``, ``fuzzy_decontaminate``
     (one-hash bands) and ``plans.corpus.incremental_dedup``, whose stored
-    signatures it buckets."""
+    signatures it buckets.  A doc with NULL hashes gets no rows: the filter
+    is on the stacked ``bucket``, so the optimizer cannot push it under an
+    uncached signature projection and re-run the shingle UDF there."""
     n_bands = n_hashes // band_size
+    h = [F.col(f"h{j}") for j in range(n_hashes)]
     bands = [
-        F.xxhash64(
-            F.lit(i), *[F.col(f"h{j}") for j in range(i * band_size, (i + 1) * band_size)]
-        ).alias(f"b{i}")
-        for i in range(n_bands)
+        F.when(h[lo].isNotNull(), F.xxhash64(F.lit(i), *h[lo : lo + band_size])).alias(f"b{i}")
+        for i, lo in enumerate(range(0, n_bands * band_size, band_size))
     ]
     stack_expr = ", ".join(f"{i}, b{i}" for i in range(n_bands))
-    return sig.select(key, *bands).select(
-        key, F.expr(f"stack({n_bands}, {stack_expr}) as (band, bucket)")
+    return (
+        sig.select(key, *bands)
+        .select(key, F.expr(f"stack({n_bands}, {stack_expr}) as (band, bucket)"))
+        .filter(F.col("bucket").isNotNull())
     )
 
 
@@ -151,9 +164,9 @@ def lsh_candidate_pairs(
     bucket there ≪ cap)."""
     # materialize the (key, band, bucket) rows ONCE: the hot-bucket
     # aggregate and the self-join otherwise each re-run the full signature
-    # lineage (shingle explode + n_hashes min-aggregations) — 2 full sig
-    # computations on a 1M-doc corpus build.  Same narrow-row argument as
-    # the simhash bucket table below: 3 small columns × n_bands rows/doc.
+    # lineage (shingle UDF + n_hashes array mins) of an uncached ``sig`` —
+    # 2 full sig computations on a 1M-doc corpus build.  Same narrow-row
+    # argument as the simhash bucket table below: 3 small columns × n_bands.
     buckets = lsh_bands(sig, key, n_hashes, band_size).localCheckpoint(eager=True)
     if max_bucket is not None:
         buckets = drop_hot_keys(buckets, ["band", "bucket"], max_bucket)
@@ -217,7 +230,8 @@ def signature_prefilter(
 
 def shingle_hashes(text: Column) -> Column:
     """xxhash64 of each distinct 3-word shingle of ``text``: the set form
-    ``jaccard_verify`` compares and the incremental signature store keeps."""
+    :func:`minhash_signatures` signs, ``jaccard_verify`` compares and the
+    incremental signature store keeps."""
     return F.transform(shingle_column(text), lambda x: F.xxhash64(x))
 
 
@@ -765,8 +779,8 @@ def fuzzy_decontaminate(
 
     Scale shape: the eval set is thousands of docs vs a corpus of
     billions, so its band table and its shingle set both broadcast — the
-    corpus never self-joins, its shingles shuffle once (the signature agg)
-    and only candidate docs are shingled again, for verification.
+    corpus never self-joins, each doc is signed in its own row (no
+    shuffle) and only candidate docs are shingled again, for verification.
 
     ``max_band_bucket`` caps the corpus (band, bucket) groups with
     :func:`drop_hot_keys`: a band value shared by more corpus docs than the
@@ -779,9 +793,9 @@ def fuzzy_decontaminate(
 
     def _bands(df: DataFrame, k: str) -> DataFrame:
         sig = minhash_signatures(df, k, "_t", n_hashes=n_bands, hash_fn="md5")
-        # materialized: the candidate relation below is read
-        # twice, and each read would otherwise re-run the shingle explode +
-        # min-agg (the expensive stage; guide §1.2)
+        # materialized: the candidate relation below is read twice, and
+        # each read would otherwise re-run the shingle UDF (the expensive
+        # stage; guide §1.2)
         return lsh_bands(sig, k, n_hashes=n_bands, band_size=1).localCheckpoint(eager=True)
 
     def _shingled(df: DataFrame, k: str, n: str) -> DataFrame:

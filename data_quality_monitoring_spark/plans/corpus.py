@@ -9,7 +9,7 @@ composed from the individually-tested operators:
 3. near-dup removal: MinHash signatures → LSH band candidates → exact
    Jaccard verify → connected components → keep the component's min-key
    doc (`operators/dedup.py` end to end; every join is an equi-join on a
-   bucket or pair key, never all-pairs),
+   bucket or pair key, never all-pairs; each doc is shingled once),
 4. optional deterministic stratified down-sampling per language
    (`operators/sampling.py` — idempotent md5-bucket gate).
 
@@ -28,11 +28,9 @@ from ..operators.dedup import (
     connected_components,
     drop_hot_keys,
     exact_dedup,
-    jaccard_verify,
     lsh_bands,
     lsh_candidate_pairs,
     minhash_signatures,
-    shingle_hashes,
     verify_shingle_sets,
 )
 from ..operators.sampling import stratified_sample
@@ -82,11 +80,14 @@ def build_corpus(
     n_exact = deduped.count()
     kept.unpersist()  # deduped is materialized; nothing reads kept again
 
-    sig = minhash_signatures(deduped, "url", "text_scrubbed")
+    # persisted like deduped: banding and the verify's shingle sets read
+    # it, so the shingle UDF runs once per doc
+    sig = minhash_signatures(deduped, "url", "text_scrubbed").persist()
     cand = lsh_candidate_pairs(sig, "url")
     if min_est_jaccard is not None:
         cand = signature_prefilter(sig, cand, "url", min_est=min_est_jaccard)
-    pairs = jaccard_verify(deduped, cand, "url", "text_scrubbed", jaccard_threshold)
+    sets = sig.select(F.col("url").alias("_k"), F.col("shingles").alias("_s"))
+    pairs = verify_shingle_sets(cand, sets, jaccard_threshold)
     comp = connected_components(pairs, "a", "b")
     if keep_best:
         from ..operators.dedup import component_keep_best
@@ -111,7 +112,8 @@ def build_corpus(
         corpus = stratified_sample(uniq, "url", "lang", sample_rates, default_rate)
     else:
         corpus = uniq
-    # deduped stays cached: the returned plan reads it (caller unpersists
+    # deduped and sig stay cached: the returned plan reads deduped, and sig
+    # too when the components took the iterative path (caller unpersists
     # via corpus.sparkSession.catalog.clearCache() or after the final write)
     if sample_rates is None:  # losers ⊆ deduped, one row per node
         n_final = n_exact - losers.count()
@@ -163,10 +165,10 @@ def incremental_dedup(
        rows as pre-existing dups and silently lose it.  The writer should
        be idempotent per batch (e.g. overwrite a batch-id partition).
 
-    Features are computed in ONE pass per doc (no explode/groupBy
-    shuffle: minhashes are array-min over seeded rehashes of the shingle
-    set).  Docs with fewer than 3 words have no shingles; they skip the
-    near-dup stage but still flow through exact dedup and acceptance.
+    Features come from ``dedup.minhash_signatures`` (one shingle-UDF call
+    per doc), materialized once after the store anti-join.  Docs with fewer
+    than 3 words have NULL hashes: they never band, but still flow through
+    exact dedup, acceptance and the store.
 
     Size note: the store carries per-doc shingle-hash arrays (~8 B per
     distinct shingle, comparable to the text itself) because exact-Jaccard
@@ -182,20 +184,9 @@ def incremental_dedup(
     new_docs = exact_dedup(new_docs, key, text_col)  # within-batch keep-one
 
     sig_cols = [f"h{i}" for i in range(8)]
-    feat = new_docs.select(
-        key,
-        F.md5(F.col(text_col)).alias("content_hash"),
-        shingle_hashes(F.col(text_col)).alias("shingles"),
-    )
-    def _seeded(b: int):
-        # MUST be a one-parameter lambda: pyspark treats a two-parameter
-        # transform lambda as (element, index) — a `lambda s, b=b:` default
-        # captured the index column as the seed and made the minhash
-        # order-dependent (0/8 shared hashes on an 0.87-Jaccard pair)
-        return lambda s: F.xxhash64(F.lit(b), s)
-
-    new_sig = feat.withColumns(
-        {f"h{b}": F.array_min(F.transform(F.col("shingles"), _seeded(b))) for b in range(8)}
+    new_sig = minhash_signatures(
+        new_docs.select(key, text_col, F.md5(F.col(text_col)).alias("content_hash")),
+        key, text_col,
     )
 
     sig_store = str(sig_store)
@@ -204,11 +195,13 @@ def incremental_dedup(
         new_sig = new_sig.join(old.select("content_hash"), "content_hash", "left_anti")
     else:
         old = spark.createDataFrame([], new_sig.schema)
+    # bands, cap, pair join, verify and accept read the batch features;
+    # nothing reads them after the store append (eviction recomputes safely)
+    new_sig = new_sig.persist()
+    new_sig.count()
 
     def banded(sig: DataFrame, is_new: bool) -> DataFrame:
-        return lsh_bands(sig.filter(F.size("shingles") > 0), key).withColumn(
-            "is_new", F.lit(is_new)
-        )
+        return lsh_bands(sig, key).withColumn("is_new", F.lit(is_new))
 
     # the cap counts the live band stream of store + batch
     all_b = drop_hot_keys(
@@ -251,6 +244,7 @@ def incremental_dedup(
     # input).  At cluster scale this would be a write to a staging table;
     # localCheckpoint is the single-app equivalent.
     accepted_sig = accepted_sig.localCheckpoint(eager=True)
+    new_sig.unpersist()
 
     n_accepted = accepted_sig.count()
     accepted = new_docs.join(accepted_sig.select(key), key, "left_semi")

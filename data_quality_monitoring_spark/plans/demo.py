@@ -21,7 +21,6 @@ path) — only the corruption kernels themselves are Arrow UDFs.
 from __future__ import annotations
 
 import json
-from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -35,6 +34,7 @@ from ..catalog import (
 )
 from ..operators.injection import inject_column
 from ..operators.multifield import detect_fields
+from ..session import write_text
 
 
 def inject_catalog(
@@ -216,10 +216,8 @@ def single_sample_demo(
     )
     cells = detect_cells_by_method(corrupted, key)
 
-    out = Path(out_dir)
-    out.mkdir(parents=True, exist_ok=True)
-    cells.write.mode("overwrite").parquet(str(out / "cell_findings.parquet"))
-    labels.write.mode("overwrite").parquet(str(out / "labels.parquet"))
+    cells.write.mode("overwrite").parquet(f"{out_dir}/cell_findings.parquet")
+    labels.write.mode("overwrite").parquet(f"{out_dir}/labels.parquet")
 
     # collapse detections to per-(row, field) method flags first — a cell
     # detected by BOTH validation and pattern must count once per method
@@ -288,5 +286,5 @@ def single_sample_demo(
     probes = load_probe_reports(probe_dirs)
     if probes:
         report["model_probes"] = probes
-    (out / "consolidated_report.json").write_text(json.dumps(report, indent=1))
+    write_text(spark, f"{out_dir}/consolidated_report.json", json.dumps(report, indent=1))
     return report

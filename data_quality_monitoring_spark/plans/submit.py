@@ -25,7 +25,7 @@ import json
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from ..session import local_table
+from ..session import local_table, write_text
 from ..sources.manifest import PartitionedSink
 from .pipeline import filter_metrics, filter_stage, quality_filter
 
@@ -503,18 +503,14 @@ def _apply_decontaminate(spark: SparkSession, docs, args, stats: dict):
     if mode == "audit":
         # report, don't drop: per-doc overlap fraction + dirty verdict to
         # <output>/contamination_report; the corpus ships unchanged
-        from pathlib import Path
-
         from ..operators.dedup import contamination_stats
 
         rep = contamination_stats(
             docs, bench, "url", text_col="text_scrubbed",
             frac_threshold=args.decontaminate_threshold,
         )
-        rep.write.mode("overwrite").parquet(
-            str(Path(args.output) / "contamination_report")
-        )
-        rep = spark.read.parquet(str(Path(args.output) / "contamination_report"))
+        rep.write.mode("overwrite").parquet(f"{args.output}/contamination_report")
+        rep = spark.read.parquet(f"{args.output}/contamination_report")
         stats["contamination_dirty_docs"] = rep.filter(F.col("dirty")).count()
         stats["decontaminated_docs_dropped"] = 0
         return docs
@@ -551,8 +547,6 @@ def run_corpus(spark: SparkSession, args: argparse.Namespace) -> dict:
     """corpus: the full training-corpus build (plans/corpus.build_corpus —
     filter → exact dedup → near-dup clusters → optional stratified sample)
     written as parquet + a stage-counts JSON."""
-    from pathlib import Path
-
     from .corpus import build_corpus
 
     pages = _drop_pages(spark, spark.read.parquet(args.input), args)
@@ -664,7 +658,7 @@ def run_corpus(spark: SparkSession, args: argparse.Namespace) -> dict:
             .parquet(f"{args.output}/corpus_shuffled")
         )
         stats["shuffle_shards"] = n_shuf
-    Path(args.output, "corpus_stats.json").write_text(json.dumps(stats, indent=1))
+    write_text(spark, f"{args.output}/corpus_stats.json", json.dumps(stats, indent=1))
     return stats
 
 
@@ -693,7 +687,7 @@ def run_ml_train(spark: SparkSession, args: argparse.Namespace) -> dict:
         from .probe import probe_langid
 
         report = probe_langid(spark, LangIdModel.from_npz(out), docs, n=probe_n)
-        Path(args.output, "train_probe.json").write_text(json.dumps(report, indent=1))
+        write_text(spark, f"{args.output}/train_probe.json", json.dumps(report, indent=1))
         summary["probe"] = report
     return summary
 
@@ -734,7 +728,7 @@ def run_llm_train(spark: SparkSession, args: argparse.Namespace) -> dict:
             lang: load_ngram_npz(info["path"]) for lang, info in summary.items()
         }
         report = probe_bigram(spark, reloaded, docs, n=probe_n)
-        Path(args.output, "train_probe.json").write_text(json.dumps(report, indent=1))
+        write_text(spark, f"{args.output}/train_probe.json", json.dumps(report, indent=1))
         summary["_probe"] = report
     return summary
 
@@ -746,8 +740,6 @@ def run_hp_search(spark: SparkSession, args: argparse.Namespace) -> dict:
     training happens ONCE and every sampled config is scored in one Arrow
     pass (operators/hpo.py).  Writes the reference-shaped results JSON
     (best_params / all_results / performance_analysis)."""
-    from pathlib import Path
-
     from pyspark.sql import functions as F
 
     from ..operators.hpo import hp_search, hp_search_ml
@@ -777,25 +769,20 @@ def run_hp_search(spark: SparkSession, args: argparse.Namespace) -> dict:
             # the LM must model CLEAN text; corrupted rows stay out of training
             train_filter=~F.col("truth_bad"),
         )
-    Path(args.output).mkdir(parents=True, exist_ok=True)
-    Path(args.output, "hp_search_results.json").write_text(
-        json.dumps(report, indent=1)
-    )
+    write_text(spark, f"{args.output}/hp_search_results.json", json.dumps(report, indent=1))
     return report
 
 
 def run_analyze_column(spark: SparkSession, args: argparse.Namespace) -> dict:
     """analyze-column (reference main.py → analyze_column.py:140-158):
     the profiling flow through the same dispatcher."""
-    from pathlib import Path
-
     from .analyze import analyze_column
 
     df = spark.read.parquet(args.input)
     report = analyze_column(df, args.field)
-    Path(args.output).mkdir(parents=True, exist_ok=True)
-    Path(args.output, f"analyze_{args.field}.json").write_text(
-        json.dumps(report, indent=2, default=str)
+    write_text(
+        spark, f"{args.output}/analyze_{args.field}.json",
+        json.dumps(report, indent=2, default=str),
     )
     return {"column": args.field, "n_top_values": len(report["top_values"])}
 
@@ -836,22 +823,18 @@ def run_multi_eval(spark: SparkSession, args: argparse.Namespace) -> dict:
     )
     per_sample.write.mode("overwrite").parquet(f"{args.output}/per_sample_metrics")
     summary = evaluation_summary(spark.read.parquet(f"{args.output}/per_sample_metrics"))
-    from pathlib import Path
-
     from .probe import load_probe_reports
 
     probes = load_probe_reports(args.probe_dirs or ())
     if probes:
         summary["model_probes"] = probes
-    Path(args.output, "evaluation_summary.json").write_text(json.dumps(summary, indent=1))
+    write_text(spark, f"{args.output}/evaluation_summary.json", json.dumps(summary, indent=1))
     return summary
 
 
 def run_ml_curves(spark: SparkSession, args: argparse.Namespace) -> dict:
     """ml-curves (reference ml_curve_generator.py:234-367): single-pass
     threshold sweep persisted as a metrics table + JSON artifact."""
-    from pathlib import Path
-
     from .evaluate import perplexity_threshold_curve
 
     pages = spark.read.parquet(args.input)
@@ -864,8 +847,7 @@ def run_ml_curves(spark: SparkSession, args: argparse.Namespace) -> dict:
             .orderBy("threshold").collect()]
     best = max(rows, key=lambda r: r["f1"]) if rows else None
     out = {"n_thresholds": len(rows), "best": best, "curve": rows}
-    Path(args.output).mkdir(parents=True, exist_ok=True)
-    Path(args.output, "ppl_threshold_curve.json").write_text(json.dumps(out, indent=1))
+    write_text(spark, f"{args.output}/ppl_threshold_curve.json", json.dumps(out, indent=1))
     return {"n_thresholds": len(rows), "best": best}
 
 
@@ -874,8 +856,6 @@ def run_incremental(spark: SparkSession, args: argparse.Namespace) -> dict:
     corpus signatures (plans/corpus.incremental_dedup) and append the
     accepted docs + signatures.  The monthly-dump workflow: each run costs
     O(batch), not O(corpus)."""
-    from pathlib import Path
-
     from .corpus import incremental_dedup
 
     import zlib
@@ -930,8 +910,7 @@ def run_incremental(spark: SparkSession, args: argparse.Namespace) -> dict:
     )
     stats.update(pre_stats)
     kept.unpersist()
-    Path(args.output).mkdir(parents=True, exist_ok=True)
-    Path(args.output, "last_batch_stats.json").write_text(json.dumps(stats, indent=1))
+    write_text(spark, f"{args.output}/last_batch_stats.json", json.dumps(stats, indent=1))
     return stats
 
 

@@ -297,3 +297,15 @@ def path_exists(spark: SparkSession, path: str) -> bool:
     ``pathlib`` check would see nothing."""
     p = spark._jvm.org.apache.hadoop.fs.Path(path)
     return p.getFileSystem(spark._jsc.hadoopConfiguration()).exists(p)
+
+
+def write_text(spark: SparkSession, path: str, text: str) -> None:
+    """Write ``text`` as UTF-8 to ``path`` (overwriting) through the Hadoop
+    ``FileSystem`` its scheme names, like :func:`path_exists`: a report
+    lands beside the data Spark wrote under a URI output."""
+    p = spark._jvm.org.apache.hadoop.fs.Path(path)
+    out = p.getFileSystem(spark._jsc.hadoopConfiguration()).create(p, True)
+    try:
+        out.write(bytearray(text.encode("utf-8")))
+    finally:
+        out.close()

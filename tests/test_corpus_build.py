@@ -117,11 +117,14 @@ def test_incremental_dedup_across_batches(spark, tmp_path):
     assert urls == ["b4/x1"] and s4["accepted"] == 1
 
 
-def test_incremental_dedup_review_regressions(spark, tmp_path):
+def test_incremental_dedup_review_regressions(spark, tmp_path, monkeypatch):
     """Pinned fixes from the round-2 self-review: short docs survive,
     the FIRST batch dedups internally, transitive new-x-new chains keep
     exactly one doc (connected components), and the accepted docs are
-    handed to the writer BEFORE the signature store moves."""
+    handed to the writer BEFORE the signature store moves.  The shingle
+    UDF runs once per doc: the plan that checkpoints the accepted
+    signatures holds one ``ArrowEvalPython`` node (the cached batch
+    features print it once per scan, always with the same ids)."""
     import pandas as pd
 
     from data_quality_monitoring_spark.plans.corpus import incremental_dedup
@@ -141,10 +144,21 @@ def test_incremental_dedup_review_regressions(spark, tmp_path):
             ("b1/tiny", "two words"),
         ]
     )
-    writes = []
-    acc1, s1 = incremental_dedup(
-        spark, b1, store, accepted_writer=lambda df: writes.append(df.count())
-    )
+    writes, plans = [], []
+    checkpoint = type(b1).localCheckpoint
+
+    def spy(df, *args, **kwargs):
+        plans.append(df._jdf.queryExecution().executedPlan().toString())
+        return checkpoint(df, *args, **kwargs)
+
+    with monkeypatch.context() as mp:
+        mp.setattr(type(b1), "localCheckpoint", spy)
+        acc1, s1 = incremental_dedup(
+            spark, b1, store, accepted_writer=lambda df: writes.append(df.count())
+        )
+    udf_nodes = {ln[ln.index("ArrowEvalPython"):] for ln in plans[-1].split("\n")
+                 if "ArrowEvalPython" in ln}
+    assert len(udf_nodes) == 1
     urls1 = sorted(r["url"] for r in acc1.select("url").collect())
     assert urls1 == ["b1/a", "b1/tiny"]  # dup dropped, short doc SURVIVES
     assert s1 == {"batch_in": 3, "accepted": 2, "dropped": 1}
@@ -232,3 +246,27 @@ def test_incremental_stores_read_uri_paths(spark, tmp_path):
     again = incremental_substring_dedup(spark, docs, gram_store).first()
     assert first["n_removed"] == 0
     assert again["n_removed"] == 30 and again["text_dedup"] == ""
+
+
+def test_incremental_keep_one_matches_build_corpus(spark, tmp_path):
+    """One keep-one rule: incremental dedup of ``build_corpus``'s kept docs
+    into an empty store accepts exactly the urls ``build_corpus`` keeps.
+    The pages: 120 generated ones plus, for each of the first 12, an exact
+    copy and a near copy (last word dropped) under larger urls."""
+    from data_quality_monitoring_spark.plans.corpus import incremental_dedup
+
+    src = generate_pages_pandas(120)
+    head = src.head(12)
+    copies = pd.concat([
+        head.assign(url=head.url + "#exact"),
+        head.assign(url=head.url + "#near", text=head.text.str.rsplit(" ", n=1).str[0]),
+    ])
+    pages = generate_pages(spark, 120).unionByName(spark.createDataFrame(copies[src.columns]))
+    corpus, stats = build_corpus(spark, pages)
+    urls = {r.url for r in corpus.select("url").collect()}
+    spark.catalog.clearCache()
+    kept = quality_filter(spark, pages).filter("keep").select("url", "lang", "text_scrubbed")
+    acc, s = incremental_dedup(spark, kept.persist(), str(tmp_path / "sigs"))
+    assert {r.url for r in acc.select("url").collect()} == urls
+    kept.unpersist()
+    assert s["accepted"] == stats["final"] == len(urls) < stats["after_exact_dedup"]

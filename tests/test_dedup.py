@@ -76,6 +76,38 @@ def test_minhash_lsh_finds_near_dups(spark, docs):
     assert all(0.5 <= j <= 1.0 for j in v.values())
 
 
+# h0..h7 of DOCS[0]'s text as ``plans.corpus.incremental_dedup``'s signature
+# store holds them: min over its 3-word shingles s of xxhash64(b, xxhash64(s))
+STORE_SIGNATURE = [
+    -7526567701951179316, -6306064995877671485, -8867447697322737600,
+    -4402366388235785526, -8108882996475918782, -8867486211881703012,
+    -9044326267789243993, -7828067673173597054,
+]
+
+
+def test_minhash_signature_values_pinned(spark):
+    """``minhash_signatures`` is the signature store's MinHash: its xxhash64
+    values are the stored ones, its md5 values a ``hashlib`` reference over
+    the Python 3-word shingles, and a doc without shingles has NULL hashes
+    and no band rows."""
+    import hashlib
+
+    df = spark.createDataFrame([(1, DOCS[0][1]), (2, "two words")], ["doc_id", "text"])
+    sig = {r["doc_id"]: r for r in D.minhash_signatures(df, "doc_id").collect()}
+    assert [sig[1][f"h{b}"] for b in range(8)] == STORE_SIGNATURE
+    assert sig[2]["shingles"] == [] and [sig[2][f"h{b}"] for b in range(8)] == [None] * 8
+    bands = D.lsh_bands(D.minhash_signatures(df, "doc_id"), "doc_id").collect()
+    assert sorted(r["doc_id"] for r in bands) == [1] * 4
+
+    w = DOCS[0][1].split()
+    shingles = {" ".join(w[i : i + 3]) for i in range(len(w) - 2)}
+    md5 = D.minhash_signatures(df, "doc_id", n_hashes=4, hash_fn="md5").filter("doc_id = 1").first()
+    assert sorted(md5["shingles"]) == sorted(shingles)
+    assert [md5[f"h{b}"] for b in range(4)] == [
+        min(hashlib.md5(f"{b}{s}".encode()).hexdigest() for s in shingles) for b in range(4)
+    ]
+
+
 def test_simhash_near_dup(spark, docs):
     # short docs: one word of 13 changed flips ~6 bits (measured) — simhash
     # near-dup is a long-document tool, so test it on long docs where a

@@ -216,10 +216,12 @@ def test_cli_extract_html_flag(spark, tmp_path):
     assert len(a) == 128 and a.equals(b)
 
 
-def test_cli_incremental_mode(spark, tmp_path):
+def test_cli_incremental_mode(spark, tmp_path, monkeypatch):
     """--mode incremental: two successive batches through the ship CLI —
     the second batch's repeats of the first are dropped via the signature
-    store, fresh docs append to the corpus."""
+    store, fresh docs append to the corpus.  The second run names its
+    output as a ``file://`` URI: its report lands in that output, and
+    nothing is written under the working directory."""
     from data_quality_monitoring_spark.plans.submit import main
 
     b1, b2 = str(tmp_path / "b1"), str(tmp_path / "b2")
@@ -228,19 +230,23 @@ def test_cli_incremental_mode(spark, tmp_path):
     pages = generate_pages(spark, 160, partitions=4)
     pages.write.parquet(b1)
     pages.write.parquet(b2)  # identical dump re-delivered
+    cwd = tmp_path / "cwd"
+    cwd.mkdir()
+    monkeypatch.chdir(cwd)
 
-    common = ["--output", out, "--sig-store", store]
-    main(["--mode", "incremental", "--input", b1, *common])
+    main(["--mode", "incremental", "--input", b1, "--output", out, "--sig-store", store])
     import json as j
 
     s1 = j.loads((tmp_path / "out" / "last_batch_stats.json").read_text())
     assert s1["dropped"] == 0 and s1["accepted"] > 50
 
-    main(["--mode", "incremental", "--input", b2, *common])
+    main(["--mode", "incremental", "--input", b2, "--output", f"file://{out}",
+          "--sig-store", store])
     s2 = j.loads((tmp_path / "out" / "last_batch_stats.json").read_text())
     assert s2["accepted"] == 0 and s2["dropped"] == s1["accepted"]
     corpus = spark.read.parquet(f"{out}/corpus")
     assert corpus.count() == s1["accepted"]  # batch 2 added nothing
+    assert list(cwd.iterdir()) == []
 
 
 def test_incremental_gopher_gate_matches_filter_mode(spark, tmp_path):
