@@ -10,9 +10,14 @@ web-text pipeline runs between filtering and training.  Design rules:
   ``hash()``),
 * verification (exact Jaccard / Hamming / cosine) runs only on candidates,
 * one hot-key cap, :func:`drop_hot_keys`, bounds every capped bucket
-  self-join (minhash-LSH bands, embedding tables, fuzzy decontamination
-  bands, incremental dedup, shingle document frequency),
-* one MinHash, :func:`minhash_signatures`: per row, one shingle-UDF call.
+  join (minhash-LSH bands, embedding tables, fuzzy decontamination
+  bands, shingle document frequency),
+* one MinHash, :func:`minhash_signatures`: per row, one shingle-UDF call,
+* one near-dup pair join, :func:`bucket_pairs`: the capped bucket
+  self-join of minhash-LSH bands and embedding tables, with an optional
+  stored side for incremental dedup,
+* one keep-one rule, :func:`near_dup_losers`, and one ExactSubstr
+  dup-start rule: batch dedup is incremental dedup without a store.
 """
 
 from __future__ import annotations
@@ -106,11 +111,11 @@ def lsh_bands(
     """(key, band, bucket) rows, ``n_hashes // band_size`` per doc: band i's
     bucket is ``xxhash64(i, h{i·r}, …, h{i·r+r−1})`` over its ``band_size``
     minhashes (xxhash64 is type-agnostic: long or string signatures).  The
-    band definition of ``lsh_candidate_pairs``, ``fuzzy_decontaminate``
-    (one-hash bands) and ``plans.corpus.incremental_dedup``, whose stored
-    signatures it buckets.  A doc with NULL hashes gets no rows: the filter
-    is on the stacked ``bucket``, so the optimizer cannot push it under an
-    uncached signature projection and re-run the shingle UDF there."""
+    band definition of ``lsh_candidate_pairs`` (batch and stored
+    signatures) and ``fuzzy_decontaminate`` (one-hash bands).  A doc with
+    NULL hashes gets no rows: the filter is on the stacked ``bucket``, so
+    the optimizer cannot push it under an uncached signature projection
+    and re-run the shingle UDF there."""
     n_bands = n_hashes // band_size
     h = [F.col(f"h{j}") for j in range(n_hashes)]
     bands = [
@@ -146,42 +151,58 @@ def drop_hot_keys(df: DataFrame, keys: list[str], cap: int) -> DataFrame:
     return df.join(hot, keys, "left_anti")
 
 
+def bucket_pairs(
+    rows: DataFrame, key: str, bucket: list[str], max_bucket: int | None,
+    store: DataFrame | None,
+) -> DataFrame:
+    """The near-dup family's one capped bucket self-join: distinct
+    (a, b, partner_is_new) for keys sharing a ``bucket`` group, ``a`` a
+    key of the batch ``rows``.  Two batch keys pair once, a < b.  With
+    ``store`` (rows of the same shape), a batch key also pairs with every
+    stored row of another key, on either side of it in key order; store ×
+    store pairs never enumerate.  ``max_bucket`` caps store and batch
+    rows together (:func:`drop_hot_keys`).  ``partner_is_new`` is a
+    literal and the store is unioned only when given, so without one the
+    optimizer folds every store predicate away."""
+    rows = rows.withColumn("_new", F.lit(True))
+    if store is not None:
+        rows = rows.unionByName(store.withColumn("_new", F.lit(False)))
+    if max_bucket is not None:
+        rows = drop_hot_keys(rows, bucket, max_bucket)
+    a, b = rows.filter("_new").alias("a"), rows.alias("b")
+    ak, bk = F.col(f"a.{key}"), F.col(f"b.{key}")
+    on = [F.col(f"a.{c}") == F.col(f"b.{c}") for c in bucket]
+    return (
+        a.join(b, [*on, (ak < bk) | (~F.col("b._new") & (ak != bk))])
+        .select(ak.alias("a"), bk.alias("b"), F.col("b._new").alias("partner_is_new"))
+        .distinct()  # a pair sharing several buckets verifies once
+    )
+
+
 def lsh_candidate_pairs(
     sig: DataFrame, key: str, n_hashes: int = 8, band_size: int = 2,
-    max_bucket: int | None = 500,
+    max_bucket: int | None = 500, store: DataFrame | None = None,
 ) -> DataFrame:
-    """Distinct candidate pairs (a < b) sharing at least one LSH band.
+    """Distinct candidate pairs (a, b, partner_is_new) sharing at least one
+    LSH band: :func:`lsh_bands` of the batch ``sig`` (and of the stored
+    signatures ``store``, if given) through :func:`bucket_pairs`.  Without
+    a store every pair is a < b with ``partner_is_new`` true.
 
-    Bands are concatenations of ``band_size`` minhashes; docs are grouped by
-    (band_id, band_value) and pairs enumerated within buckets via self-join
-    on the bucket key.  ``max_bucket`` caps the (band, bucket) groups with
-    :func:`drop_hot_keys` before the self-join.  Members of an oversized
-    bucket still pair through their OTHER bands unless they are wholesale
-    near-identical — exactly the family whose canonical representative
-    survives exact dedup upstream.  Measured on 220k docs with 10% planted
-    dups and NO upstream quality filter: 298 s uncapped → bounded with the
-    cap (see BENCH.md); same verified pairs on the contract corpus (max
-    bucket there ≪ cap)."""
-    # materialize the (key, band, bucket) rows ONCE: the hot-bucket
+    ``max_bucket`` caps the (band, bucket) groups before the self-join.
+    Members of an oversized bucket still pair through their OTHER bands
+    unless they are wholesale near-identical — exactly the family whose
+    canonical representative survives exact dedup upstream.  Measured on
+    220k docs with 10% planted dups and NO upstream quality filter: 298 s
+    uncapped → bounded with the cap (see BENCH.md); same verified pairs on
+    the contract corpus (max bucket there ≪ cap)."""
+    # materialize the batch's (key, band, bucket) rows ONCE: the hot-bucket
     # aggregate and the self-join otherwise each re-run the full signature
     # lineage (shingle UDF + n_hashes array mins) of an uncached ``sig`` —
     # 2 full sig computations on a 1M-doc corpus build.  Same narrow-row
     # argument as the simhash bucket table below: 3 small columns × n_bands.
-    buckets = lsh_bands(sig, key, n_hashes, band_size).localCheckpoint(eager=True)
-    if max_bucket is not None:
-        buckets = drop_hot_keys(buckets, ["band", "bucket"], max_bucket)
-    a = buckets.alias("a")
-    b = buckets.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col(f"a.{key}") < F.col(f"b.{key}")),
-        )
-        .select(F.col(f"a.{key}").alias("a"), F.col(f"b.{key}").alias("b"))
-        .distinct()
-    )
+    batch = lsh_bands(sig, key, n_hashes, band_size).localCheckpoint(eager=True)
+    stored = None if store is None else lsh_bands(store, key, n_hashes, band_size)
+    return bucket_pairs(batch, key, ["band", "bucket"], max_bucket, stored)
 
 
 def signature_prefilter(
@@ -224,7 +245,7 @@ def signature_prefilter(
         )
         .join(s.withColumnRenamed(key, "b").withColumnRenamed("_s", "_sb"), "b")
         .filter(est >= F.lit(min_est))
-        .select("a", "b")
+        .select(*pairs.columns)
     )
 
 
@@ -469,12 +490,13 @@ def embedding_near_dup_pairs(
 
     All table buckets are computed in ONE vectorized Arrow UDF pass
     (batch matrix multiply), posexploded to (table, bucket) rows, and
-    candidates come from an equi-join on that pair — never all-pairs.
+    candidates come from :func:`bucket_pairs`, the equi-join on that pair
+    that MinHash-LSH uses too — never all-pairs.
 
     ``max_bucket`` guards the one remaining skew hazard: a mass-duplicated
     embedding family (SEO template pages, empty-page vectors) lands every
     copy in the SAME bucket of EVERY table, turning the self-join quadratic
-    in the family size × n_tables.  When set, :func:`drop_hot_keys` caps
+    in the family size × n_tables.  When set, :func:`bucket_pairs` caps
     the (table, bucket) groups before the self-join.  Identical-vector
     families should be collapsed by exact dedup upstream — the cap bounds
     the damage when they are not.  Default None keeps the contract query
@@ -508,19 +530,7 @@ def embedding_near_dup_pairs(
     tabled = with_b.select("k", F.posexplode("bkts").alias("tbl", "bkt")).localCheckpoint(
         eager=True
     )
-    if max_bucket is not None:
-        tabled = drop_hot_keys(tabled, ["tbl", "bkt"], max_bucket)
-    a, b = tabled.alias("a"), tabled.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.tbl") == F.col("b.tbl"))
-            & (F.col("a.bkt") == F.col("b.bkt"))
-            & (F.col("a.k") < F.col("b.k")),
-        )
-        .select(F.col("a.k").alias("ka"), F.col("b.k").alias("kb"))
-        .distinct()
-    )
+    cand = bucket_pairs(tabled, "k", ["tbl", "bkt"], max_bucket, None)
     # verify on candidates only: join the (few) candidate pairs back to the
     # vectors rather than carrying 2 vectors through the distinct.  Taken
     # from the RAW frame, not with_b — the verify sides need no buckets,
@@ -528,17 +538,15 @@ def embedding_near_dup_pairs(
     # both join lineages.
     from .similarity import _dot, _norm
 
-    va = df.select(F.col(key).alias("ka"), F.col(vec_col).alias("va"))
-    vb = df.select(F.col(key).alias("kb"), F.col(vec_col).alias("vb"))
+    va = df.select(F.col(key).alias("a"), F.col(vec_col).alias("va"))
+    vb = df.select(F.col(key).alias("b"), F.col(vec_col).alias("vb"))
     va_, vb_ = F.col("va"), F.col("vb")
     return (
-        cand.join(va, "ka")
-        .join(vb, "kb")
+        cand.join(va, "a")
+        .join(vb, "b")
         .withColumn("cos", _dot(va_, vb_) / (_norm(va_) * _norm(vb_)))
         .filter(F.col("cos") >= threshold)
-        .select(
-            F.col("ka").alias("a"), F.col("kb").alias("b"), F.round("cos", round_to).alias("cos")
-        )
+        .select("a", "b", F.round("cos", round_to).alias("cos"))
     )
 
 
@@ -988,11 +996,11 @@ def substring_dedup(
        codegen, zero Python, no shuffle,
     2. posexplode to an (id, start, hash) stream — exactly one row per
        corpus token position, 16 bytes each,
-    3. count occurrences per hash (map-side combined; the ONE shuffle) and
-       keep hashes with count >= 2 — at web scale this "duplicated-window"
-       set is orders of magnitude smaller than the stream,
-    4. join the small dup set back (AQE broadcasts it), collect duplicated
-       starts per doc (second, tiny shuffle),
+    3. count occurrences per hash (one window count; the ONE wide
+       shuffle) and keep starts whose hash occurs >= 2 times — at web
+       scale this "duplicated-window" set is orders of magnitude smaller
+       than the stream,
+    4. collect duplicated starts per doc (second, tiny shuffle),
     5. rebuild each doc scan-locally: token at position p survives iff no
        duplicated start s satisfies s <= p <= s+k-1 (a bounded
        higher-order-function filter over the doc's own arrays).
@@ -1004,28 +1012,16 @@ def substring_dedup(
 
     Returns (id, n_tokens, n_removed, text_dedup).
     """
-    base, occ = _substr_base_occ(docs, text_col, id_col, k)
-    # duplicated starts via ONE window count over the hash partition — the
-    # groupBy+semi-join alternative shuffles the identical full stream by
-    # _h for the join anyway AND recomputes the O(n·k) gram pass on the
-    # second branch (measured 2.33 s → 1.39 s at sf0.1 for this form);
-    # skew profile is the same: a mass-duplicated span lands all copies in
-    # one reduce partition either way (spillable window buffer here,
-    # one-reducer join key there)
-    from pyspark.sql import Window
-
-    dup_starts = (
-        occ.withColumn("_c", F.count("*").over(Window.partitionBy("_h")))
-        .filter(F.col("_c") >= 2)
-        .groupBy("_id")
-        .agg(F.collect_list("_s").alias("_ds"))
-    )
-    return _substr_rebuild(base, dup_starts, id_col, k)
+    return _exact_substr(docs, text_col, id_col, k, None)[0]
 
 
-def _substr_base_occ(docs: DataFrame, text_col: str, id_col: str, k: int):
-    """Shared front half of the ExactSubstr operators: tokenized docs plus
-    the (id, start, gram-hash) occurrence stream (one row per position)."""
+def _exact_substr(
+    docs: DataFrame, text_col: str, id_col: str, k: int, seen: DataFrame | None
+):
+    """Both ExactSubstr operators: (deduped docs, the (_id, _s, _h)
+    occurrence stream, one row per gram start).  One dup-start rule: a
+    start is duplicated iff its gram hash occurs >= 2 times in ``docs`` or
+    is in ``seen`` (an (h) frame of earlier gram hashes, or None)."""
     if k < 2:
         # k=0 would make every empty slice hash equal (total removal);
         # k=1 is plain token-frequency removal — both are caller mistakes
@@ -1049,11 +1045,25 @@ def _substr_base_occ(docs: DataFrame, text_col: str, id_col: str, k: int):
     occ = base.select("_id", F.posexplode(grams).alias("_i", "_h")).select(
         "_id", (F.col("_i") + 1).alias("_s"), "_h"
     )
-    return base, occ
+    # duplicated starts via ONE window count over the hash partition — the
+    # groupBy+semi-join alternative shuffles the identical full stream by
+    # _h for the join anyway AND recomputes the O(n·k) gram pass on the
+    # second branch (measured 2.33 s → 1.39 s at sf0.1 for this form);
+    # skew profile is the same: a mass-duplicated span lands all copies in
+    # one reduce partition either way (spillable window buffer here,
+    # one-reducer join key there)
+    from pyspark.sql import Window
 
-
-def _substr_rebuild(base: DataFrame, dup_starts: DataFrame, id_col: str, k: int) -> DataFrame:
-    """Shared back half: drop every token covered by a duplicated start."""
+    dup = (
+        occ.withColumn("_c", F.count("*").over(Window.partitionBy("_h")))
+        .filter(F.col("_c") >= 2)
+        .select("_id", "_s")
+    )
+    if seen is not None:  # a presence semi-join; a start listed twice is harmless
+        dup = dup.unionByName(
+            occ.join(seen, occ["_h"] == seen["h"], "left_semi").select("_id", "_s")
+        )
+    dup_starts = dup.groupBy("_id").agg(F.collect_list("_s").alias("_ds"))
     joined = base.join(dup_starts, "_id", "left").select(
         "_id",
         "_toks",
@@ -1065,12 +1075,13 @@ def _substr_rebuild(base: DataFrame, dup_starts: DataFrame, id_col: str, k: int)
             "_ds", lambda s: (s <= i + 1) & (i + 1 <= s + k - 1)
         ),
     )
-    return joined.select(
+    deduped = joined.select(
         F.col("_id").alias(id_col),
         F.size("_toks").alias("n_tokens"),
         (F.size("_toks") - F.size(kept)).alias("n_removed"),
         F.concat_ws(" ", kept).alias("text_dedup"),
     )
+    return deduped, occ
 
 
 def incremental_substring_dedup(
@@ -1090,32 +1101,22 @@ def incremental_substring_dedup(
 
     ``gram_store`` is a parquet dir of DISTINCT gram hashes (8 bytes each)
     of every batch's ORIGINAL text — stored pre-removal, so a span that
-    survived batch N still kills its re-crawl in batch N+1.  Per batch the
-    store-side work is one presence semi-join on the hash; batch-internal
-    repeats use the same window count as the batch operator.  The result
+    survived batch N still kills its re-crawl in batch N+1.  Dup starts
+    come from the batch operator's rule with the store as its seen grams:
+    the store-side work is one presence semi-join on the hash.  The result
     is eagerly materialized BEFORE the store append (the lazy-plan-reads-
     mutated-input hazard, see incremental_dedup).
     """
-    from pyspark.sql import Window
-
-    base, occ = _substr_base_occ(docs, text_col, id_col, k)
-    batch_dup = occ.withColumn(
-        "_c", F.count("*").over(Window.partitionBy("_h"))
-    ).filter(F.col("_c") >= 2).select("_id", "_s")
+    seen = spark.read.parquet(gram_store) if path_exists(spark, gram_store) else None
+    result, occ = _exact_substr(docs, text_col, id_col, k, seen)
     new_grams = occ.select(F.col("_h").alias("h")).distinct()
-    if path_exists(spark, gram_store):
-        seen = spark.read.parquet(gram_store)
-        store_hit = occ.join(seen, occ["_h"] == seen["h"], "left_semi").select("_id", "_s")
-        dup = batch_dup.unionByName(store_hit).distinct()
+    if seen is not None:
         # append only genuinely-new hashes: the store stays the distinct
         # gram set ever seen instead of growing with every re-crawl
         new_grams = new_grams.join(seen, "h", "left_anti")
-    else:
-        dup = batch_dup
-    dup_starts = dup.groupBy("_id").agg(F.collect_list("_s").alias("_ds"))
     # BOTH plans that read the store must materialize before the append
     # mutates it (persist is not enough — see incremental_dedup)
-    result = _substr_rebuild(base, dup_starts, id_col, k).localCheckpoint(eager=True)
+    result = result.localCheckpoint(eager=True)
     new_grams = new_grams.localCheckpoint(eager=True)
     new_grams.write.mode("append").parquet(gram_store)
     return result
@@ -1149,3 +1150,23 @@ def component_keep_best(
     )
     w = Window.partitionBy("component").orderBy(F.desc("score"), F.asc("node"))
     return members.withColumn("is_retained", F.row_number().over(w) == 1)
+
+
+def near_dup_losers(pairs: DataFrame, key: str, scores: DataFrame | None) -> DataFrame:
+    """The one keep-one rule of MinHash dedup: the ``key`` of every doc to
+    drop, given verified (a, b, partner_is_new) pairs.  A batch doc with a
+    stored partner loses; batch-only pairs form connected components, and
+    each keeps its min key or, with ``scores`` (key, score), its best
+    score (:func:`component_keep_best`).  Not distinct (a doc with several
+    stored partners repeats), so callers anti-join on it; without a store
+    or scores it folds to the collected components table, one row per
+    loser."""
+    stored = pairs.filter(~F.col("partner_is_new")).select(F.col("a").alias(key))
+    comp = connected_components(pairs.filter(F.col("partner_is_new")), "a", "b")
+    if scores is None:
+        batch = comp.filter(F.col("node") != F.col("component"))
+    else:
+        batch = component_keep_best(comp, scores, key, scores.columns[1]).filter(
+            ~F.col("is_retained")
+        )
+    return stored.unionByName(batch.select(F.col("node").alias(key)))

@@ -15,9 +15,8 @@ Spark-first shape, two passes over the verdicted pages:
   Hosts are Zipf-skewed (a big host owns millions of pages) but every
   aggregate here is associative, so map-side partial aggregation absorbs
   the skew before the shuffle — the hot host ships ~one row per input
-  partition, not one per page.  No salt needed (contrast
-  ``plans/pipeline.salted_group_stats``, which exists for the non-combining
-  collect_list case).
+  partition, not one per page.  No salt needed: salting a hot key only
+  pays for aggregates that cannot combine map-side, such as collect_list.
 * ``apply_host_blocklist``: the stats table at 10^8 hosts is itself big,
   but the *blocked subset* (low-keep-rate hosts above the support floor)
   is orders smaller, so only that projection joins back — broadcast left

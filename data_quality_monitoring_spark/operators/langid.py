@@ -24,6 +24,7 @@ crc32 (never Python's salted ``hash``), training is closed-form counting
 from __future__ import annotations
 
 from dataclasses import dataclass
+from typing import BinaryIO
 
 import numpy as np
 import pandas as pd
@@ -138,7 +139,7 @@ class LangIdModel:
             {"pred_lang": preds, "confidence": confs, "claimed_score": claimed_scores}
         )
 
-    def to_npz(self, path: str) -> None:
+    def to_npz(self, path: str | BinaryIO) -> None:
         np.savez_compressed(
             path,
             langs=np.array(self.langs),
@@ -148,7 +149,7 @@ class LangIdModel:
         )
 
     @classmethod
-    def from_npz(cls, path: str) -> "LangIdModel":
+    def from_npz(cls, path: str | BinaryIO) -> "LangIdModel":
         z = np.load(path, allow_pickle=False)
         feat = str(z["feat"]) if "feat" in z.files else "char"
         return cls(list(z["langs"]), z["log_probs"], z["log_priors"], feat)

@@ -22,6 +22,7 @@ from __future__ import annotations
 
 from collections import Counter, defaultdict
 from dataclasses import dataclass
+from typing import BinaryIO
 
 import numpy as np
 import pandas as pd
@@ -399,7 +400,7 @@ def train_ngram_distributed(
     }
 
 
-def save_ngram_npz(lm: NgramLM, path: str) -> None:
+def save_ngram_npz(lm: NgramLM, path: str | BinaryIO) -> None:
     """Persist one LM as a compressed npz: vocab as parallel arrays, the
     top-order count table as flat keys, plus the order and smoothing
     hyperparameters.  With :func:`load_ngram_npz` this is the
@@ -417,7 +418,7 @@ def save_ngram_npz(lm: NgramLM, path: str) -> None:
     )
 
 
-def load_ngram_npz(path: str) -> NgramLM:
+def load_ngram_npz(path: str | BinaryIO) -> NgramLM:
     z = np.load(path, allow_pickle=False)
     vocab = {str(w): int(i) for w, i in zip(z["words"], z["ids"])}
     order = int(z["order"][0])

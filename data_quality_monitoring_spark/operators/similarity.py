@@ -54,10 +54,9 @@ def train_centroids(
     corpus: DataFrame, vec_col: str, n_cells: int = 16, iters: int = 5, seed: int = 11,
     sample_limit: int = 10_000,
 ) -> np.ndarray:
-    """Deterministic k-means-lite on a driver-side sample (the coarse
-    quantizer is tiny; training it distributed would be overkill below
-    billions of vectors — at that point swap in ML-lib KMeans, same
-    contract)."""
+    """Deterministic k-means-lite on a local sample of at most
+    ``sample_limit`` vectors (the coarse quantizer is tiny, so a sample
+    places its cells).  Returns L2-normalized (n_cells, dim)."""
     sample = np.asarray(
         [r[0] for r in corpus.select(vec_col).limit(sample_limit).collect()], dtype="float64"
     )
@@ -70,27 +69,6 @@ def train_centroids(
             members = sample[assign == c]
             if len(members):
                 centroids[c] = members.mean(axis=0)
-    norms = np.linalg.norm(centroids, axis=1, keepdims=True)
-    return centroids / np.clip(norms, 1e-12, None)
-
-
-def train_centroids_mllib(
-    corpus: DataFrame, vec_col: str, n_cells: int = 16, iters: int = 20, seed: int = 11
-) -> np.ndarray:
-    """The billions-of-vectors coarse quantizer: pyspark.ml KMeans over the
-    FULL corpus (distributed Lloyd iterations), same contract as
-    :func:`train_centroids` — returns L2-normalized (n_cells, dim).
-    Use when a 10k driver sample stops being representative; recall is
-    pinned vs exact the same way (tests/test_similarity.py)."""
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    feats = corpus.select(
-        array_to_vector(F.col(vec_col).cast("array<double>")).alias("features")
-    )
-    km = KMeans(k=n_cells, maxIter=iters, seed=seed, initMode="k-means||")
-    model = km.fit(feats)
-    centroids = np.asarray([np.asarray(c) for c in model.clusterCenters()], dtype="float64")
     norms = np.linalg.norm(centroids, axis=1, keepdims=True)
     return centroids / np.clip(norms, 1e-12, None)
 

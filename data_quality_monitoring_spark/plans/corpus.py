@@ -7,9 +7,11 @@ composed from the individually-tested operators:
    verdict + scrubbed text (shuffle-free scan stage),
 2. exact dedup on the scrubbed bytes (one groupBy on a 128-bit hash),
 3. near-dup removal: MinHash signatures → LSH band candidates → exact
-   Jaccard verify → connected components → keep the component's min-key
-   doc (`operators/dedup.py` end to end; every join is an equi-join on a
-   bucket or pair key, never all-pairs; each doc is shingled once),
+   Jaccard verify → keep-one (connected components, each keeps its
+   min-key doc) — `operators/dedup.py` end to end, the same calls
+   ``incremental_dedup`` makes with a signature store; every join is an
+   equi-join on a bucket or pair key, never all-pairs; each doc is
+   shingled once,
 4. optional deterministic stratified down-sampling per language
    (`operators/sampling.py` — idempotent md5-bucket gate).
 
@@ -25,12 +27,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.dedup import (
-    connected_components,
-    drop_hot_keys,
     exact_dedup,
-    lsh_bands,
     lsh_candidate_pairs,
     minhash_signatures,
+    near_dup_losers,
+    signature_prefilter,
     verify_shingle_sets,
 )
 from ..operators.sampling import stratified_sample
@@ -65,9 +66,11 @@ def build_corpus(
     ``keep_best`` (opt-in) switches near-dup cluster retention from
     keep-min-key to keep-highest-quality-score (NemoCurator/FineWeb
     policy; operators/dedup.component_keep_best, score =
-    textstats.quality_score on the scrubbed text)."""
-    from ..operators.dedup import signature_prefilter
+    textstats.quality_score on the scrubbed text).
 
+    Near-dup removal is ``incremental_dedup`` without a store: the same
+    ``dedup.lsh_candidate_pairs``, ``verify_shingle_sets`` and
+    ``near_dup_losers`` calls, with nothing stored to pair against."""
     filtered = quality_filter(spark, pages)
     kept = (
         filtered.filter(F.col("keep"))
@@ -88,24 +91,13 @@ def build_corpus(
         cand = signature_prefilter(sig, cand, "url", min_est=min_est_jaccard)
     sets = sig.select(F.col("url").alias("_k"), F.col("shingles").alias("_s"))
     pairs = verify_shingle_sets(cand, sets, jaccard_threshold)
-    comp = connected_components(pairs, "a", "b")
+    scores = None
     if keep_best:
-        from ..operators.dedup import component_keep_best
         from ..operators.textstats import quality_score_df
 
         # staged form: splits the text 2x total, not once per signal
-        scored = quality_score_df(
-            deduped, "text_scrubbed", out_col="_q"
-        ).select("url", "_q")
-        losers = (
-            component_keep_best(comp, scored, "url", "_q")
-            .filter(~F.col("is_retained"))
-            .select(F.col("node").alias("url"))
-        )
-    else:
-        losers = comp.filter(F.col("node") != F.col("component")).select(
-            F.col("node").alias("url")
-        )
+        scores = quality_score_df(deduped, "text_scrubbed", out_col="_q").select("url", "_q")
+    losers = near_dup_losers(pairs, "url", scores)
     uniq = deduped.join(losers, "url", "left_anti")
 
     if sample_rates is not None:
@@ -149,16 +141,19 @@ def incremental_dedup(
     0. within-batch exact keep-one (min key per content — so the very
        FIRST batch already dedups internally),
     1. drop new docs whose exact content hash exists in the store,
-    2. LSH band candidates with the NEW side only on the left of the
-       join — old×old pairs never enumerate, so batch cost is
+    2. LSH band candidates from ``dedup.lsh_candidate_pairs`` with the
+       store as its stored side: the NEW side is always on the left of
+       the join, old×old pairs never enumerate, so batch cost is
        O(batch × bucket occupancy), not O(corpus); ``max_bucket`` caps
-       the band buckets of store + batch with ``dedup.drop_hot_keys``,
+       the band buckets of store + batch together,
     3. distinct candidate pairs verify by exact Jaccard over the stored
        shingle-hash sets (8-byte hashes, never old text) through
        ``dedup.verify_shingle_sets``, the verifier of ``jaccard_verify``,
-    4. keep-one matches ``build_corpus``: a new doc with ANY old verified
-       partner loses; new×new pairs go through connected components and
-       each component keeps its min key,
+    4. ``dedup.near_dup_losers``, the keep-one rule of ``build_corpus``: a
+       new doc with ANY old verified partner loses; new×new pairs go
+       through connected components and each component keeps its min
+       key.  With an empty store this is exactly ``build_corpus``'s
+       near-dup removal,
     5. ``accepted_writer(accepted_docs)`` (if given) runs BEFORE the
        signature append, so a crash between the two re-runs cleanly —
        appending signatures first would make a re-run see the batch's own
@@ -190,51 +185,21 @@ def incremental_dedup(
     )
 
     sig_store = str(sig_store)
+    old = None
     if path_exists(spark, sig_store):
         old = spark.read.parquet(sig_store)
         new_sig = new_sig.join(old.select("content_hash"), "content_hash", "left_anti")
-    else:
-        old = spark.createDataFrame([], new_sig.schema)
-    # bands, cap, pair join, verify and accept read the batch features;
-    # nothing reads them after the store append (eviction recomputes safely)
+    # bands, pair join, verify and accept read the batch features; nothing
+    # reads them after the store append (eviction recomputes safely)
     new_sig = new_sig.persist()
     new_sig.count()
 
-    def banded(sig: DataFrame, is_new: bool) -> DataFrame:
-        return lsh_bands(sig, key).withColumn("is_new", F.lit(is_new))
-
-    # the cap counts the live band stream of store + batch
-    all_b = drop_hot_keys(
-        banded(old, False).unionByName(banded(new_sig, True)), ["band", "bucket"], max_bucket
-    )
-    a, b = all_b.filter("is_new").alias("a"), all_b.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            # old partner: any; new partner: unordered pair once
-            & (~F.col("b.is_new") | (F.col(f"a.{key}") < F.col(f"b.{key}")))
-            & (F.col(f"a.{key}") != F.col(f"b.{key}")),
-        )
-        .select(
-            F.col(f"a.{key}").alias("a"), F.col(f"b.{key}").alias("b"),
-            F.col("b.is_new").alias("partner_is_new"),
-        )
-        .distinct()  # multi-band collisions verify once
-    )
-    sets = old.select(key, "shingles").unionByName(new_sig.select(key, "shingles"))
-    verified = verify_shingle_sets(
-        pairs, sets.toDF("_k", "_s"), jaccard_threshold
-    ).select("a", "b", "partner_is_new")
-    # keep-one, build_corpus semantics
-    old_losers = verified.filter(~F.col("partner_is_new")).select(F.col("a").alias(key))
-    comp = connected_components(verified.filter(F.col("partner_is_new")), "a", "b")
-    cc_losers = comp.filter(F.col("node") != F.col("component")).select(
-        F.col("node").alias(key)
-    )
-    losers = old_losers.unionByName(cc_losers).distinct()
-    accepted_sig = new_sig.join(losers, key, "left_anti")
+    pairs = lsh_candidate_pairs(new_sig, key, max_bucket=max_bucket, store=old)
+    sets = new_sig.select(key, "shingles")
+    if old is not None:
+        sets = sets.unionByName(old.select(key, "shingles"))
+    verified = verify_shingle_sets(pairs, sets.toDF("_k", "_s"), jaccard_threshold)
+    accepted_sig = new_sig.join(near_dup_losers(verified, key, None), key, "left_anti")
 
     # MATERIALIZE (lineage-truncating) before mutating the store: the plan
     # reads sig_store, and appending to it then lazily re-evaluating would

@@ -34,7 +34,7 @@ from ..catalog import (
 )
 from ..operators.injection import inject_column
 from ..operators.multifield import detect_fields
-from ..session import write_text
+from ..session import write_bytes
 
 
 def inject_catalog(
@@ -286,5 +286,5 @@ def single_sample_demo(
     probes = load_probe_reports(probe_dirs)
     if probes:
         report["model_probes"] = probes
-    write_text(spark, f"{out_dir}/consolidated_report.json", json.dumps(report, indent=1))
+    write_bytes(spark, f"{out_dir}/consolidated_report.json", json.dumps(report, indent=1).encode())
     return report

@@ -20,21 +20,24 @@ the last committed snapshot — that is the PartitionedSink contract.
 from __future__ import annotations
 
 import argparse
+import io
 import json
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from ..session import local_table, write_text
+from ..session import local_table, read_bytes, write_bytes
 from ..sources.manifest import PartitionedSink
 from .pipeline import filter_metrics, filter_stage, quality_filter
 
 _KNOWN_METHODS = ("validation", "pattern", "ml", "llm", "quality_model")
 
-# flags that shape the filter's keep decision: corpus mode runs
-# build_corpus's fixed default filter, so it rejects them
-_FILTER_FLAGS = ("methods", "combine", "cascade", "llm_order", "c4_clean",
-                 "rep_gate", "gopher_gate")
+# flags a mode would silently ignore: corpus mode runs build_corpus's
+# default filter, incremental mode keeps min keys and verifies every pair
+_UNSUPPORTED = {
+    "corpus": ("methods", "combine", "cascade", "llm_order", "c4_clean", "rep_gate", "gopher_gate"),
+    "incremental": ("keep_best", "min_est_jaccard"),
+}
 
 
 def _parse_methods(raw: str) -> list[str] | None:
@@ -100,7 +103,9 @@ def build_args(argv: list[str] | None = None) -> argparse.Namespace:
     p.add_argument("--n-samples", type=int, default=8, help="multi-eval replicas")
     p.add_argument("--intensity", type=float, default=0.3, help="injection intensity")
     p.add_argument("--max-issues-per-row", type=int, default=2, help="single-demo cap")
-    p.add_argument("--jaccard-threshold", type=float, default=0.7, help="corpus near-dup bar")
+    p.add_argument(
+        "--jaccard-threshold", type=float, default=0.7, help="corpus/incremental near-dup bar"
+    )
     p.add_argument(
         "--sample-rates",
         default=None,
@@ -361,13 +366,9 @@ def build_args(argv: list[str] | None = None) -> argparse.Namespace:
     args = p.parse_args(argv)
     if args.dsir_top and not args.dsir_target:
         p.error("--dsir-top requires --dsir-target (parquet of target-distribution docs)")
-    if args.mode == "corpus":
-        for dest in _FILTER_FLAGS:
-            if getattr(args, dest) != p.get_default(dest):
-                p.error(
-                    f"--{dest.replace('_', '-')} is not supported in corpus mode "
-                    "(its filter runs with the default detectors and no gates)"
-                )
+    for dest in _UNSUPPORTED.get(args.mode, ()):
+        if getattr(args, dest) != p.get_default(dest):
+            p.error(f"--{dest.replace('_', '-')} is not supported in {args.mode} mode")
     return args
 
 
@@ -658,7 +659,7 @@ def run_corpus(spark: SparkSession, args: argparse.Namespace) -> dict:
             .parquet(f"{args.output}/corpus_shuffled")
         )
         stats["shuffle_shards"] = n_shuf
-    write_text(spark, f"{args.output}/corpus_stats.json", json.dumps(stats, indent=1))
+    write_bytes(spark, f"{args.output}/corpus_stats.json", json.dumps(stats, indent=1).encode())
     return stats
 
 
@@ -666,15 +667,14 @@ def run_ml_train(spark: SparkSession, args: argparse.Namespace) -> dict:
     """ml-train (reference main.py → ml_based/model_training.py): train the
     langid NB model FROM the input corpus with one distributed aggregation
     and persist the artifact."""
-    from pathlib import Path
-
     from ..operators.langid import train_langid_distributed
 
     docs = spark.read.parquet(args.input)
     model = train_langid_distributed(docs)
-    Path(args.output).mkdir(parents=True, exist_ok=True)
-    out = str(Path(args.output) / "langid_model.npz")
-    model.to_npz(out)
+    out = f"{args.output}/langid_model.npz"
+    buf = io.BytesIO()
+    model.to_npz(buf)
+    write_bytes(spark, out, buf.getvalue())
     summary = {
         "langs": model.langs, "buckets": int(model.log_probs.shape[1]), "path": out,
     }
@@ -686,8 +686,9 @@ def run_ml_train(spark: SparkSession, args: argparse.Namespace) -> dict:
         from ..operators.langid import LangIdModel
         from .probe import probe_langid
 
-        report = probe_langid(spark, LangIdModel.from_npz(out), docs, n=probe_n)
-        write_text(spark, f"{args.output}/train_probe.json", json.dumps(report, indent=1))
+        written = LangIdModel.from_npz(io.BytesIO(read_bytes(spark, out)))
+        report = probe_langid(spark, written, docs, n=probe_n)
+        write_bytes(spark, f"{args.output}/train_probe.json", json.dumps(report, indent=1).encode())
         summary["probe"] = report
     return summary
 
@@ -696,8 +697,6 @@ def run_llm_train(spark: SparkSession, args: argparse.Namespace) -> dict:
     """llm-train (reference main.py → llm_based/llm_model_training.py):
     train per-language n-gram LMs of order ``--llm-order`` distributed and
     persist one npz each."""
-    from pathlib import Path
-
     from ..operators.perplexity import save_ngram_npz, train_ngram_distributed
 
     docs = spark.read.parquet(args.input)
@@ -707,12 +706,13 @@ def run_llm_train(spark: SparkSession, args: argparse.Namespace) -> dict:
         min_word_count=args.min_word_count,
         ngram_min_count=args.ngram_min_count,
     )
-    Path(args.output).mkdir(parents=True, exist_ok=True)
     prefix = {2: "bigram", 3: "trigram"}[args.llm_order]
     summary = {}
     for lang, lm in sorted(models.items()):
-        out = str(Path(args.output) / f"{prefix}_{lang}.npz")
-        save_ngram_npz(lm, out)
+        out = f"{args.output}/{prefix}_{lang}.npz"
+        buf = io.BytesIO()
+        save_ngram_npz(lm, buf)
+        write_bytes(spark, out, buf.getvalue())
         summary[lang] = {
             "order": lm.order, "vocab": len(lm.vocab), "n_tokens": lm.n_tokens,
             "path": out,
@@ -725,10 +725,11 @@ def run_llm_train(spark: SparkSession, args: argparse.Namespace) -> dict:
         from .probe import probe_bigram
 
         reloaded = {
-            lang: load_ngram_npz(info["path"]) for lang, info in summary.items()
+            lang: load_ngram_npz(io.BytesIO(read_bytes(spark, info["path"])))
+            for lang, info in summary.items()
         }
         report = probe_bigram(spark, reloaded, docs, n=probe_n)
-        write_text(spark, f"{args.output}/train_probe.json", json.dumps(report, indent=1))
+        write_bytes(spark, f"{args.output}/train_probe.json", json.dumps(report, indent=1).encode())
         summary["_probe"] = report
     return summary
 
@@ -769,7 +770,9 @@ def run_hp_search(spark: SparkSession, args: argparse.Namespace) -> dict:
             # the LM must model CLEAN text; corrupted rows stay out of training
             train_filter=~F.col("truth_bad"),
         )
-    write_text(spark, f"{args.output}/hp_search_results.json", json.dumps(report, indent=1))
+    write_bytes(
+        spark, f"{args.output}/hp_search_results.json", json.dumps(report, indent=1).encode()
+    )
     return report
 
 
@@ -780,9 +783,9 @@ def run_analyze_column(spark: SparkSession, args: argparse.Namespace) -> dict:
 
     df = spark.read.parquet(args.input)
     report = analyze_column(df, args.field)
-    write_text(
+    write_bytes(
         spark, f"{args.output}/analyze_{args.field}.json",
-        json.dumps(report, indent=2, default=str),
+        json.dumps(report, indent=2, default=str).encode(),
     )
     return {"column": args.field, "n_top_values": len(report["top_values"])}
 
@@ -828,7 +831,9 @@ def run_multi_eval(spark: SparkSession, args: argparse.Namespace) -> dict:
     probes = load_probe_reports(args.probe_dirs or ())
     if probes:
         summary["model_probes"] = probes
-    write_text(spark, f"{args.output}/evaluation_summary.json", json.dumps(summary, indent=1))
+    write_bytes(
+        spark, f"{args.output}/evaluation_summary.json", json.dumps(summary, indent=1).encode()
+    )
     return summary
 
 
@@ -847,7 +852,9 @@ def run_ml_curves(spark: SparkSession, args: argparse.Namespace) -> dict:
             .orderBy("threshold").collect()]
     best = max(rows, key=lambda r: r["f1"]) if rows else None
     out = {"n_thresholds": len(rows), "best": best, "curve": rows}
-    write_text(spark, f"{args.output}/ppl_threshold_curve.json", json.dumps(out, indent=1))
+    write_bytes(
+        spark, f"{args.output}/ppl_threshold_curve.json", json.dumps(out, indent=1).encode()
+    )
     return {"n_thresholds": len(rows), "best": best}
 
 
@@ -906,11 +913,12 @@ def run_incremental(spark: SparkSession, args: argparse.Namespace) -> dict:
         kept = deconned
 
     accepted, stats = incremental_dedup(
-        spark, kept, args.sig_store, accepted_writer=write_corpus
+        spark, kept, args.sig_store, jaccard_threshold=args.jaccard_threshold,
+        accepted_writer=write_corpus,
     )
     stats.update(pre_stats)
     kept.unpersist()
-    write_text(spark, f"{args.output}/last_batch_stats.json", json.dumps(stats, indent=1))
+    write_bytes(spark, f"{args.output}/last_batch_stats.json", json.dumps(stats, indent=1).encode())
     return stats
 
 

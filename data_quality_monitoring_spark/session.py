@@ -299,13 +299,24 @@ def path_exists(spark: SparkSession, path: str) -> bool:
     return p.getFileSystem(spark._jsc.hadoopConfiguration()).exists(p)
 
 
-def write_text(spark: SparkSession, path: str, text: str) -> None:
-    """Write ``text`` as UTF-8 to ``path`` (overwriting) through the Hadoop
-    ``FileSystem`` its scheme names, like :func:`path_exists`: a report
-    lands beside the data Spark wrote under a URI output."""
+def write_bytes(spark: SparkSession, path: str, data: bytes) -> None:
+    """Write ``data`` to ``path`` (overwriting) through the Hadoop
+    ``FileSystem`` its scheme names, like :func:`path_exists`: a report or
+    model artifact lands beside the data Spark wrote under a URI output."""
     p = spark._jvm.org.apache.hadoop.fs.Path(path)
     out = p.getFileSystem(spark._jsc.hadoopConfiguration()).create(p, True)
     try:
-        out.write(bytearray(text.encode("utf-8")))
+        out.write(bytearray(data))
     finally:
         out.close()
+
+
+def read_bytes(spark: SparkSession, path: str) -> bytes:
+    """The bytes at ``path``, read back through the same ``FileSystem`` as
+    :func:`write_bytes`."""
+    p = spark._jvm.org.apache.hadoop.fs.Path(path)
+    src = p.getFileSystem(spark._jsc.hadoopConfiguration()).open(p)
+    try:
+        return bytes(src.readAllBytes())
+    finally:
+        src.close()

@@ -8,7 +8,7 @@ from data_quality_monitoring_spark.plans.corpus import build_corpus
 from data_quality_monitoring_spark.plans.pipeline import quality_filter
 
 
-def test_build_corpus_dedups_and_counts(spark, tmp_path):
+def test_build_corpus_dedups_and_counts(spark, tmp_path, monkeypatch):
     base_pdf = generate_pages_pandas(300)
     base = generate_pages(spark, 300)
     kept_urls = {
@@ -37,8 +37,23 @@ def test_build_corpus_dedups_and_counts(spark, tmp_path):
     )
     pages = base.unionByName(spark.createDataFrame(crafted[base.columns]))
 
+    import data_quality_monitoring_spark.plans.corpus as corpus_plan
+
+    losers = []
+    keep_one = corpus_plan.near_dup_losers
+
+    def spy(*args):
+        losers.append(keep_one(*args))
+        return losers[-1]
+
+    monkeypatch.setattr(corpus_plan, "near_dup_losers", spy)
     corpus, stats = build_corpus(spark, pages, jaccard_threshold=0.7)
     urls = {r["url"] for r in corpus.select("url").collect()}
+    # without a store the keep-one rule folds to the collected components
+    # table: no store branch, no join, no aggregate
+    plan = losers[0]._jdf.queryExecution().optimizedPlan()
+    assert plan.nodeName() == "LocalRelation", plan.toString()
+    assert [r.url for r in losers[0].collect()] == ["https://zzz.example/near-dup"]
 
     assert stats["docs_in"] == 302
     # the exact dup lost to its donor (min url is canonical)

@@ -288,6 +288,24 @@ def test_lsh_bucket_cap_bounds_family(spark):
     # uncapped: the family alone is 600*599/2 pairs
     uncapped = D.lsh_candidate_pairs(sig, "doc_id", max_bucket=None)
     assert uncapped.count() == 600 * 599 // 2 + 1
+    # a stored side: a batch key pairs with a stored key on either side
+    # of it in key order, never with its own stored row, and the cap
+    # counts store and batch rows together (60 + 60 > 100 drops the
+    # second family, which pairs in the batch alone)
+    fam2 = " ".join(f"v{i}" for i in range(40))
+    batch = D.minhash_signatures(spark.createDataFrame(
+        rows[600:] + [(2000 + i, fam2) for i in range(60)], ["doc_id", "text"]
+    ), "doc_id")
+    store = D.minhash_signatures(spark.createDataFrame(
+        [(999, other), (1001, other + " extra"), (1002, other)]
+        + [(3000 + i, fam2) for i in range(60)], ["doc_id", "text"]
+    ), "doc_id")
+    with_store = D.lsh_candidate_pairs(batch, "doc_id", max_bucket=100, store=store)
+    assert sorted(map(tuple, with_store.collect())) == [
+        (1000, 999, False), (1000, 1001, False), (1000, 1001, True), (1000, 1002, False),
+        (1001, 999, False), (1001, 1002, False),
+    ]
+    assert D.lsh_candidate_pairs(batch, "doc_id", max_bucket=100).count() == 60 * 59 // 2 + 1
 
 
 def test_connected_components_log_convergence(spark, cc_path):

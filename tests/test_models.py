@@ -150,10 +150,12 @@ def test_distributed_training_matches_local(spark):
             assert got.nll(probe) == loc.nll(probe)
 
 
-def test_train_cli_modes(spark, tmp_path):
+def test_train_cli_modes(spark, tmp_path, monkeypatch):
     """ml-train / llm-train CLI: artifacts persist, reload, and score;
     ``--llm-order 3`` trains, names and reloads order-3 LMs that score
-    exactly like the distributed trainer's own on the same input."""
+    exactly like the distributed trainer's own on the same input.  A
+    ``file://`` output run from an empty working directory puts every
+    artifact and probe report in that output, and nothing in the cwd."""
     import pandas as pd
 
     from data_quality_monitoring_spark.artifacts import training_texts
@@ -197,6 +199,22 @@ def test_train_cli_modes(spark, tmp_path):
         assert lm.order == 3 and lm.counts == expect[lang].counts
         for probe in (rows[0][0], rows[-1][0], "zx qv jk wp zx qv jk wp"):
             assert lm.nll(probe) == expect[lang].nll(probe)
+
+    cwd = tmp_path / "cwd"
+    cwd.mkdir()
+    monkeypatch.chdir(cwd)
+    uri_out = tmp_path / "uri_out"
+    run_ml_train(spark, build_args(
+        ["--mode", "ml-train", "--input", in_dir, "--output", uri_out.as_uri()]
+    ))
+    assert LangIdModel.from_npz(str(uri_out / "langid_model.npz")).langs == ["de", "en"]
+    assert (uri_out / "train_probe.json").exists()
+    run_llm_train(spark, build_args(
+        ["--mode", "llm-train", "--input", in_dir, "--output", (uri_out / "lm").as_uri()]
+    ))
+    assert load_ngram_npz(str(uri_out / "lm" / "bigram_en.npz")).order == 2
+    assert sorted(p.name for p in (uri_out / "lm").glob("*.json")) == ["train_probe.json"]
+    assert list(cwd.iterdir()) == []
 
 
 def test_quality_classifier_separates_and_pins(spark):

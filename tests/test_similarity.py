@@ -44,20 +44,6 @@ def test_centroids_deterministic(spark, emb):
     assert np.allclose(c1, c2)
 
 
-def test_ivf_mllib_kmeans_path(spark, emb):
-    """Distributed MLlib-KMeans coarse quantizer: same contract as the
-    driver-sample trainer — normalized centroids, recall-pinned IVF."""
-    import numpy as np
-
-    cents = S.train_centroids_mllib(emb, "embedding", n_cells=8)
-    assert cents.shape == (8, 64)
-    assert np.allclose(np.linalg.norm(cents, axis=1), 1.0)
-    q = emb.filter(F.col("vec_id") < 20)
-    exact = S.brute_force_topk(emb, q, "vec_id", "embedding", k=5)
-    full = S.ivf_topk(emb, q, "vec_id", "embedding", k=5, n_cells=8, n_probe=8, centroids=cents)
-    assert S.ann_recall(exact, full) == 1.0  # full probe == exhaustive
-
-
 def _planted(emb):
     """Embeddings plus perturbed twins of vec_id<40 (cos≈0.97 vs 0.51 max
     background) — the same planting as the embedding_near_dup query."""

@@ -249,6 +249,49 @@ def test_cli_incremental_mode(spark, tmp_path, monkeypatch):
     assert list(cwd.iterdir()) == []
 
 
+def test_cli_incremental_jaccard_threshold(spark, tmp_path):
+    """--mode incremental passes --jaccard-threshold to its near-dup
+    verify: copies of four pages with the last fifth of their words cut
+    (Jaccard ~0.8 to their source) lose at the default 0.7 and are all
+    kept at 0.95."""
+    from data_quality_monitoring_spark.datagen import generate_pages_pandas
+
+    src = generate_pages_pandas(60)
+    head = src[src.text.str.split().str.len() >= 30].head(4)
+
+    def cut(text):
+        w = text.split()
+        return " ".join(w[: len(w) - (len(w) - 2) // 5])
+
+    near = head.assign(url=head.url + "#near", text=head.text.map(cut))
+    in_dir = str(tmp_path / "in")
+    generate_pages(spark, 60).unionByName(
+        spark.createDataFrame(near[src.columns])
+    ).write.parquet(in_dir)
+
+    def near_kept(name, *flags):
+        out = str(tmp_path / name)
+        run_incremental(spark, build_args(
+            ["--mode", "incremental", "--input", in_dir, "--output", out,
+             "--sig-store", f"{out}/sigs", *flags]
+        ))
+        corpus = spark.read.parquet(f"{out}/corpus").select("url").collect()
+        return sorted(r.url for r in corpus if r.url.endswith("#near"))
+
+    assert near_kept("default") == []
+    assert near_kept("strict", "--jaccard-threshold", "0.95") == sorted(near.url)
+
+
+@pytest.mark.parametrize("flag", [["--keep-best"], ["--min-est-jaccard", "0.5"]])
+def test_incremental_mode_rejects_corpus_dedup_flags(flag, capsys):
+    """Incremental dedup keeps the min key and verifies every candidate,
+    so --keep-best and --min-est-jaccard fail the parse, naming the flag."""
+    with pytest.raises(SystemExit):
+        build_args(["--mode", "incremental", "--input", "i", "--output", "o", *flag])
+    assert f"{flag[0]} is not supported in incremental mode" in capsys.readouterr().err
+    build_args(["--mode", "corpus", "--input", "i", "--output", "o", *flag])
+
+
 def test_incremental_gopher_gate_matches_filter_mode(spark, tmp_path):
     """Incremental mode runs the filter job's stage: with --gopher-gate it
     accepts exactly the docs filter mode keeps with --gopher-gate."""
