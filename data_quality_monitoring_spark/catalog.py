@@ -85,10 +85,10 @@ CATALOG_FIXTURES: dict[str, list[str | None]] = {
 CATALOG_FIELDS = list(CATALOG_FIXTURES)
 
 
-def load_field_rules(field: str, group: str = "validators") -> list[dict]:
-    """Load one ported reference ruleset (rulesets/catalog/<group>/<field>.json);
+def load_field_rules(field: str) -> list[dict]:
+    """Load one ported reference ruleset (rulesets/catalog/validators/<field>.json);
     zip-safe for --py-files packaging (resources.py)."""
-    return read_package_json("rulesets", "catalog", group, f"{field}.json")["rules"]
+    return read_package_json("rulesets", "catalog", "validators", f"{field}.json")["rules"]
 
 
 def load_pattern_config(field: str) -> dict:
@@ -99,11 +99,11 @@ def load_injection_rules(field: str, group: str = "error_injection") -> list[dic
     return read_package_json("rulesets", "catalog", group, f"{field}.json")["rules"]
 
 
-def build_catalog(documents: DataFrame, key: str = "doc_id") -> DataFrame:
-    """documents → catalog-shaped table (Spark side)."""
-    cols = [F.col(key)]
+def build_catalog(documents: DataFrame) -> DataFrame:
+    """documents → catalog-shaped table keyed by ``doc_id`` (Spark side)."""
+    cols = [F.col("doc_id")]
     for field, fixtures in CATALOG_FIXTURES.items():
-        m = F.pmod(F.col(key), F.lit(len(fixtures)))
+        m = F.pmod(F.col("doc_id"), F.lit(len(fixtures)))
         expr = F.lit(None).cast("string")
         chain = None
         for i, v in enumerate(fixtures):
@@ -114,13 +114,14 @@ def build_catalog(documents: DataFrame, key: str = "doc_id") -> DataFrame:
     return documents.select(*cols)
 
 
-def catalog_sql(key: str = "doc_id", table: str = "documents") -> str:
-    """The identical derivation as ANSI SQL (DuckDB oracle side)."""
-    parts = [key]
+def catalog_sql() -> str:
+    """The identical derivation as ANSI SQL (DuckDB oracle side), keyed by
+    ``doc_id`` over the ``documents`` table."""
+    parts = ["doc_id"]
     for field, fixtures in CATALOG_FIXTURES.items():
         whens = []
         for i, v in enumerate(fixtures):
             lit = "NULL" if v is None else "'" + v.replace("'", "''") + "'"
             whens.append(f"WHEN {i} THEN {lit}")
-        parts.append(f"CASE {key} % {len(fixtures)} " + " ".join(whens) + f" END AS {field}")
-    return f"SELECT {', '.join(parts)} FROM {table}"
+        parts.append(f"CASE doc_id % {len(fixtures)} " + " ".join(whens) + f" END AS {field}")
+    return f"SELECT {', '.join(parts)} FROM documents"

@@ -1,4 +1,4 @@
-"""Brand-style run configuration: field mappings, enabled fields, thresholds.
+"""Brand-style run configuration: field mappings, enabled fields, variations.
 
 Mirrors the reference's brand config surface (``common/brand_config.py:11-22``,
 ``brand_configs/esqualo.json``): a JSON file carries
@@ -6,8 +6,11 @@ Mirrors the reference's brand config surface (``common/brand_config.py:11-22``,
 * ``field_mappings``   — logical field → physical column (reference
   ``common/field_mapper.py:10-75``),
 * ``enabled_fields``   — which logical fields run detection,
-* ``custom_thresholds``— per-method probability thresholds,
 * ``field_variations`` — per-field ruleset variation names.
+
+The reference's ``custom_thresholds`` are not supported: the verdict
+thresholds are the constants of ``operators/verdict.py``, so a config that
+sets them is rejected rather than silently ignored.
 
 In Spark the mapping layer is just a projection with aliases — applied once
 at ingest so every downstream operator sees logical names and Catalyst
@@ -23,25 +26,24 @@ from pathlib import Path
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .operators.verdict import DEFAULT_THRESHOLDS
-
 
 @dataclass
 class RunConfig:
     field_mappings: dict[str, str] = field(default_factory=dict)
     enabled_fields: list[str] = field(default_factory=list)
-    thresholds: dict[str, float] = field(default_factory=lambda: dict(DEFAULT_THRESHOLDS))
     field_variations: dict[str, str] = field(default_factory=dict)
 
     @classmethod
     def load(cls, path: str | Path) -> "RunConfig":
         raw = json.loads(Path(path).read_text())
-        thresholds = dict(DEFAULT_THRESHOLDS)
-        thresholds.update(raw.get("custom_thresholds", {}))
+        if "custom_thresholds" in raw:
+            raise ValueError(
+                f"{path}: custom_thresholds is not supported; the verdict "
+                "thresholds are fixed (operators/verdict.DEFAULT_THRESHOLDS)"
+            )
         return cls(
             field_mappings=raw.get("field_mappings", {}),
             enabled_fields=raw.get("enabled_fields", list(raw.get("field_mappings", {}))),
-            thresholds=thresholds,
             field_variations=raw.get("field_variations", {}),
         )
 

@@ -412,36 +412,28 @@ def q_dedup_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _jaccard_pairs(d: DataFrame) -> DataFrame:
     """≥0.5-Jaccard near-dup pairs (da < db) over df-capped 3-word shingles
-    — the shared front half of q_dedup_jaccard and q_dedup_clusters."""
-    from .operators.dedup import drop_hot_keys, shingle_column
+    — the shared front half of q_dedup_jaccard and q_dedup_clusters, built
+    from the near-dup operators: one ``drop_hot_keys`` cap, candidates from
+    the ``bucket_pairs`` self-join on the shingle, ``verify_shingle_sets``
+    over the capped sets."""
+    from .operators.dedup import (
+        bucket_pairs,
+        drop_hot_keys,
+        shingle_hashes,
+        verify_shingle_sets,
+    )
 
-    # persist the exploded shingles: df-filter, sizes and the self-join all
-    # consume it, and recomputing the explode dominates this query's cost.
-    # The self-join keys on xxhash64(shingle), not the string — an 8-byte
-    # shuffle key instead of ~25 bytes; pair counts are hash-collision-
-    # identical (2⁻⁶⁴ per pair) so the DuckDB oracle, which joins on the
-    # string, computes the same answer.
-    raw = (
-        d.select("doc_id", F.explode(shingle_column(F.col("text"))).alias("_s"))
-        .select("doc_id", F.xxhash64("_s").alias("shingle"))
-        .persist()
-    )
-    sh = drop_hot_keys(raw, ["shingle"], JACCARD_DF_CAP)
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("sz"))
-    a, b = sh.alias("a"), sh.alias("b")
-    inter = (
-        a.join(b, (F.col("a.shingle") == F.col("b.shingle")) & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .groupBy(F.col("a.doc_id").alias("da"), F.col("b.doc_id").alias("db"))
-        .agg(F.count("*").alias("inter"))
-    )
-    sa = sizes.withColumnRenamed("doc_id", "da").withColumnRenamed("sz", "sza")
-    sb = sizes.withColumnRenamed("doc_id", "db").withColumnRenamed("sz", "szb")
-    return (
-        inter.join(sa, "da")
-        .join(sb, "db")
-        .withColumn("j", F.col("inter") / (F.col("sza") + F.col("szb") - F.col("inter")))
-        .filter(F.col("j") >= 0.5)
-        .select("da", "db")
+    # persist the exploded shingles: the cap, the self-join and the sets all
+    # consume them, and recomputing the explode dominates this query's cost.
+    # Shingles are their xxhash64, not the string — an 8-byte shuffle key;
+    # pairs are hash-collision-identical (2⁻⁶⁴ per pair) so the DuckDB
+    # oracle, which joins on the string, computes the same answer.
+    raw = d.select("doc_id", F.explode(shingle_hashes(F.col("text"))).alias("shingle")).persist()
+    capped = drop_hot_keys(raw, ["shingle"], JACCARD_DF_CAP)
+    cand = bucket_pairs(capped, "doc_id", ["shingle"], None, None)
+    sets = capped.groupBy("doc_id").agg(F.collect_list("shingle")).toDF("_k", "_s")
+    return verify_shingle_sets(cand, sets, 0.5).select(
+        F.col("a").alias("da"), F.col("b").alias("db")
     )
 
 
@@ -2038,8 +2030,11 @@ def q_host_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pr.select(F.col("node").alias("host_id"), F.round("rank", 6).alias("rank"))
 
 
-def _pagerank_sql(n_iter: int = 5, damping: float = 0.85) -> str:
-    """Unrolled relational replay of q_host_pagerank for DuckDB."""
+def _pagerank_sql() -> str:
+    """Unrolled relational replay of q_host_pagerank (5 rounds) for DuckDB."""
+    from .operators.linkgraph import DAMPING
+
+    n_iter = 5
     edges = (
         "SELECT DISTINCT src, dst FROM ("
         "SELECT doc_id % 53 AS src, (doc_id * 2 + 1) % 53 AS dst FROM documents "
@@ -2054,7 +2049,7 @@ def _pagerank_sql(n_iter: int = 5, damping: float = 0.85) -> str:
         "od AS (SELECT src, count(*)::DOUBLE AS od FROM e GROUP BY src)",
         "r0 AS (SELECT node, 1.0 / (SELECT n FROM nn) AS rank FROM nodes)",
     ]
-    base, damp = f"{1.0 - damping:.17g}", f"{damping:.17g}"
+    base, damp = f"{1.0 - DAMPING:.17g}", f"{DAMPING:.17g}"
     for k in range(1, n_iter + 1):
         p = k - 1
         parts.append(

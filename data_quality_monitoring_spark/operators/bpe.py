@@ -91,12 +91,12 @@ def _merge_loop(wf: dict, n_merges: int) -> list[str]:
 
 def train_bpe_distributed(
     docs,
-    text_col: str = "text",
     n_merges: int = 200,
     max_words: int = 100_000,
     min_count: int = 1,
 ) -> list[str]:
-    """Distributed BPE training: the 100-TB form of :func:`train_bpe_pieces`.
+    """Distributed BPE training over ``docs.text``: the 100-TB form of
+    :func:`train_bpe_pieces`.
 
     BPE trains over the word-FREQUENCY table, not the corpus — so the only
     distributed work is one word count (map-side-combined groupBy), cut to
@@ -116,7 +116,7 @@ def train_bpe_distributed(
         return texts.map(lambda t: _words(t) if isinstance(t, str) else [])
 
     wf_rows = (
-        docs.select(F.explode(_w(F.col(text_col))).alias("word"))
+        docs.select(F.explode(_w(F.col("text"))).alias("word"))
         .groupBy("word")
         .agg(F.count("*").alias("n"))
         .filter(F.col("n") >= F.lit(min_count))

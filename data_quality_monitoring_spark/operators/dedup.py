@@ -180,13 +180,13 @@ def bucket_pairs(
 
 
 def lsh_candidate_pairs(
-    sig: DataFrame, key: str, n_hashes: int = 8, band_size: int = 2,
-    max_bucket: int | None = 500, store: DataFrame | None = None,
+    sig: DataFrame, key: str, max_bucket: int | None = 500, store: DataFrame | None = None,
 ) -> DataFrame:
     """Distinct candidate pairs (a, b, partner_is_new) sharing at least one
-    LSH band: :func:`lsh_bands` of the batch ``sig`` (and of the stored
-    signatures ``store``, if given) through :func:`bucket_pairs`.  Without
-    a store every pair is a < b with ``partner_is_new`` true.
+    LSH band (4 bands of 2 of the 8 minhashes): :func:`lsh_bands` of the
+    batch ``sig`` (and of the stored signatures ``store``, if given) through
+    :func:`bucket_pairs`.  Without a store every pair is a < b with
+    ``partner_is_new`` true.
 
     ``max_bucket`` caps the (band, bucket) groups before the self-join.
     Members of an oversized bucket still pair through their OTHER bands
@@ -197,11 +197,11 @@ def lsh_candidate_pairs(
     the contract corpus (max bucket there ≪ cap)."""
     # materialize the batch's (key, band, bucket) rows ONCE: the hot-bucket
     # aggregate and the self-join otherwise each re-run the full signature
-    # lineage (shingle UDF + n_hashes array mins) of an uncached ``sig`` —
+    # lineage (shingle UDF + 8 array mins) of an uncached ``sig`` —
     # 2 full sig computations on a 1M-doc corpus build.  Same narrow-row
     # argument as the simhash bucket table below: 3 small columns × n_bands.
-    batch = lsh_bands(sig, key, n_hashes, band_size).localCheckpoint(eager=True)
-    stored = None if store is None else lsh_bands(store, key, n_hashes, band_size)
+    batch = lsh_bands(sig, key).localCheckpoint(eager=True)
+    stored = None if store is None else lsh_bands(store, key)
     return bucket_pairs(batch, key, ["band", "bucket"], max_bucket, stored)
 
 
@@ -209,14 +209,13 @@ def signature_prefilter(
     sig: DataFrame,
     pairs: DataFrame,
     key: str,
-    n_hashes: int = 8,
     min_est: float = 0.375,
 ) -> DataFrame:
     """Minhash-agreement prefilter between LSH banding and exact verify.
 
-    est-J(a, b) = (# equal minhashes) / n_hashes is an unbiased Jaccard
+    est-J(a, b) = (# equal minhashes) / 8 is an unbiased Jaccard
     estimate already sitting in the signature table; filtering candidate
-    pairs on it is a NARROW join (n_hashes longs per side) that runs before
+    pairs on it is a NARROW join (8 longs per side) that runs before
     the expensive shingle-array verify join.  The corpus-curve profile
     showed candidate volume is the one superlinear term on low-entropy
     corpora (tiny shared vocabularies give random doc pairs J ≈ 0.2–0.3,
@@ -229,7 +228,7 @@ def signature_prefilter(
     Verification stays exact for every surviving pair, so precision is
     unaffected.  Use where candidate volume, not the last percent of
     borderline recall, is the binding constraint."""
-    arr = F.array(*[F.col(f"h{i}") for i in range(n_hashes)])
+    arr = F.array(*[F.col(f"h{i}") for i in range(8)])
     s = sig.select(F.col(key), arr.alias("_s"))
     est = (
         F.size(
@@ -237,7 +236,7 @@ def signature_prefilter(
                 F.zip_with("_sa", "_sb", lambda x, y: x == y), lambda eq: eq
             )
         )
-        / n_hashes
+        / 8
     )
     return (
         pairs.join(
@@ -351,9 +350,9 @@ def simhash_column(text: Column) -> Column:
 
 
 def simhash_near_dup_pairs(
-    df: DataFrame, key: str, text_col: str = "text", max_hamming: int = 3, n_blocks: int = 4,
+    df: DataFrame, key: str, max_hamming: int = 3, n_blocks: int = 4,
 ) -> DataFrame:
-    """SimHash near-dup via block permutation: split the 64-bit hash into
+    """SimHash near-dup over ``text`` via block permutation: split the 64-bit hash into
     ``n_blocks`` 16-bit blocks; two docs within ``max_hamming`` (< n_blocks)
     must share at least one exact block (pigeonhole), so candidates come
     from equi-joins on (block_id, block_value); Hamming distance verifies.
@@ -366,7 +365,7 @@ def simhash_near_dup_pairs(
             f"(got max_hamming={max_hamming}, n_blocks={n_blocks}): a pair "
             f"differing in every block would be missed"
         )
-    sim = df.select(F.col(key).alias("k"), simhash_column(F.col(text_col)).alias("sh")).filter(
+    sim = df.select(F.col(key).alias("k"), simhash_column(F.col("text")).alias("sh")).filter(
         F.col("sh").isNotNull()
     )
     # Collapse identical fingerprints FIRST (round-6 rework, guide §2.3/§8:
@@ -463,23 +462,20 @@ def simhash_near_dup_pairs(
 def embedding_near_dup_pairs(
     df: DataFrame,
     key: str,
-    vec_col: str = "embedding",
     threshold: float = 0.9,
-    n_tables: int = 64,
-    n_planes: int = 20,
-    seed: int = 7,
     round_to: int = 6,
     max_bucket: int | None = None,
 ) -> DataFrame:
-    """Embedding-cosine near-dup: MULTI-TABLE random-hyperplane LSH
-    (AND-OR construction) → exact cosine verify on candidates.
+    """Embedding-cosine near-dup over the ``embedding`` column:
+    MULTI-TABLE random-hyperplane LSH (AND-OR construction) → exact cosine
+    verify on candidates.
 
     A single sign-bucket table has recall (1−θ/π)^planes per pair — at
     cos 0.9 with 8 planes that is ~7%, useless.  The AND-OR construction
     fixes it: ``n_tables`` independent tables of ``n_planes`` hyperplanes
     each; a pair is a candidate if it collides in ANY table, so recall is
-    1−(1−p^n_planes)^n_tables with p = 1−θ/π.  Defaults (64 tables × 20
-    planes, round 6 — was 32 × 12): recall per pair at cos 0.95 is
+    1−(1−p^n_planes)^n_tables with p = 1−θ/π.  Here 64 tables × 20
+    planes (round 6 — was 32 × 12): recall per pair at cos 0.95 is
     1−(1−p²⁰)⁶⁴ ≈ 1−2·10⁻⁶, and the candidate rate for a mildly
     correlated pair (cos ≈ 0.3, p ≈ 0.6) drops from 32·0.6¹² ≈ 0.070 to
     64·0.6²⁰ ≈ 0.0023 — measured 2.36 M → 37 k verify pairs on the
@@ -502,9 +498,10 @@ def embedding_near_dup_pairs(
     the damage when they are not.  Default None keeps the contract query
     exact.
     """
-    first = df.select(F.size(vec_col).alias("d")).first()
+    n_tables, n_planes = 64, 20
+    first = df.select(F.size("embedding").alias("d")).first()
     dim = int(first["d"])
-    rng = np.random.default_rng(seed)
+    rng = np.random.default_rng(7)
     planes = rng.standard_normal((n_tables * n_planes, dim)).astype("float64")
     w_vec = 1 << np.arange(n_planes, dtype=np.int64)
 
@@ -519,7 +516,7 @@ def embedding_near_dup_pairs(
         packed = (signs @ w_vec).reshape(len(mat), n_tables)
         return pd.Series(list(packed))
 
-    with_b = df.select(F.col(key).alias("k"), F.col(vec_col).alias("v")).withColumn(
+    with_b = df.select(F.col(key).alias("k"), F.col("embedding").alias("v")).withColumn(
         "bkts", buckets(F.col("v"))
     )
     # materialize the (key, table, bucket) rows once: the self-join below
@@ -538,8 +535,8 @@ def embedding_near_dup_pairs(
     # both join lineages.
     from .similarity import _dot, _norm
 
-    va = df.select(F.col(key).alias("a"), F.col(vec_col).alias("va"))
-    vb = df.select(F.col(key).alias("b"), F.col(vec_col).alias("vb"))
+    va = df.select(F.col(key).alias("a"), F.col("embedding").alias("va"))
+    vb = df.select(F.col(key).alias("b"), F.col("embedding").alias("vb"))
     va_, vb_ = F.col("va"), F.col("vb")
     return (
         cand.join(va, "a")
@@ -553,14 +550,12 @@ def embedding_near_dup_pairs(
 def drop_duplicate_lines(
     docs: DataFrame,
     key: str,
-    text_col: str = "text",
     max_line_df: int = 10,
-    sep: str = "\n",
 ) -> DataFrame:
-    """C4-style cross-document LINE dedup: a line occurring in more than
-    ``max_line_df`` documents is boilerplate (navbars, cookie banners,
-    footers) and is removed from EVERY document, preserving the order of
-    the surviving lines.
+    """C4-style cross-document LINE dedup of the ``text`` column's lines: a
+    line occurring in more than ``max_line_df`` documents is boilerplate
+    (navbars, cookie banners, footers) and is removed from EVERY document,
+    preserving the order of the surviving lines.
 
     Plan: posexplode lines → document frequency per line (two-phase count
     distinct) → anti-join the hot-line set (tiny by the same argument as
@@ -572,7 +567,7 @@ def drop_duplicate_lines(
     Returns docs with ``text_deduped`` and ``n_lines_kept`` columns (docs
     whose every line was boilerplate keep an empty string)."""
     lines = docs.select(
-        F.col(key), F.posexplode(F.split(F.col(text_col), sep)).alias("pos", "line")
+        F.col(key), F.posexplode(F.split(F.col("text"), "\n")).alias("pos", "line")
     ).withColumn("_lh", F.xxhash64("line"))
     # df-count and anti-join key on the 8-byte line hash so the wide
     # shuffle never ships line strings (only the rebuild groupBy does,
@@ -587,7 +582,7 @@ def drop_duplicate_lines(
     kept = lines.join(hot, "_lh", "left_anti")
     rebuilt = kept.groupBy(key).agg(
         F.concat_ws(
-            sep,
+            "\n",
             F.transform(
                 F.array_sort(F.collect_list(F.struct("pos", "line"))),
                 lambda s: s["line"],
@@ -607,20 +602,19 @@ def decontaminate(
     benchmark: DataFrame,
     key: str,
     text_col: str = "text",
-    bench_text_col: str = "text",
     k: int = 8,
 ) -> DataFrame:
-    """Benchmark decontamination: count, per document, how many distinct
-    ``k``-word shingles it shares with an evaluation set — the standard
-    pre-training step that keeps eval data out of the corpus (docs with
-    ``n_contaminated > 0`` are dropped or audited).  Long shingles (k=8
-    words ≈ 13-gram token windows in the literature) keep false positives
-    near zero.
+    """Benchmark decontamination against the ``text`` of ``benchmark``: count,
+    per document, how many distinct ``k``-word shingles it shares with an
+    evaluation set — the standard pre-training step that keeps eval data out of
+    the corpus (docs with ``n_contaminated > 0`` are dropped or audited).  Long
+    shingles (k=8 words ≈ 13-gram token windows in the literature) keep false
+    positives near zero.
 
     Returns (key, n_contaminated): the overlap count of
     :func:`contamination_stats`, one row per distinct key."""
     return contamination_stats(
-        docs, benchmark, key, text_col, bench_text_col, k
+        docs, benchmark, key, text_col, k=k
     ).select(key, "n_contaminated")
 
 
@@ -629,12 +623,11 @@ def contamination_stats(
     benchmark: DataFrame,
     key: str,
     text_col: str = "text",
-    bench_text_col: str = "text",
     k: int = 8,
     frac_threshold: float = 0.7,
 ) -> DataFrame:
     """Per-document contamination AUDIT: besides the count of distinct
-    ``k``-word shingles each document shares with the eval set (the
+    ``k``-word shingles each document shares with the eval set's ``text`` (the
     :func:`decontaminate` column), report what FRACTION of its distinct
     shingles that is, plus a ``dirty`` verdict at ``frac_threshold`` (the
     PaLM/GPT-3-style "doc is contaminated when ≥X% of its n-grams overlap"
@@ -652,7 +645,7 @@ def contamination_stats(
     the fraction is rounded to 6 (the contract grid)."""
     bench = (
         benchmark.select(
-            F.explode(shingle_column(F.col(bench_text_col), k)).alias("shingle")
+            F.explode(shingle_column(F.col("text"), k)).alias("shingle")
         )
         .distinct()
         .withColumn("_hit", F.lit(1))
@@ -699,7 +692,6 @@ def decontaminate_bloom(
     benchmark: DataFrame,
     key: str,
     text_col: str = "text",
-    bench_text_col: str = "text",
     k: int = 8,
     n_bits: int = 1 << 20,
     n_hashes: int = 4,
@@ -726,7 +718,7 @@ def decontaminate_bloom(
     corpus and eval-set size."""
     n_words = (n_bits + 63) // 64
     bench_pos = (
-        benchmark.select(F.explode(shingle_column(F.col(bench_text_col), k)).alias("shingle"))
+        benchmark.select(F.explode(shingle_column(F.col("text"), k)).alias("shingle"))
         .select(F.explode(F.array(*_bloom_positions(F.col("shingle"), n_bits, n_hashes))).alias("p"))
         .distinct()
     )
@@ -767,7 +759,6 @@ def fuzzy_decontaminate(
     key: str,
     bench_key: str,
     text_col: str = "text",
-    bench_text_col: str = "text",
     n_bands: int = 4,
     threshold: float = 0.5,
     max_band_bucket: int = 5000,
@@ -812,7 +803,7 @@ def fuzzy_decontaminate(
         return arr.select(k, F.size("_a").alias(n), F.explode("_a").alias("_s"))
 
     corpus = docs.select(F.col(key).alias("_k"), F.col(text_col).alias("_t"))
-    bench = benchmark.select(F.col(bench_key).alias("_bk"), F.col(bench_text_col).alias("_t"))
+    bench = benchmark.select(F.col(bench_key).alias("_bk"), F.col("text").alias("_t"))
     cands = (
         drop_hot_keys(_bands(corpus, "_k"), ["band", "bucket"], max_band_bucket)
         .join(F.broadcast(_bands(bench, "_bk")), ["band", "bucket"])

@@ -138,12 +138,12 @@ def wrap_html(text: str, doc_id: int = 0, title: str = "page") -> bytes:
     ).encode("utf-8")
 
 
-def extract_pages(pages, text_col: str = "text", html_col: str = "html"):
+def extract_pages(pages):
     """Fill missing ``text`` from the html payload: the upstream step for
     tables that carry raw WARC payloads only.  Column pruning still holds —
     the scan reads ``html`` only because this expression references it."""
     return pages.withColumn(
-        text_col, F.coalesce(F.col(text_col), html_to_text(F.col(html_col)))
+        "text", F.coalesce(F.col("text"), html_to_text(F.col("html")))
     )
 
 

@@ -126,21 +126,18 @@ def evaluate_bigram_configs(
     spark: SparkSession,
     docs: DataFrame,
     configs: list[tuple[float, float, float]],
-    text_col: str = "text",
-    lang_col: str = "lang",
-    label_col: str = "truth_bad",
     train_filter: Column | None = None,
-    max_vocab: int = 1_000_000,
-    default_lang: str = "en",
 ) -> DataFrame:
     """Evaluate every (lam, k, threshold) config in one distributed pass.
 
-    ``docs`` must carry a boolean ``label_col`` (true = anomalous — the
-    injected/rule label the reference evaluates against).  Returns one row
-    per config: counts, precision/recall/F1 (rounded to 6), the
-    ``valid`` precision-constraint bit and ``is_best`` (highest recall
-    among valid configs, earliest config winning ties — the reference's
-    sequential-update semantics).
+    ``docs`` must carry ``text``, ``lang`` and a boolean ``truth_bad`` (true =
+    anomalous — the injected/rule label the reference evaluates against).  The
+    LM trains on ``train_filter``'s rows (all by default) with a 1M-word
+    vocabulary; languages without a model score with ``en``.  Returns one row
+    per config: counts, precision/recall/F1 (rounded to 6), the ``valid``
+    precision-constraint bit and ``is_best`` (highest recall among valid
+    configs, earliest config winning ties — the reference's sequential-update
+    semantics).
 
     Physical shape: train once → one Arrow scoring pass emitting a
     K_variant array per doc → posexplode → broadcast-join the O(K) config
@@ -163,11 +160,11 @@ def evaluate_bigram_configs(
 
     train_df = docs.filter(train_filter) if train_filter is not None else docs
     models = train_ngram_distributed(
-        train_df, order=2, text_col=text_col, lang_col=lang_col, max_vocab=max_vocab
+        train_df, order=2, max_vocab=1_000_000
     )
 
     arr = bigram_variant_scores(
-        spark, models, F.col(text_col), F.col(lang_col), variants, default_lang
+        spark, models, F.col("text"), F.col("lang"), variants, "en"
     )
     # posexplode_outer, not posexplode: the plain form plans a
     # size(arr) > 0 Filter UNDER the Generate, and Catalyst then evaluates
@@ -176,12 +173,12 @@ def evaluate_bigram_configs(
     # extra null-var_id rows (unscorable docs) drop in the inner config
     # join below, so semantics are identical.
     long = (
-        docs.select(F.col(label_col).alias("_bad"), arr.alias("_s"))
+        docs.select(F.col("truth_bad").alias("_bad"), arr.alias("_s"))
         .select("_bad", F.posexplode_outer("_s").alias("var_id", "score"))
         .withColumn("score", F.round("score", 6))  # HALF_UP, = oracle round()
     )
     return _evaluate_long(
-        docs, long, cfg, label_col, ["lam", "k", "threshold"], flag_when="above"
+        docs, long, cfg, "truth_bad", ["lam", "k", "threshold"], flag_when="above"
     )
 
 
@@ -267,8 +264,6 @@ def evaluate_nb_quality_configs(
     spark: SparkSession,
     docs: DataFrame,
     configs: list[tuple[float, float]],
-    text_col: str = "text",
-    label_col: str = "truth_bad",
 ) -> DataFrame:
     """The ML-slot analogue of :func:`evaluate_bigram_configs` — the
     reference's actual search target is its ML detector
@@ -279,8 +274,8 @@ def evaluate_nb_quality_configs(
     ``configs`` are (alpha, threshold) pairs: alpha is the NB smoothing
     (folded into K weight matrices from ONE distributed aggregation via
     ``train_langid_counts``), threshold cuts the posterior — a document is
-    flagged when P(good|text) < threshold.  Labels: ``label_col`` boolean
-    (true = anomalous); the model trains on the same labels
+    flagged when P(good|text) < threshold.  Labels: the ``truth_bad``
+    boolean (true = anomalous) of each ``text``; the model trains on the same labels
     (good/bad classes), so the sweep measures distillation fidelity."""
     from .langid import N_BUCKETS, _FEATURIZERS, train_langid_counts
 
@@ -298,10 +293,10 @@ def evaluate_nb_quality_configs(
     )
 
     labeled = docs.withColumn(
-        "_cls", F.when(F.col(label_col), F.lit("bad")).otherwise(F.lit("good"))
+        "_cls", F.when(F.col("truth_bad"), F.lit("bad")).otherwise(F.lit("good"))
     )
     langs, counts, doc_counts = train_langid_counts(
-        labeled, text_col=text_col, lang_col="_cls", feat="word_md5"
+        labeled, lang_col="_cls", feat="word_md5"
     )
     totals = counts.sum(axis=1, keepdims=True)
     # K (L, B) float64 weight matrices from the one shared count matrix —
@@ -345,13 +340,13 @@ def evaluate_nb_quality_configs(
     # thresholded comparison agrees with the SQL oracle at the last digit
     long = (
         docs.select(
-            F.col(label_col).alias("_bad"), _p_good(F.col(text_col)).alias("_s")
+            F.col("truth_bad").alias("_bad"), _p_good(F.col("text")).alias("_s")
         )
         .select("_bad", F.posexplode_outer("_s").alias("var_id", "score"))
         .select("_bad", "var_id", F.round("score", 6).alias("score"))
     )
     return _evaluate_long(
-        docs, long, cfg, label_col, ["alpha", "threshold"], flag_when="below"
+        docs, long, cfg, "truth_bad", ["alpha", "threshold"], flag_when="below"
     )
 
 
@@ -392,17 +387,15 @@ def hp_parameter_analysis(
 def hp_search(
     spark: SparkSession,
     docs: DataFrame,
-    space: dict[str, list] | None = None,
     n_trials: int = 15,
     seed: int = 0,
     **kw,
 ) -> dict:
-    """Random hyperparameter search, reference artifact shape
+    """Random hyperparameter search over ``DEFAULT_SPACE``, reference artifact shape
     (hyperparameter_search.py:345-383): best_params / best_recall /
     best_precision / best_f1 / all_results / performance_analysis.
     ``collect`` is bounded by n_trials."""
-    space = space or DEFAULT_SPACE
-    trials = sample_configs(space, n_trials, seed)
+    trials = sample_configs(DEFAULT_SPACE, n_trials, seed)
     configs = [(t["lam"], t["k"], t["threshold"]) for t in trials]
     res = evaluate_bigram_configs(spark, docs, configs, **kw)
     return _artifact(res, ("lam", "k", "threshold"), n_trials, seed)
@@ -420,18 +413,16 @@ DEFAULT_ML_SPACE: dict[str, list[float]] = {
 def hp_search_ml(
     spark: SparkSession,
     docs: DataFrame,
-    space: dict[str, list] | None = None,
     n_trials: int = 15,
     seed: int = 0,
-    **kw,
 ) -> dict:
-    """Random search over the ML-slot (NB quality-model) space — the
+    """Random search over the ML-slot (NB quality-model) space
+    ``DEFAULT_ML_SPACE`` — the
     reference's actual search target, same artifact shape as
     :func:`hp_search`; ONE count aggregation feeds every trial."""
-    space = space or DEFAULT_ML_SPACE
-    trials = sample_configs(space, n_trials, seed)
+    trials = sample_configs(DEFAULT_ML_SPACE, n_trials, seed)
     configs = [(t["alpha"], t["threshold"]) for t in trials]
-    res = evaluate_nb_quality_configs(spark, docs, configs, **kw)
+    res = evaluate_nb_quality_configs(spark, docs, configs)
     return _artifact(res, ("alpha", "threshold"), n_trials, seed)
 
 

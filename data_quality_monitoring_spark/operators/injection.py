@@ -219,7 +219,6 @@ def inject_pages(
     pages: DataFrame,
     rules_by_field: dict[str, list[dict]],
     intensity: float,
-    salt: str = "inject",
 ) -> tuple[DataFrame, DataFrame]:
     """Corrupt several columns; return (corrupted_pages, labels).
 
@@ -230,7 +229,7 @@ def inject_pages(
     df = pages
     label_parts = []
     for field, rules in rules_by_field.items():
-        res = inject_column(F.col(field), F.col("url"), rules, intensity, f"{salt}:{field}")
+        res = inject_column(F.col(field), F.col("url"), rules, intensity, f"inject:{field}")
         df = (
             df.withColumn("_inj", res)
             .withColumn(f"__orig_{field}", F.col(field))

@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 N_BUCKETS = 2**14
+MISMATCH_THRESHOLD = 0.7  # claimed-language posterior below this is a finding
 NGRAM_MIN, NGRAM_MAX = 1, 3
 
 LANGID_RESULT = T.StructType(
@@ -155,18 +156,10 @@ class LangIdModel:
         return cls(list(z["langs"]), z["log_probs"], z["log_priors"], feat)
 
 
-def train_langid(
-    texts_by_lang: dict[str, list[str]],
-    alpha: float = 0.5,
-    feat: str = "char",
-    dtype=np.float32,
-) -> LangIdModel:
-    """Closed-form Naive Bayes over hashed n-grams (deterministic).
-
-    ``dtype=np.float64`` keeps the weights in doubles — required when a
-    DuckDB oracle recomputes the same posteriors in SQL (float32 rounding
-    is not reproducible relationally)."""
-    featurize = _FEATURIZERS[feat]
+def train_langid(texts_by_lang: dict[str, list[str]]) -> LangIdModel:
+    """Closed-form Naive Bayes over hashed char n-grams (deterministic),
+    smoothing alpha 0.5, float32 weights."""
+    featurize = _FEATURIZERS["char"]
     langs = sorted(texts_by_lang)
     counts = np.zeros((len(langs), N_BUCKETS), dtype=np.float64)
     n_docs = np.zeros(len(langs))
@@ -176,16 +169,16 @@ def train_langid(
             counts[li] += np.bincount(b, minlength=N_BUCKETS)
         n_docs[li] = max(len(texts_by_lang[lang]), 1)
     totals = counts.sum(axis=1, keepdims=True)
-    log_probs = np.log(counts + alpha) - np.log(totals + alpha * N_BUCKETS)
+    log_probs = np.log(counts + 0.5) - np.log(totals + 0.5 * N_BUCKETS)
     log_priors = np.log(n_docs / n_docs.sum())
-    return LangIdModel(langs, log_probs.astype(dtype), log_priors.astype(dtype), feat)
+    return LangIdModel(
+        langs, log_probs.astype(np.float32), log_priors.astype(np.float32), "char"
+    )
 
 
 def train_langid_distributed(
     docs,
-    text_col: str = "text",
     lang_col: str = "lang",
-    alpha: float = 0.5,
     feat: str = "char",
     dtype=np.float32,
 ) -> LangIdModel:
@@ -198,13 +191,15 @@ def train_langid_distributed(
     can never skew) and groupBy (lang, bucket).  The shuffle carries
     (lang, bucket, count) partials — map-side combined, bounded by
     L × 16384 rows regardless of corpus size — and the driver folds them
-    into the (L, B) matrix.  Bit-identical to :func:`train_langid` on the
-    same corpus (asserted in tests/test_models.py)."""
-    langs, counts, doc_counts = train_langid_counts(
-        docs, text_col=text_col, lang_col=lang_col, feat=feat
-    )
+    into the (L, B) matrix over ``docs.text`` with smoothing alpha 0.5.
+    ``dtype=np.float64`` keeps the weights in doubles — required when a
+    DuckDB oracle recomputes the same posteriors in SQL (float32 rounding
+    is not reproducible relationally).  Bit-identical to
+    :func:`train_langid` on the same corpus (asserted in
+    tests/test_models.py)."""
+    langs, counts, doc_counts = train_langid_counts(docs, lang_col=lang_col, feat=feat)
     totals = counts.sum(axis=1, keepdims=True)
-    log_probs = np.log(counts + alpha) - np.log(totals + alpha * N_BUCKETS)
+    log_probs = np.log(counts + 0.5) - np.log(totals + 0.5 * N_BUCKETS)
     n_docs = np.array([max(doc_counts[lang], 1) for lang in langs], dtype=np.float64)
     log_priors = np.log(n_docs / n_docs.sum())
     return LangIdModel(langs, log_probs.astype(dtype), log_priors.astype(dtype), feat)
@@ -212,16 +207,15 @@ def train_langid_distributed(
 
 def train_langid_counts(
     docs,
-    text_col: str = "text",
     lang_col: str = "lang",
     feat: str = "char",
 ) -> tuple[list[str], np.ndarray, dict[str, int]]:
-    """The distributed half of NB training: the HYPERPARAMETER-FREE
-    sufficient statistics ``(langs, (L, B) float64 count matrix, per-lang
-    doc counts)``.  ``train_langid_distributed`` folds the smoothing alpha
-    in afterwards; the hyperparameter sweep (operators/hpo.py) folds K
-    alphas into K models from this ONE aggregation instead of re-training
-    per trial."""
+    """The distributed half of NB training over ``docs.text``: the
+    HYPERPARAMETER-FREE sufficient statistics ``(langs, (L, B) float64 count
+    matrix, per-lang doc counts)``.  ``train_langid_distributed`` folds the
+    smoothing alpha in afterwards; the hyperparameter sweep (operators/hpo.py)
+    folds K alphas into K models from this ONE aggregation instead of
+    re-training per trial."""
     featurize = _FEATURIZERS[feat]
 
     @F.pandas_udf(T.ArrayType(T.IntegerType()))
@@ -234,7 +228,7 @@ def train_langid_counts(
     # filter BEFORE aggregating (real web corpora always contain some)
     docs = docs.filter(F.col(lang_col).isNotNull())
     exploded = docs.select(
-        F.col(lang_col).alias("lang"), F.explode(buckets(F.col(text_col))).alias("bucket")
+        F.col(lang_col).alias("lang"), F.explode(buckets(F.col("text"))).alias("bucket")
     )
     rows = exploded.groupBy("lang", "bucket").agg(F.count("*").alias("n")).collect()
     doc_counts = {
@@ -270,14 +264,14 @@ def langid_struct(
     return _score(text, claimed)
 
 
-def langid_finding(result: Column, threshold: float = 0.7) -> Column:
+def langid_finding(result: Column) -> Column:
     """Map the scorer output to a finding struct, reference ML semantics:
-    anomaly iff claimed-language posterior < threshold; probability =
+    anomaly iff claimed-language posterior < ``MISMATCH_THRESHOLD``; probability =
     1 - score (clamped)."""
     score = result["claimed_score"]
     prob = F.least(F.greatest(F.lit(1.0) - score, F.lit(0.0)), F.lit(0.99))
     return F.when(
-        score.isNotNull() & (score < F.lit(threshold)),
+        score.isNotNull() & (score < F.lit(MISMATCH_THRESHOLD)),
         F.struct(
             F.lit("langid_mismatch").alias("rule"),
             F.lit("LANG_MISMATCH").alias("code"),

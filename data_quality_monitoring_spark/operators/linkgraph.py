@@ -32,19 +32,18 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+DAMPING = 0.85
+
 
 def pagerank(
     edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
     n_iter: int = 5,
-    damping: float = 0.85,
     tol: float | None = None,
     stats: dict | None = None,
 ) -> DataFrame:
     """(node, rank) after ``n_iter`` synchronous PageRank steps over the
-    distinct edge list, with uniform teleport and dangling-mass
-    redistribution.  Ranks sum to 1 at every step.
+    distinct ``(src, dst)`` edge list, with damping ``DAMPING``, uniform
+    teleport and dangling-mass redistribution.  Ranks sum to 1 at every step.
 
     ``tol``: when set, ``n_iter`` becomes a CEILING and the loop stops as
     soon as the L1 delta ``sum(|rank_t - rank_{t-1}|)`` between consecutive
@@ -62,7 +61,7 @@ def pagerank(
     ``stats``: optional dict, filled with ``iterations`` and ``l1_deltas``
     (one entry per iteration when ``tol`` is set) for bench/audit.
     """
-    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).distinct()
+    e = edges.select("src", "dst").distinct()
     nodes = (
         e.select(F.col("src").alias("node"))
         .unionAll(e.select(F.col("dst").alias("node")))
@@ -90,7 +89,7 @@ def pagerank(
         .persist()
     )
     ranks = nodes.withColumn("rank", F.lit(1.0 / n)).localCheckpoint(eager=True)
-    base = (1.0 - damping) / n
+    base = (1.0 - DAMPING) / n
     l1_deltas: list[float] = []
     done = 0
     try:
@@ -111,7 +110,7 @@ def pagerank(
                     "node",
                     (
                         F.lit(base)
-                        + F.lit(damping)
+                        + F.lit(DAMPING)
                         * (
                             F.coalesce(F.col("c"), F.lit(0.0))
                             + F.col("dang") / F.lit(float(n))
@@ -143,12 +142,10 @@ def pagerank(
 
 def extract_link_edges(
     pages: DataFrame,
-    url_col: str = "url",
-    html_col: str = "html",
     drop_self: bool = True,
 ) -> DataFrame:
     """Host-level weighted edge list ``(src, dst, n_links)`` from anchor
-    hrefs in raw HTML — the front half of the crawl link graph
+    hrefs in the raw ``html`` of each ``url`` — the front half of the crawl link graph
     (``pagerank`` is the back half).
 
     Pure codegen: UTF-8 decode via ``make_valid_utf8`` (malformed bytes
@@ -166,12 +163,12 @@ def extract_link_edges(
     from .urls import url_host
 
     hrefs = F.regexp_extract_all(
-        F.make_valid_utf8(F.col(html_col).cast("string")),
+        F.make_valid_utf8(F.col("html").cast("string")),
         F.lit(r"""(?i)href\s*=\s*["']([^"']+)["']"""),
         1,
     )
     exploded = pages.select(
-        url_host(F.col(url_col)).alias("src"), F.explode(hrefs).alias("href")
+        url_host(F.col("url")).alias("src"), F.explode(hrefs).alias("href")
     )
     edges = (
         exploded.filter(F.col("href").rlike(r"(?i)^https?://"))
@@ -183,11 +180,7 @@ def extract_link_edges(
     return edges.groupBy("src", "dst").agg(F.count(F.lit(1)).alias("n_links"))
 
 
-def anchor_term_stats(
-    pages: DataFrame,
-    url_col: str = "url",
-    html_col: str = "html",
-) -> DataFrame:
+def anchor_term_stats(pages: DataFrame) -> DataFrame:
     """Anchor-text aggregation: ``(dst, term, n_srcs)`` — how many distinct
     source HOSTS link to ``dst`` using this lowercased anchor word.  The
     classic link-graph relevance/reputation signal (search engines and
@@ -205,12 +198,12 @@ def anchor_term_stats(
     from .urls import url_host
 
     els = F.regexp_extract_all(
-        F.make_valid_utf8(F.col(html_col).cast("string")),
+        F.make_valid_utf8(F.col("html").cast("string")),
         F.lit(r"""(?is)<a\s[^>]*href\s*=\s*["'][^"']+["'][^>]*>.*?</a>"""),
         0,
     )
     ex = pages.select(
-        url_host(F.col(url_col)).alias("src"), F.explode(els).alias("el")
+        url_host(F.col("url")).alias("src"), F.explode(els).alias("el")
     )
     href = F.regexp_extract(F.col("el"), r"""(?i)href\s*=\s*["']([^"']+)["']""", 1)
     inner = F.regexp_extract(F.col("el"), r"(?is)>(.*)</a>$", 1)

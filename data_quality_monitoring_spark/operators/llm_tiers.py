@@ -80,10 +80,10 @@ def enhanced_score(
     return s
 
 
-def _word_md5_vec(text: str, n_buckets: int) -> np.ndarray:
-    from .langid import _word_buckets
+def _word_md5_vec(text: str) -> np.ndarray:
+    from .langid import N_BUCKETS, _word_buckets
 
-    v = np.zeros(n_buckets, dtype="float64")
+    v = np.zeros(N_BUCKETS, dtype="float64")
     b = _word_buckets(text)
     if len(b):
         np.add.at(v, b, 1.0)
@@ -94,7 +94,6 @@ def fewshot_max_cosine(
     spark: SparkSession,
     examples: list[str],
     text: Column,
-    n_buckets: int = 2**14,
 ) -> Column:
     """Max cosine similarity between each document and a few-shot example
     set (reference ``InContextLearningDetector.detect_anomaly`` ``:151-165``)
@@ -104,21 +103,21 @@ def fewshot_max_cosine(
     handful of strings) and broadcast; documents are embedded and scored in
     ONE Arrow-batched pandas UDF.  NULL/empty/whitespace documents return
     NULL (the reference's preprocess gate, ``:177-188``)."""
-    ex = np.stack([_word_md5_vec(t, n_buckets) for t in examples])
+    ex = np.stack([_word_md5_vec(t) for t in examples])
     ex_norm = np.linalg.norm(ex, axis=1)
     keep = ex_norm > 0
     ex, ex_norm = ex[keep], ex_norm[keep]
-    bc = spark.sparkContext.broadcast((ex, ex_norm, n_buckets))
+    bc = spark.sparkContext.broadcast((ex, ex_norm))
 
     @F.pandas_udf(T.DoubleType())
     def _sim(texts: pd.Series) -> pd.Series:
-        exv, exn, nb = bc.value
+        exv, exn = bc.value
         out = []
         for t in texts:
             if t is None or not isinstance(t, str) or not t.strip():
                 out.append(None)
                 continue
-            v = _word_md5_vec(t, nb)
+            v = _word_md5_vec(t)
             nv = np.linalg.norm(v)
             if nv == 0 or not len(exv):
                 out.append(None)
@@ -164,9 +163,9 @@ def llm_tier_finding(
 
 
 def learn_prototypes(
-    embeddings: np.ndarray, n_prototypes: int = 10, seed: int = 42, iters: int = 10
+    embeddings: np.ndarray, n_prototypes: int = 10, seed: int = 42
 ) -> np.ndarray:
-    """Deterministic Lloyd k-means over an embedding sample — the
+    """Deterministic Lloyd k-means (10 rounds) over an embedding sample — the
     ``PrototypeBasedReprogramming.learn_prototypes`` contract (reference
     ``:113-121``; sklearn ``KMeans(random_state=42)`` there): k shrinks to
     ``len(embeddings)`` when the sample is smaller, centers returned as a
@@ -176,7 +175,7 @@ def learn_prototypes(
     k = min(n_prototypes, len(emb))
     rng = np.random.default_rng(seed)
     centers = emb[rng.choice(len(emb), size=k, replace=False)]
-    for _ in range(iters):
+    for _ in range(10):
         d = np.linalg.norm(emb[:, None, :] - centers[None, :, :], axis=2)
         assign = d.argmin(axis=1)
         for c in range(k):
@@ -186,9 +185,7 @@ def learn_prototypes(
     return centers
 
 
-def apply_prototypes(
-    embeddings: np.ndarray, prototypes: np.ndarray, alpha: float = 0.3
-) -> np.ndarray:
+def apply_prototypes(embeddings: np.ndarray, prototypes: np.ndarray) -> np.ndarray:
     """Blend each embedding (1−α)/α with its nearest (euclidean) prototype —
     byte-for-byte the reference's ``apply_prototypes`` (``:123-139``,
     α = 0.3)."""
@@ -197,11 +194,11 @@ def apply_prototypes(
         emb = emb.reshape(1, -1)
     d = np.linalg.norm(emb[:, None, :] - prototypes[None, :, :], axis=2)
     nearest = prototypes[d.argmin(axis=1)]
-    return (1.0 - alpha) * emb + alpha * nearest
+    return (1.0 - 0.3) * emb + 0.3 * nearest
 
 
 def prototype_column(
-    spark: SparkSession, prototypes: np.ndarray, vec: Column, alpha: float = 0.3
+    spark: SparkSession, prototypes: np.ndarray, vec: Column
 ) -> Column:
     """Array-column form of :func:`apply_prototypes`: reprogram an
     ``array<double>`` embedding column against broadcast prototypes in one
@@ -216,7 +213,7 @@ def prototype_column(
             if v is None:
                 out.append(None)
                 continue
-            out.append(apply_prototypes(np.asarray(v), protos, alpha)[0].tolist())
+            out.append(apply_prototypes(np.asarray(v), protos)[0].tolist())
         return pd.Series(out)
 
     return _apply(vec)

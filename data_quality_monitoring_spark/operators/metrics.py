@@ -61,11 +61,11 @@ def threshold_sweep(
     score_col: str,
     label_col: str,
     thresholds: list[float],
-    higher_is_anomalous: bool = True,
 ) -> DataFrame:
     """PR curve in ONE pass: explode a thresholds literal against each score
-    row, then aggregate — the reference's per-threshold loop
-    (``ml_curve_generator.py:234-367``) becomes a single shuffle.
+    row (a score above the threshold predicts anomalous), then aggregate — the
+    reference's per-threshold loop (``ml_curve_generator.py:234-367``) becomes
+    a single shuffle.
 
     Rows with a NULL score are excluded from the curve (they are neither a
     positive nor a negative prediction at any threshold)."""
@@ -73,7 +73,7 @@ def threshold_sweep(
     e = scores.filter(F.col(score_col).isNotNull()).select(
         F.col(score_col).alias("s"), F.col(label_col).cast("boolean").alias("y"), t
     )
-    pred = (F.col("s") > F.col("threshold")) if higher_is_anomalous else (F.col("s") < F.col("threshold"))
+    pred = F.col("s") > F.col("threshold")
     agg = e.groupBy("threshold").agg(
         F.sum((pred & F.col("y")).cast("long")).alias("tp"),
         F.sum((pred & ~F.col("y")).cast("long")).alias("fp"),
@@ -133,10 +133,10 @@ def histogram(
     )
 
 
-def rule_keys(verdict_col: str = "verdict") -> dict[str, Column]:
-    """The (method, code) a verdict is counted under; a kept doc counts as
-    ``pass``/``PASS``."""
-    v = F.col(verdict_col)
+def rule_keys() -> dict[str, Column]:
+    """The (method, code) the ``verdict`` is counted under; a kept doc
+    counts as ``pass``/``PASS``."""
+    v = F.col("verdict")
     return {
         "method": F.coalesce(v["method"], F.lit("pass")),
         "code": F.coalesce(v["code"], F.lit("PASS")),
@@ -145,21 +145,20 @@ def rule_keys(verdict_col: str = "verdict") -> dict[str, Column]:
 
 def rule_fire_counts(
     result: DataFrame,
-    verdict_col: str = "verdict",
     group_cols: tuple[str, ...] = (),
 ) -> DataFrame:
     """Per-rule fire counts from a pipeline result (filter-metrics table).
     ``group_cols`` prepends keys (e.g. the sink's commit bucket) for
     per-partition metrics."""
-    keys = [c.alias(name) for name, c in rule_keys(verdict_col).items()]
+    keys = [c.alias(name) for name, c in rule_keys().items()]
     return result.groupBy(*group_cols, *keys).agg(F.count("*").alias("n"))
 
 
-def weights_from_performance(per_method_f1: dict[str, float], baseline: float = 0.1) -> dict[str, float]:
+def weights_from_performance(per_method_f1: dict[str, float]) -> dict[str, float]:
     """Detection weights from per-method F1 (reference
-    generate_detection_weights.py:43-93): weight = max(f1, baseline),
+    generate_detection_weights.py:43-93): weight = max(f1, 0.1),
     normalised to sum 1; equal weights when no data."""
     methods = list(per_method_f1) or ["pattern", "ml", "llm"]
-    raw = {m: max(per_method_f1.get(m, 0.0), baseline) for m in methods}
+    raw = {m: max(per_method_f1.get(m, 0.0), 0.1) for m in methods}
     total = sum(raw.values())
     return {m: w / total for m, w in raw.items()}

@@ -310,8 +310,8 @@ def extract_audio_features(media: DataFrame) -> DataFrame:
     return media.select("media_id", "payload").mapInPandas(run, AUDIO_FEATURES_SCHEMA)
 
 
-def synth_wav_bytes(seed: int, sample_rate: int = 8000) -> bytes:
-    """Deterministic PCM16 mono WAV fixture: integer sawtooth-ish waveform
+def synth_wav_bytes(seed: int) -> bytes:
+    """Deterministic 8 kHz PCM16 mono WAV fixture: integer sawtooth-ish waveform
     ``s_i = ((a·i + b) mod 4001) − 2000`` with (n, a, b) derived from the
     seed by pure integer arithmetic — every decoded feature is therefore
     re-computable in ANSI SQL (the trick that oracles the fake image
@@ -329,7 +329,7 @@ def synth_wav_bytes(seed: int, sample_rate: int = 8000) -> bytes:
     with wave.open(buf, "wb") as w:
         w.setnchannels(1)
         w.setsampwidth(2)
-        w.setframerate(sample_rate)
+        w.setframerate(8000)
         w.writeframes(samples.tobytes())
     return buf.getvalue()
 

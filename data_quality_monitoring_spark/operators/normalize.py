@@ -138,7 +138,6 @@ def c4_clean_df(
     require_terminal_punct: bool = True,
     min_kept_lines: int = 3,
     out_keep: str = "keep_c4",
-    out_text: str = "text_c4",
     with_signals: bool = False,
 ):
     """Staged DataFrame form of the C4 cleaner: projection 1 materializes
@@ -148,7 +147,7 @@ def c4_clean_df(
     inside one projection; CollapseProject's non-cheap-alias guard keeps
     the stages separate, so each array is computed exactly once.
 
-    Appends ``out_keep`` (verdict) and ``out_text`` (rebuilt text); with
+    Appends ``out_keep`` (verdict) and ``text_c4`` (rebuilt text); with
     ``with_signals``, every :func:`c4_line_signals` column too."""
     text = F.coalesce(F.col(text_col), F.lit(""))
     staged = df.withColumns({
@@ -169,7 +168,7 @@ def c4_clean_df(
     )
     out = staged.withColumns(
         {out_keep: c4_keep(sig, min_kept_lines=min_kept_lines),
-         out_text: sig["text_clean"]}
+         "text_c4": sig["text_clean"]}
     )
     if with_signals:
         out = out.withColumns(dict(sig))

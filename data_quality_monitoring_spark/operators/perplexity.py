@@ -32,6 +32,7 @@ from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
 ERROR_SCORE = 10.0
+PPL_THRESHOLD = 6.0  # mean NLL above this is a finding
 BOS = "<s>"
 UNK_ID = 0  # vocab id 0 reserved for unknown tokens
 DEFAULT_LAMS = {2: (0.7,), 3: (0.5, 0.3)}
@@ -199,9 +200,7 @@ class NgramLM:
         return nlls.sum(axis=1) / len(ids)
 
 
-def train_ngram(
-    texts: list[str], order: int, max_vocab: int = 50_000, k: float = 0.5
-) -> NgramLM:
+def train_ngram(texts: list[str], order: int, max_vocab: int = 50_000) -> NgramLM:
     """Count-based training (deterministic, closed form)."""
     uni: Counter = Counter()
     for t in texts:
@@ -218,7 +217,7 @@ def train_ngram(
             g = hist + (vocab.get(w, UNK_ID),)
             counts[g] = counts.get(g, 0.0) + 1
             hist = g[1:]
-    return NgramLM(vocab, counts, order, k)
+    return NgramLM(vocab, counts, order)
 
 
 AUTO_FLOOR_CUTOFF = 5_000_000
@@ -311,10 +310,7 @@ def _build_vocabs(rows) -> dict[str, dict[str, int]]:
 def train_ngram_distributed(
     docs,
     order: int,
-    text_col: str = "text",
-    lang_col: str = "lang",
     max_vocab: int = 50_000,
-    k: float = 0.5,
     min_word_count: int | None = None,
     ngram_min_count: int | None = None,
     auto_floor_cutoff: int = AUTO_FLOOR_CUTOFF,
@@ -349,12 +345,12 @@ def train_ngram_distributed(
     spark = docs.sparkSession
     # untagged rows can't train a per-lang LM (and a None key would break
     # the per-lang vocab sort downstream)
-    docs = docs.filter(F.col(lang_col).isNotNull())
+    docs = docs.filter(F.col("lang").isNotNull())
     min_word_count, ngram_min_count = _resolve_floors(
         docs, min_word_count, ngram_min_count, auto_floor_cutoff
     )
     vocabs = _build_vocabs(
-        _vocab_rows(docs, text_col, lang_col, max_vocab, min_word_count)
+        _vocab_rows(docs, "text", "lang", max_vocab, min_word_count)
     )
     bc = spark.sparkContext.broadcast(vocabs)
 
@@ -382,8 +378,8 @@ def train_ngram_distributed(
 
     gram_counts = (
         docs.select(
-            F.col(lang_col).alias("lang"),
-            F.explode(ngram_keys(F.col(text_col), F.col(lang_col))).alias("key"),
+            F.col("lang"),
+            F.explode(ngram_keys(F.col("text"), F.col("lang"))).alias("key"),
         )
         .groupBy("lang", "key")
         .agg(F.count("*").alias("n"))
@@ -395,7 +391,7 @@ def train_ngram_distributed(
         v = len(vocabs[r["lang"]]) + 1
         counts[r["lang"]][_unflat(r["key"], v, order)] = float(r["n"])
     return {
-        lang: NgramLM(vocab, counts.get(lang, {}), order, k)
+        lang: NgramLM(vocab, counts.get(lang, {}), order)
         for lang, vocab in vocabs.items()
     }
 
@@ -438,9 +434,9 @@ def perplexity_column(
     models: dict[str, NgramLM],
     text: Column,
     claimed: Column,
-    default_lang: str = "en",
 ) -> Column:
-    """Mean-NLL score column: each doc scored by its claimed language's LM."""
+    """Mean-NLL score column: each doc scored by its claimed language's LM
+    (``en``'s when the claimed language has none)."""
     bc = spark.sparkContext.broadcast(models)
 
     @F.pandas_udf(T.DoubleType())
@@ -451,18 +447,18 @@ def perplexity_column(
             if t is None or not isinstance(t, str) or not t.strip():
                 out.append(None)
                 continue
-            lm = lms.get(cl) or lms.get(default_lang)
+            lm = lms.get(cl) or lms.get("en")
             out.append(lm.nll(t) if lm is not None else ERROR_SCORE)
         return pd.Series(out, dtype="float64")
 
     return _score(text, claimed)
 
 
-def perplexity_finding(score: Column, threshold: float = 6.0) -> Column:
-    """score > threshold → finding with probability min(score/10, 1)."""
+def perplexity_finding(score: Column) -> Column:
+    """score > ``PPL_THRESHOLD`` → finding with probability min(score/10, 1)."""
     prob = F.least(score / F.lit(10.0), F.lit(1.0))
     return F.when(
-        score.isNotNull() & (score > F.lit(threshold)),
+        score.isNotNull() & (score > F.lit(PPL_THRESHOLD)),
         F.struct(
             F.lit("high_perplexity").alias("rule"),
             F.lit("HIGH_PERPLEXITY").alias("code"),
@@ -473,14 +469,12 @@ def perplexity_finding(score: Column, threshold: float = 6.0) -> Column:
 
 def perplexity_buckets(
     scored: DataFrame,
-    lang_col: str = "lang",
     score_col: str = "ppl",
-    id_col: str = "doc_id",
     mode: str = "auto",
-    cuts: tuple[float, float] = (1.0 / 3.0, 2.0 / 3.0),
     rank_cutoff: int = 5_000_000,
 ) -> DataFrame:
-    """CCNet-style head/middle/tail partitioning by per-language perplexity.
+    """CCNet-style head/middle/tail partitioning of ``scored`` (keyed by
+    ``doc_id``) by per-``lang`` perplexity.
 
     CCNet (Wenzek et al. 2020) splits each language's documents into three
     quality tiers at the 1/3 and 2/3 perplexity percentiles — the standard
@@ -519,8 +513,8 @@ def perplexity_buckets(
     labeled ``unscored`` — deterministic in every engine regardless of its
     NULL-ordering default.
     """
-    lo, hi = cuts
-    key = F.coalesce(F.col(lang_col), F.lit("en")).alias("_bl")
+    lo, hi = 1.0 / 3.0, 2.0 / 3.0
+    key = F.coalesce(F.col("lang"), F.lit("en")).alias("_bl")
     if mode == "auto":
         # bounded probe: CollectLimit stops scanning once cutoff+1 scored
         # rows exist, so the mode decision costs O(rank_cutoff) rows, not a
@@ -528,7 +522,7 @@ def perplexity_buckets(
         # every row just to pick a strategy)
         probe = (
             scored.filter(F.col(score_col).isNotNull())
-            .select(id_col)
+            .select("doc_id")
             .limit(rank_cutoff + 1)
             .count()
         )
@@ -547,7 +541,7 @@ def perplexity_buckets(
         # arithmetic is bit-identical to percent_rank over the filtered
         # frame.
         w = Window.partitionBy("_bl").orderBy(
-            F.col(score_col).asc_nulls_last(), F.col(id_col).asc()
+            F.col(score_col).asc_nulls_last(), F.col("doc_id").asc()
         )
         rn = F.row_number().over(w)
         n_scored = F.count(score_col).over(Window.partitionBy("_bl"))
@@ -567,7 +561,7 @@ def perplexity_buckets(
         )
     elif mode == "threshold":
         nn = scored.filter(F.col(score_col).isNotNull()).select(
-            F.col(id_col), F.col(score_col), key
+            F.col("doc_id"), F.col(score_col), key
         )
         cuts_df = nn.groupBy("_bl").agg(
             F.percentile_approx(score_col, F.lit(lo)).alias("_c1"),

@@ -11,16 +11,13 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def null_stats(df: DataFrame, col: str, exact_distinct: bool = True) -> DataFrame:
+def null_stats(df: DataFrame, col: str) -> DataFrame:
     """nunique / notna / isna (reference :40-43)."""
-    distinct = (
-        F.countDistinct(col) if exact_distinct else F.approx_count_distinct(col)
-    ).alias("n_distinct")
     return df.agg(
         F.count(F.lit(1)).alias("n_rows"),
         F.count(col).alias("n_notnull"),
         F.sum(F.col(col).isNull().cast("long")).alias("n_null"),
-        distinct,
+        F.countDistinct(col).alias("n_distinct"),
     )
 
 

@@ -31,11 +31,9 @@ from .langid import LangIdModel, langid_struct, train_langid
 GOOD, BAD = "good", "bad"
 
 
-def train_quality_classifier(
-    good_texts: list[str], bad_texts: list[str], alpha: float = 0.5
-) -> LangIdModel:
+def train_quality_classifier(good_texts: list[str], bad_texts: list[str]) -> LangIdModel:
     """Two-class NB over hashed n-grams — fastText-shaped, closed form."""
-    return train_langid({GOOD: good_texts, BAD: bad_texts}, alpha=alpha)
+    return train_langid({GOOD: good_texts, BAD: bad_texts})
 
 
 def quality_prob(spark: SparkSession, model: LangIdModel, text: Column) -> Column:
@@ -45,12 +43,12 @@ def quality_prob(spark: SparkSession, model: LangIdModel, text: Column) -> Colum
     return langid_struct(spark, model, text, F.lit(GOOD))["claimed_score"]
 
 
-def quality_model_finding(score: Column, threshold: float = 0.5) -> Column:
-    """Detector-slot contract: anomaly iff score < threshold,
+def quality_model_finding(score: Column) -> Column:
+    """Detector-slot contract: anomaly iff score < 0.5,
     probability = 1 - score (reference ml_anomaly_detector.py:144-152)."""
     prob = F.least(F.greatest(F.lit(1.0) - score, F.lit(0.0)), F.lit(0.99))
     return F.when(
-        score.isNotNull() & (score < F.lit(threshold)),
+        score.isNotNull() & (score < F.lit(0.5)),
         F.struct(
             F.lit("quality_model").alias("rule"),
             F.lit("LOW_QUALITY_MODEL").alias("code"),

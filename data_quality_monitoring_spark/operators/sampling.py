@@ -63,12 +63,11 @@ def mixture_sample(
     docs: DataFrame,
     weights: DataFrame,
     token_budget: float,
-    source_col: str = "source",
     id_col: str = "doc_id",
-    token_col: str = "n_tokens",
 ) -> DataFrame:
-    """Source-weighted token-budget corpus assembly (the "data mixture"
-    step: DoReMi/Pile-style static mixing).
+    """Source-weighted token-budget corpus assembly over the ``source`` and
+    ``n_tokens`` columns (the "data mixture" step: DoReMi/Pile-style static
+    mixing).
 
     Each source gets ``token_budget · weight/Σweights`` tokens; documents
     are admitted in deterministic md5(key) order until their source's quota
@@ -89,23 +88,23 @@ def mixture_sample(
     quotas = (
         weights.crossJoin(F.broadcast(total))
         .select(
-            source_col,
+            "source",
             (F.lit(float(token_budget)) * F.col("weight") / F.col("_tw")).alias(
                 "_quota"
             ),
         )
     )
     w = (
-        Window.partitionBy(source_col)
+        Window.partitionBy("source")
         .orderBy(F.md5(F.col(id_col).cast("string")))
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     return (
-        docs.join(F.broadcast(quotas), source_col, "left")
-        .withColumn("cum_tokens", F.sum(token_col).over(w))
+        docs.join(F.broadcast(quotas), "source", "left")
+        .withColumn("cum_tokens", F.sum("n_tokens").over(w))
         .withColumn(
             "mix_keep",
-            (F.col("cum_tokens") - F.col(token_col))
+            (F.col("cum_tokens") - F.col("n_tokens"))
             < F.coalesce(F.col("_quota"), F.lit(0.0)),
         )
         .drop("_quota")
@@ -118,9 +117,9 @@ DSIR_BUCKETS = 4096
 _WS_CLASS = "[ \\t\\n\\r\\f\\x0B]"
 
 
-def dsir_features(text: Column, n_buckets: int = DSIR_BUCKETS) -> Column:
+def dsir_features(text: Column) -> Column:
     """Hashed n-gram feature buckets (unigrams ∪ bigrams of lowercased
-    whitespace tokens, md5 % n_buckets) — DSIR's bag-of-hashed-ngrams
+    whitespace tokens, md5 % DSIR_BUCKETS) — DSIR's bag-of-hashed-ngrams
     representation, expressed as a pure Column so the featurizer runs
     inside whole-stage codegen and any engine can replay it (md5 is the
     portable hash, as everywhere else in this repo)."""
@@ -138,7 +137,7 @@ def dsir_features(text: Column, n_buckets: int = DSIR_BUCKETS) -> Column:
     return F.transform(
         F.concat(w, bi),
         lambda s: F.conv(F.substring(F.md5(s), 1, 8), 16, 10).cast("long")
-        % n_buckets,
+        % DSIR_BUCKETS,
     )
 
 
@@ -146,19 +145,17 @@ def dsir_scores(
     docs: DataFrame,
     target: DataFrame,
     key: str,
-    text_col: str = "text",
-    n_buckets: int = DSIR_BUCKETS,
-    smoothing: float = 0.5,
     repartition_to: int | None = None,
 ) -> DataFrame:
-    """DSIR (Xie et al. 2023, arXiv:2302.03169): data selection via
-    importance resampling.  Fit a hashed-ngram unigram-bucket language
-    model to the TARGET distribution (the high-quality slice you want more
-    of) and to the RAW corpus; each document's importance weight is its
-    per-feature mean log-likelihood ratio  mean_f [log p_tgt(f) − log
-    p_raw(f)].  Returns ``(key, n_features, avg_log_ratio)``.
+    """DSIR (Xie et al. 2023, arXiv:2302.03169): data selection via importance
+    resampling.  Fit a hashed-ngram unigram-bucket language model
+    (``DSIR_BUCKETS`` buckets, add-0.5 smoothing, over ``text``) to the TARGET
+    distribution (the high-quality slice you want more of) and to the RAW
+    corpus; each document's importance weight is its per-feature mean
+    log-likelihood ratio  mean_f [log p_tgt(f) − log p_raw(f)].  Returns
+    ``(key, n_features, avg_log_ratio)``.
 
-    Scale shape: both count tables are ≤ n_buckets rows (add-λ smoothed),
+    Scale shape: both count tables are ≤ DSIR_BUCKETS rows (add-λ smoothed),
     and the feature TOTALS are the sums of those tiny tables — no driver
     action, no extra corpus pass; the log-ratio lookup is re-broadcast and
     the corpus is scanned once for raw counts and once for scoring, the
@@ -174,13 +171,13 @@ def dsir_scores(
     and would run on one core).  Leave None on real cluster inputs: they
     arrive in thousands of splits and the extra text shuffle is waste."""
     if repartition_to:
-        docs = docs.select(key, text_col).repartition(repartition_to)
-        target = target.select(text_col).repartition(repartition_to)
+        docs = docs.select(key, "text").repartition(repartition_to)
+        target = target.select("text").repartition(repartition_to)
     feats = lambda df: df.select(  # noqa: E731
-        F.explode(dsir_features(F.col(text_col), n_buckets)).alias("_b")
+        F.explode(dsir_features(F.col("text"))).alias("_b")
     )
-    lam = float(smoothing)
-    # the two count tables are ≤ n_buckets rows: persist them so the
+    lam = 0.5
+    # the two count tables are ≤ DSIR_BUCKETS rows: persist them so the
     # totals' broadcasts and the ratio join don't re-run the feature scans
     ct = feats(target).groupBy("_b").agg(F.count("*").alias("_ct")).persist()
     cr = feats(docs).groupBy("_b").agg(F.count("*").alias("_cr")).persist()
@@ -199,17 +196,17 @@ def dsir_scores(
             (
                 F.log(
                     (F.coalesce(F.col("_ct"), F.lit(0)) + lam)
-                    / (F.col("_nt") + lam * n_buckets)
+                    / (F.col("_nt") + lam * DSIR_BUCKETS)
                 )
                 - F.log(
                     (F.coalesce(F.col("_cr"), F.lit(0)) + lam)
-                    / (F.col("_nr") + lam * n_buckets)
+                    / (F.col("_nr") + lam * DSIR_BUCKETS)
                 )
             ).alias("_ratio"),
         )
     )
     per_doc = docs.select(
-        F.col(key), F.explode_outer(dsir_features(F.col(text_col), n_buckets)).alias("_b")
+        F.col(key), F.explode_outer(dsir_features(F.col("text"))).alias("_b")
     )
     return (
         per_doc.join(F.broadcast(ratio), "_b", "left")
@@ -228,22 +225,18 @@ def dsir_sample(
     target: DataFrame,
     key: str,
     n: int,
-    text_col: str = "text",
-    n_buckets: int = DSIR_BUCKETS,
-    smoothing: float = 0.5,
     seed: int = 7,
-    round_to: int = 6,
     repartition_to: int | None = None,
 ) -> DataFrame:
-    """Gumbel-top-k importance resample (the actual DSIR selection rule):
-    score = avg_log_ratio + Gumbel noise, take the top ``n``.  Every
-    Gumbel draw is a pure function of (seed, key) — u = (md5 bucket +
-    0.5)/2^32, g = −ln(−ln u) — so the resample is deterministic,
-    partitioning-invariant and nested-resumable like every other sampler
-    here.  Returns ``(key, score, rank)`` for the selected docs; rank is
-    computed on the ROUNDED score (ties → lower key) so independent
-    engines agree bit-for-bit."""
-    s = dsir_scores(docs, target, key, text_col, n_buckets, smoothing, repartition_to)
+    """Gumbel-top-k importance resample over :func:`dsir_scores` (the actual
+    DSIR selection rule): score = avg_log_ratio + Gumbel noise, take the top
+    ``n``.  Every Gumbel draw is a pure function of (seed, key) — u = (md5
+    bucket + 0.5)/2^32, g = −ln(−ln u) — so the resample is deterministic,
+    partitioning-invariant and nested-resumable like every other sampler here.
+    Returns ``(key, score, rank)`` for the selected docs; rank is computed on
+    the ROUNDED score (ties → lower key) so independent engines agree
+    bit-for-bit."""
+    s = dsir_scores(docs, target, key, repartition_to=repartition_to)
     u = (
         F.conv(
             F.substring(F.md5(F.concat(F.lit(str(seed) + ":"), F.col(key).cast("string"))), 1, 8),
@@ -253,7 +246,7 @@ def dsir_sample(
         + 0.5
     ) / F.lit(4294967296.0)
     scored = s.select(
-        key, F.round(F.col("avg_log_ratio") - F.log(-F.log(u)), round_to).alias("score")
+        key, F.round(F.col("avg_log_ratio") - F.log(-F.log(u)), 6).alias("score")
     )
     # top-n as TakeOrdered (per-partition top-n then merge — no global
     # sort).  n is the scale ceiling of this operator: TakeOrdered merges

@@ -34,34 +34,34 @@ DEFAULT_SCRUB_CHAIN: list[tuple[str, str, str]] = [
 ]
 
 
-def scrub_column(col: Column, chain: list[tuple[str, str, str]] | None = None) -> Column:
+def scrub_column(col: Column) -> Column:
     """Ordered native ``regexp_replace`` chain — stays inside codegen."""
     out = col
-    for _, pattern, repl in chain or DEFAULT_SCRUB_CHAIN:
+    for _, pattern, repl in DEFAULT_SCRUB_CHAIN:
         out = F.regexp_replace(out, pattern, repl)
     return out
 
 
-def scrub_pandas(s: pd.Series, chain: list[tuple[str, str, str]] | None = None) -> pd.Series:
+def scrub_pandas(s: pd.Series) -> pd.Series:
     """Python-``re`` twin of :func:`scrub_column` (oracle/parity path)."""
     out = s
-    for _, pattern, repl in chain or DEFAULT_SCRUB_CHAIN:
+    for _, pattern, repl in DEFAULT_SCRUB_CHAIN:
         out = out.str.replace(pattern, repl, regex=True)
     return out
 
 
-def scrub_str(text: str | None, chain: list[tuple[str, str, str]] | None = None) -> str | None:
+def scrub_str(text: str | None) -> str | None:
     if text is None:
         return None
-    for _, pattern, repl in chain or DEFAULT_SCRUB_CHAIN:
+    for _, pattern, repl in DEFAULT_SCRUB_CHAIN:
         text = re.sub(pattern, repl, text)
     return text
 
 
-def scrub_sql(col_name: str, chain: list[tuple[str, str, str]] | None = None) -> str:
+def scrub_sql(col_name: str) -> str:
     """DuckDB-flavoured SQL expression for the driver's correctness oracle."""
     expr = col_name
-    for _, pattern, repl in chain or DEFAULT_SCRUB_CHAIN:
+    for _, pattern, repl in DEFAULT_SCRUB_CHAIN:
         pat = pattern.replace("'", "''")
         expr = f"regexp_replace({expr}, '{pat}', '{repl}', 'g')"
     return expr

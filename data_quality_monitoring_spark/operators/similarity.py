@@ -51,18 +51,17 @@ def brute_force_topk(
 
 
 def train_centroids(
-    corpus: DataFrame, vec_col: str, n_cells: int = 16, iters: int = 5, seed: int = 11,
-    sample_limit: int = 10_000,
+    corpus: DataFrame, vec_col: str, n_cells: int = 16,
 ) -> np.ndarray:
-    """Deterministic k-means-lite on a local sample of at most
-    ``sample_limit`` vectors (the coarse quantizer is tiny, so a sample
+    """Deterministic k-means-lite (5 rounds, seed 11) on a local sample of
+    at most 10,000 vectors (the coarse quantizer is tiny, so a sample
     places its cells).  Returns L2-normalized (n_cells, dim)."""
     sample = np.asarray(
-        [r[0] for r in corpus.select(vec_col).limit(sample_limit).collect()], dtype="float64"
+        [r[0] for r in corpus.select(vec_col).limit(10_000).collect()], dtype="float64"
     )
-    rng = np.random.default_rng(seed)
+    rng = np.random.default_rng(11)
     centroids = sample[rng.choice(len(sample), size=n_cells, replace=False)]
-    for _ in range(iters):
+    for _ in range(5):
         sims = sample @ centroids.T
         assign = sims.argmax(axis=1)
         for c in range(n_cells):

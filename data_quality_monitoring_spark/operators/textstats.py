@@ -52,17 +52,13 @@ def char_class_ratios(col: Column) -> dict[str, Column]:
     }
 
 
-def stopword_ratio(
-    col: Column,
-    stopwords: list[str] | None = None,
-    *,
-    lwords_col: Column | None = None,
-) -> Column:
-    """``lwords_col``: pass a pre-materialized lowercased-words array to
-    skip the split (interpreted HOF lambdas are not CSE'd — the staged
-    two-projection lesson from gopher_gate_df)."""
+def stopword_ratio(col: Column, *, lwords_col: Column | None = None) -> Column:
+    """Share of words in ``DEFAULT_STOPWORDS``.  ``lwords_col``: pass a
+    pre-materialized lowercased-words array to skip the split (interpreted HOF
+    lambdas are not CSE'd — the staged two-projection lesson from
+    gopher_gate_df)."""
     ws = words(F.lower(col)) if lwords_col is None else lwords_col
-    stops = F.lit(stopwords or DEFAULT_STOPWORDS).cast("array<string>")
+    stops = F.lit(DEFAULT_STOPWORDS).cast("array<string>")
     hits = F.size(F.filter(ws, lambda w: F.array_contains(stops, w)))
     return F.when(F.size(ws) > 0, hits / F.size(ws))
 
@@ -76,7 +72,6 @@ def distinct_word_ratio(col: Column, *, words_col: Column | None = None) -> Colu
 
 def quality_score(
     col: Column,
-    stopwords: list[str] | None = None,
     *,
     words_col: Column | None = None,
     lwords_col: Column | None = None,
@@ -95,9 +90,7 @@ def quality_score(
     length_factor = F.least(F.size(ws) / F.lit(100.0), F.lit(1.0))
     score = (
         0.3 * F.coalesce(ratios["alpha_ratio"], F.lit(0.0))
-        + 0.25 * F.coalesce(
-            stopword_ratio(col, stopwords, lwords_col=lwords_col), F.lit(0.0)
-        )
+        + 0.25 * F.coalesce(stopword_ratio(col, lwords_col=lwords_col), F.lit(0.0))
         + 0.25 * F.coalesce(distinct_word_ratio(col, words_col=ws), F.lit(0.0))
         + 0.2 * length_factor
     )
@@ -108,7 +101,6 @@ def quality_score_df(
     df: DataFrame,
     text_col: str = "text",
     out_col: str = "quality",
-    stopwords: list[str] | None = None,
 ) -> DataFrame:
     """Two-stage DataFrame form of :func:`quality_score`: one projection
     materializes the words / lowercased-words arrays, the next computes
@@ -123,7 +115,7 @@ def quality_score_df(
     out = staged.withColumn(
         out_col,
         quality_score(
-            text, stopwords,
+            text,
             words_col=F.col("_qs_ws"), lwords_col=F.col("_qs_lws"),
         ),
     )
@@ -240,30 +232,24 @@ def gopher_gate_df(
 def gopher_keep(
     sig: dict[str, Column],
     *,
-    min_words: int = 50,
-    max_words: int = 100_000,
-    min_mean_word_len: float = 3.0,
-    max_mean_word_len: float = 10.0,
-    max_symbol_ratio: float = 0.1,
-    max_bullet_frac: float = 0.9,
-    max_ellipsis_frac: float = 0.3,
-    max_dup_line_frac: float = 0.3,
-    min_alpha_word_frac: float = 0.8,
     min_stop_hits: int = 2,
 ) -> Column:
-    """Gopher keep/drop verdict from :func:`gopher_signals` (paper-default
-    thresholds).  Null-safe: a doc with no words fails the word-count gate
-    and the null ratio conjuncts collapse to false, never null."""
+    """Gopher keep/drop verdict from :func:`gopher_signals` at the paper's
+    thresholds: 50–100,000 words, mean word length 3–10, symbol-to-word ratios
+    ≤ 0.1, bullet lines ≤ 90%, ellipsis lines ≤ 30%, duplicate lines ≤ 30%, at
+    least 80% words with a letter, and ``min_stop_hits`` stop words.
+    Null-safe: a doc with no words fails the word-count gate and the null ratio
+    conjuncts collapse to false, never null."""
     keep = (
-        (sig["n_words"] >= min_words)
-        & (sig["n_words"] <= max_words)
-        & sig["mean_word_len"].between(min_mean_word_len, max_mean_word_len)
-        & (sig["hash_word_ratio"] <= max_symbol_ratio)
-        & (sig["ellipsis_word_ratio"] <= max_symbol_ratio)
-        & F.coalesce(sig["bullet_line_frac"] <= max_bullet_frac, F.lit(True))
-        & F.coalesce(sig["ellipsis_line_frac"] <= max_ellipsis_frac, F.lit(True))
-        & F.coalesce(sig["dup_line_frac"] <= max_dup_line_frac, F.lit(True))
-        & (sig["alpha_word_frac"] >= min_alpha_word_frac)
+        (sig["n_words"] >= 50)
+        & (sig["n_words"] <= 100_000)
+        & sig["mean_word_len"].between(3.0, 10.0)
+        & (sig["hash_word_ratio"] <= 0.1)
+        & (sig["ellipsis_word_ratio"] <= 0.1)
+        & F.coalesce(sig["bullet_line_frac"] <= 0.9, F.lit(True))
+        & F.coalesce(sig["ellipsis_line_frac"] <= 0.3, F.lit(True))
+        & F.coalesce(sig["dup_line_frac"] <= 0.3, F.lit(True))
+        & (sig["alpha_word_frac"] >= 0.8)
         & (sig["stop_hits"] >= min_stop_hits)
     )
     return F.coalesce(keep, F.lit(False))
@@ -287,13 +273,11 @@ def fingerprint_md5(col: Column) -> Column:
 def tfidf_top_terms(
     docs: DataFrame,
     key: str,
-    text_col: str = "text",
     k: int = 5,
-    round_to: int = 6,
 ) -> DataFrame:
-    """Per-document top-k terms by tf·idf — the classic corpus-exploration
-    / clustering primitive (keyword summaries, near-topic grouping,
-    boilerplate diagnosis).  ``(key, term, tf, score, rank)``.
+    """Per-document top-k terms of ``text`` by tf·idf — the classic
+    corpus-exploration / clustering primitive (keyword summaries, near-topic
+    grouping, boilerplate diagnosis).  ``(key, term, tf, score, rank)``.
 
     Relational shape (round-6 rework): one token explode → per-(doc, term)
     counts (map-side combined), document frequency as a COUNT window over
@@ -304,7 +288,7 @@ def tfidf_top_terms(
     vocabulary.  Rank is computed on the ROUNDED score (ties → term asc)
     so an independent engine agrees bit-for-bit."""
     words = F.filter(
-        F.split(F.lower(F.coalesce(F.col(text_col), F.lit(""))), r"[ \t\n\r\f\x0B]+"),
+        F.split(F.lower(F.coalesce(F.col("text"), F.lit(""))), r"[ \t\n\r\f\x0B]+"),
         lambda x: x != "",
     )
     tokens = docs.select(F.col(key), F.explode(words).alias("term"))
@@ -319,7 +303,7 @@ def tfidf_top_terms(
             "term",
             "tf",
             F.round(
-                F.col("tf") * F.log(F.col("_n") / F.col("_df")), round_to
+                F.col("tf") * F.log(F.col("_n") / F.col("_df")), 6
             ).alias("score"),
         )
     )
@@ -503,9 +487,9 @@ def gopher_repetition_col(col: Column) -> Column:
     return rep(col)
 
 
-def gopher_repetition(df: DataFrame, key: str, text_col: str = "text") -> DataFrame:
-    """DataFrame form of :func:`gopher_repetition_col`: one row per ``key``
-    with every signal column flattened out of the struct."""
+def gopher_repetition(df: DataFrame, key: str) -> DataFrame:
+    """DataFrame form of :func:`gopher_repetition_col` over ``text``: one
+    row per ``key`` with every signal column flattened out of the struct."""
     return df.select(
-        key, gopher_repetition_col(F.col(text_col)).alias("_r")
+        key, gopher_repetition_col(F.col("text")).alias("_r")
     ).select(key, "_r.*")

@@ -77,11 +77,9 @@ def url_host(url: Column) -> Column:
     )
 
 
-def canonical_dedup(
-    pages, url_col: str = "url", ts_col: str = "warc_ts"
-):
+def canonical_dedup(pages):
     """Fetch-level dedup: rewrite ``url`` to its canonical form and keep ONE
-    row per canonical URL — the earliest fetch (md5-of-original-url
+    row per canonical URL — the earliest fetch by ``warc_ts`` (md5-of-original-url
     tiebreak, so reruns and resumes pick the same winner).  The crawl-side
     step that runs before any text-level dedup: the shuffle key is the
     canonical url (high-cardinality), exactly the partitioning the
@@ -89,12 +87,12 @@ def canonical_dedup(
     from pyspark.sql.window import Window
 
     w = Window.partitionBy("_cu").orderBy(
-        F.col(ts_col).asc_nulls_last(), F.md5(F.col(url_col)).asc()
+        F.col("warc_ts").asc_nulls_last(), F.md5(F.col("url")).asc()
     )
     return (
-        pages.withColumn("_cu", canonicalize_url(F.col(url_col)))
+        pages.withColumn("_cu", canonicalize_url(F.col("url")))
         .withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") == 1)
-        .withColumn(url_col, F.col("_cu"))
+        .withColumn("url", F.col("_cu"))
         .drop("_cu", "_rn")
     )

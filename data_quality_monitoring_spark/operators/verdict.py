@@ -46,8 +46,8 @@ VERDICT_TYPE = T.StructType(
 )
 
 
-def thresholded(finding: Column, method: str, thresholds: dict[str, float] | None = None) -> Column:
-    t = (thresholds or DEFAULT_THRESHOLDS)[method]
+def thresholded(finding: Column, method: str) -> Column:
+    t = DEFAULT_THRESHOLDS[method]
     return F.when(finding.isNotNull() & (finding["probability"] >= F.lit(t)), finding)
 
 
@@ -65,12 +65,10 @@ def _as_verdict(finding: Column, method: str) -> Column:
     )
 
 
-def priority_verdict(
-    findings: dict[str, Column], thresholds: dict[str, float] | None = None
-) -> Column:
+def priority_verdict(findings: dict[str, Column]) -> Column:
     """coalesce(validation, pattern, ml, llm) after threshold filtering."""
     parts = [
-        _as_verdict(thresholded(findings[m], m, thresholds), m)
+        _as_verdict(thresholded(findings[m], m), m)
         for m in METHOD_ORDER
         if m in findings
     ]
@@ -80,10 +78,9 @@ def priority_verdict(
 def weighted_verdict(
     findings: dict[str, Column],
     weights: dict[str, float] | None = None,
-    thresholds: dict[str, float] | None = None,
-    cutoff: float = WEIGHTED_CUTOFF,
 ) -> Column:
-    """Validation always wins; else Σ confidence×weight ≥ cutoff → ANOMALY.
+    """Validation always wins; else Σ confidence×weight ≥
+    ``WEIGHTED_CUTOFF`` → ANOMALY.
 
     ``weights`` default to an equal split over the ENABLED anomaly
     methods, matching the reference's no-performance-data fallback
@@ -100,12 +97,12 @@ def weighted_verdict(
         weights = {m: w for m in anomaly_methods}
 
     val = (
-        _as_verdict(thresholded(findings["validation"], "validation", thresholds), "validation")
+        _as_verdict(thresholded(findings["validation"], "validation"), "validation")
         if "validation" in findings
         else F.lit(None).cast(VERDICT_TYPE)
     )
 
-    gated = {m: thresholded(findings[m], m, thresholds) for m in anomaly_methods}
+    gated = {m: thresholded(findings[m], m) for m in anomaly_methods}
     score = None
     for m in anomaly_methods:
         term = F.coalesce(gated[m]["probability"] * F.lit(weights.get(m, 0.0)), F.lit(0.0))
@@ -127,7 +124,7 @@ def weighted_verdict(
     if score is None:
         return val
     weighted = F.when(
-        score >= F.lit(cutoff),
+        score >= F.lit(WEIGHTED_CUTOFF),
         F.struct(
             F.lit("ANOMALY").alias("status"),
             F.coalesce(best["method"], F.lit("weighted")).alias("method"),

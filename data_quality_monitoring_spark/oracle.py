@@ -211,14 +211,12 @@ def label_pages(
     pages: pd.DataFrame,
     rules: list[dict],
     pattern_cfg: dict,
-    ml_threshold: float = 0.7,
-    llm_threshold: float = 6.0,
-    thresholds: dict[str, float] | None = None,
     combine: str = "priority",
-    weighted_cutoff: float = 0.3,
 ) -> pd.DataFrame:
-    """Full oracle: per-url keep/drop + verdict + byte-exact text_scrubbed."""
-    thresholds = thresholds or DEFAULT_THRESHOLDS
+    """Full oracle: per-url keep/drop + verdict + byte-exact text_scrubbed.
+    Thresholds are the reference's: langid mismatch below 0.7, perplexity
+    above 6.0, the per-method probability floors of ``DEFAULT_THRESHOLDS``
+    and a weighted cutoff of 0.3."""
     langid = get_langid_model()
     lms = get_bigram_models()
 
@@ -233,7 +231,7 @@ def label_pages(
             "llm": None,
         }
         cs = scores["claimed_score"].iloc[i]
-        if cs is not None and not pd.isna(cs) and cs < ml_threshold:
+        if cs is not None and not pd.isna(cs) and cs < 0.7:
             findings["ml"] = {
                 "rule": "langid_mismatch",
                 "code": "LANG_MISMATCH",
@@ -242,7 +240,7 @@ def label_pages(
         if text is not None and isinstance(text, str) and text.strip():
             lm = lms.get(lang) or lms.get("en")
             nll = lm.nll(text)
-            if nll > llm_threshold:
+            if nll > 6.0:
                 findings["llm"] = {
                     "rule": "high_perplexity",
                     "code": "HIGH_PERPLEXITY",
@@ -252,7 +250,7 @@ def label_pages(
         if combine == "priority":
             for method in ("validation", "pattern", "ml", "llm"):
                 f = findings[method]
-                if f is not None and f["probability"] >= thresholds[method]:
+                if f is not None and f["probability"] >= DEFAULT_THRESHOLDS[method]:
                     verdict = {
                         "status": "ERROR" if method == "validation" else "ANOMALY",
                         "method": method,
@@ -261,7 +259,7 @@ def label_pages(
                     break
         else:  # weighted (reference comprehensive_detector.py:615-777)
             fv = findings["validation"]
-            if fv is not None and fv["probability"] >= thresholds["validation"]:
+            if fv is not None and fv["probability"] >= DEFAULT_THRESHOLDS["validation"]:
                 verdict = {"status": "ERROR", "method": "validation", **fv}
             else:
                 anomaly_methods = ["pattern", "ml", "llm"]
@@ -269,10 +267,10 @@ def label_pages(
                     m: findings[m]
                     for m in anomaly_methods
                     if findings[m] is not None
-                    and findings[m]["probability"] >= thresholds[m]
+                    and findings[m]["probability"] >= DEFAULT_THRESHOLDS[m]
                 }
                 score = sum(f["probability"] / 3.0 for f in gated.values())
-                if score >= weighted_cutoff and gated:
+                if score >= 0.3 and gated:
                     best_m = max(gated, key=lambda m: gated[m]["probability"])
                     verdict = {
                         "status": "ANOMALY",

@@ -123,8 +123,6 @@ def incremental_dedup(
     spark: SparkSession,
     new_docs: DataFrame,
     sig_store: str,
-    key: str = "url",
-    text_col: str = "text_scrubbed",
     jaccard_threshold: float = 0.7,
     max_bucket: int = 500,
     accepted_writer=None,
@@ -132,7 +130,8 @@ def incremental_dedup(
     """Dedup a NEW batch against an existing corpus without touching the
     old data: the production shape for incremental crawls (a new
     Common-Crawl dump lands monthly; re-running all-pairs over the whole
-    history would be quadratic in dumps).
+    history would be quadratic in dumps).  ``new_docs`` are the filter
+    job's kept rows, keyed by ``url`` with their ``text_scrubbed``.
 
     ``sig_store`` is a parquet dir of the accepted corpus's per-doc
     features: 8 minhashes, the 128-bit content hash, and the xxhash64'd
@@ -176,12 +175,14 @@ def incremental_dedup(
     Returns (accepted_new_docs, stats).
     """
     n_in = new_docs.count()
-    new_docs = exact_dedup(new_docs, key, text_col)  # within-batch keep-one
+    new_docs = exact_dedup(new_docs, "url", "text_scrubbed")  # within-batch keep-one
 
     sig_cols = [f"h{i}" for i in range(8)]
     new_sig = minhash_signatures(
-        new_docs.select(key, text_col, F.md5(F.col(text_col)).alias("content_hash")),
-        key, text_col,
+        new_docs.select(
+            "url", "text_scrubbed", F.md5(F.col("text_scrubbed")).alias("content_hash")
+        ),
+        "url", "text_scrubbed",
     )
 
     sig_store = str(sig_store)
@@ -194,12 +195,12 @@ def incremental_dedup(
     new_sig = new_sig.persist()
     new_sig.count()
 
-    pairs = lsh_candidate_pairs(new_sig, key, max_bucket=max_bucket, store=old)
-    sets = new_sig.select(key, "shingles")
+    pairs = lsh_candidate_pairs(new_sig, "url", max_bucket=max_bucket, store=old)
+    sets = new_sig.select("url", "shingles")
     if old is not None:
-        sets = sets.unionByName(old.select(key, "shingles"))
+        sets = sets.unionByName(old.select("url", "shingles"))
     verified = verify_shingle_sets(pairs, sets.toDF("_k", "_s"), jaccard_threshold)
-    accepted_sig = new_sig.join(near_dup_losers(verified, key, None), key, "left_anti")
+    accepted_sig = new_sig.join(near_dup_losers(verified, "url", None), "url", "left_anti")
 
     # MATERIALIZE (lineage-truncating) before mutating the store: the plan
     # reads sig_store, and appending to it then lazily re-evaluating would
@@ -212,10 +213,10 @@ def incremental_dedup(
     new_sig.unpersist()
 
     n_accepted = accepted_sig.count()
-    accepted = new_docs.join(accepted_sig.select(key), key, "left_semi")
+    accepted = new_docs.join(accepted_sig.select("url"), "url", "left_semi")
     if accepted_writer is not None:  # corpus lands before the store moves
         accepted_writer(accepted)
-    accepted_sig.select(key, *sig_cols, "content_hash", "shingles").write.mode(
+    accepted_sig.select("url", *sig_cols, "content_hash", "shingles").write.mode(
         "append"
     ).parquet(sig_store)
     return accepted, {"batch_in": n_in, "accepted": n_accepted, "dropped": n_in - n_accepted}

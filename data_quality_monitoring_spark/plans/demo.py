@@ -39,12 +39,8 @@ from ..session import write_bytes
 
 def inject_catalog(
     catalog: DataFrame,
-    key: str = "doc_id",
-    fields: list[str] | None = None,
     max_issues_per_row: int = 2,
     issue_probability: float = 0.4,
-    anomaly_share: float = 0.5,
-    salt: str = "demo",
 ) -> tuple[DataFrame, DataFrame]:
     """Corrupt ≤ max_issues_per_row fields per row, each cell drawing
     error-vs-anomaly (reference comprehensive_sample_generator.py:185-219).
@@ -53,13 +49,15 @@ def inject_catalog(
     corruption, fields are ranked by that hash within the row and only the
     first ``max_issues_per_row`` stay — no Python in the pick path.
 
-    Returns (corrupted_df, labels_df[key, field, injection_type])."""
-    fields = fields or [f for f in CATALOG_FIELDS if f in catalog.columns]
+    Half the corrupted cells are anomalies.
+
+    Returns (corrupted_df, labels_df[doc_id, field, injection_type])."""
+    fields = [f for f in CATALOG_FIELDS if f in catalog.columns]
     picks = []
     for f in fields:
-        h = F.xxhash64(F.col(key).cast("string"), F.lit(f), F.lit(salt))
+        h = F.xxhash64(F.col("doc_id").cast("string"), F.lit(f), F.lit("demo"))
         gate = F.pmod(h, 1000) < int(issue_probability * 1000)
-        is_anom = F.pmod(F.shiftrightunsigned(h, 17), 1000) < int(anomaly_share * 1000)
+        is_anom = F.pmod(F.shiftrightunsigned(h, 17), 1000) < 500
         picks.append(
             F.when(
                 gate,
@@ -86,7 +84,7 @@ def inject_catalog(
             anom_rules = []
         hit = F.filter(F.col("_chosen"), lambda s: s["field"] == f)
         sel = F.try_element_at(hit, F.lit(1))  # ANSI: plain element_at throws on []
-        ikey = F.concat(F.col(key).cast("string"), F.lit("#"), F.lit(f), F.lit(salt))
+        ikey = F.concat(F.col("doc_id").cast("string"), F.lit("#"), F.lit(f), F.lit("demo"))
         corrupted_e = inject_column(F.col(f), ikey, err_rules, 1.0, salt="err")
         corrupted_a = (
             inject_column(F.col(f), ikey, anom_rules, 1.0, salt="anom")
@@ -120,8 +118,8 @@ def inject_catalog(
             )
         )
     packed = F.filter(F.array(*label_entries), lambda x: x.isNotNull())
-    labels = out.select(F.col(key), F.explode(packed).alias("_l")).select(
-        key, "_l.field", "_l.injection_type", "_l.rule_name"
+    labels = out.select(F.col("doc_id"), F.explode(packed).alias("_l")).select(
+        "doc_id", "_l.field", "_l.injection_type", "_l.rule_name"
     )
     for f in fields:
         inj = F.col(f"_inj_{f}")
@@ -132,12 +130,10 @@ def inject_catalog(
     return out, labels
 
 
-def detect_cells_by_method(
-    catalog: DataFrame, key: str = "doc_id", fields: list[str] | None = None
-) -> DataFrame:
-    """Long (key, field, method, rule, code, probability) findings over the
+def detect_cells_by_method(catalog: DataFrame) -> DataFrame:
+    """Long (doc_id, field, method, rule, code, probability) findings over the
     ported validator + pattern rulesets — all fields one projection."""
-    fields = fields or [f for f in CATALOG_FIELDS if f in catalog.columns]
+    fields = [f for f in CATALOG_FIELDS if f in catalog.columns]
     rules_by_field = {f: load_field_rules(f) for f in fields}
     pattern_by_field = {}
     for f in fields:
@@ -169,8 +165,8 @@ def detect_cells_by_method(
             )
     packed = F.filter(F.array(*entries), lambda x: x.isNotNull())
     return (
-        detected.select(F.col(key), F.explode(packed).alias("_c"))
-        .select(key, "_c.field", "_c.method", "_c.rule", "_c.code", "_c.probability")
+        detected.select(F.col("doc_id"), F.explode(packed).alias("_c"))
+        .select("doc_id", "_c.field", "_c.method", "_c.rule", "_c.code", "_c.probability")
     )
 
 
@@ -194,7 +190,6 @@ def single_sample_demo(
     spark: SparkSession,
     pages: DataFrame,
     out_dir: str,
-    key: str = "doc_id",
     max_issues_per_row: int = 2,
     issue_probability: float = 0.4,
     probe_dirs=(),
@@ -209,12 +204,12 @@ def single_sample_demo(
     the reference shows training health in the consolidated report its
     users actually read (consolidated_reporter.py:312-430), so a degraded
     scorer is visible next to the detection metrics it affects."""
-    catalog = build_catalog(pages, key) if "material" not in pages.columns else pages
+    catalog = build_catalog(pages) if "material" not in pages.columns else pages
     corrupted, labels = inject_catalog(
-        catalog, key, max_issues_per_row=max_issues_per_row,
+        catalog, max_issues_per_row=max_issues_per_row,
         issue_probability=issue_probability,
     )
-    cells = detect_cells_by_method(corrupted, key)
+    cells = detect_cells_by_method(corrupted)
 
     cells.write.mode("overwrite").parquet(f"{out_dir}/cell_findings.parquet")
     labels.write.mode("overwrite").parquet(f"{out_dir}/labels.parquet")
@@ -222,18 +217,18 @@ def single_sample_demo(
     # collapse detections to per-(row, field) method flags first — a cell
     # detected by BOTH validation and pattern must count once per method
     # and once combined (reference uses per-method sets of (row, column))
-    det = cells.groupBy(key, "field").agg(
+    det = cells.groupBy("doc_id", "field").agg(
         F.max((F.col("method") == "validation").cast("boolean")).alias("has_v"),
         F.max((F.col("method") == "pattern").cast("boolean")).alias("has_p"),
     )
-    lab = labels.select(key, "field", "injection_type")
+    lab = labels.select("doc_id", "field", "injection_type")
     n_rows = catalog.count()
 
     report: dict = {"sample": {"n_rows": n_rows, "fields": []}, "per_field": {}}
     # one full-outer join + ONE grouped aggregation computes every
     # per-field per-method cell — no driver-side count loop
     joined = det.alias("d").join(
-        lab.alias("l"), on=[key, "field"], how="full_outer"
+        lab.alias("l"), on=["doc_id", "field"], how="full_outer"
     ).select(
         F.coalesce(F.col("d.field"), F.col("l.field")).alias("field"),
         F.coalesce(F.col("d.has_v"), F.lit(False)).alias("has_v"),

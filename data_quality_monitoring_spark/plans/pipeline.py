@@ -46,18 +46,11 @@ def default_pattern_cfg() -> dict:
 def quality_filter(
     spark: SparkSession,
     pages: DataFrame,
-    rules: list[dict] | None = None,
-    pattern_cfg: dict | None = None,
     combine: str = "priority",
-    ml_threshold: float = 0.7,
-    llm_threshold: float = 6.0,
-    mlq_threshold: float = 0.5,
-    thresholds: dict[str, float] | None = None,
     methods: list[str] | None = None,
     langid_model=None,
     lm_models=None,
     cascade: bool = False,
-    llm_tiers: dict | None = None,
 ) -> DataFrame:
     """Attach findings, verdict, keep flag and scrubbed text to a pages df.
 
@@ -87,17 +80,8 @@ def quality_filter(
     this is the difference between scoring the crawl and scoring the
     corpus.  Off by default: the reference computes every family for
     every row.
-
-    ``llm_tiers`` turns on the reference's optional LLM-detector tiers
-    (llm_anomaly_detector.py:264-266, off by default there too; see
-    operators/llm_tiers.py for the exact semantics).  Keys:
-    ``temporal_col`` / ``context_cols`` (dynamic encoding, score × 1.1
-    when a context is present), ``prototype`` (bool, score × 1.05),
-    ``fewshot_examples`` (list[str], in-context short-circuit) and
-    ``icl_threshold`` (default 0.7).
     """
-    rules = rules if rules is not None else default_rules()
-    pattern_cfg = pattern_cfg if pattern_cfg is not None else default_pattern_cfg()
+    rules = default_rules()
     methods = methods if methods is not None else ["validation", "pattern", "ml", "llm"]
 
     text, lang = F.col("text"), F.col("lang")
@@ -112,7 +96,7 @@ def quality_filter(
         else:
             cols["f_validation"] = first_hit(text, rules)
     if "pattern" in methods:
-        cols["f_pattern"] = pattern_finding(lang, pattern_cfg)
+        cols["f_pattern"] = pattern_finding(lang, default_pattern_cfg())
     if "ml" in methods:
         cols["langid"] = L.langid_struct(
             spark,
@@ -135,49 +119,13 @@ def quality_filter(
     df = base.withColumns(cols)
     stage2: dict[str, Column] = {}
     if "ml" in methods:
-        stage2["f_ml"] = L.langid_finding(F.col("langid"), ml_threshold)
+        stage2["f_ml"] = L.langid_finding(F.col("langid"))
     if "llm" in methods:
-        if llm_tiers:
-            from ..operators import llm_tiers as LT
-
-            dyn = None
-            if llm_tiers.get("temporal_col") or llm_tiers.get("context_cols"):
-                dyn = LT.dynamic_context_flag(
-                    temporal=(
-                        F.col(llm_tiers["temporal_col"])
-                        if llm_tiers.get("temporal_col")
-                        else None
-                    ),
-                    context_cols=[
-                        F.col(c) for c in llm_tiers.get("context_cols", [])
-                    ],
-                )
-            enh = LT.enhanced_score(
-                F.col("ppl_score"),
-                dynamic=dyn,
-                prototype=bool(llm_tiers.get("prototype")),
-            )
-            sim = (
-                LT.fewshot_max_cosine(
-                    spark, list(llm_tiers["fewshot_examples"]), model_text
-                )
-                if llm_tiers.get("fewshot_examples")
-                else None
-            )
-            stage2["f_llm"] = LT.llm_tier_finding(
-                enh,
-                llm_threshold,
-                icl_sim=sim,
-                icl_threshold=float(llm_tiers.get("icl_threshold", 0.7)),
-            )
-        else:
-            stage2["f_llm"] = P.perplexity_finding(F.col("ppl_score"), llm_threshold)
+        stage2["f_llm"] = P.perplexity_finding(F.col("ppl_score"))
     if "quality_model" in methods:
         from ..operators import quality_model as QM
 
-        stage2["f_quality_model"] = QM.quality_model_finding(
-            F.col("mlq_score"), mlq_threshold
-        )
+        stage2["f_quality_model"] = QM.quality_model_finding(F.col("mlq_score"))
     if stage2:
         df = df.withColumns(stage2)
     findings: dict[str, Column] = {
@@ -186,9 +134,7 @@ def quality_filter(
         if m in methods
     }
     verdict = (
-        priority_verdict(findings, thresholds)
-        if combine == "priority"
-        else weighted_verdict(findings, thresholds=thresholds)
+        priority_verdict(findings) if combine == "priority" else weighted_verdict(findings)
     )
     df = df.withColumns(
         {
@@ -296,12 +242,3 @@ def filter_metrics(written: DataFrame) -> dict[str, SideTable]:
         )
     return tables
 
-
-def run_manifest(result: DataFrame) -> dict:
-    """Small driver-side run summary (reference run-summary dict,
-    comprehensive_detector.py:841-859)."""
-    agg = result.agg(
-        F.count("*").alias("docs"),
-        F.sum(F.col("keep").cast("long")).alias("kept"),
-    ).collect()[0]
-    return {"docs": agg["docs"], "kept": agg["kept"], "dropped": agg["docs"] - agg["kept"]}

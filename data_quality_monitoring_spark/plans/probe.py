@@ -38,8 +38,8 @@ OBVIOUS_ANOMALIES = [
 ]
 
 
-def _holdout(docs: DataFrame, n: int, salt: str) -> DataFrame:
-    """Deterministic bounded held-out slice: md5-ordered by (url, salt) so
+def _holdout(docs: DataFrame, n: int) -> DataFrame:
+    """Deterministic bounded held-out slice: md5-ordered by (url, "probe") so
     reruns probe the same rows and the order is partitioning-invariant.
 
     Train inputs may be bare ``(text, lang)`` corpora (the ml-train /
@@ -57,7 +57,7 @@ def _holdout(docs: DataFrame, n: int, salt: str) -> DataFrame:
     return (
         docs.filter(F.col("text").isNotNull() & (F.trim(F.col("text")) != ""))
         .select("url", "text", "lang")
-        .orderBy(F.md5(F.concat_ws("|", F.col("url"), F.lit(salt))))
+        .orderBy(F.md5(F.concat_ws("|", F.col("url"), F.lit("probe"))))
         .limit(n)
     )
 
@@ -67,15 +67,14 @@ def probe_langid(
     model,
     docs: DataFrame,
     n: int = 200,
-    threshold: float = 0.7,
-    salt: str = "probe",
 ) -> dict:
     """Recall/precision probe for a trained langid model, reference ML
     semantics (model_training.py:400-503): corrupt half the held-out slice
     — here by claiming the WRONG language, the exact anomaly this detector
     exists to catch — re-score with the production scorer, and measure
 
-    * recall    = corrupted rows flagged (claimed_score < threshold),
+    * recall    = corrupted rows flagged (claimed_score below the
+      production ``MISMATCH_THRESHOLD``),
     * precision = flagged rows that were actually corrupted,
     * the reference's explicit constraint: precision >= 0.3.
 
@@ -86,13 +85,13 @@ def probe_langid(
     flag-nothing.  The wrong claim rotates within the model's own language
     list so an untrained-language shortcut can't inflate recall.
     """
-    from ..operators.langid import langid_struct
+    from ..operators.langid import MISMATCH_THRESHOLD, langid_struct
 
     langs = list(model.langs)
     if len(langs) < 2:
         return {"probe": "langid", "ok": False, "reason": "fewer than 2 trained langs"}
 
-    held = _holdout(docs, n, salt)
+    held = _holdout(docs, n)
     # rotate claimed lang within the trained set for the corrupted half
     nxt = F.lit(langs[0])
     for a, b in zip(langs, langs[1:] + langs[:1]):
@@ -110,7 +109,7 @@ def probe_langid(
         langid_struct(spark, model, F.col("text"), F.col("claimed")).alias("r"),
     ).select(
         "is_corrupted",
-        (F.col("r.claimed_score") < F.lit(threshold)).alias("flagged"),
+        (F.col("r.claimed_score") < F.lit(MISMATCH_THRESHOLD)).alias("flagged"),
     )
     agg = scored.agg(
         F.count("*").alias("n"),
@@ -131,7 +130,7 @@ def probe_langid(
         "recall": round(recall, 4),
         "precision": round(precision, 4),
         "f1": round(f1, 4),
-        "threshold": threshold,
+        "threshold": MISMATCH_THRESHOLD,
         # reference constraint (model_training.py:495-498) plus a recall
         # floor: a model that flags nothing is as broken as one that flags
         # everything
@@ -144,19 +143,17 @@ def probe_bigram(
     models: dict,
     docs: DataFrame,
     n: int = 100,
-    threshold: float = 6.0,
-    salt: str = "probe",
 ) -> dict:
     """Separation probe for trained per-language LMs, reference LLM
     semantics (llm_model_training.py:366-429): score a held-out normal
     slice and the fixed obvious-anomaly set with the production scorer,
     report the mean scores, their separation, and the detection rate at
-    the production threshold.  Scores are mean NLL (higher = worse), so
+    the production ``PPL_THRESHOLD``.  Scores are mean NLL (higher = worse), so
     separation = anomaly - normal must be positive for a usable model.
     """
-    from ..operators.perplexity import perplexity_column
+    from ..operators.perplexity import PPL_THRESHOLD, perplexity_column
 
-    held = _holdout(docs, n, salt).withColumn("is_anomaly", F.lit(False))
+    held = _holdout(docs, n).withColumn("is_anomaly", F.lit(False))
     anomalies = spark.createDataFrame(
         [(f"probe://anomaly/{i}", t, "en", True) for i, t in enumerate(OBVIOUS_ANOMALIES)],
         "url string, text string, lang string, is_anomaly boolean",
@@ -170,10 +167,10 @@ def probe_bigram(
         F.avg(F.when(~F.col("is_anomaly"), F.col("score"))).alias("avg_normal"),
         F.avg(F.when(F.col("is_anomaly"), F.col("score"))).alias("avg_anomaly"),
         F.sum(
-            (F.col("is_anomaly") & (F.col("score") > F.lit(threshold))).cast("long")
+            (F.col("is_anomaly") & (F.col("score") > F.lit(PPL_THRESHOLD))).cast("long")
         ).alias("detected"),
         F.sum(
-            (~F.col("is_anomaly") & (F.col("score") > F.lit(threshold))).cast("long")
+            (~F.col("is_anomaly") & (F.col("score") > F.lit(PPL_THRESHOLD))).cast("long")
         ).alias("false_flags"),
     ).first()
     avg_normal = float(agg["avg_normal"] or 0.0)
@@ -191,7 +188,7 @@ def probe_bigram(
         "score_separation": round(avg_anomaly - avg_normal, 4),
         "detection_rate": round(detection_rate, 4),
         "false_flag_rate": round(false_rate, 4),
-        "threshold": threshold,
+        "threshold": PPL_THRESHOLD,
         "ok": bool(avg_anomaly > avg_normal and detection_rate >= 0.8),
     }
 

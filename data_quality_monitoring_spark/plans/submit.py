@@ -26,7 +26,7 @@ import json
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from ..session import local_table, read_bytes, write_bytes
+from ..session import local_table, qualified_path, read_bytes, write_bytes
 from ..sources.manifest import PartitionedSink
 from .pipeline import filter_metrics, filter_stage, quality_filter
 
@@ -877,8 +877,8 @@ def run_incremental(spark: SparkSession, args: argparse.Namespace) -> dict:
     kept = filtered.filter(F.col("keep")).select("url", "lang", "text_scrubbed").persist()
 
     # idempotent per-batch landing: a re-run after a crash overwrites its
-    # own partition instead of double-appending
-    batch_id = f"{zlib.crc32(args.input.encode()):08x}"
+    # own partition instead of double-appending, however the input is spelled
+    batch_id = f"{zlib.crc32(qualified_path(spark, args.input).encode()):08x}"
 
     def write_corpus(accepted):
         accepted.write.mode("overwrite").parquet(f"{args.output}/corpus/batch={batch_id}")

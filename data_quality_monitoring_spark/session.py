@@ -299,6 +299,15 @@ def path_exists(spark: SparkSession, path: str) -> bool:
     return p.getFileSystem(spark._jsc.hadoopConfiguration()).exists(p)
 
 
+def qualified_path(spark: SparkSession, path: str) -> str:
+    """``path`` as its Hadoop ``FileSystem`` qualifies it (``makeQualified``:
+    scheme and authority filled in, made absolute, trailing slash dropped),
+    so ``/x/dump``, ``/x/dump/`` and ``file:///x/dump`` name one string."""
+    p = spark._jvm.org.apache.hadoop.fs.Path(path)
+    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
+    return str(fs.makeQualified(p).toString())
+
+
 def write_bytes(spark: SparkSession, path: str, data: bytes) -> None:
     """Write ``data`` to ``path`` (overwriting) through the Hadoop
     ``FileSystem`` its scheme names, like :func:`path_exists`: a report or

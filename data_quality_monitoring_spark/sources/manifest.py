@@ -61,6 +61,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_type
 from pyspark.sql.types import StructType
 
+COMMIT_RETRIES = 5  # snapshot-id races a commit may lose before it gives up
 LINEAGE_SCHEMA = (
     "bucket int, n_docs long, n_kept long, checksum long, snapshot int"
 )
@@ -161,17 +162,18 @@ class PartitionedSink:
                 f"this sink has n_buckets={self.n_buckets}"
             )
 
-    def _commit(self, new_buckets: list[int], max_retries: int = 5) -> int:
+    def _commit(self, new_buckets: list[int]) -> int:
         """Optimistic-concurrency commit (the Iceberg protocol shape):
         build the new snapshot against the CURRENT base, then claim the
         next snapshot id with an atomic exclusive create (``os.link`` of a
         fully-written temp file — readers can never observe a partial
-        snapshot).  Losing the id race refreshes the base and retries;
+        snapshot).  Losing the id race refreshes the base and retries (up
+        to ``COMMIT_RETRIES`` times);
         discovering the refreshed base already covers one of our buckets
         raises :class:`CommitConflictError` instead of silently merging —
         a racing writer overwrote the same data partition, so our files
         may be superseded and only a resume may re-commit them."""
-        for _ in range(max_retries):
+        for _ in range(COMMIT_RETRIES):
             snap = self._current_snapshot()
             manifest = self._manifest(snap)
             self._check_bucketing(manifest)
@@ -204,7 +206,7 @@ class PartitionedSink:
             os.replace(ptr, self.manifest_dir / "current")
             return nxt
         raise CommitConflictError(
-            f"lost the snapshot-id race {max_retries} times; giving up"
+            f"lost the snapshot-id race {COMMIT_RETRIES} times; giving up"
         )
 
     # ---------------- writer lock (advisory, serializes whole runs)

@@ -38,14 +38,14 @@ def read_pages(spark: SparkSession, path: str, fmt: str = "parquet") -> DataFram
     raise ValueError(f"unknown format {fmt}")
 
 
-def write_pages(df: DataFrame, path: str, fmt: str = "parquet", mode: str = "overwrite") -> None:
-    writer = df.write.mode(mode)
+def write_pages(df: DataFrame, path: str, fmt: str = "parquet") -> None:
+    writer = df.write.mode("overwrite")
     if fmt == "parquet":
         writer.parquet(path)
     elif fmt == "csv":
         (
             df.drop("html")
-            .write.mode(mode)
+            .write.mode("overwrite")
             .option("header", "true")
             .option("escape", '"')
             .option("ignoreLeadingWhiteSpace", "false")

@@ -120,10 +120,8 @@ def stateful_host_stats(spark: SparkSession, pages_stream: DataFrame) -> DataFra
     )
 
 
-def windowed_fire_counts(
-    spark: SparkSession, pages_stream: DataFrame, window: str = "1 hour"
-) -> DataFrame:
-    """Per-event-time-window fire counts with a watermark for late pages —
+def windowed_fire_counts(spark: SparkSession, pages_stream: DataFrame) -> DataFrame:
+    """Per-hour event-time-window fire counts with a watermark for late pages —
     the streaming filter-metrics table.  The aggregation itself is the
     batch ``metrics.rule_fire_counts`` with the window as an extra group
     key, so the streaming and batch metrics tables cannot drift."""
@@ -132,5 +130,5 @@ def windowed_fire_counts(
     res = quality_filter(spark, pages_stream)
     return rule_fire_counts(
         res.withWatermark("warc_ts", "2 hours"),
-        group_cols=(F.window("warc_ts", window).alias("w"),),
+        group_cols=(F.window("warc_ts", "1 hour").alias("w"),),
     ).select(F.col("w.start").alias("window_start"), "method", "code", "n")

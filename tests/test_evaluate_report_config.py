@@ -2,6 +2,7 @@
 
 import json
 
+import pytest
 from pyspark.sql import functions as F
 
 from data_quality_monitoring_spark.config import RunConfig
@@ -82,18 +83,21 @@ def test_run_config(spark, tmp_path):
             {
                 "field_mappings": {"text": "body_text", "lang": "language_tag"},
                 "enabled_fields": ["text"],
-                "custom_thresholds": {"ml": 0.9},
                 "field_variations": {"text": "strict"},
             }
         )
     )
     cfg = RunConfig.load(cfg_path)
-    assert cfg.thresholds["ml"] == 0.9 and cfg.thresholds["llm"] == 0.6
     assert cfg.variation("text") == "strict" and cfg.variation("lang") == "baseline"
     df = spark.createDataFrame([("hello", "en", 1)], ["body_text", "language_tag", "id"])
     mapped = cfg.apply_mapping(df)
     assert set(mapped.columns) == {"text", "lang", "id"}
     assert mapped.collect()[0]["text"] == "hello"
+    # thresholds are not configurable: a brand file that sets them fails
+    # loudly instead of being silently ignored
+    cfg_path.write_text(json.dumps({"custom_thresholds": {"ml": 0.9}}))
+    with pytest.raises(ValueError, match="custom_thresholds"):
+        RunConfig.load(cfg_path)
 
 
 def test_sources_roundtrip(spark, tmp_path):

@@ -161,36 +161,3 @@ def test_prototype_column_matches_numpy(spark):
         else:
             np.testing.assert_allclose(g, apply_prototypes(np.array([v]), protos)[0])
 
-
-def test_quality_filter_llm_tiers_opt_in(spark):
-    """llm_tiers= on quality_filter: off by default (f_llm identical to the
-    plain threshold form); ICL threshold 1.1 makes every scorable doc an
-    in-context finding; the prototype boost can only add LM findings."""
-    from data_quality_monitoring_spark.datagen import generate_pages
-    from data_quality_monitoring_spark.plans.pipeline import quality_filter
-
-    pages = generate_pages(spark, 80, partitions=4)
-
-    base = quality_filter(spark, pages, methods=["llm"])
-    icl = quality_filter(
-        spark, pages, methods=["llm"],
-        llm_tiers={"fewshot_examples": ["zz qq vv"], "icl_threshold": 1.1},
-    )
-    boosted = quality_filter(
-        spark, pages, methods=["llm"], llm_tiers={"prototype": True},
-    )
-
-    n_scorable = base.filter(F.col("ppl_score").isNotNull()).count()
-    icl_codes = icl.filter(F.col("f_llm").isNotNull()).select(
-        F.col("f_llm")["code"].alias("c")
-    )
-    assert icl_codes.filter(F.col("c") == "LLM_IN_CONTEXT_ANOMALY").count() == n_scorable
-
-    n_base = base.filter(F.col("f_llm").isNotNull()).count()
-    n_boost = boosted.filter(F.col("f_llm").isNotNull()).count()
-    assert n_boost >= n_base
-    # boosted scores: every base finding survives the x1.05 (same docs flagged)
-    both = base.select("url", F.col("f_llm").isNotNull().alias("b")).join(
-        boosted.select("url", F.col("f_llm").isNotNull().alias("p")), "url"
-    )
-    assert both.filter(F.col("b") & ~F.col("p")).count() == 0

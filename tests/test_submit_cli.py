@@ -1,5 +1,7 @@
 """The spark-submit entrypoint end-to-end: run, resume no-op, metrics tables."""
 
+import shutil
+
 import pytest
 
 from data_quality_monitoring_spark.datagen import generate_pages
@@ -247,6 +249,31 @@ def test_cli_incremental_mode(spark, tmp_path, monkeypatch):
     corpus = spark.read.parquet(f"{out}/corpus")
     assert corpus.count() == s1["accepted"]  # batch 2 added nothing
     assert list(cwd.iterdir()) == []
+
+
+def test_cli_incremental_batch_id_ignores_input_spelling(spark, tmp_path):
+    """A re-run after a crash between the corpus write and the signature
+    append (the store removed here, as the append never happened) names the
+    same dump as ``file://<dump>/``: it overwrites the first run's
+    ``batch=`` partition instead of landing a second copy beside it."""
+    dump, out, store = tmp_path / "dump", str(tmp_path / "out"), tmp_path / "sigs"
+    generate_pages(spark, 80, partitions=2).write.parquet(str(dump))
+
+    def once(spelling):
+        return run_incremental(spark, build_args(
+            ["--mode", "incremental", "--input", spelling, "--output", out,
+             "--sig-store", str(store)]
+        ))
+
+    first = once(str(dump))
+    shutil.rmtree(store)
+    again = once(f"file://{dump}/")
+    assert again == first
+    parts = sorted(p.name for p in (tmp_path / "out" / "corpus").iterdir()
+                   if p.name.startswith("batch="))
+    assert len(parts) == 1
+    urls = spark.read.parquet(f"{out}/corpus").select("url")
+    assert urls.count() == urls.distinct().count() == first["accepted"]
 
 
 def test_cli_incremental_jaccard_threshold(spark, tmp_path):
