@@ -274,15 +274,18 @@ def jaccard_verify(
 def verify_shingle_sets(candidates: DataFrame, sets: DataFrame, threshold: float) -> DataFrame:
     """The candidate rows (a, b, …) whose shingle-hash sets have Jaccard ≥
     ``threshold``, with an unrounded ``jaccard`` column.  ``sets`` is
-    (_k, _s): a key and its ``shingle_hashes`` array, joined to both ends."""
+    (_k, _s): a key and its ``shingle_hashes`` array, joined to both ends.
+
+    The intersection size is a lambda variable of a one-element
+    ``transform``: the optimizer pushes the threshold filter into the
+    second join's condition, and a plain column would be re-inlined there
+    once per use (two ``array_intersect`` calls per candidate pair)."""
+    inter = F.array(F.size(F.array_intersect("_sa", "_sb")))
+    jaccard = F.transform(inter, lambda i: i / (F.size("_sa") + F.size("_sb") - i))[0]
     j = (
         candidates.join(sets.withColumnRenamed("_k", "a").withColumnRenamed("_s", "_sa"), "a")
         .join(sets.withColumnRenamed("_k", "b").withColumnRenamed("_s", "_sb"), "b")
-        .withColumn("_inter", F.size(F.array_intersect("_sa", "_sb")))
-        .withColumn(
-            "jaccard",
-            F.col("_inter") / (F.size("_sa") + F.size("_sb") - F.col("_inter")),
-        )
+        .withColumn("jaccard", jaccard)
     )
     return j.filter(F.col("jaccard") >= threshold)
 

@@ -3,15 +3,15 @@
 The complete path a 100-TB web-text corpus takes through this engine,
 composed from the individually-tested operators:
 
-1. ``quality_filter`` — rules + pattern + langid + perplexity → keep/drop
-   verdict + scrubbed text (shuffle-free scan stage),
+1. ``pipeline.filter_stage`` — the filter job's keep decision and
+   scrubbed text (shuffle-free scan stage),
 2. exact dedup on the scrubbed bytes (one groupBy on a 128-bit hash),
 3. near-dup removal: MinHash signatures → LSH band candidates → exact
    Jaccard verify → keep-one (connected components, each keeps its
-   min-key doc) — `operators/dedup.py` end to end, the same calls
-   ``incremental_dedup`` makes with a signature store; every join is an
-   equi-join on a bucket or pair key, never all-pairs; each doc is
-   shingled once,
+   min-key doc) — `operators/dedup.py` end to end, in the one core
+   ``_near_dup`` that ``incremental_dedup`` runs with a signature store;
+   every join is an equi-join on a bucket or pair key, never all-pairs;
+   each doc is shingled once,
 4. optional deterministic stratified down-sampling per language
    (`operators/sampling.py` — idempotent md5-bucket gate).
 
@@ -36,7 +36,50 @@ from ..operators.dedup import (
 )
 from ..operators.sampling import stratified_sample
 from ..session import path_exists
-from .pipeline import quality_filter
+from .pipeline import filter_stage
+
+SIG_COLS = [f"h{i}" for i in range(8)]
+
+
+def _near_dup(
+    docs: DataFrame,
+    store: DataFrame | None,
+    jaccard_threshold: float,
+    max_bucket: int,
+    min_est_jaccard: float | None,
+    keep_best: bool,
+) -> tuple[DataFrame, int, DataFrame, DataFrame]:
+    """Stages 2–3 over ``docs`` (url, text_scrubbed, …) → (deduped, its
+    count, sig, losers): the cached exact keep-one, its cached signatures
+    minus the docs whose ``content_hash`` is in ``store`` (the signature
+    store or None; with a store ``docs`` carry that column), and the urls
+    to drop (not distinct).  ``store`` is also the stored side of banding,
+    the optional prefilter and the verify; without one nothing store-only
+    runs.  ``keep_best`` keeps each cluster's best ``quality_score``."""
+    deduped = exact_dedup(docs, "url", "text_scrubbed").persist()
+    n_exact = deduped.count()
+
+    # persisted: banding, the prefilter and the verify's shingle sets all
+    # read it, so the shingle UDF runs once per doc
+    sig = minhash_signatures(deduped, "url", "text_scrubbed")
+    if store is None:
+        known = sig = sig.persist()
+    else:
+        sig = sig.join(store.select("content_hash"), "content_hash", "left_anti").persist()
+        cols = ["url", "shingles", *SIG_COLS]
+        known = sig.select(cols).unionByName(store.select(cols))
+    cand = lsh_candidate_pairs(sig, "url", max_bucket=max_bucket, store=store)
+    if min_est_jaccard is not None:
+        cand = signature_prefilter(known, cand, "url", min_est=min_est_jaccard)
+    sets = known.select(F.col("url").alias("_k"), F.col("shingles").alias("_s"))
+    pairs = verify_shingle_sets(cand, sets, jaccard_threshold)
+    scores = None
+    if keep_best:
+        from ..operators.textstats import quality_score_df
+
+        # staged form: splits the text 2x total, not once per signal
+        scores = quality_score_df(deduped, "text_scrubbed", out_col="_q").select("url", "_q")
+    return deduped, n_exact, sig, near_dup_losers(pairs, "url", scores)
 
 
 def build_corpus(
@@ -47,8 +90,12 @@ def build_corpus(
     default_rate: float = 1.0,
     min_est_jaccard: float | None = None,
     keep_best: bool = False,
+    **filter_kwargs,
 ) -> tuple[DataFrame, dict]:
     """Returns (corpus_df[url, lang, text_scrubbed], stage-counts dict).
+
+    ``filter_kwargs`` go to ``pipeline.filter_stage``, so every filter
+    flag means what it means in filter mode.
 
     Stage counts come from the cached intermediates the next stage consumes
     (docs_in is a parquet metadata count — no data scan).  Without
@@ -66,50 +113,27 @@ def build_corpus(
     ``keep_best`` (opt-in) switches near-dup cluster retention from
     keep-min-key to keep-highest-quality-score (NemoCurator/FineWeb
     policy; operators/dedup.component_keep_best, score =
-    textstats.quality_score on the scrubbed text).
-
-    Near-dup removal is ``incremental_dedup`` without a store: the same
-    ``dedup.lsh_candidate_pairs``, ``verify_shingle_sets`` and
-    ``near_dup_losers`` calls, with nothing stored to pair against."""
-    filtered = quality_filter(spark, pages)
+    textstats.quality_score on the scrubbed text)."""
     kept = (
-        filtered.filter(F.col("keep"))
-        .select("url", "lang", F.col("text_scrubbed"))
+        filter_stage(spark, pages, **filter_kwargs)
+        .filter(F.col("keep"))
+        .select("url", "lang", "text_scrubbed")
         .persist()
     )
     n_kept = kept.count()  # materializes the cache for every later stage
-
-    deduped = exact_dedup(kept, "url", "text_scrubbed").persist()
-    n_exact = deduped.count()
+    deduped, n_exact, _, losers = _near_dup(
+        kept, None, jaccard_threshold, 500, min_est_jaccard, keep_best
+    )
     kept.unpersist()  # deduped is materialized; nothing reads kept again
-
-    # persisted like deduped: banding and the verify's shingle sets read
-    # it, so the shingle UDF runs once per doc
-    sig = minhash_signatures(deduped, "url", "text_scrubbed").persist()
-    cand = lsh_candidate_pairs(sig, "url")
-    if min_est_jaccard is not None:
-        cand = signature_prefilter(sig, cand, "url", min_est=min_est_jaccard)
-    sets = sig.select(F.col("url").alias("_k"), F.col("shingles").alias("_s"))
-    pairs = verify_shingle_sets(cand, sets, jaccard_threshold)
-    scores = None
-    if keep_best:
-        from ..operators.textstats import quality_score_df
-
-        # staged form: splits the text 2x total, not once per signal
-        scores = quality_score_df(deduped, "text_scrubbed", out_col="_q").select("url", "_q")
-    losers = near_dup_losers(pairs, "url", scores)
     uniq = deduped.join(losers, "url", "left_anti")
 
-    if sample_rates is not None:
-        corpus = stratified_sample(uniq, "url", "lang", sample_rates, default_rate)
-    else:
-        corpus = uniq
     # deduped and sig stay cached: the returned plan reads deduped, and sig
     # too when the components took the iterative path (caller unpersists
     # via corpus.sparkSession.catalog.clearCache() or after the final write)
     if sample_rates is None:  # losers ⊆ deduped, one row per node
-        n_final = n_exact - losers.count()
+        corpus, n_final = uniq, n_exact - losers.count()
     else:
+        corpus = stratified_sample(uniq, "url", "lang", sample_rates, default_rate)
         n_final = corpus.count()
     return corpus, {
         "docs_in": pages.count(),
@@ -126,6 +150,8 @@ def incremental_dedup(
     jaccard_threshold: float = 0.7,
     max_bucket: int = 500,
     accepted_writer=None,
+    min_est_jaccard: float | None = None,
+    keep_best: bool = False,
 ) -> tuple[DataFrame, dict]:
     """Dedup a NEW batch against an existing corpus without touching the
     old data: the production shape for incremental crawls (a new
@@ -135,7 +161,8 @@ def incremental_dedup(
 
     ``sig_store`` is a parquet dir of the accepted corpus's per-doc
     features: 8 minhashes, the 128-bit content hash, and the xxhash64'd
-    shingle set.  Per batch:
+    shingle set.  Per batch, ``build_corpus``'s near-dup core with the
+    store (``_near_dup``):
 
     0. within-batch exact keep-one (min key per content — so the very
        FIRST batch already dedups internally),
@@ -145,14 +172,12 @@ def incremental_dedup(
        the join, old×old pairs never enumerate, so batch cost is
        O(batch × bucket occupancy), not O(corpus); ``max_bucket`` caps
        the band buckets of store + batch together,
-    3. distinct candidate pairs verify by exact Jaccard over the stored
-       shingle-hash sets (8-byte hashes, never old text) through
-       ``dedup.verify_shingle_sets``, the verifier of ``jaccard_verify``,
-    4. ``dedup.near_dup_losers``, the keep-one rule of ``build_corpus``: a
-       new doc with ANY old verified partner loses; new×new pairs go
-       through connected components and each component keeps its min
-       key.  With an empty store this is exactly ``build_corpus``'s
-       near-dup removal,
+    3. the optional prefilter (``min_est_jaccard``), then exact Jaccard
+       over the stored shingle-hash sets (8-byte hashes, never old text),
+    4. ``dedup.near_dup_losers``: a new doc with ANY old verified partner
+       loses; new×new pairs go through connected components and each
+       component keeps its min key (best ``quality_score`` with
+       ``keep_best``) — with an empty store, ``build_corpus``'s rule,
     5. ``accepted_writer(accepted_docs)`` (if given) runs BEFORE the
        signature append, so a crash between the two re-runs cleanly —
        appending signatures first would make a re-run see the batch's own
@@ -160,9 +185,9 @@ def incremental_dedup(
        be idempotent per batch (e.g. overwrite a batch-id partition).
 
     Features come from ``dedup.minhash_signatures`` (one shingle-UDF call
-    per doc), materialized once after the store anti-join.  Docs with fewer
-    than 3 words have NULL hashes: they never band, but still flow through
-    exact dedup, acceptance and the store.
+    per doc), cached after the store anti-join.  Docs with fewer than 3
+    words have NULL hashes: they never band, but still flow through exact
+    dedup, acceptance and the store.
 
     Size note: the store carries per-doc shingle-hash arrays (~8 B per
     distinct shingle, comparable to the text itself) because exact-Jaccard
@@ -175,32 +200,12 @@ def incremental_dedup(
     Returns (accepted_new_docs, stats).
     """
     n_in = new_docs.count()
-    new_docs = exact_dedup(new_docs, "url", "text_scrubbed")  # within-batch keep-one
-
-    sig_cols = [f"h{i}" for i in range(8)]
-    new_sig = minhash_signatures(
-        new_docs.select(
-            "url", "text_scrubbed", F.md5(F.col("text_scrubbed")).alias("content_hash")
-        ),
-        "url", "text_scrubbed",
-    )
-
     sig_store = str(sig_store)
-    old = None
-    if path_exists(spark, sig_store):
-        old = spark.read.parquet(sig_store)
-        new_sig = new_sig.join(old.select("content_hash"), "content_hash", "left_anti")
-    # bands, pair join, verify and accept read the batch features; nothing
-    # reads them after the store append (eviction recomputes safely)
-    new_sig = new_sig.persist()
-    new_sig.count()
-
-    pairs = lsh_candidate_pairs(new_sig, "url", max_bucket=max_bucket, store=old)
-    sets = new_sig.select("url", "shingles")
-    if old is not None:
-        sets = sets.unionByName(old.select("url", "shingles"))
-    verified = verify_shingle_sets(pairs, sets.toDF("_k", "_s"), jaccard_threshold)
-    accepted_sig = new_sig.join(near_dup_losers(verified, "url", None), "url", "left_anti")
+    old = spark.read.parquet(sig_store) if path_exists(spark, sig_store) else None
+    deduped, _, sig, losers = _near_dup(
+        new_docs.withColumn("content_hash", F.md5(F.col("text_scrubbed"))), old,
+        jaccard_threshold, max_bucket, min_est_jaccard, keep_best,
+    )
 
     # MATERIALIZE (lineage-truncating) before mutating the store: the plan
     # reads sig_store, and appending to it then lazily re-evaluating would
@@ -209,14 +214,15 @@ def incremental_dedup(
     # unpersist or executor eviction re-runs the plan against the mutated
     # input).  At cluster scale this would be a write to a staging table;
     # localCheckpoint is the single-app equivalent.
-    accepted_sig = accepted_sig.localCheckpoint(eager=True)
-    new_sig.unpersist()
+    accepted_sig = sig.join(losers, "url", "left_anti").localCheckpoint(eager=True)
+    sig.unpersist()  # nothing reads the batch features after the append
 
     n_accepted = accepted_sig.count()
-    accepted = new_docs.join(accepted_sig.select("url"), "url", "left_semi")
+    accepted = deduped.drop("content_hash").join(accepted_sig.select("url"), "url", "left_semi")
     if accepted_writer is not None:  # corpus lands before the store moves
         accepted_writer(accepted)
-    accepted_sig.select("url", *sig_cols, "content_hash", "shingles").write.mode(
+    accepted_sig.select("url", *SIG_COLS, "content_hash", "shingles").write.mode(
         "append"
     ).parquet(sig_store)
+    deduped.unpersist()  # a later read of accepted re-runs new_docs, never the store
     return accepted, {"batch_in": n_in, "accepted": n_accepted, "dropped": n_in - n_accepted}

@@ -4,10 +4,10 @@ The reference runs four detector families per field sequentially with manual
 process pools and cache-clearing (``comprehensive_detector.py:779-859``);
 here the whole thing is ONE ``select`` — four finding structs, a verdict
 coalesce and the scrub chain — so Catalyst fuses it into a single
-whole-stage-codegen'd map stage with two pandas-UDF hops (langid,
-perplexity).  No shuffle anywhere in the hot path: the plan is
-embarrassingly parallel and scales linearly with executors, which is what
-the N→4N ≥0.8 scaling-efficiency target needs.
+whole-stage-codegen'd map stage with three pandas-UDF hops (the rule
+chain's bitmask, langid, perplexity).  No shuffle anywhere in the hot
+path: the plan is embarrassingly parallel and scales linearly with
+executors, which is what the N→4N ≥0.8 scaling-efficiency target needs.
 
 Skew note: scoring is a narrow map so host skew cannot hurt it; skew only
 matters for the host-level metric aggregations, which go through
@@ -155,8 +155,9 @@ def filter_stage(
     gopher_gate: bool = False,
     **filter_kwargs,
 ) -> DataFrame:
-    """The filter job's keep decision, shared by the CLI's filter and
-    incremental modes and by the streaming filter.
+    """The filter job's keep decision, shared by the CLI's filter,
+    corpus and incremental modes (corpus mode through
+    ``plans/corpus.build_corpus``) and by the streaming filter.
 
     Optional HTML extraction, then ``quality_filter`` (``filter_kwargs``
     pass through), then the job's output columns (those of url, warc_ts,

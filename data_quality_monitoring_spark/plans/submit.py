@@ -32,13 +32,6 @@ from .pipeline import filter_metrics, filter_stage, quality_filter
 
 _KNOWN_METHODS = ("validation", "pattern", "ml", "llm", "quality_model")
 
-# flags a mode would silently ignore: corpus mode runs build_corpus's
-# default filter, incremental mode keeps min keys and verifies every pair
-_UNSUPPORTED = {
-    "corpus": ("methods", "combine", "cascade", "llm_order", "c4_clean", "rep_gate", "gopher_gate"),
-    "incremental": ("keep_best", "min_est_jaccard"),
-}
-
 
 def _parse_methods(raw: str) -> list[str] | None:
     """Strict parse: a typo must fail the job, not silently disable a
@@ -78,14 +71,18 @@ def build_args(argv: list[str] | None = None) -> argparse.Namespace:
         "--input-format",
         choices=["parquet", "warc"],
         default="parquet",
-        help="filter mode: 'warc' ingests raw *.warc/*.warc.gz crawl files "
-        "(sources/warc.py; response records → pages, pair with "
-        "--extract-html to fill text from the html payload)",
+        help="filter/corpus/incremental modes: 'warc' ingests raw "
+        "*.warc/*.warc.gz crawl files (sources/warc.py; response records → "
+        "pages, pair with --extract-html to fill text from the html payload)",
     )
     p.add_argument("--output", required=True, help="output table root")
     p.add_argument("--n-buckets", type=int, default=64)
     p.add_argument("--chunk-buckets", type=int, default=16)
-    p.add_argument("--combine", choices=["priority", "weighted"], default="priority")
+    p.add_argument(
+        "--combine", choices=["priority", "weighted"], default="priority",
+        help="filter/corpus/incremental modes: verdict combiner over the "
+        "detector families (plans/pipeline.quality_filter)",
+    )
     p.add_argument(
         "--extract-html",
         action="store_true",
@@ -96,9 +93,9 @@ def build_args(argv: list[str] | None = None) -> argparse.Namespace:
         "--methods",
         type=_parse_methods,
         default=None,
-        help="comma-separated detector families (validation,pattern,ml,llm,"
-        "quality_model); default = the reference's four — quality_model is "
-        "the opt-in learned tier",
+        help="filter/corpus/incremental modes: comma-separated detector "
+        "families (validation,pattern,ml,llm,quality_model); default = the "
+        "reference's four — quality_model is the opt-in learned tier",
     )
     p.add_argument("--n-samples", type=int, default=8, help="multi-eval replicas")
     p.add_argument("--intensity", type=float, default=0.3, help="injection intensity")
@@ -120,9 +117,9 @@ def build_args(argv: list[str] | None = None) -> argparse.Namespace:
     )
     p.add_argument(
         "--min-est-jaccard", type=float, default=None,
-        help="corpus mode: opt-in minhash-agreement prefilter between LSH "
-        "banding and exact verify (operators/dedup.signature_prefilter) — "
-        "bounds candidate volume on low-entropy corpora",
+        help="corpus/incremental modes: opt-in minhash-agreement prefilter "
+        "between LSH banding and exact verify (operators/dedup."
+        "signature_prefilter) — bounds candidate volume on low-entropy corpora",
     )
     p.add_argument(
         "--canonicalize-urls",
@@ -134,7 +131,7 @@ def build_args(argv: list[str] | None = None) -> argparse.Namespace:
     p.add_argument(
         "--cascade",
         action="store_true",
-        help="filter/incremental modes: skip the model scorers for "
+        help="filter/corpus/incremental modes: skip the model scorers for "
         "documents the rule chain already condemns (keep/drop provably "
         "unchanged, their score columns NULL; ~15%% wall saved here, far "
         "more with expensive scorers — plans/pipeline.quality_filter)",
@@ -142,7 +139,7 @@ def build_args(argv: list[str] | None = None) -> argparse.Namespace:
     p.add_argument(
         "--gopher-gate",
         action="store_true",
-        help="filter/incremental modes: AND the Gopher hard-rule document "
+        help="filter/corpus/incremental modes: AND the Gopher hard-rule document "
         "gate (Rae et al. 2021 Appendix A — word count, mean word length, "
         "symbol ratio, bullet/ellipsis/duplicate line fractions, alpha-word "
         "fraction, stop-word hits; operators/textstats.gopher_signals) into keep; "
@@ -151,14 +148,14 @@ def build_args(argv: list[str] | None = None) -> argparse.Namespace:
     p.add_argument(
         "--keep-best",
         action="store_true",
-        help="corpus mode: retain the highest-quality-score member of each "
-        "near-dup cluster instead of the min-key one (NemoCurator/FineWeb "
-        "policy; operators/dedup.component_keep_best)",
+        help="corpus/incremental modes: retain the highest-quality-score "
+        "member of each near-dup cluster instead of the min-key one "
+        "(NemoCurator/FineWeb policy; operators/dedup.component_keep_best)",
     )
     p.add_argument(
         "--rep-gate",
         action="store_true",
-        help="filter/incremental modes: AND the full Gopher repetition-family "
+        help="filter/corpus/incremental modes: AND the full Gopher repetition-family "
         "verdict (dup line/para fractions + char fractions, top-n-gram and "
         "dup-n-gram char fractions at the Table-A1 thresholds; "
         "operators/textstats.gopher_repetition) into keep — one Arrow "
@@ -167,7 +164,7 @@ def build_args(argv: list[str] | None = None) -> argparse.Namespace:
     p.add_argument(
         "--c4-clean",
         action="store_true",
-        help="filter/incremental modes: apply the C4 line filter (Raffel et "
+        help="filter/corpus/incremental modes: apply the C4 line filter (Raffel et "
         "al. 2020 §2.2 — drop short / unterminated / javascript lines, "
         "rebuild the text, condemn brace/lorem-ipsum/dirty-word pages; "
         "operators/normalize.c4_line_signals) to the shipped text and AND "
@@ -338,7 +335,7 @@ def build_args(argv: list[str] | None = None) -> argparse.Namespace:
     )
     p.add_argument(
         "--llm-order", type=int, choices=[2, 3], default=2,
-        help="filter/incremental modes: n-gram order of the LLM-slot "
+        help="filter/corpus/incremental modes: n-gram order of the LLM-slot "
         "perplexity model — 2 = frozen bigram artifacts (the reference "
         "contract, default), 3 = frozen trigram artifacts "
         "(operators/perplexity.NgramLM); llm-train: order of the trained "
@@ -366,9 +363,6 @@ def build_args(argv: list[str] | None = None) -> argparse.Namespace:
     args = p.parse_args(argv)
     if args.dsir_top and not args.dsir_target:
         p.error("--dsir-top requires --dsir-target (parquet of target-distribution docs)")
-    for dest in _UNSUPPORTED.get(args.mode, ()):
-        if getattr(args, dest) != p.get_default(dest):
-            p.error(f"--{dest.replace('_', '-')} is not supported in {args.mode} mode")
     return args
 
 
@@ -382,14 +376,22 @@ def _llm_models(args):
     return None
 
 
-def _drop_pages(spark: SparkSession, pages, args):
-    """Page-level drops ahead of any text-level work, in this order:
+def _read_pages(spark: SparkSession, args):
+    """The document modes' input: ``--input`` read as parquet or, with
+    ``--input-format warc``, as WARC response records, then page-level
+    drops ahead of any text-level work, in this order:
     ``--canonicalize-urls`` (one fetch per canonical url, earliest
     warc_ts), ``--honor-noindex`` (robots-noindex opt-outs, a codegen
     rlike on the raw html; no-op without an html column) and
     ``--host-blocklist`` (the small ``blocked`` projection of a host-stats
     table, broadcast, so the pages side stays a narrow scan).  None of
     them reads text, so extraction can follow them."""
+    if args.input_format == "warc":
+        from ..sources.warc import read_warc, warc_to_pages
+
+        pages = warc_to_pages(read_warc(spark, args.input))
+    else:
+        pages = spark.read.parquet(args.input)
     if args.canonicalize_urls:
         from ..operators.urls import canonical_dedup
 
@@ -411,10 +413,12 @@ def _drop_pages(spark: SparkSession, pages, args):
     return pages
 
 
-def _filter_stage(spark: SparkSession, pages, args):
-    """``pipeline.filter_stage`` with the CLI's filter-shaping flags."""
-    return filter_stage(
-        spark, pages, extract_html=args.extract_html,
+def _filter_kwargs(args) -> dict:
+    """``pipeline.filter_stage``'s keywords from the CLI's filter-shaping
+    flags: the one translation the filter, corpus and incremental modes
+    share."""
+    return dict(
+        extract_html=args.extract_html,
         c4_clean=args.c4_clean, rep_gate=args.rep_gate, gopher_gate=args.gopher_gate,
         combine=args.combine, methods=args.methods,
         cascade=args.cascade, lm_models=_llm_models(args),
@@ -422,13 +426,7 @@ def _filter_stage(spark: SparkSession, pages, args):
 
 
 def run(spark: SparkSession, args: argparse.Namespace) -> dict:
-    if args.input_format == "warc":
-        from ..sources.warc import read_warc, warc_to_pages
-
-        pages = warc_to_pages(read_warc(spark, args.input))
-    else:
-        pages = spark.read.parquet(args.input)
-    pages = _drop_pages(spark, pages, args)
+    pages = _read_pages(spark, args)
     sink = PartitionedSink(args.output, args.n_buckets, args.chunk_buckets)
 
     cuts_df = None
@@ -463,7 +461,7 @@ def run(spark: SparkSession, args: argparse.Namespace) -> dict:
         )
 
     def transform(slice_df):
-        res = _filter_stage(spark, slice_df, args)
+        res = filter_stage(spark, slice_df, **_filter_kwargs(args))
         if cuts_df is not None:
             res = (
                 res.withColumn("_bl", F.coalesce(F.col("lang"), F.lit("und")))
@@ -546,21 +544,16 @@ def _apply_decontaminate(spark: SparkSession, docs, args, stats: dict):
 
 def run_corpus(spark: SparkSession, args: argparse.Namespace) -> dict:
     """corpus: the full training-corpus build (plans/corpus.build_corpus —
-    filter → exact dedup → near-dup clusters → optional stratified sample)
-    written as parquet + a stage-counts JSON."""
+    the filter job's stage → exact dedup → near-dup clusters → optional
+    stratified sample) written as parquet + a stage-counts JSON."""
     from .corpus import build_corpus
 
-    pages = _drop_pages(spark, spark.read.parquet(args.input), args)
-    if args.extract_html:  # raw-WARC ingestion
-        from ..operators.extract import extract_pages
-
-        pages = extract_pages(pages)
     rates = json.loads(args.sample_rates) if args.sample_rates else None
     corpus, stats = build_corpus(
-        spark, pages, jaccard_threshold=args.jaccard_threshold,
+        spark, _read_pages(spark, args), jaccard_threshold=args.jaccard_threshold,
         sample_rates=rates, default_rate=args.default_rate,
-        min_est_jaccard=args.min_est_jaccard,
-        keep_best=args.keep_best,
+        min_est_jaccard=args.min_est_jaccard, keep_best=args.keep_best,
+        **_filter_kwargs(args),
     )
     k = args.substring_k
     if k:  # ExactSubstr pass over the final corpus text
@@ -869,8 +862,7 @@ def run_incremental(spark: SparkSession, args: argparse.Namespace) -> dict:
 
     if not args.sig_store:
         raise SystemExit("--mode incremental requires --sig-store")
-    pages = _drop_pages(spark, spark.read.parquet(args.input), args)
-    filtered = _filter_stage(spark, pages, args)
+    filtered = filter_stage(spark, _read_pages(spark, args), **_filter_kwargs(args))
     # persist: the dedup plan consumes this three times (feature pass,
     # batch count, final accepted write) — without the cache each pass
     # re-runs the full model-scoring filter
@@ -912,9 +904,10 @@ def run_incremental(spark: SparkSession, args: argparse.Namespace) -> dict:
         kept.unpersist()
         kept = deconned
 
-    accepted, stats = incremental_dedup(
+    _, stats = incremental_dedup(
         spark, kept, args.sig_store, jaccard_threshold=args.jaccard_threshold,
-        accepted_writer=write_corpus,
+        accepted_writer=write_corpus, min_est_jaccard=args.min_est_jaccard,
+        keep_best=args.keep_best,
     )
     stats.update(pre_stats)
     kept.unpersist()

@@ -33,18 +33,14 @@ def read_page_stream(spark: SparkSession, input_dir: str, max_files: int = 16) -
     )
 
 
-def filtered_stream(
-    spark: SparkSession,
-    pages_stream: DataFrame,
-    gopher_gate: bool = False,
-    c4_clean: bool = False,
-) -> DataFrame:
+def filtered_stream(spark: SparkSession, pages_stream: DataFrame, **filter_kwargs) -> DataFrame:
     """The batch filter stage (``plans.pipeline.filter_stage``) over a
-    stream; ``gopher_gate`` / ``c4_clean`` are the batch CLI's gates
-    (stateless Column expressions, so streaming-safe by construction)."""
-    return filter_stage(
-        spark, pages_stream, c4_clean=c4_clean, gopher_gate=gopher_gate
-    ).select("url", "warc_ts", "lang", "keep", "verdict", "text_scrubbed")
+    stream; ``filter_kwargs`` are its keywords, e.g. the batch CLI's
+    ``gopher_gate`` / ``c4_clean`` gates (stateless Column expressions, so
+    streaming-safe by construction)."""
+    return filter_stage(spark, pages_stream, **filter_kwargs).select(
+        "url", "warc_ts", "lang", "keep", "verdict", "text_scrubbed"
+    )
 
 
 def start_filter(

@@ -263,25 +263,51 @@ def test_incremental_stores_read_uri_paths(spark, tmp_path):
     assert again["n_removed"] == 30 and again["text_dedup"] == ""
 
 
-def test_incremental_keep_one_matches_build_corpus(spark, tmp_path):
-    """One keep-one rule: incremental dedup of ``build_corpus``'s kept docs
-    into an empty store accepts exactly the urls ``build_corpus`` keeps.
-    The pages: 120 generated ones plus, for each of the first 12, an exact
-    copy and a near copy (last word dropped) under larger urls."""
-    from data_quality_monitoring_spark.plans.corpus import incremental_dedup
-
+def _pages_with_copies(spark):
+    """120 generated pages plus, for each of the first 12, an exact copy
+    and a near copy (last word dropped) under larger urls."""
     src = generate_pages_pandas(120)
     head = src.head(12)
     copies = pd.concat([
         head.assign(url=head.url + "#exact"),
         head.assign(url=head.url + "#near", text=head.text.str.rsplit(" ", n=1).str[0]),
     ])
-    pages = generate_pages(spark, 120).unionByName(spark.createDataFrame(copies[src.columns]))
-    corpus, stats = build_corpus(spark, pages)
+    return generate_pages(spark, 120).unionByName(spark.createDataFrame(copies[src.columns]))
+
+
+def test_incremental_keep_one_matches_build_corpus(spark, tmp_path, keep_best=False):
+    """One keep-one rule: incremental dedup of ``build_corpus``'s kept docs
+    into an empty store accepts exactly the urls ``build_corpus`` keeps,
+    under the min-key rule and (``keep_best``) the best-score rule."""
+    from data_quality_monitoring_spark.plans.corpus import incremental_dedup
+
+    pages = _pages_with_copies(spark)
+    corpus, stats = build_corpus(spark, pages, keep_best=keep_best)
     urls = {r.url for r in corpus.select("url").collect()}
     spark.catalog.clearCache()
     kept = quality_filter(spark, pages).filter("keep").select("url", "lang", "text_scrubbed")
-    acc, s = incremental_dedup(spark, kept.persist(), str(tmp_path / "sigs"))
+    acc, s = incremental_dedup(spark, kept.persist(), str(tmp_path / "sigs"), keep_best=keep_best)
     assert {r.url for r in acc.select("url").collect()} == urls
     kept.unpersist()
     assert s["accepted"] == stats["final"] == len(urls) < stats["after_exact_dedup"]
+
+
+def test_incremental_keep_best_matches_build_corpus(spark, tmp_path):
+    test_incremental_keep_one_matches_build_corpus(spark, tmp_path, keep_best=True)
+
+
+def test_build_corpus_job_count(spark):
+    """``build_corpus`` over the fixed pages-with-copies input runs 21
+    Spark jobs: the filter, exact and near-dup stages with no step that
+    only a signature store needs (content hashes, stored-side union,
+    lineage cut)."""
+    sc = spark.sparkContext
+    pages = _pages_with_copies(spark)
+    sc.setJobGroup("build_corpus_job_count", "build_corpus")
+    try:
+        build_corpus(spark, pages)
+        jobs = sc.statusTracker().getJobIdsForGroup("build_corpus_job_count")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        spark.catalog.clearCache()
+    assert len(jobs) == 21

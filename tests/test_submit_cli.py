@@ -131,18 +131,24 @@ def test_corpus_mode(spark, tmp_path):
     assert on_disk == stats
 
 
-@pytest.mark.parametrize(
-    "flag",
-    [["--methods", "validation"], ["--combine", "weighted"], ["--cascade"],
-     ["--llm-order", "3"], ["--c4-clean"], ["--rep-gate"], ["--gopher-gate"]],
-)
-def test_corpus_mode_rejects_filter_flags(flag, capsys):
-    """Corpus mode runs build_corpus's default filter, so a flag that would
-    change the keep decision must fail the job, naming the flag."""
-    with pytest.raises(SystemExit):
-        build_args(["--mode", "corpus", "--input", "i", "--output", "o", *flag])
-    assert f"{flag[0]} is not supported in corpus mode" in capsys.readouterr().err
-    build_args(["--mode", "filter", "--input", "i", "--output", "o", *flag])
+@pytest.mark.parametrize("flag", [["--gopher-gate"], ["--methods", "validation,pattern"]])
+def test_corpus_mode_filter_flags_match_filter_mode(flag, spark, tmp_path):
+    """Corpus mode runs the filter job's stage: with a filter flag its
+    ``kept`` count is filter mode's kept count under the same flag."""
+    from data_quality_monitoring_spark.plans.submit import run_corpus
+
+    in_dir = str(tmp_path / "in")
+    generate_pages(spark, 160, partitions=4).write.parquet(in_dir)
+    run(spark, build_args(["--input", in_dir, "--output", str(tmp_path / "f"), *flag,
+                           "--n-buckets", "4", "--chunk-buckets", "4"]))
+    stats = run_corpus(spark, build_args(
+        ["--mode", "corpus", "--input", in_dir, "--output", str(tmp_path / "c"), *flag]
+    ))
+    kept = spark.read.parquet(str(tmp_path / "f" / "data")).filter("keep").count()
+    default = run_corpus(spark, build_args(
+        ["--mode", "corpus", "--input", in_dir, "--output", str(tmp_path / "d")]
+    ))
+    assert stats["kept"] == kept != default["kept"]
 
 
 def test_analyze_column_mode(spark, tmp_path):
@@ -309,14 +315,27 @@ def test_cli_incremental_jaccard_threshold(spark, tmp_path):
     assert near_kept("strict", "--jaccard-threshold", "0.95") == sorted(near.url)
 
 
-@pytest.mark.parametrize("flag", [["--keep-best"], ["--min-est-jaccard", "0.5"]])
-def test_incremental_mode_rejects_corpus_dedup_flags(flag, capsys):
-    """Incremental dedup keeps the min key and verifies every candidate,
-    so --keep-best and --min-est-jaccard fail the parse, naming the flag."""
-    with pytest.raises(SystemExit):
-        build_args(["--mode", "incremental", "--input", "i", "--output", "o", *flag])
-    assert f"{flag[0]} is not supported in incremental mode" in capsys.readouterr().err
-    build_args(["--mode", "corpus", "--input", "i", "--output", "o", *flag])
+def test_cli_incremental_min_est_jaccard_keeps_store_pairs(spark, tmp_path):
+    """--min-est-jaccard in incremental mode prefilters over the stored
+    signatures too: near copies (last word dropped) of docs the first dump
+    stored, re-delivered under new urls in a second dump, are all dropped,
+    as they are without the prefilter."""
+    from data_quality_monitoring_spark.datagen import generate_pages_pandas
+
+    src = generate_pages_pandas(80)
+    b1, b2 = str(tmp_path / "b1"), str(tmp_path / "b2")
+    generate_pages(spark, 80).write.parquet(b1)
+    first = ["--mode", "incremental", "--input", b1, "--min-est-jaccard", "0.375"]
+    out, store = str(tmp_path / "out"), str(tmp_path / "sigs")
+    run_incremental(spark, build_args([*first, "--output", out, "--sig-store", store]))
+    stored = {r.url for r in spark.read.parquet(f"{out}/corpus").select("url").collect()}
+    head = src[src.url.isin(stored) & (src.text.str.split().str.len() >= 30)].head(5)
+    assert len(head) == 5
+    near = head.assign(url=head.url + "#near", text=head.text.str.rsplit(" ", n=1).str[0])
+    spark.createDataFrame(near[src.columns]).write.parquet(b2)
+    second = ["--mode", "incremental", "--input", b2, "--output", out, "--sig-store", store]
+    stats = run_incremental(spark, build_args([*second, "--min-est-jaccard", "0.375"]))
+    assert stats == {"batch_in": 5, "accepted": 0, "dropped": 5}
 
 
 def test_incremental_gopher_gate_matches_filter_mode(spark, tmp_path):
@@ -398,8 +417,9 @@ def test_cli_incremental_substring(spark, tmp_path):
     assert corpus.filter(F.col("text_scrubbed").contains("z0 z1 z2")).count() == 0
 
 
-def test_filter_mode_warc_ingestion(spark, tmp_path):
-    """--input-format warc: raw crawl files through the full filter job."""
+def _write_warc(d, pages):
+    """One gzipped WARC segment under ``d`` with a response record per
+    (uri, text) of ``pages``, its payload ``wrap_html(text)``."""
     import gzip
 
     from data_quality_monitoring_spark.operators.extract import wrap_html
@@ -416,15 +436,17 @@ def test_filter_mode_warc_ingestion(spark, tmp_path):
             + b"\r\n\r\n"
         )
 
-    d = tmp_path / "crawl"
     d.mkdir()
     blob = b"".join(
-        gzip.compress(
-            rec(f"http://h{i}.com/p", wrap_html(f"some page text {i} here", i))
-        )
-        for i in range(6)
+        gzip.compress(rec(uri, wrap_html(text, i))) for i, (uri, text) in enumerate(pages)
     )
     (d / "seg.warc.gz").write_bytes(blob)
+
+
+def test_filter_mode_warc_ingestion(spark, tmp_path):
+    """--input-format warc: raw crawl files through the full filter job."""
+    d = tmp_path / "crawl"
+    _write_warc(d, [(f"http://h{i}.com/p", f"some page text {i} here") for i in range(6)])
 
     args = build_args(
         ["--input", str(d), "--output", str(tmp_path / "out"),
@@ -436,6 +458,28 @@ def test_filter_mode_warc_ingestion(spark, tmp_path):
     assert out.count() == 6
     assert out.filter("text_scrubbed IS NOT NULL").count() == 6
     assert summary["chunks_run"] >= 1
+
+
+def test_corpus_mode_warc_ingestion(spark, tmp_path):
+    """--input-format warc reaches corpus mode: over the same crawl files
+    the corpus keeps exactly the docs filter mode keeps (the generated
+    pages hold no duplicates of a kept doc)."""
+    from data_quality_monitoring_spark.datagen import generate_pages_pandas
+    from data_quality_monitoring_spark.plans.submit import run_corpus
+
+    d = tmp_path / "crawl"
+    pages = generate_pages_pandas(60).fillna({"text": ""})
+    _write_warc(d, pages[["url", "text"]].itertuples(index=False))
+    warc = ["--input", str(d), "--input-format", "warc", "--extract-html"]
+    run(spark, build_args([*warc, "--output", str(tmp_path / "f"),
+                           "--n-buckets", "4", "--chunk-buckets", "4"]))
+    stats = run_corpus(spark, build_args(["--mode", "corpus", *warc, "--output", str(tmp_path / "c")]))
+    kept = {r.url for r in spark.read.parquet(str(tmp_path / "f" / "data"))
+            .filter("keep").select("url").collect()}
+    corpus = {r.url for r in spark.read.parquet(str(tmp_path / "c" / "corpus"))
+              .select("url").collect()}
+    assert stats["docs_in"] == 60 and stats["kept"] == len(kept) > 0
+    assert corpus == kept
 
 
 def test_filter_mode_canonicalize_urls(spark, tmp_path):
